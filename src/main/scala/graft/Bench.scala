@@ -559,8 +559,13 @@ object Bench {
       case (FloorQuery, s, _, _, _, _) if s > 0 => s }
     val floor2 = results.collectFirst {
       case (FloorQuery2, s, _, _, _, _) if s > 0 => s }
+    // a probe child adjudicates nothing, and a cold-scans run has no
+    // baseline of its own kind (baselineRecords reads cached-protocol
+    // records only, against which every scan reads as a mover): both
+    // skip the baseline and the probe pass
+    val noBaseline = isProbe || coldScans
     val (baseFiles, baseline) =
-      if (isProbe) (Seq.empty[String], Map.empty[String, (Double, Double, Double)])
+      if (noBaseline) (Seq.empty[String], Map.empty[String, (Double, Double, Double)])
       else {
         val recs = baselineRecords()
         (recs.map(_._1), compositeBaseline(recs.map(_._2)))
@@ -591,7 +596,7 @@ object Bench {
     // propagate (ADVICE r18): a corrupted process must not print
     // results as if healthy.
     val probes: Seq[(String, Double, Double, Double, Double)] =
-      if (isProbe) Seq.empty else try {
+      if (noBaseline) Seq.empty else try {
       val movers = results.collect {
         case (name, sec, _, _, _, unstable)
             if moveRatio(name, sec) > 2.0 || (unstable && baseline.nonEmpty) =>

@@ -236,18 +236,27 @@ object Dedup {
     // per-attempt-unique stage dir (round-22 ADVICE): a FIXED sibling
     // made two concurrent appends delete each other's staged files
     // mid-write; with a UUID suffix attempts never share a stage. A
-    // crashed attempt's leftover stage is reaped only once it is STALE
-    // (mtime older than the lease-stale horizon) — a live concurrent
-    // writer's stage is never touched.
+    // crashed attempt's leftover stage is reaped only once it is STALE:
+    // the NEWEST mtime anywhere in its tree is older than the lease-stale
+    // horizon. The stage dir's own mtime is not enough — a live writer's
+    // task files land under `_temporary/...`, which leaves the top dir's
+    // mtime at write start however long the write runs.
     val stagePrefix = dst.getName + ".append_tmp-"
     val parent = dst.getParent
     if (parent != null && fs.exists(parent)) {
       val staleBefore =
         System.currentTimeMillis() - graft.sources.Sinks.DefaultLeaseStaleMs
+      // a subtree that vanishes mid-walk belongs to a live writer (its
+      // job commit moves task files): count it as fresh
+      def newestMtime(st: org.apache.hadoop.fs.FileStatus): Long =
+        if (!st.isDirectory) st.getModificationTime
+        else try fs.listStatus(st.getPath).map(newestMtime)
+          .foldLeft(st.getModificationTime)(math.max)
+        catch { case _: java.io.FileNotFoundException => Long.MaxValue }
       fs.listStatus(parent)
         .filter(st => st.isDirectory &&
           st.getPath.getName.startsWith(stagePrefix) &&
-          st.getModificationTime < staleBefore)
+          newestMtime(st) < staleBefore)
         .foreach(st => fs.delete(st.getPath, true))
     }
     val stage = new org.apache.hadoop.fs.Path(path.stripSuffix("/") +
@@ -548,8 +557,7 @@ object Dedup {
   def minhashLshJoin(docs: DataFrame, threshold: Double, k: Int = 3,
       numHashes: Int = 96, bands: Int = 24,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val r = numHashes / bands
+    val bandKeys = minhashBandKeys(col("sig"), numHashes, bands)
     val sh = materialize(shingleFrameHashed(docs, idCol, textCol, k))
     // the signature is a PER-ROW kernel (graft.functions.MinhashSignature):
     // all `numHashes` minima in one compiled pass over the cached `shh`
@@ -566,10 +574,7 @@ object Dedup {
           ColumnBridge.expression(col("shh")), numHashes)).as("sig"))
       .filter(col("sig").isNotNull)
     // one (band, bandHash) row per band; equi-join key for candidates
-    val banded = materialize(sig.select(col("id"),
-      posexplode(array((0 until bands).map(b =>
-        xxhash64((b * r until (b + 1) * r).map(s =>
-          element_at(col("sig"), s + 1)): _*)): _*)))
+    val banded = materialize(sig.select(col("id"), posexplode(bandKeys))
       .withColumnsRenamed(Map("pos" -> "band", "col" -> "band_hash")))
     val cands = banded.as("x").join(banded.as("y"),
         col("x.band") === col("y.band") &&
@@ -579,6 +584,17 @@ object Dedup {
       .dropDuplicates("doc_a", "doc_b")
     // exact verification on the deduped candidate pairs only
     verifyPairsExact(sh, cands, threshold)
+  }
+
+  /** MinHash band keys of a signature column: band b is the xxhash64 of
+    * signature slots [b*r, (b+1)*r), r = numHashes / bands. This is the
+    * sketch format a stored `minhashIndex` carries and a probe batch must
+    * reproduce, so the self-join and the index build both spell it here. */
+  private def minhashBandKeys(sig: Column, numHashes: Int, bands: Int): Column = {
+    require(numHashes % bands == 0, "bands must divide numHashes")
+    val r = numHashes / bands
+    array((0 until bands).map(b =>
+      xxhash64((b * r until (b + 1) * r).map(s => element_at(sig, s + 1)): _*)): _*)
   }
 
   /** Persistent MinHash+LSH sketch index of a corpus — build once, write
@@ -599,8 +615,7 @@ object Dedup {
   def minhashIndex(docs: DataFrame, k: Int = 3, numHashes: Int = 96,
       bands: Int = 24, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val r = numHashes / bands
+    val bandKeys = minhashBandKeys(col("__sig"), numHashes, bands)
     shingleFrameHashed(docs, idCol, textCol, k)
       .select(col("id"), col("sh"), col("shh"), col("n_sh"),
         ColumnBridge.column(graft.functions.MinhashSignature(
@@ -612,9 +627,7 @@ object Dedup {
       // docs instead carry a NULL band_hashes, which the probe's posexplode
       // drops — they can never generate candidates.
       .select(col("id"), col("sh"), col("shh"), col("n_sh"),
-        when(col("__sig").isNotNull, array((0 until bands).map(b =>
-          xxhash64((b * r until (b + 1) * r).map(s =>
-            element_at(col("__sig"), s + 1)): _*)): _*)).as("band_hashes"))
+        when(col("__sig").isNotNull, bandKeys).as("band_hashes"))
   }
 
   /** Near-dup pairs between a NEW batch and an EXISTING `minhashIndex`
@@ -646,7 +659,6 @@ object Dedup {
       index: DataFrame, threshold: Double, k: Int = 3, numHashes: Int = 96,
       bands: Int = 24, idCol: String = "doc_id",
       textCol: String = "text"): (DataFrame, DataFrame) = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
     val newIdx = materialize(minhashIndex(newDocs, k, numHashes, bands, idCol, textCol))
     def banded(df: DataFrame) = df
       .select(col("id"), posexplode(col("band_hashes")))
@@ -866,35 +878,47 @@ object Dedup {
     * maxDist ≤ 3 keeps the 4×16-bit pigeonhole guarantee EXACT (4 bands
     * can absorb at most 3 differing bits with one band still identical);
     * larger distances would need more/narrower bands, so reject them
-    * rather than silently under-recall.
-    *
-    * A pair sharing k bands would surface k times from the band equi-join;
-    * instead of paying a dropDuplicates shuffle on the pair list, each
-    * pair is emitted exactly once — from its FIRST shared band — via a
-    * codegen'd join-side predicate over the full fingerprints both sides
-    * already carry (all lower bands must differ). The hamming cut also
-    * runs join-side, so far pairs never leave the join. */
+    * rather than silently under-recall. */
   def simhashPairsOf(fp: DataFrame, maxDist: Int): DataFrame = {
     require(maxDist >= 0 && maxDist <= 3,
       s"maxDist must be in [0,3] for the 4-band pigeonhole guarantee, got $maxDist")
-    val banded = materialize( // both sides of the candidate self-join
-      fp.select(col("id"), col("simhash"),
-        posexplode(array((0 until 4).map(b =>
-          shiftrightunsigned(col("simhash"), b * 16).bitwiseAND(lit(0xFFFFL))): _*)))
-      .withColumnsRenamed(Map("pos" -> "band", "col" -> "band_bits")))
-    val popcnt = (x: Column) => bit_count(x)
-    def bandBits(side: String, b: Int): Column =
-      shiftrightunsigned(col(s"$side.simhash"), b * 16).bitwiseAND(lit(0xFFFFL))
+    val banded = materialize(simhashBanded(fp)) // both sides of the self-join
+    simhashBandJoin(banded, banded, _ < _, maxDist, "doc_a", "doc_b")
+  }
+
+  /** Band b of a 64-bit SimHash fingerprint: bits [16b, 16b+16). */
+  private def simhashBand(fp: Column, b: Int): Column =
+    shiftrightunsigned(fp, b * 16).bitwiseAND(lit(0xFFFFL))
+
+  /** One (id, simhash, band, band_bits) row per band of each fingerprint. */
+  private def simhashBanded(fp: DataFrame): DataFrame =
+    fp.select(col("id"), col("simhash"),
+        posexplode(array((0 until 4).map(b => simhashBand(col("simhash"), b)): _*)))
+      .withColumnsRenamed(Map("pos" -> "band", "col" -> "band_bits"))
+
+  /** The SimHash band equi-join between two `simhashBanded` frames,
+    * returning (aName, bName, hamming) for the id pairs `idPred` keeps.
+    * A pair sharing k bands would surface k times from the band
+    * equi-join; instead of paying a dropDuplicates shuffle on the pair
+    * list, each pair is emitted exactly once — from its FIRST shared
+    * band — via a codegen'd join-side predicate over the full
+    * fingerprints both sides already carry (all lower bands must differ).
+    * The hamming cut also runs join-side, so far pairs never leave the
+    * join. */
+  private def simhashBandJoin(x: DataFrame, y: DataFrame,
+      idPred: (Column, Column) => Column, maxDist: Int,
+      aName: String, bName: String): DataFrame = {
+    def bandBits(side: String, b: Int): Column = simhashBand(col(s"$side.simhash"), b)
     val firstSharedBand = (0 until 4).map { b =>
       (0 until b).map(k => bandBits("x", k) =!= bandBits("y", k))
         .foldLeft(col("x.band") === b)(_ && _)
     }.reduce(_ || _)
-    banded.as("x").join(banded.as("y"),
+    x.as("x").join(y.as("y"),
         col("x.band") === col("y.band") &&
         col("x.band_bits") === col("y.band_bits") &&
-        col("x.id") < col("y.id") && firstSharedBand)
-      .select(col("x.id").as("doc_a"), col("y.id").as("doc_b"),
-        popcnt(col("x.simhash").bitwiseXOR(col("y.simhash"))).as("hamming"))
+        idPred(col("x.id"), col("y.id")) && firstSharedBand)
+      .select(col("x.id").as(aName), col("y.id").as(bName),
+        bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))).as("hamming"))
       .filter(col("hamming") <= maxDist)
   }
 
@@ -929,23 +953,7 @@ object Dedup {
       textCol: String = "text"): DataFrame = {
     require(maxDist >= 0 && maxDist <= 3,
       s"maxDist must be in [0,3] for the 4-band pigeonhole guarantee, got $maxDist")
-    def banded(fp: DataFrame) = fp.select(col("id"), col("simhash"),
-        posexplode(array((0 until 4).map(b =>
-          shiftrightunsigned(col("simhash"), b * 16).bitwiseAND(lit(0xFFFFL))): _*)))
-      .withColumnsRenamed(Map("pos" -> "band", "col" -> "band_bits"))
-    def bandBits(side: String, b: Int): Column =
-      shiftrightunsigned(col(s"$side.simhash"), b * 16).bitwiseAND(lit(0xFFFFL))
-    val firstSharedBand = (0 until 4).map { b =>
-      (0 until b).map(k => bandBits("x", k) =!= bandBits("y", k))
-        .foldLeft(col("x.band") === b)(_ && _)
-    }.reduce(_ || _)
-    banded(simhashIndexMd5(newDocs, idCol, textCol)).as("x")
-      .join(banded(index).as("y"),
-        col("x.band") === col("y.band") &&
-        col("x.band_bits") === col("y.band_bits") &&
-        col("x.id") =!= col("y.id") && firstSharedBand)
-      .select(col("x.id").as("new_id"), col("y.id").as("idx_id"),
-        bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))).as("hamming"))
-      .filter(col("hamming") <= maxDist)
+    simhashBandJoin(simhashBanded(simhashIndexMd5(newDocs, idCol, textCol)),
+      simhashBanded(index), _ =!= _, maxDist, "new_id", "idx_id")
   }
 }

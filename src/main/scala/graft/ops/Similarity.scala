@@ -364,92 +364,34 @@ object Similarity {
       nPlanes: Int = 12, tables: Int = 4,
       idCol: String = "vec_id", vecCol: String = "v"): DataFrame = {
     // hash-repartition the corpus BEFORE banding (round 22, guide §2/§8):
-    // the pair-production and cosine-verify pipeline below is map-only
-    // (broadcast joins), so its parallelism IS this frame's partitioning —
-    // a corpus that scans as one split (one parquet file) serialized the
-    // entire candidate explosion and every exact verify into a single
-    // task. The exchange moved here carries one 20-byte row per vector,
-    // BEFORE the 24x banding fan-out and the quadratic pair fan-out —
-    // orders of magnitude fewer bytes than the pair-level dedup exchange
-    // this function used to pay. Keyed by id (deterministic, no
-    // round-robin pre-sort); count = the session's shuffle parallelism,
-    // the same scale knob every other shuffle in the job obeys.
+    // the banding explode and a broadcast pair join run map-side, so
+    // their parallelism IS this frame's partitioning — a corpus that
+    // scans as one split (one parquet file) serialized the entire
+    // candidate explosion into a single task. The exchange carries
+    // one row per vector, BEFORE the `tables`x banding fan-out and the
+    // quadratic pair fan-out. Keyed by id (deterministic, no round-robin
+    // pre-sort); count = the session's shuffle parallelism, the same
+    // scale knob every other shuffle in the job obeys.
     val parts = corpus.sparkSession.sessionState.conf.numShufflePartitions
     val base = materialize(corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
       .repartition(parts, col("id")))
     val buckets = (0 until tables).map(t =>
       lshBucket(col("v"), dim, nPlanes, seed = 1000L + t))
-    // FIRST-SHARED-BAND pair dedup (round 22, guide §2.4): a pair
-    // colliding in k tables used to be emitted k times and deduped by a
-    // hash aggregate + exchange over every collision row (6.1 M rows at
-    // sf0.1 — measured as most of the query's single big stage). The
-    // SimHash join's join-side predicate — emit a pair only from its
-    // FIRST shared band — removes the aggregate and the exchange
-    // outright, but comparing up to `tables` bucket array elements per
-    // collision row was measured in round 21 at 5.1 s interpreted /
-    // 41 s unrolled. Packing every table's bucket bits into two longs
-    // turns that comparison into a handful of codegen'd XOR/shift/AND
-    // ops: group t of the signature holds bucket_t, so "all tables
-    // before t differ" is one mask test against the smeared XOR. The
-    // candidate set is bit-identical to the dropDuplicates shape (each
-    // colliding (a,b) pair, a < b, emitted exactly once); packing needs
-    // nPlanes*tables <= 126 bits — wider configs keep the old shape.
-    val lowTables = math.min(tables, 63 / nPlanes)
-    // `graft.lsh.legacyDedup` system property: measurement escape hatch
-    // (forces the old dropDuplicates shape) for same-session A/Bs — the
-    // two shapes are answer-identical (LshRecallSpec pins it)
-    val packable = nPlanes >= 1 && nPlanes <= 63 &&
-      (tables - lowTables).toLong * nPlanes <= 63 &&
-      !sys.props.contains("graft.lsh.legacyDedup")
-    def packSig(range: Range): Column =
-      if (range.isEmpty) lit(0L)
-      else range.map(t => shiftleft(buckets(t), (t - range.start) * nPlanes))
-        .reduce(_.bitwiseOR(_))
-    // banded frame carries (id, table, bucket) + the two packed-signature
-    // longs — 36 bytes/row; the vectors rejoin AFTER candidate pairing as
-    // bare id pairs, so the self-join never shuffles embedding arrays
-    val bucketed = materialize(base.select(col("id"),
-        posexplode(array(buckets: _*)),
-        packSig(0 until lowTables).as("sig_lo"),
-        packSig(lowTables until tables).as("sig_hi"))
+    // each vector's `tables` hyperplane hashes are computed ONCE, in the
+    // Project below the explode: a hash column selected beside the
+    // Generate is re-evaluated per exploded row (`tables`x the hashing).
+    // The banded frame carries (id, table, bucket) — 20 bytes/row; the
+    // vectors rejoin AFTER candidate pairing as bare id pairs, so the
+    // self-join never shuffles embedding arrays
+    val bucketed = materialize(base.select(col("id"), array(buckets: _*).as("bs"))
+      .select(col("id"), posexplode(col("bs")))
       .withColumnsRenamed(Map("pos" -> "table", "col" -> "bucket")))
-    // per-group "any bit differs" smear: OR the XOR over the group's
-    // nPlanes bit positions down onto the group's BASE bit, then mask to
-    // base bits — group t's base bit is set iff the buckets differ there
-    def baseMask(groups: Int): Long =
-      (0 until groups).foldLeft(0L)((m, g) => m | (1L << (g * nPlanes)))
-    def differs(a: Column, b: Column, groups: Int): Column = {
-      val z = a.bitwiseXOR(b)
-      (0 until nPlanes).map(i => shiftrightunsigned(z, i))
-        .reduce(_.bitwiseOR(_)).bitwiseAND(lit(baseMask(groups)))
-    }
-    val firstSharedBand: Column = {
-      val t = col("a.table")
-      val dLo = differs(col("a.sig_lo"), col("b.sig_lo"), lowTables)
-      val dHi = differs(col("a.sig_hi"), col("b.sig_hi"), tables - lowTables)
-      // all groups strictly below t must DIFFER (the joined group t is
-      // equal by the bucket equi-condition, so t is the first match)
-      // variable shift amounts need the SQL shiftleft (the Scala helper
-      // only takes a literal Int shift)
-      def shl(v: Column, bits: Column): Column =
-        call_function("shiftleft", v, bits)
-      val belowLo = lit(baseMask(lowTables)).bitwiseAND(
-        when(t >= lowTables, lit(-1L))
-          .otherwise(shl(lit(1L), t * lit(nPlanes)) - 1))
-      val belowHi = lit(baseMask(tables - lowTables)).bitwiseAND(
-        when(t <= lowTables, lit(0L))
-          .otherwise(shl(lit(1L), (t - lit(lowTables)) * lit(nPlanes)) - 1))
-      dLo.bitwiseAND(belowLo) === belowLo &&
-        dHi.bitwiseAND(belowHi) === belowHi
-    }
-    val paired = bucketed.as("a").join(bucketed.as("b"),
-      col("a.table") === col("b.table") &&
+    val cands = bucketed.as("a").join(bucketed.as("b"),
+        col("a.table") === col("b.table") &&
         col("a.bucket") === col("b.bucket") &&
-        col("a.id") < col("b.id") &&
-        (if (packable) firstSharedBand else lit(true)))
+        col("a.id") < col("b.id"))
       .select(col("a.id").as("vec_a"), col("b.id").as("vec_b"))
-    val cands =
-      if (packable) paired else paired.dropDuplicates("vec_a", "vec_b")
+      .dropDuplicates("vec_a", "vec_b")
     cands
       .join(base.select(col("id").as("vec_a"), col("v").as("va")), "vec_a")
       .join(base.select(col("id").as("vec_b"), col("v").as("vb")), "vec_b")

@@ -118,13 +118,24 @@ class CompactionSpec extends AnyFunSuite {
     val stale = new java.io.File(dir + ".append_tmp-stale")
     val fresh = new java.io.File(dir + ".append_tmp-fresh")
     assert(stale.mkdirs() && fresh.mkdirs())
-    assert(stale.setLastModified(
-      System.currentTimeMillis() - 2 * graft.sources.Sinks.DefaultLeaseStaleMs))
+    val longAgo =
+      System.currentTimeMillis() - 2 * graft.sources.Sinks.DefaultLeaseStaleMs
+    assert(stale.setLastModified(longAgo))
+    // a LONG-RUNNING live writer: its stage dir's own mtime is old (set
+    // at write start), but its task files keep landing further down the
+    // tree — only the newest mtime in the tree says whether it is live
+    val live = new java.io.File(dir + ".append_tmp-live")
+    val liveTask = new java.io.File(live, "_temporary/0/_temporary/part-0")
+    assert(liveTask.getParentFile.mkdirs() && liveTask.createNewFile())
+    assert(live.setLastModified(longAgo))
     graft.ops.Dedup.appendExactDigestIndex(docs, dir)
     assert(spark.read.parquet(dir).count() === 10)
     assert(!stale.exists(), "stale leftover stage was not reaped")
     assert(fresh.exists(), "a FRESH (possibly live) sibling stage was deleted")
+    assert(liveTask.exists(),
+      "a live stage with an old top dir but fresh nested files was deleted")
     fresh.delete()
+    graft.sources.Sinks.clearDir(live.getPath)
     // per-attempt stages never linger after a successful append
     assert(Option(new java.io.File(dir).getParentFile.listFiles()).get
       .forall(f => !f.getName.startsWith("d.append_tmp-")),

@@ -12,15 +12,13 @@ import org.scalatest.funsuite.AnyFunSuite
 class LshRecallSpec extends AnyFunSuite {
   lazy val spark = GraftSpark.spark
 
-  test("packed first-shared-band candidates == dropDuplicates candidates (round 22)") {
-    // the packed-signature join predicate must emit EXACTLY the distinct
-    // colliding pairs the old hash-aggregate dedup produced — across a
-    // two-long split config (3x24 = q58's), a single-long config, a
-    // high-planes config, and random vectors with duplicate/near points.
-    // The reference here is the EXACT join at threshold 0 restricted to
-    // bucket-colliding pairs... simpler: compare the FULL lshSelfJoin
-    // output (pairs + sims) against a brute-force recomputation of the
-    // collision predicate on the driver.
+  test("exactly-once emission equals the driver-side collision set") {
+    // lshSelfJoin must emit each distinct colliding (a, b) pair, a < b,
+    // exactly once — across q58's 3x24 config, mid-size configs, a wide
+    // 16x8 (128-bit) config, and random vectors with duplicate/near
+    // points. The reference is a brute-force recomputation of the
+    // collision predicate on the driver, compared against the FULL
+    // lshSelfJoin output at threshold -1 (every candidate survives).
     import spark.implicits._
     val rnd = new scala.util.Random(7)
     val dim = 8
@@ -31,7 +29,7 @@ class LshRecallSpec extends AnyFunSuite {
       (i, basev.map(x => x + 0.05 * rnd.nextGaussian()).toSeq)
     }
     val df = vecs.toDF("vec_id", "v")
-    for ((planes, tables) <- Seq((3, 24), (8, 6), (5, 4))) {
+    for ((planes, tables) <- Seq((3, 24), (8, 6), (5, 4), (16, 8))) {
       val got = graft.ops.Similarity.lshSelfJoin(df, threshold = -1.0,
           dim = dim, nPlanes = planes, tables = tables)
         .select("vec_a", "vec_b").collect()

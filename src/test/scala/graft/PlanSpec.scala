@@ -346,6 +346,44 @@ class PlanSpec extends AnyFunSuite {
     graft.ops.OpCaches.unpersistAll()
   }
 
+  test("lshSelfJoin: hashes each vector once below the explode, dedups pairs in one aggregate") {
+    import org.apache.spark.sql.catalyst.expressions.NamedExpression
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    import org.apache.spark.sql.execution.{GenerateExec, ProjectExec, SparkPlan}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.functions.col
+    val emb = graft.sources.Tables.load(spark, sfDir, "embeddings")
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+    val qe = graft.ops.Similarity.lshSelfJoin(emb, threshold = 0.45, dim = 64,
+      nPlanes = 3, tables = 24).queryExecution
+    // the banded frame is materialized, so its Generate lives in a cached
+    // plan: walk every plan tree the query reads, cached ones included
+    // (the helper descends into adaptive plans and their query stages)
+    val aqe = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    def trees(p: SparkPlan): Seq[SparkPlan] = p +: aqe.collect(p) {
+      case s: InMemoryTableScanExec => trees(s.relation.cachedPlan)
+    }.flatten
+    val all = trees(qe.executedPlan)
+    def hasGenerate(p: SparkPlan) = aqe.find(p)(_.isInstanceOf[GenerateExec]).isDefined
+    def hashes(p: ProjectExec) =
+      p.projectList.exists(_.exists(_.isInstanceOf[graft.functions.DotProduct]))
+    assert(all.exists(hasGenerate), s"no banding explode:\n$all")
+    // a hash column projected ABOVE the Generate re-runs every table's
+    // hyperplane dot products once per exploded row
+    val hashAboveGenerate = all.flatMap(t => aqe.collect(t) {
+      case p: ProjectExec if hashes(p) && hasGenerate(p) => p
+    })
+    assert(hashAboveGenerate.isEmpty,
+      s"dot_product projected above the banding Generate:\n$hashAboveGenerate")
+    // colliding pairs dedup as bare id pairs, in exactly one aggregate
+    val pairDedups = qe.optimizedPlan.collect {
+      case a: Aggregate if a.groupingExpressions.collect {
+          case n: NamedExpression => n.name } == Seq("vec_a", "vec_b") => a
+    }
+    assert(pairDedups.size === 1, s"expected one (vec_a, vec_b) dedup:\n${qe.optimizedPlan}")
+    graft.ops.OpCaches.unpersistAll()
+  }
+
   test("q46: vocabulary top-K plans as partial counts + TakeOrderedAndProject") {
     val p = plan("q46_ngram_freq")
     // a global Sort here would shuffle-sort every distinct n-gram; the
