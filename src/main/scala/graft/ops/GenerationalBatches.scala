@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import graft.sources.Sinks
 
 /** The GENERATIONAL BATCH PROTOCOL shared by [[IncrementalSession]] (an
   * event store) and [[RollupStore]] (a state table): a store is a flat
@@ -13,8 +14,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * crash inside that window double-serves every folded row.
   *
   * All paths go through the Hadoop FileSystem API, so the same protocol
-  * runs on `file://`, `hdfs://`, and (with the documented rename/create
-  * caveats, see `Sinks.compactParquet`) `s3a://`.
+  * runs on `file://`, `hdfs://`, and (with the rename caveat stated on
+  * [[publish]]) `s3a://`.
   */
 private[graft] object GenerationalBatches {
 
@@ -179,14 +180,12 @@ private[graft] object GenerationalBatches {
       .map(_.getPath.getName)
 
   /** Rewrite `base`'s manifest from the CURRENT listing (writer-side,
-    * lease held). Published by write-temp-then-rename; the delete before
-    * the rename opens a brief no-manifest window, which readers treat as
-    * "fall back to listing" (always correct). On HDFS/local the rename
-    * is atomic; on S3A it is a COPY, so a reader can open a
-    * PARTIALLY-COPIED manifest — which is why the last line is a
-    * TERMINATOR (`e <line count>`): [[readManifest]] refuses any
-    * manifest whose terminator is missing or disagrees, so a torn copy
-    * degrades to the listing fallback instead of silently serving a
+    * lease held), published by `Sinks.publishFile`; its brief
+    * no-manifest window reads as "fall back to listing" (always
+    * correct). The last line is a TERMINATOR (`e <line count>`):
+    * [[readManifest]] refuses any manifest whose terminator is missing
+    * or disagrees, so a partially-copied manifest (see [[publish]] on
+    * S3A) degrades to the listing fallback instead of silently serving a
     * subset of the store's files. (Manifests written before the
     * terminator existed are likewise treated as absent; the next
     * maintenance op's heal rewrites them.) */
@@ -205,12 +204,7 @@ private[graft] object GenerationalBatches {
       }
     }
     sb.append("e ").append(n).append('\n')
-    val tmp = new Path(base, s".$Manifest.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(sb.toString.getBytes("UTF-8")) finally out.close()
-    fs.delete(new Path(base, Manifest), false)
-    if (!fs.rename(tmp, new Path(base, Manifest)))
-      throw new java.io.IOException(s"could not publish manifest in $base")
+    Sinks.publishFile(fs, new Path(base, Manifest), sb.toString)
   }
 
   /** Parsed manifest: (live batch dir names, ingest ids, data-file paths
@@ -233,26 +227,83 @@ private[graft] object GenerationalBatches {
         body.collect { case s if s.startsWith("f ") => s.drop(2) }))
     } catch { case _: java.io.FileNotFoundException => None }
 
-  /** Write the commit marker ATOMICALLY LAST; `folded` non-empty marks a
+  /** Rows a landing step put in its batch dir: `expected` by the op's
+    * own count of what it wrote, `footers` by the landed files' parquet
+    * footers. */
+  final case class Landed(expected: Long, footers: Long)
+
+  /** The ONE publish path of every generational op. The op says only
+    * how its rows reach the next batch dir (`land`, handed
+    * `dir/batch_<k>`; None = an empty delta, which commits as a no-op),
+    * which live batches it `folds` (none for an append) and which ingest
+    * `ids` the batch carries; `live` numbers the batch. The rest runs
+    * here, in crash order, with `onStep` (the specs' fault-injection
+    * seam) between the steps:
+    *   written   — the footer count matches the expected count; no
+    *               marker yet, so a crash here is invisible and the next
+    *               recover() deletes the dir;
+    *   committed — [[commit]] published the marker: the batch is the
+    *               truth and the folded dirs are dead for every reader;
+    *               `afterCommit` then runs (RollupStore's manifest
+    *               rewrite — before the folded files vanish, so manifest
+    *               readers switch while the old files still exist);
+    *   cleaned   — folded dirs deleted, or left to a later recover()
+    *               when a positive `cleanupDelayMs` grace window is
+    *               open (only ops that fold reach this step).
+    * Returns the batch's row count (0 for an empty delta).
+    *
+    * OBJECT STORES: a batch whose rows are RENAMED in (the grained ops
+    * move a staged partition dir to `batch_<k>/states`) and every
+    * [[Sinks.publishFile]] rely on rename. On HDFS/local that rename is
+    * atomic; on S3A it is a non-atomic COPY+DELETE. A copy that dies
+    * mid-way throws before the marker, leaving an unmarked partial dir
+    * that recovery deletes and the replay guard re-lands
+    * (MidRenameCrashSpec). A renamed-in batch's `footers` are the staged
+    * files' counts, verified against the op's observed total before any
+    * grain commits, so its check here trusts the rename to have moved
+    * every file; a reader can also observe a partially-copied small file,
+    * which is why the manifest and genesis end with terminators. The
+    * costs on S3A are the copied bytes and a longer crash-replay window;
+    * deployments there should prefer an S3A committer-style layout or a
+    * table format for the data plane. */
+  def publish(fs: FileSystem, dir: Path, live: Seq[(Long, Path)],
+      folds: Seq[(Long, Path)], ids: Set[String], cleanupDelayMs: Long,
+      onStep: String => Unit, afterCommit: => Unit = ())(
+      land: Path => Option[Landed]): Long = {
+    val k = live.map(_._1).maxOption.fold(0L)(_ + 1)
+    val batchPath = new Path(dir, s"batch_$k")
+    land(batchPath) match {
+      case None =>
+        fs.delete(batchPath, true); onStep("committed"); 0L
+      case Some(Landed(expected, footers)) =>
+        require(footers == expected,
+          s"batch_$k under $dir has $footers of $expected rows on disk; " +
+            "left uncommitted, live batches intact")
+        onStep("written")
+        commit(fs, batchPath, folds.map(_._2.getName), ids)
+        onStep("committed")
+        afterCommit
+        if (folds.nonEmpty) {
+          if (cleanupDelayMs <= 0L)
+            folds.foreach { case (_, p) => fs.delete(p, true) }
+          onStep("cleaned")
+        }
+        expected
+    }
+  }
+
+  /** Write the commit marker LAST; `folded` non-empty marks a
     * compaction and lists the dirs it replaced; `ids` non-empty records
     * the batch's ingest ids (its own on an append, the union of the
     * folded batches' on a compaction) in [[IngestIds]] BEFORE the marker
     * — the ids become durable exactly when the batch does, and a crash
     * in between leaves a marker-less dir that recovery deletes, ids and
     * all (correct: the data those ids guard was never served either, so
-    * the redelivery must re-append).
-    *
-    * The content is written to a `.`-prefixed temp file and RENAMED into
-    * place: create-write-close would expose a crash window where the
-    * marker exists with a TRUNCATED folded list — committedBatches would
-    * see the compacted batch as live while foldedDirs misses some of the
-    * dirs it replaced, double-serving their rows. Rename publishes the
-    * complete content or nothing (the temp name is `.`-prefixed, so a
-    * crashed leftover is invisible to readers and parquet scans alike;
-    * the single-writer lease means no rename contention on the final
-    * name). */
-  def commit(fs: FileSystem, batchPath: Path, folded: Seq[String],
-      ids: Set[String] = Set.empty): Unit = {
+    * the redelivery must re-append). The marker goes through
+    * `Sinks.publishFile`: a torn marker would list only part of the
+    * dirs a compaction replaced, double-serving the rest. */
+  private def commit(fs: FileSystem, batchPath: Path, folded: Seq[String],
+      ids: Set[String]): Unit = {
     if (ids.nonEmpty) {
       require(ids.forall(id => id.nonEmpty && !id.contains('\n')),
         s"ingest ids must be non-empty and newline-free: $ids")
@@ -260,20 +311,14 @@ private[graft] object GenerationalBatches {
       try out.write(ids.toSeq.sorted.mkString("\n").getBytes("UTF-8"))
       finally out.close()
     }
-    val tmp = new Path(batchPath, s".$Marker.tmp")
-    val out = fs.create(tmp, true)
     // a compaction marker also records the WRITER's clock (`#ts=` line):
     // the grace horizon takes max(file modification time, this) — see
     // foldedDirsWithCommitTime — so a filesystem clock behind the writer
     // fleet cannot shorten the promised cleanupDelayMs window. A `#` line
     // can never collide with a dir name (batch dirs are `batch_<k>`), so
     // even a parser that misread it as a folded name would match nothing
-    try if (folded.nonEmpty) out.write(
-      (folded.mkString("\n") + s"\n#ts=${System.currentTimeMillis()}")
-        .getBytes("UTF-8"))
-    finally out.close()
-    if (!fs.rename(tmp, new Path(batchPath, Marker)))
-      throw new java.io.IOException(
-        s"could not publish commit marker in $batchPath")
+    Sinks.publishFile(fs, new Path(batchPath, Marker),
+      if (folded.isEmpty) ""
+      else folded.mkString("\n") + s"\n#ts=${System.currentTimeMillis()}")
   }
 }

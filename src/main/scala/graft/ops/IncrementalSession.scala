@@ -74,15 +74,13 @@ object IncrementalSession {
     // the next batch number off the committed list, so any two concurrent
     // writers race it (readers need no lease — the marker protocol keeps
     // them exact throughout)
-    graft.sources.Sinks.withSingleWriterLease(fs, leasePath(base),
-        leaseStaleMs) {
+    graft.sources.Sinks.withSingleWriterLease(fs,
+        GenerationalBatches.leasePath(base), leaseStaleMs) {
     // -- recover: reap marker-less (crashed) batch dirs, plus dirs a
     // committed compaction folded but crashed before deleting ------------
-    val committed = recover(fs, base)
+    val committed = GenerationalBatches.recover(fs, base)
     onStep("recovered")
     val prev = committed.sortBy(_._1).lastOption
-    val k = prev.map(_._1 + 1).getOrElse(0L)
-    val batchPath = new org.apache.hadoop.fs.Path(base, s"batch_$k")
     val state = prev.map { case (_, p) =>
       spark.read.parquet(new org.apache.hadoop.fs.Path(p, "state").toString) }
 
@@ -124,91 +122,81 @@ object IncrementalSession {
         .as("__violates"))
     val adjusted = adjusted0.persist()
     try {
-    // -- write out WHILE checking, verify, then commit --------------------
+    // -- write out WHILE checking; GenerationalBatches.publish verifies
+    // and commits ---------------------------------------------------------
     // The empty-delta and interleave gates ride the out write itself via
     // observe() (the same one-pass shape as RollupStore's observed
     // ingest, guide §1.2): every out row carries its user's __violates
     // flag through the stitch join, so ONE job computes the session ids,
-    // writes them, and aggregates the gates — the old separate checks
-    // collect was a full extra pass over the batch plus its own AQE
-    // job round-trips. The batch dir is marker-less until commit, so a
-    // violating or empty delta just deletes the unpublished dir — readers
-    // never saw it, exactly like the old refuse-before-writing path.
-    //
-    // Output file sizing (guide §6): the windowed batch is PERSISTED, so
-    // its partitioning is pinned at the session shuffle count and AQE
-    // cannot coalesce the write — a 32-core session wrote 32 near-empty
-    // files per daily batch, then the footer verify, the commit renames
-    // and the next compaction's scan all paid per-file overhead 32 times.
-    // Coalesce the write to one partition per
-    // `spark.sql.files.maxPartitionBytes` of the batch's estimated bytes
-    // (the same scale-adaptive rule as RollupStore.autoFoldPartitions).
-    // The estimate precedes materialization, so it can run high (a
-    // filter over a cached log estimates at the log's size) — coalesce
-    // is capped by the actual partition count, so an overestimate
-    // degrades to the pre-round file count, never below it.
-    val outParts = RollupStore.autoFoldPartitions(
-      local.queryExecution.optimizedPlan.stats.sizeInBytes,
-      spark.sessionState.conf.filesMaxPartitionBytes)
-    val outPath = new org.apache.hadoop.fs.Path(batchPath, "out")
-    val m = graft.sources.Sinks.writeParquetObserved(
-      local.join(adjusted.select(col("__u"), col("__base"), col("__merged"),
-          col("__violates")),
-          u === col("__u"))
-        .withColumn("session_id",
-          col("__graft_local") + col("__base") - col("__merged"))
-        .drop("__u", "__base", "__merged", "__graft_local")
-        .coalesce(outParts),
-      outPath.toString,
-      Seq(count(lit(1)).as("n"),
-        max(when(col("__violates"), u)).as("bad")),
-      dropCols = Seq("__violates"))
-    val nBatch = graft.sources.Sinks.observedLong(m, "n")
-    // an empty delta is a NORMAL day, not an error: commit a no-op (the
-    // unpublished dir is removed, state untouched) so a quiet-day nightly
-    // run succeeds and subsequent batches are unaffected
-    if (nBatch == 0) {
-      fs.delete(batchPath, true); onStep("committed"); return 0L
-    }
-    val bad = m.get("bad").filter(_ != null)
-    if (bad.nonEmpty) fs.delete(batchPath, true)
-    require(bad.isEmpty,
-      s"batch interleaves in time with history for user $bad; " +
-        "incremental sessionize requires per-user time-ordered batches")
-    val updated = adjusted.select(col("__u").as(userCol),
-      unix_micros(col("__last")).as(LastTsCol),
-      (col("__base") - col("__merged") + col("__n")).as(SessionsCol))
-    val newState = state match {
-      case Some(st) => updated.unionByName(
-        st.join(updated.select(col(userCol).as("__u")),
-          st(userCol) === col("__u"), "left_anti"))
-      case None => updated
-    }
-    // the state carries EVERY user ever seen, not just this batch's — a
-    // quiet day's tiny batch must not coalesce a year of accumulated
-    // state into one file, so its sizing adds the previous state's own
-    // on-disk bytes (one driver metadata call)
-    val stateParts = RollupStore.autoFoldPartitions(
-      BigInt(prev.map { case (_, p) =>
-        fs.getContentSummary(new org.apache.hadoop.fs.Path(p, "state"))
-          .getLength }.getOrElse(0L)) +
+    // writes them, and aggregates the gates. The batch dir is
+    // marker-less until commit, so a violating delta just deletes the
+    // unpublished dir — readers never saw it.
+    GenerationalBatches.publish(fs, base, committed, Nil, Set.empty, 0L,
+        onStep) { batchPath =>
+      // Output file sizing (guide §6): the windowed batch is PERSISTED, so
+      // its partitioning is pinned at the session shuffle count and AQE
+      // cannot coalesce the write; coalesce it to one partition per
+      // `spark.sql.files.maxPartitionBytes` of the batch's estimated
+      // bytes. The estimate precedes materialization, so it can run high
+      // (a filter over a cached log estimates at the log's size) —
+      // coalesce is capped by the actual partition count, so an
+      // overestimate never writes more files than the shuffle count.
+      val outParts = graft.sources.Sinks.autoFoldPartitions(
         local.queryExecution.optimizedPlan.stats.sizeInBytes,
-      spark.sessionState.conf.filesMaxPartitionBytes)
-    newState.coalesce(stateParts).write.mode("overwrite")
-      .parquet(new org.apache.hadoop.fs.Path(batchPath, "state").toString)
-    // post-write verify from the files' FOOTERS (complete-file row counts,
-    // no re-scan of what was just written — Sinks.parquetRowCount); the
-    // observed count and the footers come from independent machinery, so
-    // write loss still shows as their disagreement
-    val written = graft.sources.Sinks.parquetRowCount(fs, outPath,
-      spark.sessionState.newHadoopConf())
-    require(written == nBatch,
-      s"sessionized batch changed the row count ($nBatch -> $written); " +
-        s"batch_$k left uncommitted, previous state intact")
-    onStep("written")
-    GenerationalBatches.commit(fs, batchPath, Seq.empty)
-    onStep("committed")
-    nBatch
+        spark.sessionState.conf.filesMaxPartitionBytes)
+      val outPath = new org.apache.hadoop.fs.Path(batchPath, "out")
+      val m = graft.sources.Sinks.writeParquetObserved(
+        local.join(adjusted.select(col("__u"), col("__base"), col("__merged"),
+            col("__violates")),
+            u === col("__u"))
+          .withColumn("session_id",
+            col("__graft_local") + col("__base") - col("__merged"))
+          .drop("__u", "__base", "__merged", "__graft_local")
+          .coalesce(outParts),
+        outPath.toString,
+        Seq(count(lit(1)).as("n"),
+          max(when(col("__violates"), u)).as("bad")),
+        dropCols = Seq("__violates"))
+      val nBatch = graft.sources.Sinks.observedLong(m, "n")
+      // an empty delta is a NORMAL day, not an error: it commits as a
+      // no-op (state untouched), so a quiet-day nightly run succeeds and
+      // subsequent batches are unaffected
+      if (nBatch == 0) None
+      else {
+        val bad = m.get("bad").filter(_ != null)
+        if (bad.nonEmpty) fs.delete(batchPath, true)
+        require(bad.isEmpty,
+          s"batch interleaves in time with history for user $bad; " +
+            "incremental sessionize requires per-user time-ordered batches")
+        val updated = adjusted.select(col("__u").as(userCol),
+          unix_micros(col("__last")).as(LastTsCol),
+          (col("__base") - col("__merged") + col("__n")).as(SessionsCol))
+        val newState = state match {
+          case Some(st) => updated.unionByName(
+            st.join(updated.select(col(userCol).as("__u")),
+              st(userCol) === col("__u"), "left_anti"))
+          case None => updated
+        }
+        // the state carries EVERY user ever seen, not just this batch's —
+        // a quiet day's tiny batch must not coalesce a year of accumulated
+        // state into one file, so its sizing adds the previous state's
+        // own on-disk bytes (one driver metadata call)
+        val stateParts = graft.sources.Sinks.autoFoldPartitions(
+          BigInt(prev.map { case (_, p) =>
+            fs.getContentSummary(new org.apache.hadoop.fs.Path(p, "state"))
+              .getLength }.getOrElse(0L)) +
+            local.queryExecution.optimizedPlan.stats.sizeInBytes,
+          spark.sessionState.conf.filesMaxPartitionBytes)
+        newState.coalesce(stateParts).write.mode("overwrite")
+          .parquet(new org.apache.hadoop.fs.Path(batchPath, "state").toString)
+        // the observed count and the out files' FOOTERS come from
+        // independent machinery, so write loss shows as their
+        // disagreement — no re-scan of what was just written
+        Some(GenerationalBatches.Landed(nBatch,
+          graft.sources.Sinks.parquetRowCount(fs, outPath,
+            spark.sessionState.newHadoopConf())))
+      }
+    }
     } finally adjusted.unpersist()
     } finally local.unpersist()
     }
@@ -246,9 +234,9 @@ object IncrementalSession {
       s"targetPartitions must be positive, got $targetPartitions")
     val fs = fsOf(spark, baseDir)
     val base = new org.apache.hadoop.fs.Path(baseDir)
-    graft.sources.Sinks.withSingleWriterLease(fs, leasePath(base),
-        leaseStaleMs) {
-    val committed = recover(fs, base).sortBy(_._1)
+    graft.sources.Sinks.withSingleWriterLease(fs,
+        GenerationalBatches.leasePath(base), leaseStaleMs) {
+    val committed = GenerationalBatches.recover(fs, base).sortBy(_._1)
     onStep("recovered")
     if (committed.isEmpty) return 0L
     val hconf = spark.sessionState.newHadoopConf()
@@ -265,48 +253,38 @@ object IncrementalSession {
     val expected = committed.map { case (_, p) =>
       graft.sources.Sinks.parquetRowCount(fs,
         new org.apache.hadoop.fs.Path(p, "out"), hconf) }.sum
-    val k = committed.last._1 + 1
-    val batchPath = new org.apache.hadoop.fs.Path(base, s"batch_$k")
-    // coalesce, not repartition: the fold is pure LAYOUT (union the out
-    // dirs into <= targetPartitions files) and the scan's splits are
-    // already the right rows — a repartition here moved every byte
-    // through a full shuffle (plus the keyless round-robin's
-    // sort-before-repartition, SPARK-23207) only to land them in files
-    // again (guide §2.4: an exchange that exists only to make layout).
-    all.coalesce(targetPartitions).write.mode("overwrite")
-      .parquet(new org.apache.hadoop.fs.Path(batchPath, "out").toString)
-    // the latest state IS the post-fold state: it already reflects every
-    // folded batch (each append writes the COMPLETE per-user state) — so
-    // carry it forward as a VERBATIM byte copy (driver-side FileUtil, no
-    // Spark job to decode and re-encode parquet whose bytes are already
-    // exactly right)
-    org.apache.hadoop.fs.FileUtil.copy(fs,
-      new org.apache.hadoop.fs.Path(committed.last._2, "state"), fs,
-      new org.apache.hadoop.fs.Path(batchPath, "state"), false, hconf)
-    val written = graft.sources.Sinks.parquetRowCount(fs,
-      new org.apache.hadoop.fs.Path(batchPath, "out"),
-      spark.sessionState.newHadoopConf())
-    require(written == expected,
-      s"compaction changed the row count ($expected -> $written); " +
-        s"batch_$k left uncommitted, folded batches intact")
-    onStep("written")
-    GenerationalBatches.commit(fs, batchPath, committed.map(_._2.getName))
-    onStep("committed")
-    committed.foreach { case (_, p) => fs.delete(p, true) }
-    onStep("cleaned")
-    expected
+    GenerationalBatches.publish(fs, base, committed, committed, Set.empty,
+        0L, onStep) { batchPath =>
+      val outPath = new org.apache.hadoop.fs.Path(batchPath, "out")
+      // coalesce, not repartition: the fold is pure LAYOUT (union the out
+      // dirs into <= targetPartitions files) and the scan's splits are
+      // already the right rows — a repartition would move every byte
+      // through a full shuffle (plus the keyless round-robin's
+      // sort-before-repartition, SPARK-23207) only to land them in files
+      // again (guide §2.4: an exchange that exists only to make layout).
+      all.coalesce(targetPartitions).write.mode("overwrite")
+        .parquet(outPath.toString)
+      // the latest state IS the post-fold state: it already reflects every
+      // folded batch (each append writes the COMPLETE per-user state) — so
+      // carry it forward as a VERBATIM byte copy (driver-side FileUtil, no
+      // Spark job to decode and re-encode parquet whose bytes are already
+      // exactly right)
+      org.apache.hadoop.fs.FileUtil.copy(fs,
+        new org.apache.hadoop.fs.Path(committed.last._2, "state"), fs,
+        new org.apache.hadoop.fs.Path(batchPath, "state"), false, hconf)
+      Some(GenerationalBatches.Landed(expected,
+        graft.sources.Sinks.parquetRowCount(fs, outPath, hconf)))
+    }
     }
   }
-
-  private def leasePath(base: org.apache.hadoop.fs.Path) =
-    GenerationalBatches.leasePath(base)
 
   /** Committed, not-yet-reaped batch dirs the store should serve. How many
     * directories a reader's union spans — q107 pins that compaction
     * actually shrinks it. */
   def liveBatchCount(spark: SparkSession, baseDir: String): Int = {
     val fs = fsOf(spark, baseDir)
-    liveBatches(fs, new org.apache.hadoop.fs.Path(baseDir)).size
+    GenerationalBatches.liveBatches(fs, new org.apache.hadoop.fs.Path(baseDir))
+      .size
   }
 
   /** All committed sessionized events (the union never sees a crashed
@@ -332,7 +310,8 @@ object IncrementalSession {
     * years-of-grains metadata scale, where it is implemented. */
   def read(spark: SparkSession, baseDir: String): DataFrame = {
     val fs = fsOf(spark, baseDir)
-    val outs = liveBatches(fs, new org.apache.hadoop.fs.Path(baseDir))
+    val outs = GenerationalBatches.liveBatches(fs,
+        new org.apache.hadoop.fs.Path(baseDir))
       .sortBy(_._1)
       .map { case (_, p) => new org.apache.hadoop.fs.Path(p, "out").toString }
     require(outs.nonEmpty, s"no committed batches under $baseDir")
@@ -342,15 +321,4 @@ object IncrementalSession {
   private def fsOf(spark: SparkSession, dir: String) =
     new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sessionState.newHadoopConf())
-
-  // the batch/marker/fold/recovery protocol is GenerationalBatches,
-  // shared verbatim with RollupStore — this store's specifics are only
-  // the out/state subdir layout and the stitch math above
-  private def liveBatches(fs: org.apache.hadoop.fs.FileSystem,
-      base: org.apache.hadoop.fs.Path): Seq[(Long, org.apache.hadoop.fs.Path)] =
-    GenerationalBatches.liveBatches(fs, base)
-
-  private def recover(fs: org.apache.hadoop.fs.FileSystem,
-      base: org.apache.hadoop.fs.Path): Seq[(Long, org.apache.hadoop.fs.Path)] =
-    GenerationalBatches.recover(fs, base)
 }

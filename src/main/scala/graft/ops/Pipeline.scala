@@ -221,7 +221,7 @@ object Pipeline {
     // builds exactly one filter with no merge at all, a 10⁹-gram suite
     // keeps one partition per maxPartitionBytes of input. Map-only
     // hashing loses nothing from the narrower stage.
-    val benchParts = RollupStore.autoFoldPartitions(
+    val benchParts = graft.sources.Sinks.autoFoldPartitions(
       benchmark.queryExecution.optimizedPlan.stats.sizeInBytes,
       corpus.sparkSession.sessionState.conf.filesMaxPartitionBytes)
     val bloom = benchGrams.select(xxhash64(col("__gram")).as("__h"))

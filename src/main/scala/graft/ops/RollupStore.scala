@@ -92,20 +92,9 @@ import org.apache.spark.sql.types.{BinaryType, LongType}
   * whose files recovery deletes is rewritten before the op's Spark job,
   * not after it.
   *
-  * Object-store note (mirrors `Sinks.compactParquet`): the grained
-  * ingest/compaction stage-and-rename publishes each grain by RENAMING a
-  * staged partition dir into its batch dir. On HDFS/local that rename is
-  * atomic; on S3A it is a non-atomic COPY+DELETE, so a crash mid-rename
-  * can leave a PARTIAL `states` dir — which the protocol already
-  * tolerates: the batch's marker is written only after the rename's
-  * footer row count verifies against the staged count, so a partial
-  * rename is an unmarked dir that recovery deletes and the replay
-  * guard re-lands — pinned by fault injection in MidRenameCrashSpec (a
-  * FileSystem whose rename copies part of the data and dies, driven
-  * through both the grained ingest and the range compaction). The cost on S3A is the copy itself (data bytes moved
-  * twice) and a longer crash-replay window, not correctness; deployments
-  * there should prefer an S3A committer-style layout or a table format
-  * for the data plane.
+  * Object stores: the grained ingest/compaction publishes each grain by
+  * RENAMING a staged partition dir into its batch dir — see
+  * [[GenerationalBatches.publish]] for what that means on S3A.
   *
   * At 100 TB: the store is O(keys × grain) — dashboard-sized by
   * construction — while the log it summarizes is O(events); ingest costs
@@ -184,8 +173,29 @@ object RollupStore {
       committed.sortBy(_._1).lastOption.foreach { case (_, p) =>
         schemaGate(spark, new Path(p, "states"), states)
       }
-      appendInto(spark, fs, base, committed, states, stateCol, ingestId,
-        onStep)
+      GenerationalBatches.publish(fs, base, committed, Nil, ingestId.toSet,
+        0L, onStep, GenerationalBatches.writeManifest(fs, base)) { batchPath =>
+        val dataPath = new Path(batchPath, "states")
+        // ONE pass over the delta: the write itself observes the row
+        // count and the NULL-state count. The batch dir is marker-less
+        // until commit, so a NULL-carrying delta just deletes the
+        // unpublished dir
+        val m = graft.sources.Sinks.writeParquetObserved(states,
+          dataPath.toString, Seq(count(lit(1)).as("n"),
+            sum(when(col(stateCol).isNull, 1L).otherwise(0L)).as("nulls")))
+        val n = graft.sources.Sinks.observedLong(m, "n")
+        val nulls = graft.sources.Sinks.observedLong(m, "nulls")
+        if (nulls > 0) fs.delete(batchPath, true)
+        require(nulls == 0,
+          s"$nulls NULL $stateCol rows; the *_state producers never emit " +
+            "NULL — filter placeholder rows before ingest")
+        // a quiet day commits as a no-op, like the session store's empty
+        // delta
+        if (n == 0) None
+        else Some(GenerationalBatches.Landed(n,
+          graft.sources.Sinks.parquetRowCount(fs, dataPath,
+            spark.sessionState.newHadoopConf())))
+      }
     }
   }
 
@@ -239,22 +249,18 @@ object RollupStore {
     // computation, observing the NULL gates in the same job; the grain
     // inventory and the per-grain row counts the footer verification
     // checks against then come from the staged files' own footers —
-    // driver metadata reads, not jobs. The old shape persisted the whole
-    // delta and paid a separate stats aggregate first (two jobs + cache
-    // memory), and the persist pinned the shuffle partitioning so a tiny
-    // delta staged one near-empty file per shuffle partition per grain.
+    // driver metadata reads, not jobs.
     // Staging before the stripes is safe: the stage dir is hidden and
     // UUID-named (readers list only visible `<col>=` dirs; no two ops
-    // share a stage), and a crashed stage is swept by a later op exactly
-    // as before. Replays stage and then discard instead of skipping the
-    // write — the replay path pays the staged bytes, the common path
-    // saves a whole pass; at-least-once channels replay rarely.
+    // share a stage), and a crashed stage is swept by a later op.
+    // Replays stage and then discard instead of skipping the write — the
+    // replay path pays the staged bytes, the common path saves a whole
+    // pass; at-least-once channels replay rarely.
     fs.mkdirs(base)
     // STORE-GENESIS gate FIRST — before the staged write, before any
     // stripe (see [[ensureGenesis]]): the fingerprint verify needs only
     // the batch's schema, so a mismatched family fails here without
-    // paying a staged write of its delta (the old stats-job order also
-    // refused before writing anything). A refused ingest can leave a
+    // paying a staged write of its delta. A refused ingest can leave a
     // fresh store with a stamped genesis and no batches — the same state
     // as a first ingest that crashed right after its genesis, which the
     // protocol already handles (same-family retry proceeds, other
@@ -301,21 +307,9 @@ object RollupStore {
     refuse(graft.sources.Sinks.observedLong(m, "empty_grains") == 0,
       "empty-string grain value names no directory — filter or " +
         "re-encode placeholder rows before ingest")
-    val conf = spark.sessionState.newHadoopConf()
-    // inventory + per-grain counts from the staged footers, resolved on
-    // the bounded pool (one parquetRowCount per grain)
-    val stagedGrains = fs.listStatus(stage).toSeq
-      .filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith(StageHexCol + "="))
-      .map(st => unhexOf(st.getPath.getName.drop(StageHexCol.length + 1))
-        -> st.getPath)
-    val counts = inParallel(stagedGrains) { case (g, p) =>
-      g -> graft.sources.Sinks.parquetRowCount(fs, p, conf) }.toMap
-    require(counts.values.sum == graft.sources.Sinks.observedLong(m, "n"),
-      s"staged delta footers carry ${counts.values.sum} of " +
-        s"${graft.sources.Sinks.observedLong(m, "n")} rows; nothing " +
-        "committed")
-    val grains = counts.keys.toSeq.sorted
+    val staged = stagedGrains(spark, fs, stage,
+      graft.sources.Sinks.observedLong(m, "n"))
+    val grains = staged.keys.toSeq.sorted
     // one stripe per delta grain, sorted: disjoint ingests proceed in
     // parallel, overlapping ones fail fast on the first shared stripe
     graft.sources.Sinks.withLeases(fs,
@@ -342,45 +336,16 @@ object RollupStore {
         fs.delete(stage, true); onStep("committed-all"); return 0L
       }
       onStep("staged")
-      var appended = 0L
-      for ((g, committed) <- pending) {
+      // batch numbering reuses the recover() pass above: the grain
+      // stripes are held for the whole op and this loop touches each
+      // grain once (a crashed RETRY's own first recover reaps any
+      // marker-less batch_k this run leaves behind)
+      val appended = pending.map { case (g, live) =>
         val gdir = new Path(base, grainDirName(grainCol, g))
-        // batch numbering reuses the recover() pass above: its cleanup
-        // already ran, the grain stripes are held for the whole op, and
-        // this loop touches each grain once — a second recover per grain
-        // re-listed the same dirs and re-read the same markers for an
-        // answer that cannot have changed under the lease (a crashed
-        // RETRY's own first recover reaps any marker-less batch_k this
-        // run leaves behind)
-        val k = committed.map(_._1).maxOption.map(_ + 1).getOrElse(0L)
-        val batchPath = new Path(gdir, s"batch_$k")
-        val dataPath = new Path(batchPath, "states")
-        fs.mkdirs(batchPath)
-        val part = new Path(stage, s"$StageHexCol=${hexOf(g)}")
-        require(fs.exists(part),
-          s"staged partition missing for grain '$g' ($part)")
-        if (!fs.rename(part, dataPath))
-          throw new java.io.IOException(
-            s"could not move staged grain '$g' into $dataPath")
-        // no footer RE-read after the rename (round 22, guide §1.2): the
-        // write-loss check is observed-rows-vs-staged-footers, already
-        // done above over the stage dir under this op's guard lease; the
-        // rename is a metadata move of those same verified files (and
-        // throws on failure), so re-parsing every footer per grain bought
-        // a second copy of the same number — one footer pass per ingest,
-        // not two
-        val written = counts(g)
-        onStep("written")
-        GenerationalBatches.commit(fs, batchPath, Seq.empty,
-          ingestId.toSet)
-        onStep("committed")
-        // manifest AFTER the marker (the onStep seam between them is the
-        // crash window the manifest spec exercises): a crash here leaves
-        // the manifest one op stale — readers fall back or serve the
-        // previous snapshot; the next touch of this grain heals it
-        GenerationalBatches.writeManifest(fs, gdir)
-        appended += written
-      }
+        GenerationalBatches.publish(fs, gdir, live, Nil, ingestId.toSet, 0L,
+          onStep, GenerationalBatches.writeManifest(fs, gdir))(
+          renameIn(fs, staged(g)))
+      }.sum
       // (replay-skipped grains were already healed by the post-recover
       // healManifestIfStale pass above; their staged partitions vanish
       // with the stage dir)
@@ -433,6 +398,37 @@ object RollupStore {
   private def unhexOf(h: String): String =
     new String(h.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray,
       "UTF-8")
+
+  /** The STAGED-GRAIN INVENTORY of a grained ingest or compaction: grain
+    * -> (its hex partition dir under `stage`, that partition's footer row
+    * count), the footers read on the bounded pool. Their sum must equal
+    * the op's `observed` total before any grain commits: write loss in
+    * the staged write fails here, with every live batch intact. */
+  private def stagedGrains(spark: SparkSession, fs: FileSystem, stage: Path,
+      observed: Long): Map[String, (Path, Long)] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val parts = fs.listStatus(stage).toSeq
+      .filter(st => st.isDirectory &&
+        st.getPath.getName.startsWith(StageHexCol + "="))
+      .map(st => unhexOf(st.getPath.getName.drop(StageHexCol.length + 1))
+        -> st.getPath)
+    val staged = graft.sources.Sinks.inParallel(parts) { case (g, p) =>
+      g -> (p, graft.sources.Sinks.parquetRowCount(fs, p, conf)) }.toMap
+    val total = staged.values.map(_._2).sum
+    require(total == observed,
+      s"staged footers under $stage carry $total of $observed rows; " +
+        "nothing committed, batches intact")
+    staged
+  }
+
+  /** Landing step of the grained ops: RENAME one staged partition (its
+    * dir and inventory row count) in as the batch's `states` dir. */
+  private def renameIn(fs: FileSystem, part: (Path, Long))(
+      batchPath: Path): Option[GenerationalBatches.Landed] = {
+    fs.mkdirs(batchPath)
+    graft.sources.Sinks.hadoopRename(fs, part._1, new Path(batchPath, "states"))
+    Some(GenerationalBatches.Landed(part._2, part._2))
+  }
 
   /** Lease stripe for one grain, AT THE STORE ROOT (not inside the grain
     * dir, so a dropped-and-recreated grain reuses the same stripe path
@@ -569,13 +565,6 @@ object RollupStore {
       else Some(lines.dropRight(1).mkString("\n"))
     } catch { case _: java.io.FileNotFoundException => None }
 
-  /** Publish by temp+rename with a completeness terminator (see
-    * [[readGenesis]]): complete or observably-absent, never silently
-    * torn. The delete before the rename lets a heal REWRITE a torn or
-    * pre-terminator file (rename onto an existing path fails on HDFS);
-    * the brief absent window is serialized away by the genesis lease —
-    * a concurrent ingest's fast-path read of the window falls into its
-    * own None path and collides loudly on that lease. */
   /** The on-disk form: fingerprint + completeness terminator. */
   private def terminatedGenesis(fp: String): String =
     fp + s"\ne ${fp.split("\n", -1).length}"
@@ -590,16 +579,17 @@ object RollupStore {
       finally in.close()
     } catch { case _: java.io.FileNotFoundException => None }
 
+  /** Published by `Sinks.publishFile` with a completeness terminator
+    * (see [[readGenesis]]): complete or observably-absent, never silently
+    * torn. Its replace-in-place lets a heal REWRITE a torn or
+    * pre-terminator file; the brief absent window is serialized away by
+    * the genesis lease — a concurrent ingest's fast-path read of the
+    * window falls into its own None path and collides loudly on that
+    * lease. */
   private def writeGenesis(fs: FileSystem, base: Path, fp: String): Unit = {
     fs.mkdirs(base)
-    val tmp = new Path(base, s".$GenesisFile.tmp")
-    val out = fs.create(tmp, true)
-    val terminated = terminatedGenesis(fp)
-    try out.write(terminated.getBytes("UTF-8")) finally out.close()
-    val dst = new Path(base, GenesisFile)
-    fs.delete(dst, false)
-    if (!fs.rename(tmp, dst))
-      throw new java.io.IOException(s"could not publish genesis in $base")
+    graft.sources.Sinks.publishFile(fs, new Path(base, GenesisFile),
+      terminatedGenesis(fp))
   }
 
   private def ensureGenesis(spark: SparkSession, fs: FileSystem,
@@ -822,63 +812,26 @@ object RollupStore {
       val stage = new Path(base,
         s".compact-${java.util.UUID.randomUUID()}")
       // ONE job: the staged partitioned write observes the fold's total
-      // row count — the old persist + per-grain count() pass cached the
-      // whole folded result and paid a second aggregate job for counts
-      // the staged files' own FOOTERS already record per grain. Write
-      // loss shows as sum(staged footers) != observed total, checked
-      // BEFORE any grain commits; the per-grain rename of those verified
-      // files is a metadata move that throws on failure (round 22: the
-      // post-rename footer re-read that re-parsed the same numbers is
-      // gone).
+      // row count, and the staged files' own footers give the per-grain
+      // counts
       val observedTotal = graft.sources.Sinks.observedLong(
         graft.sources.Sinks.writeParquetObserved(
           folded.withColumn(StageHexCol, hex(col(grainCol).cast("string"))),
           stage.toString, Seq(count(lit(1)).as("n")), Seq(StageHexCol)),
         "n")
       onStep("staged")
-      val conf = spark.sessionState.newHadoopConf()
-      val stagedCounts = perGrain.map { case (g, _, _) =>
-        val part = new Path(stage, s"$StageHexCol=${hexOf(g)}")
-        require(fs.exists(part),
-          s"staged fold missing for grain '$g' ($part)")
-        g -> graft.sources.Sinks.parquetRowCount(fs, part, conf)
-      }.toMap
-      require(stagedCounts.values.sum == observedTotal,
-        s"staged fold footers carry ${stagedCounts.values.sum} of " +
-          s"$observedTotal folded rows; nothing committed, batches intact")
-      var total = 0L
-      for ((g, gdir, committed) <- perGrain) {
-        val k = committed.last._1 + 1
-        val batchPath = new Path(gdir, s"batch_$k")
-        val dataPath = new Path(batchPath, "states")
-        fs.mkdirs(batchPath)
-        val part = new Path(stage, s"$StageHexCol=${hexOf(g)}")
-        if (!fs.rename(part, dataPath))
-          throw new java.io.IOException(
-            s"could not move staged fold for grain '$g' into $dataPath")
-        // write loss was already caught above (observed fold total vs the
-        // staged footers, before any grain commits); the rename moves
-        // those same verified files and throws on failure, so a per-grain
-        // footer RE-read after it re-parsed the same numbers (round 22,
-        // guide §1.2 — one footer pass per compaction, not two)
-        val written = stagedCounts(g)
-        onStep("written")
-        GenerationalBatches.commit(fs, batchPath,
-          committed.map(_._2.getName),
-          GenerationalBatches.seenIngestIds(fs, committed))
-        onStep("committed")
-        // manifest BEFORE the folded dirs vanish: manifest readers
-        // switch to the fold while the old files still exist
-        GenerationalBatches.writeManifest(fs, gdir)
-        // a positive cleanupDelayMs defers deletion to a later run's
-        // recover(): the folded dirs are dead (the marker lists them)
-        // but their bytes outlive the commit by the grace window, so a
-        // snapshot reader planned before the fold can still finish
-        if (cleanupDelayMs <= 0L)
-          committed.foreach { case (_, p) => fs.delete(p, true) }
-        onStep("cleaned")
-        total += written
+      val staged = stagedGrains(spark, fs, stage, observedTotal)
+      perGrain.foreach { case (g, _, _) =>
+        require(staged.contains(g),
+          s"staged fold missing for grain '$g' under $stage; nothing " +
+            "committed, batches intact")
       }
+      val total = perGrain.map { case (g, gdir, live) =>
+        GenerationalBatches.publish(fs, gdir, live, live,
+          GenerationalBatches.seenIngestIds(fs, live), cleanupDelayMs,
+          onStep, GenerationalBatches.writeManifest(fs, gdir))(
+          renameIn(fs, staged(g)))
+      }.sum
       fs.delete(stage, true)
       total
     }
@@ -1242,7 +1195,7 @@ object RollupStore {
     // plans (a year of daily grains ≈ 365 ms; 100k grains ≈ 100 s).
     // Order is preserved (futures joined in `selected` order), so the
     // resolved file list is identical to the serial one.
-    val resolved = inParallel(selected) { case (_, gdir) =>
+    val resolved = graft.sources.Sinks.inParallel(selected) { case (_, gdir) =>
       GenerationalBatches.readManifest(fs, gdir) match {
         case Some((_, _, relFiles)) if relFiles.nonEmpty =>
           Left(relFiles.map(rel => new Path(gdir, rel)))
@@ -1367,7 +1320,8 @@ object RollupStore {
         "root")
     }
     (if (grains.isEmpty) Seq(one("", base))
-     else inParallel(grains) { case (g, gdir) => one(g, gdir) }) :+
+     else graft.sources.Sinks.inParallel(grains) { case (g, gdir) =>
+       one(g, gdir) }) :+
       rootRow
   }
 
@@ -1376,59 +1330,14 @@ object RollupStore {
 
   // ---- shared internals ----------------------------------------------
 
-  /** Driver-side parallelism for per-grain metadata resolution. Sized
-    * for object-store RPC latency hiding, small enough not to trip
-    * request-rate throttles (S3 allows thousands of GETs/s per prefix;
-    * 16 concurrent manifest opens is far under any limit). */
-  private val ManifestReadParallelism = 16
-
-  /** Run `f` over `xs` on a bounded pool, preserving order; the first
-    * failure propagates with its ORIGINAL exception (unwrapped from the
-    * pool's ExecutionException) so callers' error contracts are the same
-    * as the serial loop's. Single-element and empty inputs stay on the
-    * calling thread — no pool churn on the common pruned-dashboard read
-    * of one grain. */
-  private def inParallel[A, B](xs: Seq[A])(f: A => B): Seq[B] = {
-    if (xs.lengthCompare(1) <= 0) return xs.map(f)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(ManifestReadParallelism, xs.size))
-    try {
-      val futures = xs.map { x =>
-        pool.submit(new java.util.concurrent.Callable[B] {
-          def call(): B = f(x)
-        })
-      }
-      futures.map { fu =>
-        try fu.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            throw e.getCause
-        }
-      }
-    } finally pool.shutdownNow()
-  }
-
-  /** Shuffle-partition count for a fold when the caller asks for AUTO
-    * (`targetPartitions = 0`): one partition per
-    * `spark.sql.files.maxPartitionBytes` of input (the same knob that
-    * sizes scan splits, so one setting governs both sides), clamped to
-    * [1, 4096]. A FIXED count cannot be right across the store's life —
-    * 32 partitions on a year-long backfill fold puts tens of GB in one
-    * shuffle partition (spill, OOM, a single straggler task), while 32
-    * on a single quiet day's fold writes 32 near-empty files per grain.
-    * Input bytes come from the scan's own file statistics (the
-    * FileIndex already stat'ed every file — no extra RPCs). */
-  private[graft] def autoFoldPartitions(totalBytes: BigInt,
-      bytesPerPartition: Long): Int =
-    graft.sources.Sinks.autoFoldPartitions(totalBytes, bytesPerPartition)
-
   /** Resolve a fold's partition count: explicit when positive, AUTO
-    * from the scan's size statistics when 0 (see
-    * [[autoFoldPartitions]]). */
+    * (`targetPartitions = 0`) from the scan's own file statistics (the
+    * FileIndex already stat'ed every file — no extra RPCs) via
+    * `Sinks.autoFoldPartitions`. */
   private def foldPartitions(spark: SparkSession, scan: DataFrame,
       targetPartitions: Int): Int =
     if (targetPartitions > 0) targetPartitions
-    else autoFoldPartitions(
+    else graft.sources.Sinks.autoFoldPartitions(
       scan.queryExecution.optimizedPlan.stats.sizeInBytes,
       spark.sessionState.conf.filesMaxPartitionBytes)
 
@@ -1462,50 +1371,6 @@ object RollupStore {
         s"$existing; one store holds one state family at one grain")
   }
 
-  /** Write `states` as the next batch under `base` (lease already held):
-    * persist, count, NULL-gate, footer-verify, commit with `ingestId`.
-    * Returns the appended row count (0 for an empty delta). */
-  private def appendInto(spark: SparkSession, fs: FileSystem, base: Path,
-      committed: Seq[(Long, Path)], states: DataFrame, stateCol: String,
-      ingestId: Option[String], onStep: String => Unit): Long = {
-    val k = committed.map(_._1).maxOption.map(_ + 1).getOrElse(0L)
-    val batchPath = new Path(base, s"batch_$k")
-    val dataPath = new Path(batchPath, "states")
-    // ONE pass over the delta: the write itself observes the row count
-    // and the NULL-state count (the old persist/count/filter-count/write
-    // quadruple was three jobs and a cached copy of the whole delta —
-    // and the persist pinned the shuffle partitioning, so a tiny delta
-    // wrote one near-empty file per shuffle partition). The batch dir is
-    // marker-less until commit, so an empty or NULL-carrying delta just
-    // deletes the unpublished dir — readers never saw it, exactly like
-    // the old refuse-at-the-door paths.
-    val m = graft.sources.Sinks.writeParquetObserved(states,
-      dataPath.toString, Seq(count(lit(1)).as("n"),
-        sum(when(col(stateCol).isNull, 1L).otherwise(0L)).as("nulls")))
-    val n = graft.sources.Sinks.observedLong(m, "n")
-    // a quiet day commits as a no-op, like the session store's empty delta
-    if (n == 0) { fs.delete(batchPath, true); onStep("committed"); return 0L }
-    val nulls = graft.sources.Sinks.observedLong(m, "nulls")
-    if (nulls > 0) fs.delete(batchPath, true)
-    require(nulls == 0,
-      s"$nulls NULL $stateCol rows; the *_state producers never emit " +
-        "NULL — filter placeholder rows before ingest")
-    // footer-metadata verify, no re-scan (Sinks.parquetRowCount)
-    val written = graft.sources.Sinks.parquetRowCount(fs, dataPath,
-      spark.sessionState.newHadoopConf())
-    require(written == n,
-      s"state batch changed the row count ($n -> $written); " +
-        s"batch_$k left uncommitted")
-    onStep("written")
-    GenerationalBatches.commit(fs, batchPath, Seq.empty, ingestId.toSet)
-    onStep("committed")
-    // manifest AFTER the marker, same contract as the grained path: a
-    // crash between them leaves it one op stale — readers fall back or
-    // serve the previous snapshot; the next op's heal rewrites it
-    GenerationalBatches.writeManifest(fs, base)
-    n
-  }
-
   /** Fold all committed batches under `base` into one (lease already
     * held): the compaction/regrain engine. `groupCols` are the output
     * keys; ingest ids are unioned forward. */
@@ -1519,44 +1384,26 @@ object RollupStore {
     onStep("recovered")
     if (committed.isEmpty) return 0L
     // one multi-path scan of the whole sub-store (not a union chain), and
-    // ONE scan only: the fold result is persisted, counted once, and the
-    // write is footer-verified against that count — a separate
-    // distinct-key pre-scan would double compaction I/O to re-verify
-    // what groupBy structurally guarantees (one row per key)
+    // ONE scan only — a separate distinct-key pre-scan would double
+    // compaction I/O to re-verify what groupBy structurally guarantees
+    // (one row per key)
     val all = spark.read.parquet(committed.map { case (_, p) =>
       new Path(p, "states").toString }: _*)
-    val k = committed.last._1 + 1
-    val batchPath = new Path(base, s"batch_$k")
-    val dataPath = new Path(batchPath, "states")
     val folded = all.groupBy(groupCols: _*)
       .agg(combine(col(stateCol)).as(stateCol))
       .repartition(foldPartitions(spark, all, targetPartitions))
-    // ONE job: the fold's write observes its own row count — the old
-    // persist/count/write triple paid an extra pass and cached the whole
-    // folded store in executor memory for no second consumer
-    val expected = graft.sources.Sinks.observedLong(
-      graft.sources.Sinks.writeParquetObserved(folded, dataPath.toString,
-        Seq(count(lit(1)).as("n"))), "n")
-    val written = {
-      val w = graft.sources.Sinks.parquetRowCount(fs, dataPath,
-        spark.sessionState.newHadoopConf())
-      require(w == expected,
-        s"compaction wrote $w of $expected folded rows; " +
-          s"batch_$k left uncommitted, folded batches intact")
-      w
+    GenerationalBatches.publish(fs, base, committed, committed,
+      GenerationalBatches.seenIngestIds(fs, committed), cleanupDelayMs,
+      onStep, GenerationalBatches.writeManifest(fs, base)) { batchPath =>
+      val dataPath = new Path(batchPath, "states")
+      // ONE job: the fold's write observes its own row count
+      val expected = graft.sources.Sinks.observedLong(
+        graft.sources.Sinks.writeParquetObserved(folded, dataPath.toString,
+          Seq(count(lit(1)).as("n"))), "n")
+      Some(GenerationalBatches.Landed(expected,
+        graft.sources.Sinks.parquetRowCount(fs, dataPath,
+          spark.sessionState.newHadoopConf())))
     }
-    onStep("written")
-    GenerationalBatches.commit(fs, batchPath, committed.map(_._2.getName),
-      GenerationalBatches.seenIngestIds(fs, committed))
-    onStep("committed")
-    // manifest BEFORE the folded dirs vanish, as in compactGrains
-    GenerationalBatches.writeManifest(fs, base)
-    // a positive cleanupDelayMs defers deletion to a later run's
-    // recover() — the snapshot-reader grace window (see compactGrains)
-    if (cleanupDelayMs <= 0L)
-      committed.foreach { case (_, p) => fs.delete(p, true) }
-    onStep("cleaned")
-    written
   }
 
   private def readStateDirs(spark: SparkSession, fs: FileSystem,

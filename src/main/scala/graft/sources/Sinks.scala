@@ -350,10 +350,8 @@ object Sinks {
         s" gen_$nextGen left uncommitted, previous state intact")
     onStep("written")
     // -- commit --------------------------------------------------------
-    val marker = new org.apache.hadoop.fs.Path(genPath, "_GEN_COMMITTED")
-    val out = fs.create(marker, false)
-    try out.write(stagedNow.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
+    publishFile(fs, new org.apache.hadoop.fs.Path(genPath, "_GEN_COMMITTED"),
+      stagedNow.mkString("\n"))
     onStep("committed")
     // -- clean ---------------------------------------------------------
     stagedNow.foreach { name =>
@@ -520,30 +518,46 @@ object Sinks {
       conf: org.apache.hadoop.conf.Configuration): Long = {
     val files = fs.listStatus(dir).toSeq.filter(st =>
       st.isFile && st.getPath.getName.endsWith(".parquet"))
-    def countOf(st: org.apache.hadoop.fs.FileStatus): Long = {
+    // each footer is an independent ~ms metadata read — on an object
+    // store an RPC — so a multi-file batch verified serially pays
+    // files x latency on the driver after every ingest
+    inParallel(files) { st =>
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf)
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
       try r.getRecordCount finally r.close()
-    }
-    // footer opens in PARALLEL on a bounded pool (same rationale as the
-    // manifest-resolution pool in RollupStore): each footer is an
-    // independent ~ms metadata read — on an object store an RPC — and a
-    // multi-file batch verified serially pays files x latency on the
-    // driver after every ingest. Order is irrelevant (the counts sum).
-    if (files.lengthCompare(1) <= 0) files.map(countOf).sum
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(16, files.size))
-      try files.map(st => pool.submit(
-          new java.util.concurrent.Callable[Long] { def call(): Long = countOf(st) }))
-        .map { fu =>
-          try fu.get()
-          catch {
-            case e: java.util.concurrent.ExecutionException => throw e.getCause
-          }
-        }.sum
-      finally pool.shutdownNow()
-    }
+    }.sum
+  }
+
+  /** Driver-side parallelism for metadata reads (footers, manifests,
+    * listings). Sized for object-store RPC latency hiding, small enough
+    * not to trip request-rate throttles (S3 allows thousands of GETs/s
+    * per prefix; 16 concurrent opens is far under any limit). */
+  private val MetadataReadParallelism = 16
+
+  /** Run `f` over `xs` on a bounded pool, preserving order; the first
+    * failure propagates with its ORIGINAL exception (unwrapped from the
+    * pool's ExecutionException) so callers' error contracts are the same
+    * as the serial loop's. Single-element and empty inputs stay on the
+    * calling thread — no pool churn on the common pruned-dashboard read
+    * of one grain. */
+  private[graft] def inParallel[A, B](xs: Seq[A])(f: A => B): Seq[B] = {
+    if (xs.lengthCompare(1) <= 0) return xs.map(f)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.min(MetadataReadParallelism, xs.size))
+    try {
+      val futures = xs.map { x =>
+        pool.submit(new java.util.concurrent.Callable[B] {
+          def call(): B = f(x)
+        })
+      }
+      futures.map { fu =>
+        try fu.get()
+        catch {
+          case e: java.util.concurrent.ExecutionException =>
+            throw e.getCause
+        }
+      }
+    } finally pool.shutdownNow()
   }
 
   /** Write `df` as parquet at `path` while computing the given AGGREGATE
@@ -592,8 +606,8 @@ object Sinks {
     * fold puts tens of GB in one shuffle partition (spill, OOM, a single
     * straggler task), while 32 on a single quiet day's delta writes 32
     * near-empty files whose footers every verify then re-reads. Lives
-    * here (round 22; was RollupStore's) so the Sinks-layer ingest paths
-    * use the same rule without a sources->ops dependency. */
+    * here so the Sinks-layer ingest paths and the stores share one rule
+    * without a sources->ops dependency. */
   private[graft] def autoFoldPartitions(totalBytes: BigInt,
       bytesPerPartition: Long): Int = {
     require(bytesPerPartition > 0,
@@ -830,11 +844,34 @@ object Sinks {
     }
   }
 
+  /** Publish a small metadata file (a commit marker, manifest or
+    * genesis) ATOMICALLY: the text goes to a `.`-prefixed temp file
+    * beside `dst`, any old `dst` is deleted, and the temp is renamed into
+    * place. Create-write-close on `dst` itself would expose a crash
+    * window in which the file exists TRUNCATED — a commit marker that
+    * lists only part of what it folded. The temp name is `.`-prefixed,
+    * so a crashed leftover is invisible to readers and parquet scans
+    * alike; writers hold the path's single-writer lease, so nothing
+    * contends for the final name. Deleting first lets a replacement
+    * land (rename onto an existing path fails on HDFS) and opens a brief
+    * absent window, which every reader treats as "not yet written".
+    * Atomic wherever rename is; the S3A caveat is stated on
+    * `GenerationalBatches.publish`. */
+  private[graft] def publishFile(fs: org.apache.hadoop.fs.FileSystem,
+      dst: org.apache.hadoop.fs.Path, text: String): Unit = {
+    val tmp = new org.apache.hadoop.fs.Path(dst.getParent,
+      s".${dst.getName}.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
+    fs.delete(dst, false)
+    hadoopRename(fs, tmp, dst)
+  }
+
   /** Rename that SURFACES failure: Hadoop's `FileSystem.rename` reports
     * most failure modes (missing source, existing destination on some
     * stores) by returning false, and a swap step that silently didn't
     * happen would break the crash invariant the caller documents. */
-  private def hadoopRename(fs: org.apache.hadoop.fs.FileSystem,
+  private[graft] def hadoopRename(fs: org.apache.hadoop.fs.FileSystem,
       src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Unit =
     if (!fs.rename(src, dst))
       throw new java.io.IOException(s"rename $src -> $dst failed")

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.Path
 import graft.behavioral.BehavioralFunctions
 import graft.ops.{GenerationalBatches, RollupStore}
+import graft.sources.Sinks
 
 /** AUTO-SIZED fold partitions (`targetPartitions = 0`): a fixed count
   * cannot be right across a store's life — 32 partitions on a
@@ -69,16 +70,16 @@ class FoldSizingSpec extends AnyFunSuite {
 
   test("autoFoldPartitions: one partition per maxPartitionBytes, clamped") {
     val mb128 = 128L * 1024 * 1024
-    assert(RollupStore.autoFoldPartitions(BigInt(0), mb128) == 1)
-    assert(RollupStore.autoFoldPartitions(BigInt(1), mb128) == 1)
-    assert(RollupStore.autoFoldPartitions(BigInt(mb128), mb128) == 1)
-    assert(RollupStore.autoFoldPartitions(BigInt(mb128) + 1, mb128) == 2)
-    assert(RollupStore.autoFoldPartitions(BigInt(10) * mb128, mb128) == 10)
+    assert(Sinks.autoFoldPartitions(BigInt(0), mb128) == 1)
+    assert(Sinks.autoFoldPartitions(BigInt(1), mb128) == 1)
+    assert(Sinks.autoFoldPartitions(BigInt(mb128), mb128) == 1)
+    assert(Sinks.autoFoldPartitions(BigInt(mb128) + 1, mb128) == 2)
+    assert(Sinks.autoFoldPartitions(BigInt(10) * mb128, mb128) == 10)
     // upper clamp: a 10 PB fold does not ask for 80M partitions
-    assert(RollupStore.autoFoldPartitions(
+    assert(Sinks.autoFoldPartitions(
       BigInt("11258999068426240"), mb128) == 4096)
     intercept[IllegalArgumentException] {
-      RollupStore.autoFoldPartitions(BigInt(1), 0L)
+      Sinks.autoFoldPartitions(BigInt(1), 0L)
     }
   }
 

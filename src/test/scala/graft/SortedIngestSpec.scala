@@ -4,6 +4,42 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+/** A local filesystem whose stream for a `_GEN_COMMITTED` file, once
+  * armed, keeps only the bytes up to the first newline and throws on
+  * close — a writer dying mid-write of the generation's commit marker. */
+class TornMarkerFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.{FSDataOutputStream, Path}
+  override def getUri: java.net.URI = java.net.URI.create("tornfs:///")
+  override def getScheme: String = "tornfs"
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long,
+      progress: org.apache.hadoop.util.Progressable): FSDataOutputStream =
+    tear(f, super.create(f, overwrite, bufferSize, replication, blockSize,
+      progress))
+  override def create(f: Path,
+      permission: org.apache.hadoop.fs.permission.FsPermission,
+      overwrite: Boolean, bufferSize: Int, replication: Short,
+      blockSize: Long,
+      progress: org.apache.hadoop.util.Progressable): FSDataOutputStream =
+    tear(f, super.create(f, permission, overwrite, bufferSize, replication,
+      blockSize, progress))
+  private def tear(f: Path, out: FSDataOutputStream): FSDataOutputStream =
+    if (!(f.getName.contains("_GEN_COMMITTED") &&
+        TornMarkerFs.armed.getAndSet(false))) out
+    else new FSDataOutputStream(new java.io.OutputStream {
+      private var torn = false
+      def write(b: Int): Unit = if (!torn) { out.write(b); torn = b == '\n' }
+      override def close(): Unit = {
+        out.close()
+        throw new java.io.IOException("injected crash closing the marker")
+      }
+    }, null)
+}
+
+object TornMarkerFs {
+  val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
+}
+
 /** The sort-eliding layout's ingest cycle (`Sinks.stageSortedDelta` /
   * `compactSortedBucketed` / `readSortedWithStaging`): deltas land
   * cheaply, generational compaction folds them without ever overwriting
@@ -142,6 +178,34 @@ class SortedIngestSpec extends AnyFunSuite {
       assert(genDirs(base).size === 1,
         s"crash at '$crashAt' leaked generations: ${genDirs(base)}")
     }
+  }
+
+  test("a crash while writing _GEN_COMMITTED never commits a torn folded list") {
+    spark.sparkContext.hadoopConfiguration.set("fs.tornfs.impl",
+      classOf[TornMarkerFs].getName)
+    val (localBase, localStaging, t) = fresh("torn_marker")
+    val (base, staging) = (s"tornfs://$localBase", s"tornfs://$localStaging")
+    val ds = deltas()
+    Sinks.stageSortedDelta(ds(0), staging)
+    Sinks.compactSortedBucketed(spark, t, base, staging,
+      nBuckets = 4, "user_id", "ts")
+    // two staged files: a torn marker can list the first and lose the second
+    Sinks.stageSortedDelta(ds(1), staging)
+    Sinks.stageSortedDelta(ds(2), staging)
+    TornMarkerFs.armed.set(true)
+    try {
+      val e = intercept[java.io.IOException] {
+        Sinks.compactSortedBucketed(spark, t, base, staging,
+          nBuckets = 4, "user_id", "ts")
+      }
+      assert(e.getMessage.contains("injected"), s"unrelated failure: $e")
+    } finally TornMarkerFs.armed.set(false)
+    val n = Sinks.compactSortedBucketed(spark, t, base, staging,
+      nBuckets = 4, "user_id", "ts")
+    val expected = ds.flatMap(collected).sorted
+    assert(n === expected.size.toLong, "a staged delta was folded twice or lost")
+    assert(collected(Sinks.readSortedWithStaging(spark, t, staging)) ===
+      expected)
   }
 
   test("compaction with an empty staging directory is a no-op") {

@@ -625,6 +625,47 @@ MUTANTS33 = [
       .agg(first(col(stateCol)).as(stateCol))"""),
 ]
 
+# batch 46: the one publish path of the generational stores
+# (GenerationalBatches.publish) — its crash order. Run with
+# `python3 tools/mutation.py 46`.
+SUITES46 = [
+    "graft.RollupStoreSpec", "graft.GrainedRollupStoreSpec",
+    "graft.IncrementalSessionSpec",
+]
+
+MUTANTS46 = [
+    ("GB461", GENB, "marker written before the footer-count check (a short batch commits, and a crash at 'written' leaves it visible)",
+     """        require(footers == expected,
+          s"batch_$k under $dir has $footers of $expected rows on disk; " +
+            "left uncommitted, live batches intact")
+        onStep("written")
+        commit(fs, batchPath, folds.map(_._2.getName), ids)""",
+     """        commit(fs, batchPath, folds.map(_._2.getName), ids)
+        require(footers == expected,
+          s"batch_$k under $dir has $footers of $expected rows on disk; " +
+            "left uncommitted, live batches intact")
+        onStep("written")"""),
+    ("GB462", GENB, "folded dirs deleted before the marker (a crash before commit loses the folded rows)",
+     """        onStep("written")
+        commit(fs, batchPath, folds.map(_._2.getName), ids)
+        onStep("committed")
+        afterCommit
+        if (folds.nonEmpty) {
+          if (cleanupDelayMs <= 0L)
+            folds.foreach { case (_, p) => fs.delete(p, true) }
+          onStep("cleaned")
+        }""",
+     """        if (cleanupDelayMs <= 0L)
+          folds.foreach { case (_, p) => fs.delete(p, true) }
+        onStep("written")
+        commit(fs, batchPath, folds.map(_._2.getName), ids)
+        onStep("committed")
+        afterCommit
+        if (folds.nonEmpty) {
+          onStep("cleaned")
+        }"""),
+]
+
 
 def run(cmd, timeout=1800):
     return subprocess.run(cmd, shell=True, capture_output=True, text=True,
@@ -645,12 +686,13 @@ def main():
     batch33 = batch == "33"
     batch34 = batch == "34"
     batch35 = batch == "35"
-    mutants = (MUTANTS35 if batch35 else (MUTANTS34 if batch34 else (MUTANTS33 if batch33 else (MUTANTS32 if batch32 else
+    batch46 = batch == "46"
+    mutants = (MUTANTS46 if batch46 else MUTANTS35 if batch35 else (MUTANTS34 if batch34 else (MUTANTS33 if batch33 else (MUTANTS32 if batch32 else
                (MUTANTS10 if batch10 else (MUTANTS9 if batch9 else (MUTANTS8 if batch8 else
                (MUTANTS7 if batch7 else (MUTANTS6 if batch6 else
                (MUTANTS5 if batch5 else (MUTANTS4 if batch4 else
                (MUTANTS3 if batch3 else MUTANTS))))))))))))
-    suites = (SUITES35 if batch35 else (SUITES34 if batch34 else (SUITES33 if batch33 else (SUITES32 if batch32 else
+    suites = (SUITES46 if batch46 else SUITES35 if batch35 else (SUITES34 if batch34 else (SUITES33 if batch33 else (SUITES32 if batch32 else
               (SUITES10 if batch10 else (SUITES9 if batch9 else (SUITES8 if batch8 else
               (SUITES7 if batch7 else (SUITES6 if batch6 else
               (SUITES5 if batch5 else (SUITES4 if batch4 else
@@ -675,13 +717,38 @@ def main():
             else:
                 verdict = "SURVIVED"
         finally:
-            run(f"git checkout -- {fname}")
+            path.write_text(src)
         print(f"[{mid}] {verdict}: {desc}")
         results.append((mid, fname, desc, verdict))
 
     valid = [x for x in results if x[3] in ("killed", "SURVIVED")]
     killed = [x for x in valid if x[3] == "killed"]
     rate = 100.0 * len(killed) / len(valid) if valid else 0.0
+    if batch46:
+        marker = "\n## Batch 46 \u2014 one publish path for the generational stores\n"
+        existing = Path("MUTATION.md").read_text()
+        head = existing.split(marker)[0].rstrip() + "\n"
+        lines = [
+            head,
+            marker.strip(),
+            "",
+            "Every generational op (flat and grained rollup ingest and",
+            "compaction, session append and compaction) now publishes its",
+            "batch through `GenerationalBatches.publish`. Mutants reorder",
+            "its crash order: the marker before the footer-count check,",
+            "and the folded dirs deleted before the marker.",
+            "",
+            f"**Batch-46 kill rate: {len(killed)}/{len(valid)} = {rate:.1f}%**",
+            "",
+            "| id | file | mutant | verdict |",
+            "|---|---|---|---|",
+        ]
+        for mid, fname, desc, verdict in results:
+            lines.append(f"| {mid} | {Path(fname).name} | {desc} | {verdict} |")
+        lines.append("")
+        Path("MUTATION.md").write_text("\n".join(lines))
+        print(f"\nbatch-46 kill rate {rate:.1f}% -> MUTATION.md")
+        return
     if batch35:
         marker = "\n## Batch 35 \u2014 one-job range-compaction seams\n"
         existing = Path("MUTATION.md").read_text()
