@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SQLContext, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.behavioral.BehavioralFunctions
@@ -50,41 +50,80 @@ object SparkEntry {
   private val GapUs = 30L * 60 * 1000000
   private val HourUs = 3600L * 1000000
 
-  /** Hard cap on rows the streaming contract rows (q71/q72) may `.collect()`
-    * onto the driver to feed MemoryStream. sf0.1 is ~60k events; anything
-    * near this bound means the harness is being pointed at a scale it was
-    * never meant for — fail loudly instead of OOMing the driver. The
-    * streamed OPERATORS are state-bounded; only this test-harness feed
-    * collects. */
+  /** Hard cap on the fixture rows a streaming contract row may read into
+    * its driver-side feed. sf0.1 is ~60k events; anything near this bound
+    * means the harness is being pointed at a scale it was never meant for —
+    * fail loudly instead of OOMing the driver. The streamed OPERATORS are
+    * state-bounded; only this test-harness feed collects. */
   private val MaxStreamHarnessRows = 2000000L
 
-  /** Fingerprint of the events fixture at `dir` — file count, total bytes,
-    * max mtime. Both per-dir memos below key on this instead of the bare
-    * path, so a fixture REGENERATED under a live JVM (long-lived test/bench
-    * session) invalidates the memo instead of silently reusing a stale
-    * verdict (round-9 ADVICE). */
-  private def eventsFingerprint(dir: String): String = {
-    val root = new java.io.File(s"$dir/events.parquet")
+  /** Fingerprint of fixture table `table` at `dir` — file count, total
+    * bytes, max mtime. The per-fixture memos below key on this instead of
+    * the bare path, so a fixture REGENERATED under a live JVM (long-lived
+    * test/bench session) invalidates the memo instead of silently reusing
+    * a stale verdict. */
+  private def tableFingerprint(dir: String, table: String): String = {
+    val root = new java.io.File(s"$dir/$table.parquet")
     val files: Seq[java.io.File] =
       if (root.isDirectory) root.listFiles().toSeq.filter(_.isFile) else Seq(root)
     val parts = files.filter(_.getName.endsWith(".parquet"))
-    s"$dir|n=${parts.size}|bytes=${parts.map(_.length).sum}|mtime=${parts.map(_.lastModified).foldLeft(0L)(math.max)}"
+    s"$dir/$table|n=${parts.size}|bytes=${parts.map(_.length).sum}|mtime=${parts.map(_.lastModified).foldLeft(0L)(math.max)}"
   }
 
-  /** Memoized events row count per fixture fingerprint: the streaming rows
-    * (q71/q72/q77-q79) each guard their driver-side feed with a count; one
-    * count per fixture, not one per query per run. */
-  private val eventCounts =
+  /** Memoized row count per table fingerprint: one count job per fixture
+    * and table, not one per streaming row per run. */
+  private val tableCounts =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
-  private def boundedForStreamHarness(ev: DataFrame, name: String,
-      dir: String): DataFrame = {
-    val n = eventCounts.computeIfAbsent(eventsFingerprint(dir), _ => ev.count()).longValue()
+  /** A streaming contract row's driver-side feed: counts `source` (fixture
+    * table `table`, memoized) against MaxStreamHarnessRows BEFORE anything
+    * is collected, then collects `feed(source)` ordered by `key`. */
+  private def harnessFeed[T, K: Ordering](source: DataFrame, table: String, row: String,
+      dir: String)(feed: DataFrame => Dataset[T])(key: T => K): Array[T] = {
+    val n = tableCounts.computeIfAbsent(tableFingerprint(dir, table),
+      _ => source.count()).longValue()
     require(n <= MaxStreamHarnessRows,
-      s"$name streaming-harness feed would collect $n rows (> $MaxStreamHarnessRows) onto the driver; " +
+      s"$row streaming-harness feed reads $n $table rows (> $MaxStreamHarnessRows) onto the driver; " +
       "point the contract run at a smaller SF or feed a real streaming source")
-    ev
+    feed(source).collect().sortBy(key)
   }
+
+  /** Streams `rows` through `operator` into a memory sink in output mode
+    * `mode`: two time-ordered halves, one micro-batch each, then the
+    * optional far-future `sentinel`, whose batch advances the watermark so
+    * the engine's no-data micro-batch flushes an append-mode operator's
+    * open state. Returns `readOut` of the sink table, which must be
+    * materialized: the query is stopped and its view dropped on exit. */
+  private def viaMemorySink[T: Encoder](s: SparkSession, row: String, rows: Array[T],
+      mode: String, sentinel: Option[T] = None)(operator: Dataset[T] => Dataset[_])(
+      readOut: DataFrame => DataFrame): DataFrame = {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: SQLContext = s.sqlContext
+    val name = s"graft_${row.takeWhile(_ != '_')}_" +
+      java.util.UUID.randomUUID().toString.replace("-", "")
+    val input = MemoryStream[T]
+    val q = operator(input.toDS()).toDF().writeStream.format("memory").queryName(name)
+      .outputMode(mode).start()
+    try {
+      rows.grouped(math.max(rows.length / 2, 1)).foreach { b =>
+        input.addData(b); q.processAllAvailable()
+      }
+      sentinel.foreach { e => input.addData(e); q.processAllAvailable() }
+      readOut(s.table(name))
+    } finally {
+      q.stop()
+      s.catalog.dropTempView(name)
+    }
+  }
+
+  /** A sentinel event time 200 days and a minute past the latest of `ts`:
+    * far enough that its watermark closes every session and band bucket. */
+  private def sentinelTs(ts: Iterator[java.sql.Timestamp]): java.sql.Timestamp =
+    new java.sql.Timestamp(ts.map(_.getTime).foldLeft(0L)(math.max) + 200L * 86400 * 1000 + 60000)
+
+  /** The horizon of the update-mode streaming rows: ten years, wide enough
+    * that the forgetting contract is not in play. */
+  private val WideHorizonUs = 3650L * 86400 * 1000000
 
   /** `lead(...) OVER (ORDER BY ts)` in the DuckDB oracle and the operator's
     * internal event ordering are both nondeterministic when two events share
@@ -102,7 +141,7 @@ object SparkEntry {
 
   private def assertTieFreePerUserTs(ev: DataFrame, name: String,
       dir: String): DataFrame = {
-    val key = eventsFingerprint(dir)
+    val key = tableFingerprint(dir, "events")
     if (!tieFreeDirs.contains(key)) {
       val ties = ev.groupBy(col("user_id"), col("ts")).count()
         .filter(col("count") > 1).limit(1).collect()
@@ -166,12 +205,19 @@ object SparkEntry {
     * the temporary session-conf change cannot leak into a concurrent
     * query. */
   private def harnessRow(fn: (SparkSession, String) => DataFrame): (SparkSession, String) => DataFrame =
-    (s, dir) => {
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try fn(s, dir)
-      finally s.conf.set("spark.sql.shuffle.partitions", prev)
+    (s, dir) => withConf(s, "spark.sql.shuffle.partitions", "4")(fn(s, dir))
+
+  /** Runs `body` with session conf `key` set to `value`, then restores the
+    * previous value (or unsets a key that had none). */
+  private def withConf[A](s: SparkSession, key: String, value: String)(body: => A): A = {
+    val prev = s.conf.getOption(key)
+    s.conf.set(key, value)
+    try body
+    finally prev match {
+      case Some(v) => s.conf.set(key, v)
+      case None => s.conf.unset(key)
     }
+  }
 
   /** [[harnessRow]] plus `noDataMicroBatches` OFF — for the UPDATE-mode
     * streaming contract rows (q71/q72/q78–q81) and the immediate-append
@@ -193,14 +239,7 @@ object SparkEntry {
     * on idle-time watermark passage (SCALE.md, Streaming). */
   private def harnessRowNoIdle(fn: (SparkSession, String) => DataFrame): (SparkSession, String) => DataFrame =
     harnessRow { (s, dir) =>
-      val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "false")
-      try fn(s, dir)
-      finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
-      }
+      withConf(s, "spark.sql.streaming.noDataMicroBatches.enabled", "false")(fn(s, dir))
     }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -1287,7 +1326,6 @@ object SparkEntry {
     // demonstrably survives the fold. Oracle = q03's raw-scan funnel SQL:
     // the streamed store answers exactly what one batch scan would.
     "q123_stream_rollup_ingest" -> harnessRow { (s, dir) =>
-      val ev = boundedForStreamHarness(events(s, dir), "q123_stream_rollup_ingest", dir)
       import s.implicits._
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       implicit val sqlCtx = s.sqlContext
@@ -1307,10 +1345,9 @@ object SparkEntry {
           Seq("user_id", "day"), ingestId = Some(s"q123/$batchId"))
         ()
       }
-      val rows = ev.select(col("user_id").cast("long"), col("ts"),
-          col("event_type"))
-        .as[(Long, java.sql.Timestamp, String)]
-        .collect().sortBy(e => (e._2.getTime, e._1))
+      val rows = harnessFeed(events(s, dir), "events", "q123_stream_rollup_ingest", dir)(
+        _.select(col("user_id").cast("long"), col("ts"), col("event_type"))
+        .as[(Long, java.sql.Timestamp, String)])(e => (e._2.getTime, e._1))
       def slices = rows.grouped(math.max(rows.length / 3, 1))
       val input = MemoryStream[(Long, java.sql.Timestamp, String)]
       val q = input.toDF().toDF("user_id", "ts", "event_type").writeStream
@@ -2082,65 +2119,37 @@ object SparkEntry {
     // forgetting contract is not in play — these rows pin EQUALITY with
     // batch semantics, the lateness/horizon contracts are unit-tested.
     "q71_stream_seq_count" -> harnessRowNoIdle { (s, dir) =>
-      val ev = boundedForStreamHarness(events(s, dir), "q71_stream_seq_count", dir)
       import s.implicits._
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      implicit val sqlCtx = s.sqlContext
-      val rows = ev.select(col("user_id").cast("long").as("user_id"), col("ts"),
+      val rows = harnessFeed(events(s, dir), "events", "q71_stream_seq_count", dir)(
+        _.select(col("user_id").cast("long").as("user_id"), col("ts"),
           when(col("event_type") === "purchase", 1).otherwise(0).as("conds"))
-        .as[streaming.StreamingBehavioral.SeqEvent]
-        .collect().sortBy(e => (e.ts.getTime, e.user_id))
-      val name = "graft_q71_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val input = MemoryStream[streaming.StreamingBehavioral.SeqEvent]
-      val q = streaming.StreamingBehavioral
-        .streamingSequenceCount(input.toDS(), "(?1)", watermark = "10 minutes",
-          horizonMicros = 3650L * 86400 * 1000000)
-        .toDF().writeStream.format("memory").queryName(name)
-        .outputMode("update").start()
-      try {
-        rows.grouped(math.max(rows.length / 2, 1)).foreach { b =>
-          input.addData(b); q.processAllAvailable()
-        }
+        .as[streaming.StreamingBehavioral.SeqEvent])(e => (e.ts.getTime, e.user_id))
+      viaMemorySink(s, "q71_stream_seq_count", rows, "update")(
+        streaming.StreamingBehavioral.streamingSequenceCount(_, "(?1)",
+          watermark = "10 minutes", horizonMicros = WideHorizonUs)) { tbl =>
         // n_matches is cumulative and monotone: max = the final count
-        val out = s.table(name).groupBy(col("user_id"))
+        tbl.groupBy(col("user_id"))
           .agg(max(col("n_matches")).as("n"))
           .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-        out.toDF("user_id", "n")
-      } finally {
-        q.stop()
-        s.catalog.dropTempView(name)
+          .toDF("user_id", "n")
       }
     },
     "q72_stream_next_node" -> harnessRowNoIdle { (s, dir) =>
-      val ev = boundedForStreamHarness(
-        assertTieFreePerUserTs(events(s, dir), "q72_stream_next_node", dir),
-        "q72_stream_next_node", dir)
       import s.implicits._
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      implicit val sqlCtx = s.sqlContext
-      val rows = ev.select(col("user_id").cast("long").as("user_id"), col("ts"),
+      val rows = harnessFeed(
+          assertTieFreePerUserTs(events(s, dir), "q72_stream_next_node", dir),
+          "events", "q72_stream_next_node", dir)(
+        _.select(col("user_id").cast("long").as("user_id"), col("ts"),
           col("event_type").as("value"),
           (col("event_type") === "signup").as("base_cond"),
           when(col("event_type") === "signup", 1).otherwise(0).as("conds"))
-        .as[streaming.StreamingBehavioral.NNEvent]
-        .collect().sortBy(e => (e.ts.getTime, e.user_id))
-      val name = "graft_q72_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val input = MemoryStream[streaming.StreamingBehavioral.NNEvent]
-      val q = streaming.StreamingBehavioral
-        .streamingSequenceNextNode(input.toDS(), "forward", "head", numSteps = 1,
-          watermark = "10 minutes", horizonMicros = 3650L * 86400 * 1000000)
-        .toDF().writeStream.format("memory").queryName(name)
-        .outputMode("update").start()
-      try {
-        rows.grouped(math.max(rows.length / 2, 1)).foreach { b =>
-          input.addData(b); q.processAllAvailable()
-        }
-        val out = lastNextNodeEmission(s.table(name))
+        .as[streaming.StreamingBehavioral.NNEvent])(e => (e.ts.getTime, e.user_id))
+      viaMemorySink(s, "q72_stream_next_node", rows, "update")(
+        streaming.StreamingBehavioral.streamingSequenceNextNode(_, "forward", "head",
+          numSteps = 1, watermark = "10 minutes", horizonMicros = WideHorizonUs)) { tbl =>
+        lastNextNodeEmission(tbl)
           .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-        out.toDF("user_id", "next_node")
-      } finally {
-        q.stop()
-        s.catalog.dropTempView(name)
+          .toDF("user_id", "next_node")
       }
     },
 
@@ -2149,50 +2158,31 @@ object SparkEntry {
     // APPEND mode — a session only emits once the watermark passes its end,
     // so after the two data batches ONE far-future sentinel batch (user
     // -1, filtered out) advances the watermark and flushes every real
-    // session via the engine's no-data micro-batch.
+    // session via the engine's no-data micro-batch (noDataMicroBatches, on
+    // by default; mutation SS141 pins the flush margin; a second sentinel
+    // was measured as pure fixed cost).
     // Probed (GapProbe, round 10): session_window merges at diff == gap
     // exactly like the batch sessionize's `> gap` new-session rule, so the
     // q01 lag/sum labeling and the session store agree on boundaries, and
     // session_end == last event ts + gap.
     "q77_stream_sessionize" -> harnessRow { (s, dir) =>
-      val ev = boundedForStreamHarness(events(s, dir), "q77_stream_sessionize", dir)
       import s.implicits._
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      implicit val sqlCtx = s.sqlContext
-      val rows = ev.select(col("user_id").cast("long").as("user_id"), col("ts"),
+      val rows = harnessFeed(events(s, dir), "events", "q77_stream_sessionize", dir)(
+        _.select(col("user_id").cast("long").as("user_id"), col("ts"),
           lit(0).as("conds"))
-        .as[streaming.StreamingBehavioral.SeqEvent]
-        .collect().sortBy(e => (e.ts.getTime, e.user_id))
-      val maxTsMs = rows.iterator.map(_.ts.getTime).foldLeft(0L)(math.max)
-      val name = "graft_q77_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val input = MemoryStream[streaming.StreamingBehavioral.SeqEvent]
-      val q = streaming.StreamingBehavioral
-        .sessionStats(input.toDS().select(col("user_id"), col("ts")),
-          gap = "30 minutes", watermark = "10 minutes")
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try {
-        rows.grouped(math.max(rows.length / 2, 1)).foreach { b =>
-          input.addData(b); q.processAllAvailable()
-        }
-        // ONE far-future sentinel flushes every open session: the batch
-        // carrying it advances the watermark, and the engine's no-data
-        // micro-batch (noDataMicroBatches, on by default) then evicts the
-        // closed session state (mutation SS141 pins the flush margin; a
-        // second sentinel was measured as pure fixed cost)
-        input.addData(streaming.StreamingBehavioral.SeqEvent(-1L,
-          new java.sql.Timestamp(maxTsMs + 200L * 86400 * 1000 + 60000), 0))
-        q.processAllAvailable()
-        val out = s.table(name).filter(col("user_id") >= 0)
+        .as[streaming.StreamingBehavioral.SeqEvent])(e => (e.ts.getTime, e.user_id))
+      viaMemorySink(s, "q77_stream_sessionize", rows, "append",
+        sentinel = Some(streaming.StreamingBehavioral.SeqEvent(-1L,
+          sentinelTs(rows.iterator.map(_.ts)), 0)))(in =>
+        streaming.StreamingBehavioral.sessionStats(in.select(col("user_id"), col("ts")),
+          gap = "30 minutes", watermark = "10 minutes")) { tbl =>
+        tbl.filter(col("user_id") >= 0)
           .select(col("user_id"),
             unix_micros(col("session_start")).as("session_start_us"),
             unix_micros(col("session_end")).as("session_end_us"),
             col("n_events"))
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-        out.toDF("user_id", "session_start_us", "session_end_us", "n_events")
-      } finally {
-        q.stop()
-        s.catalog.dropTempView(name)
+          .toDF("user_id", "session_start_us", "session_end_us", "n_events")
       }
     },
 
@@ -2200,33 +2190,19 @@ object SparkEntry {
     // update mode. The anchor-gated flags are monotone (the mask only
     // accumulates), so each user's final emission is the per-flag max.
     "q78_stream_retention" -> harnessRowNoIdle { (s, dir) =>
-      val ev = boundedForStreamHarness(events(s, dir), "q78_stream_retention", dir)
       import s.implicits._
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      implicit val sqlCtx = s.sqlContext
-      val rows = ev.select(col("user_id").cast("long").as("user_id"), col("ts"),
+      val rows = harnessFeed(events(s, dir), "events", "q78_stream_retention", dir)(
+        _.select(col("user_id").cast("long").as("user_id"), col("ts"),
           (when(to_date(col("ts")) === lit("2024-01-01"), 1).otherwise(0)
             + when(to_date(col("ts")) === lit("2024-01-02"), 2).otherwise(0)
             + when(to_date(col("ts")) === lit("2024-01-03"), 4).otherwise(0)).as("conds"))
-        .as[streaming.StreamingBehavioral.RetentionEvent]
-        .collect().sortBy(e => (e.ts.getTime, e.user_id))
-      val name = "graft_q78_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val input = MemoryStream[streaming.StreamingBehavioral.RetentionEvent]
-      val q = streaming.StreamingBehavioral
-        .streamingRetention(input.toDS(), numConds = 3, watermark = "10 minutes",
-          horizonMicros = 3650L * 86400 * 1000000)
-        .toDF().writeStream.format("memory").queryName(name)
-        .outputMode("update").start()
-      try {
-        rows.grouped(math.max(rows.length / 2, 1)).foreach { b =>
-          input.addData(b); q.processAllAvailable()
-        }
-        val out = finalRetentionFlags(s.table(name))
+        .as[streaming.StreamingBehavioral.RetentionEvent])(e => (e.ts.getTime, e.user_id))
+      viaMemorySink(s, "q78_stream_retention", rows, "update")(
+        streaming.StreamingBehavioral.streamingRetention(_, numConds = 3,
+          watermark = "10 minutes", horizonMicros = WideHorizonUs)) { tbl =>
+        finalRetentionFlags(tbl)
           .collect().map(r => (r.getLong(0), r.getBoolean(1), r.getBoolean(2), r.getBoolean(3))).toSeq
-        out.toDF("user_id", "d1", "d2", "d3")
-      } finally {
-        q.stop()
-        s.catalog.dropTempView(name)
+          .toDF("user_id", "d1", "d2", "d3")
       }
     },
 
@@ -2236,33 +2212,19 @@ object SparkEntry {
     // still flow so every user emits, matching the oracle's DISTINCT-user
     // completion.
     "q79_stream_funnel" -> harnessRowNoIdle { (s, dir) =>
-      val ev = boundedForStreamHarness(events(s, dir), "q79_stream_funnel", dir)
       import s.implicits._
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      implicit val sqlCtx = s.sqlContext
-      val rows = ev.select(col("user_id").cast("long").as("user_id"), col("ts"),
+      val rows = harnessFeed(events(s, dir), "events", "q79_stream_funnel", dir)(
+        _.select(col("user_id").cast("long").as("user_id"), col("ts"),
           (when(col("event_type") === "view", 1).otherwise(0)
             + when(col("event_type") === "click", 2).otherwise(0)
             + when(col("event_type") === "purchase", 4).otherwise(0)).as("conds"))
-        .as[streaming.StreamingBehavioral.FunnelEvent]
-        .collect().sortBy(e => (e.ts.getTime, e.user_id))
-      val name = "graft_q79_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val input = MemoryStream[streaming.StreamingBehavioral.FunnelEvent]
-      val q = streaming.StreamingBehavioral
-        .streamingFunnel(input.toDS(), windowMicros = HourUs, numConds = 3,
-          watermark = "10 minutes")
-        .toDF().writeStream.format("memory").queryName(name)
-        .outputMode("update").start()
-      try {
-        rows.grouped(math.max(rows.length / 2, 1)).foreach { b =>
-          input.addData(b); q.processAllAvailable()
-        }
-        val out = finalFunnelSteps(s.table(name))
+        .as[streaming.StreamingBehavioral.FunnelEvent])(e => (e.ts.getTime, e.user_id))
+      viaMemorySink(s, "q79_stream_funnel", rows, "update")(
+        streaming.StreamingBehavioral.streamingFunnel(_, windowMicros = HourUs,
+          numConds = 3, watermark = "10 minutes")) { tbl =>
+        finalFunnelSteps(tbl)
           .collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
-        out.toDF("user_id", "steps")
-      } finally {
-        q.stop()
-        s.catalog.dropTempView(name)
+          .toDF("user_id", "steps")
       }
     },
 
@@ -2271,32 +2233,18 @@ object SparkEntry {
     // pattern engine per micro-batch, with a match LATCH that drops the
     // buffer (O(1) state once matched). matched is monotone -> max.
     "q80_stream_seq_match" -> harnessRowNoIdle { (s, dir) =>
-      val ev = boundedForStreamHarness(events(s, dir), "q80_stream_seq_match", dir)
       import s.implicits._
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      implicit val sqlCtx = s.sqlContext
-      val rows = ev.select(col("user_id").cast("long").as("user_id"), col("ts"),
+      val rows = harnessFeed(events(s, dir), "events", "q80_stream_seq_match", dir)(
+        _.select(col("user_id").cast("long").as("user_id"), col("ts"),
           (when(col("event_type") === "view", 1).otherwise(0)
             + when(col("event_type") === "purchase", 2).otherwise(0)).as("conds"))
-        .as[streaming.StreamingBehavioral.SeqEvent]
-        .collect().sortBy(e => (e.ts.getTime, e.user_id))
-      val name = "graft_q80_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val input = MemoryStream[streaming.StreamingBehavioral.SeqEvent]
-      val q = streaming.StreamingBehavioral
-        .streamingSequenceMatch(input.toDS(), "(?1).*(?2)",
-          watermark = "10 minutes", horizonMicros = 3650L * 86400 * 1000000)
-        .toDF().writeStream.format("memory").queryName(name)
-        .outputMode("update").start()
-      try {
-        rows.grouped(math.max(rows.length / 2, 1)).foreach { b =>
-          input.addData(b); q.processAllAvailable()
-        }
-        val out = finalMatchedFlag(s.table(name))
+        .as[streaming.StreamingBehavioral.SeqEvent])(e => (e.ts.getTime, e.user_id))
+      viaMemorySink(s, "q80_stream_seq_match", rows, "update")(
+        streaming.StreamingBehavioral.streamingSequenceMatch(_, "(?1).*(?2)",
+          watermark = "10 minutes", horizonMicros = WideHorizonUs)) { tbl =>
+        finalMatchedFlag(tbl)
           .collect().map(r => (r.getLong(0), r.getBoolean(1))).toSeq
-        out.toDF("user_id", "matched")
-      } finally {
-        q.stop()
-        s.catalog.dropTempView(name)
+          .toDF("user_id", "matched")
       }
     },
 
@@ -2306,36 +2254,22 @@ object SparkEntry {
     // batch first match. matched_ts is null-until-latched then constant,
     // so max over the guarded elements selects the final emission.
     "q81_stream_seq_match_events" -> harnessRowNoIdle { (s, dir) =>
-      val ev = boundedForStreamHarness(events(s, dir), "q81_stream_seq_match_events", dir)
       import s.implicits._
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      implicit val sqlCtx = s.sqlContext
-      val rows = ev.select(col("user_id").cast("long").as("user_id"), col("ts"),
+      val rows = harnessFeed(events(s, dir), "events", "q81_stream_seq_match_events", dir)(
+        _.select(col("user_id").cast("long").as("user_id"), col("ts"),
           (when(col("event_type") === "view", 1).otherwise(0)
             + when(col("event_type") === "click", 2).otherwise(0)).as("conds"))
-        .as[streaming.StreamingBehavioral.SeqEvent]
-        .collect().sortBy(e => (e.ts.getTime, e.user_id))
-      val name = "graft_q81_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val input = MemoryStream[streaming.StreamingBehavioral.SeqEvent]
-      val q = streaming.StreamingBehavioral
-        .streamingSequenceMatchEvents(input.toDS(), "(?1)(?2)",
-          watermark = "10 minutes", horizonMicros = 3650L * 86400 * 1000000)
-        .toDF().writeStream.format("memory").queryName(name)
-        .outputMode("update").start()
-      try {
-        rows.grouped(math.max(rows.length / 2, 1)).foreach { b =>
-          input.addData(b); q.processAllAvailable()
-        }
-        val out = s.table(name).groupBy(col("user_id"))
+        .as[streaming.StreamingBehavioral.SeqEvent])(e => (e.ts.getTime, e.user_id))
+      viaMemorySink(s, "q81_stream_seq_match_events", rows, "update")(
+        streaming.StreamingBehavioral.streamingSequenceMatchEvents(_, "(?1)(?2)",
+          watermark = "10 minutes", horizonMicros = WideHorizonUs)) { tbl =>
+        tbl.groupBy(col("user_id"))
           .agg(max(when(col("matched"), try_element_at(col("matched_ts"), lit(1)))).as("ev1_us"),
                max(when(col("matched"), try_element_at(col("matched_ts"), lit(2)))).as("ev2_us"))
           .collect().map(r => (r.getLong(0),
             if (r.isNullAt(1)) null else java.lang.Long.valueOf(r.getLong(1)),
             if (r.isNullAt(2)) null else java.lang.Long.valueOf(r.getLong(2)))).toSeq
-        out.toDF("user_id", "ev1_us", "ev2_us")
-      } finally {
-        q.stop()
-        s.catalog.dropTempView(name)
+          .toDF("user_id", "ev1_us", "ev2_us")
       }
     },
 
@@ -2350,33 +2284,18 @@ object SparkEntry {
     // and StreamingSpec pins first-wins ordering on crafted feeds).
     "q82_stream_exact_dedup" -> harnessRowNoIdle { (s, dir) =>
       import s.implicits._
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      implicit val sqlCtx = s.sqlContext
-      val docs = Tables.load(s, dir, "documents")
-      val rows = docs.select(col("doc_id").cast("long"), col("text"),
+      val rows = harnessFeed(Tables.load(s, dir, "documents"), "documents",
+          "q82_stream_exact_dedup", dir)(
+        _.select(col("doc_id").cast("long"), col("text"),
           timestamp_micros(lit(1700000000000000L) + col("doc_id").cast("long")).as("ts"))
-        .as[(Long, String, java.sql.Timestamp)]
-        .collect().sortBy(_._1)
-      require(rows.length <= MaxStreamHarnessRows,
-        s"q82_stream_exact_dedup feed of ${rows.length} docs exceeds the harness bound")
-      val name = "graft_q82_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val input = MemoryStream[(Long, String, java.sql.Timestamp)]
-      val q = streaming.StreamingBehavioral
-        .streamingExactDedup(input.toDF().toDF("doc_id", "text", "ts"),
-          watermark = "10 minutes")
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try {
-        rows.grouped(math.max(rows.length / 2, 1)).foreach { b =>
-          input.addData(b); q.processAllAvailable()
-        }
-        val out = s.table(name).groupBy(sha2(col("text"), 256).as("text_hash"))
+        .as[(Long, String, java.sql.Timestamp)])(_._1)
+      viaMemorySink(s, "q82_stream_exact_dedup", rows, "append")(in =>
+        streaming.StreamingBehavioral.streamingExactDedup(
+          in.toDF("doc_id", "text", "ts"), watermark = "10 minutes")) { tbl =>
+        tbl.groupBy(sha2(col("text"), 256).as("text_hash"))
           .agg(count(lit(1)).as("n_emitted"))
           .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-        out.toDF("text_hash", "n_emitted")
-      } finally {
-        q.stop()
-        s.catalog.dropTempView(name)
+          .toDF("text_hash", "n_emitted")
       }
     },
 
@@ -2384,52 +2303,29 @@ object SparkEntry {
     // a doc is near-dup iff an EARLIER doc (synthetic event time = doc_id
     // order, so "earlier" is deterministic) sits within Hamming <= 3 —
     // banded bucket state + per-doc OR of the 4 band votes, flushed by the
-    // watermark like q77. The md5 fingerprint variant is used so DuckDB
-    // can recompute the exact fingerprints; the xxh64 production kernel
-    // shares every other code path (band split, state, votes) and is
-    // differential-tested in StreamingSpec.
+    // watermark like q77 (one sentinel: its batch advances the watermark
+    // and the no-data micro-batch evicts the expired band state). The md5
+    // fingerprint variant is used so DuckDB can recompute the exact
+    // fingerprints; the xxh64 production kernel shares every other code
+    // path (band split, state, votes) and is differential-tested in
+    // StreamingSpec.
     "q83_stream_simhash_dedup" -> harnessRow { (s, dir) =>
-      import s.implicits._
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      implicit val sqlCtx = s.sqlContext
-      val docs = Tables.load(s, dir, "documents")
-      val rows = docs.select(col("doc_id").cast("long"), col("text"),
-          timestamp_micros(lit(1700000000000000L) + col("doc_id").cast("long")).as("ts"))
-        .as[(Long, String, java.sql.Timestamp)]
-        .collect().sortBy(_._1)
-      require(rows.length <= MaxStreamHarnessRows,
-        s"q83_stream_simhash_dedup feed of ${rows.length} docs exceeds the harness bound")
-      val maxTsMs = rows.iterator.map(_._3.getTime).foldLeft(0L)(math.max)
-      val prev = s.conf.getOption("spark.sql.streaming.statefulOperator.checkCorrectness.enabled")
-      s.conf.set("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
-      val name = "graft_q83_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val input = MemoryStream[(Long, String, java.sql.Timestamp)]
-      val q = streaming.StreamingBehavioral
-        .streamingSimhashDedup(input.toDF().toDF("doc_id", "text", "ts"),
-          maxDist = 3, watermark = "10 minutes",
-          fingerprint = streaming.StreamingBehavioral.simhashMd5Fingerprint)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try {
-        rows.grouped(math.max(rows.length / 2, 1)).foreach { b =>
-          input.addData(b); q.processAllAvailable()
-        }
-        // one sentinel suffices: its batch advances the watermark and the
-        // no-data micro-batch evicts the now-expired band state (same
-        // trim as q77; the second sentinel was pure fixed cost)
-        input.addData((-1L, "sentinel flush doc",
-          new java.sql.Timestamp(maxTsMs + 200L * 86400 * 1000 + 60000)))
-        q.processAllAvailable()
-        val out = s.table(name).filter(col("doc_id") >= 0)
-          .select(col("doc_id"), col("is_near_dup"))
-          .collect().map(r => (r.getLong(0), r.getBoolean(1))).toSeq
-        out.toDF("doc_id", "is_near_dup")
-      } finally {
-        q.stop()
-        s.catalog.dropTempView(name)
-        prev match {
-          case Some(v) => s.conf.set("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", v)
-          case None => s.conf.unset("spark.sql.streaming.statefulOperator.checkCorrectness.enabled")
+      withConf(s, "spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false") {
+        import s.implicits._
+        val rows = harnessFeed(Tables.load(s, dir, "documents"), "documents",
+            "q83_stream_simhash_dedup", dir)(
+          _.select(col("doc_id").cast("long"), col("text"),
+            timestamp_micros(lit(1700000000000000L) + col("doc_id").cast("long")).as("ts"))
+          .as[(Long, String, java.sql.Timestamp)])(_._1)
+        viaMemorySink(s, "q83_stream_simhash_dedup", rows, "append",
+          sentinel = Some((-1L, "sentinel flush doc", sentinelTs(rows.iterator.map(_._3)))))(in =>
+          streaming.StreamingBehavioral.streamingSimhashDedup(in.toDF("doc_id", "text", "ts"),
+            maxDist = 3, watermark = "10 minutes",
+            fingerprint = streaming.StreamingBehavioral.simhashMd5Fingerprint)) { tbl =>
+          tbl.filter(col("doc_id") >= 0)
+            .select(col("doc_id"), col("is_near_dup"))
+            .collect().map(r => (r.getLong(0), r.getBoolean(1))).toSeq
+            .toDF("doc_id", "is_near_dup")
         }
       }
     },
@@ -2455,11 +2351,9 @@ object SparkEntry {
       // unpopulated cache — profiled as three CONCURRENT ~0.8 s jobs each
       // recomputing the full index sketch (round 22, guide §1.2/§5)
       idx.count()
-      val rows = d.filter(col("doc_id") % 10 === 0)
-        .select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
-        .collect().sortBy(_._1)
-      require(rows.length <= MaxStreamHarnessRows,
-        s"q84_stream_neardup_ingest feed of ${rows.length} docs exceeds the harness bound")
+      val rows = harnessFeed(d, "documents", "q84_stream_neardup_ingest", dir)(
+        _.filter(col("doc_id") % 10 === 0)
+          .select(col("doc_id").cast("long"), col("text")).as[(Long, String)])(_._1)
       val received = scala.collection.mutable.ArrayBuffer[(Long, Long, Double)]()
       val input = MemoryStream[(Long, String)]
       val q = streaming.StreamingBehavioral.nearDupIngest(

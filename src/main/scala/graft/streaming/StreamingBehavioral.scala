@@ -1,10 +1,14 @@
 package graft.streaming
 
-import graft.behavioral.{EventBuf, FunnelMode, FunnelScan}
+import graft.behavioral.{EventBuf, FunnelMode, FunnelScan, NNBuf, NextNodeScan}
+import graft.behavioral.pattern.{PStep, PatternExecutor, PatternParser}
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import java.util.Arrays
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Structured Streaming versions of the behavioral operators.
   *
@@ -13,21 +17,116 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   *   - streaming sessionize → Spark's native `session_window` (merging
   *     session state store, watermark handles late data and state GC);
-  *   - streaming window_funnel → `flatMapGroupsWithState` with an event-time
-  *     timeout: per-user packed event buffer, re-evaluated on each
-  *     micro-batch, state dropped once the watermark passes the last event
-  *     plus the funnel window (bounded state, the 100 TB requirement).
+  *   - exact and SimHash near-duplicate dedup within the watermark;
+  *   - window_funnel, retention, sequence_match, sequence_count,
+  *     sequence_match_events and sequence_next_node → one per-user state
+  *     step each, run by [[perUser]]: the batch kernel re-evaluated per
+  *     micro-batch over the user's bounded state.
   */
 object StreamingBehavioral {
 
-  /** Arm a state-expiry event-time timeout, clamped above the current
-    * watermark: `setTimeoutTimestamp` throws if handed a timestamp the
-    * watermark has already passed, which a straight `maxTs + horizon` can
-    * produce for a user whose (late, or all-filtered) batch left `maxTs`
-    * behind the watermark — the state then expires at the next watermark
-    * advance instead of crashing the query. */
-  private def armExpiry(state: GroupState[_], tsMs: Long): Unit =
-    state.setTimeoutTimestamp(math.max(tsMs, state.getCurrentWatermarkMs() + 1))
+  /** One user's step inside [[perUser]]. It is built from the restored
+    * state (`None` for a new or expired user); `add` folds each batch event
+    * that has a timestamp, with that timestamp in µs; `finish` returns the
+    * state to store and the row to emit. */
+  private trait UserStep[E, S, U] {
+    def add(e: E, us: Long): Unit
+    def finish(maxTsUs: Long, watermarkUs: Long): (S, U)
+  }
+
+  /** The per-user lifecycle shared by the keyed behavioral operators. Its
+    * contract:
+    *   - lateness: events behind the watermark (`watermark` below the
+    *     largest event time seen) are dropped before the step sees them;
+    *   - horizon forgetting: a step keeps only buffered events at or after
+    *     watermark − `horizonMicros` ([[pruneBelow]]), so a chain wider than
+    *     the horizon can be missed;
+    *   - expiry: a user's state is dropped once the watermark passes its
+    *     largest event time + `horizonMicros`. The expiry is clamped above
+    *     the current watermark: `setTimeoutTimestamp` throws on a time the
+    *     watermark has passed, which a user whose late or all-filtered
+    *     batch left the max behind can produce; that state then expires at
+    *     the next watermark advance instead of crashing the query;
+    *   - Update-mode emission: each micro-batch emits one row per user it
+    *     touched, and an expiring user emits nothing. */
+  private def perUser[E, S: Encoder, U: Encoder](events: Dataset[E], watermark: String,
+      horizonMicros: Long)(user: E => Long, ts: E => java.sql.Timestamp, maxTsOf: S => Long)(
+      open: (Long, Option[S]) => UserStep[E, S, U]): Dataset[U] = {
+    import events.sparkSession.implicits._
+    events
+      .withWatermark("ts", watermark)
+      .groupByKey(user)
+      .flatMapGroupsWithState[S, U](OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
+        (userId: Long, batch: Iterator[E], state: GroupState[S]) =>
+          if (state.hasTimedOut) {
+            state.remove()
+            Iterator.empty
+          } else {
+            val prior = state.getOption
+            val step = open(userId, prior)
+            var maxTsUs = prior.fold(Long.MinValue)(maxTsOf)
+            batch.foreach { e =>
+              val t = ts(e)
+              if (t != null) {
+                val us = t.getTime * 1000 + (t.getNanos / 1000) % 1000
+                if (us > maxTsUs) maxTsUs = us
+                step.add(e, us)
+              }
+            }
+            val watermarkMs = state.getCurrentWatermarkMs()
+            val (next, out) = step.finish(maxTsUs, watermarkMs * 1000)
+            state.update(next)
+            state.setTimeoutTimestamp(
+              math.max((maxTsUs + horizonMicros) / 1000 + 1, watermarkMs + 1))
+            Iterator.single(out)
+          }
+      }
+  }
+
+  /** An event buffer holding a stored state's (ts, conds) arrays. */
+  private def restore(saved: Option[(Array[Long], Array[Int])]): EventBuf =
+    saved.fold(EventBuf.empty()) { case (ts, conds) =>
+      new EventBuf(ts.clone(), conds.clone(), ts.length)
+    }
+
+  /** Index of the first of `n` ascending times at or after `horizonUs`. */
+  private def firstKept(ts: Array[Long], n: Int, horizonUs: Long): Int = {
+    var i = 0
+    while (i < n && ts(i) < horizonUs) i += 1
+    i
+  }
+
+  /** Sorts `buf` by time and forgets the events before `horizonUs`;
+    * returns `buf` itself when none is dropped. */
+  private def pruneBelow(buf: EventBuf, horizonUs: Long): EventBuf = {
+    buf.sortByTs()
+    val from = firstKept(buf.ts, buf.n, horizonUs)
+    if (from == 0) buf
+    else new EventBuf(Arrays.copyOfRange(buf.ts, from, buf.n),
+      Arrays.copyOfRange(buf.conds, from, buf.n), buf.n - from)
+  }
+
+  /** [[pruneBelow]] for the next-node row buffer. */
+  private def pruneBelow(buf: NNBuf, horizonUs: Long): NNBuf = {
+    buf.sortByTs()
+    val from = firstKept(buf.ts, buf.n, horizonUs)
+    if (from == 0) buf
+    else {
+      val kept = new NNBuf(math.max(buf.n - from, 16))
+      for (i <- from until buf.n)
+        kept.append(buf.ts(i), buf.flags(i), kept.intern(buf.valueAt(i)))
+      kept
+    }
+  }
+
+  private def parsePattern(function: String, pattern: String): Array[PStep] =
+    PatternParser.parse(pattern) match {
+      case Right(steps) => steps
+      case Left(e) => throw new IllegalArgumentException(s"$function pattern error: $e")
+    }
+
+  private def requirePositiveHorizon(horizonMicros: Long): Unit =
+    require(horizonMicros > 0, s"horizonMicros must be positive, got $horizonMicros")
 
   /** Gap-based streaming session stats, one row per closed (or updated)
     * session: (user_id, session start/end, n_events).
@@ -69,6 +168,28 @@ object StreamingBehavioral {
   /** Fingerprints seen in one band bucket within the watermark horizon. */
   case class BandState(sim: Array[Long], tsUs: Array[Long])
 
+  /** Default per-row fingerprint for `streamingSimhashDedup`: `simhash64`
+    * (xxhash64 token votes) over whitespace tokens — the production kernel. */
+  def simhash64Fingerprint(text: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    org.apache.spark.sql.graftbridge.ColumnBridge.column(
+      graft.functions.Simhash64(
+        org.apache.spark.sql.graftbridge.ColumnBridge.expression(
+          graft.ops.TextAnalysis.tokensWs(text))))
+
+  /** Oracle-mirrorable md5 fingerprint packed to the same 64-bit layout
+    * (4×16-bit bands), the streaming twin of `Dedup.simhashIndexMd5`'s
+    * conversion — lets the streaming near-dup screen be gated against the
+    * DuckDB md5 simhash oracle (q83). */
+  def simhashMd5Fingerprint(text: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
+    val hex = org.apache.spark.sql.graftbridge.ColumnBridge.column(
+      graft.functions.SimhashMd5Hex(
+        org.apache.spark.sql.graftbridge.ColumnBridge.expression(
+          graft.ops.TextAnalysis.tokensWs(text))))
+    val hi = conv(substring(hex, 1, 8), 16, 10).cast("long")
+    val lo = conv(substring(hex, 9, 8), 16, 10).cast("long")
+    shiftleft(hi, 32).bitwiseOR(lo)
+  }
+
   /** Streaming NEAR-duplicate suppression by SimHash Hamming distance —
     * the streaming counterpart of `Dedup.simhashPairs`. A document is
     * flagged `is_near_dup` iff a document within Hamming distance
@@ -98,28 +219,6 @@ object StreamingBehavioral {
     * late-row hazard. Documents arriving behind the watermark are
     * dropped (the standard streaming-lateness contract).
     */
-  /** Default per-row fingerprint for `streamingSimhashDedup`: `simhash64`
-    * (xxhash64 token votes) over whitespace tokens — the production kernel. */
-  def simhash64Fingerprint(text: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      graft.functions.Simhash64(
-        org.apache.spark.sql.graftbridge.ColumnBridge.expression(
-          graft.ops.TextAnalysis.tokensWs(text))))
-
-  /** Oracle-mirrorable md5 fingerprint packed to the same 64-bit layout
-    * (4×16-bit bands), the streaming twin of `Dedup.simhashIndexMd5`'s
-    * conversion — lets the streaming near-dup screen be gated against the
-    * DuckDB md5 simhash oracle (q83). */
-  def simhashMd5Fingerprint(text: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val hex = org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      graft.functions.SimhashMd5Hex(
-        org.apache.spark.sql.graftbridge.ColumnBridge.expression(
-          graft.ops.TextAnalysis.tokensWs(text))))
-    val hi = conv(substring(hex, 1, 8), 16, 10).cast("long")
-    val lo = conv(substring(hex, 9, 8), 16, 10).cast("long")
-    shiftleft(hi, 32).bitwiseOR(lo)
-  }
-
   def streamingSimhashDedup(docs: DataFrame, maxDist: Int = 3,
       idCol: String = "doc_id", textCol: String = "text",
       tsCol: String = "ts", watermark: String = "1 hour",
@@ -203,73 +302,31 @@ object StreamingBehavioral {
   /** Streaming window_funnel over an unbounded keyed stream.
     *
     * Same semantics as the batch aggregate, re-evaluated per micro-batch.
-    * State per user is O(events inside the funnel window): events older
-    * than (watermark - window) can no longer participate in any chain that
-    * includes a future event, and the whole state times out (and is
-    * dropped) once the watermark passes maxTs + window.
+    * The funnel window is the horizon of the [[perUser]] contract: events
+    * older than (watermark - window) can no longer participate in any
+    * chain that includes a future event. The emitted step is monotone:
+    * pruning never lowers a depth an expired chain already reached.
     */
   def streamingFunnel(events: Dataset[FunnelEvent], windowMicros: Long,
       numConds: Int, mode: Int = FunnelMode.Default,
       watermark: String = "1 hour"): Dataset[FunnelUpdate] = {
+    require(numConds >= 1 && numConds <= 32,
+      s"streaming funnel supports 1..32 conditions (the FunnelEvent mask width), got $numConds")
     import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[FunnelState, FunnelUpdate](
-        OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, batch: Iterator[FunnelEvent], state: GroupState[FunnelState]) =>
-          if (state.hasTimedOut) {
-            // watermark passed maxTs + window: no chain can change anymore
-            state.remove()
-            Iterator.empty
-          } else {
-            val buf = EventBuf.empty()
-            var maxTsUs = Long.MinValue
-            var best = 0
-            state.getOption.foreach { s =>
-              var i = 0
-              while (i < s.ts.length) { buf.append(s.ts(i), s.conds(i)); i += 1 }
-              maxTsUs = s.maxTsUs
-              best = s.best
-            }
-            var n = 0
-            batch.foreach { e =>
-              if (e.ts != null) {
-                val us = e.ts.getTime * 1000 + (e.ts.getNanos / 1000) % 1000
-                // maxTs tracks EVERY event (like streamingRetention): a user
-                // whose first batch is all conds=0 noise must still arm a
-                // valid expiry timestamp, not Long.MinValue + window
-                if (us > maxTsUs) maxTsUs = us
-                if (e.conds != 0) {
-                  buf.append(us, e.conds)
-                  n += 1
-                }
-              }
-            }
-            // prune events that can no longer join any future chain: an event
-            // at t only matters while some chain entry within [t - window, t]
-            // can still extend, i.e. while watermark < t + window
-            val horizonUs = state.getCurrentWatermarkMs() * 1000 - windowMicros
-            val pruned = EventBuf.empty()
-            var i = 0
-            buf.sortByTs()
-            while (i < buf.n) {
-              if (buf.ts(i) >= horizonUs) pruned.append(buf.ts(i), buf.conds(i))
-              i += 1
-            }
-            val kept = if (pruned.n < buf.n) pruned else buf
-            // monotone funnel depth: pruning must never lower a step
-            // already reached by an expired chain
-            val steps = math.max(best,
-              FunnelScan.maxStep(kept, windowMicros, mode, numConds))
-            state.update(FunnelState(
-              java.util.Arrays.copyOf(kept.ts, kept.n),
-              java.util.Arrays.copyOf(kept.conds, kept.n), maxTsUs, steps))
-            // expire once nothing can change: watermark > maxTs + window
-            armExpiry(state, (maxTsUs + windowMicros) / 1000 + 1)
-            Iterator.single(FunnelUpdate(userId, steps, kept.n))
-          }
+    perUser[FunnelEvent, FunnelState, FunnelUpdate](events, watermark, windowMicros)(
+        _.user_id, _.ts, _.maxTsUs) { (userId, prior) =>
+      new UserStep[FunnelEvent, FunnelState, FunnelUpdate] {
+        private val buf = restore(prior.map(s => (s.ts, s.conds)))
+        def add(e: FunnelEvent, us: Long): Unit = if (e.conds != 0) buf.append(us, e.conds)
+        def finish(maxTsUs: Long, watermarkUs: Long) = {
+          val kept = pruneBelow(buf, watermarkUs - windowMicros)
+          val steps = math.max(prior.fold(0)(_.best),
+            FunnelScan.maxStep(kept, windowMicros, mode, numConds))
+          (FunnelState(Arrays.copyOf(kept.ts, kept.n), Arrays.copyOf(kept.conds, kept.n),
+            maxTsUs, steps), FunnelUpdate(userId, steps, kept.n))
+        }
       }
+    }
   }
 
   /** One input event for streaming retention: condition bitmask packed
@@ -289,50 +346,30 @@ object StreamingBehavioral {
 
   /** Streaming `retention` over an unbounded keyed stream: per-user
     * bitmask-OR state updated per micro-batch, anchor gating applied at
-    * emission exactly like the batch aggregate's finalize. Unlike the
-    * funnel there is nothing to prune — the mask is O(1) — so the
-    * watermark's only job is state EXPIRY: a user idle past `horizon`
-    * (event-time) is dropped, bounding state cardinality by
-    * users-active-within-horizon. Late events behind the watermark are
-    * dropped by the standard lateness contract. Emits in Update mode:
-    * each micro-batch re-emits the users it touched. */
+    * emission exactly like the batch aggregate's finalize. The mask is
+    * O(1), so nothing is pruned: the horizon only expires idle users. */
   def streamingRetention(events: Dataset[RetentionEvent], numConds: Int,
       watermark: String = "1 hour",
       horizonMicros: Long = 30L * 86400 * 1000000): Dataset[RetentionUpdate] = {
     require(numConds >= 1 && numConds <= 32,
       s"retention supports 1..32 conditions, got $numConds")
-    require(horizonMicros > 0, s"horizonMicros must be positive, got $horizonMicros")
+    requirePositiveHorizon(horizonMicros)
     import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[RetentionState, RetentionUpdate](
-        OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, batch: Iterator[RetentionEvent], state: GroupState[RetentionState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var mask = 0
-            var maxTsUs = Long.MinValue
-            state.getOption.foreach { s => mask = s.mask; maxTsUs = s.maxTsUs }
-            batch.foreach { e =>
-              if (e.ts != null) {
-                mask |= e.conds
-                val us = e.ts.getTime * 1000 + (e.ts.getNanos / 1000) % 1000
-                if (us > maxTsUs) maxTsUs = us
-              }
-            }
-            state.update(RetentionState(mask, maxTsUs))
-            armExpiry(state, (maxTsUs + horizonMicros) / 1000 + 1)
-            // anchor gating at emission, same as the batch finalize:
-            // flag 0 = anchor bit; flag i = anchor AND bit i
-            val anchor = (mask & 1) != 0
-            val flags = (0 until numConds).map(i =>
-              if (i == 0) anchor else anchor && ((mask >> i) & 1) != 0)
-            Iterator.single(RetentionUpdate(userId, flags))
-          }
+    perUser[RetentionEvent, RetentionState, RetentionUpdate](events, watermark, horizonMicros)(
+        _.user_id, _.ts, _.maxTsUs) { (userId, prior) =>
+      new UserStep[RetentionEvent, RetentionState, RetentionUpdate] {
+        private var mask = prior.fold(0)(_.mask)
+        def add(e: RetentionEvent, us: Long): Unit = mask |= e.conds
+        def finish(maxTsUs: Long, watermarkUs: Long) = {
+          // anchor gating at emission, same as the batch finalize:
+          // flag 0 = anchor bit; flag i = anchor AND bit i
+          val anchor = (mask & 1) != 0
+          val flags = (0 until numConds).map(i =>
+            if (i == 0) anchor else anchor && ((mask >> i) & 1) != 0)
+          (RetentionState(mask, maxTsUs), RetentionUpdate(userId, flags))
+        }
       }
+    }
   }
 
   /** One input event for streaming sequence_match: condition bitmask
@@ -360,14 +397,10 @@ object StreamingBehavioral {
     * buffer — matched users cost O(1) state from then on, and evaluation
     * stops for them.
     *
-    * State bounding is the `horizonMicros` contract (same forgetting
-    * contract as streaming retention / the dedup ops): events older than
-    * watermark − horizon are pruned from unmatched buffers, so a match
-    * whose WHOLE SPAN would exceed the horizon can be missed — size the
-    * horizon to the longest chain the product cares about. A user idle
-    * past the horizon expires entirely (latched or not) and restarts
-    * from scratch if they return. Late events behind the watermark are
-    * dropped by the standard lateness contract.
+    * Under the horizon contract a match whose WHOLE SPAN exceeds the
+    * horizon can be missed — size the horizon to the longest chain the
+    * product cares about. A user who expires (latched or not) restarts
+    * from scratch if they return.
     *
     * Only condition-bearing events enter the buffer (conds != 0), exactly
     * like the batch aggregate — `.`/`.*` see condition-bearing events
@@ -375,74 +408,28 @@ object StreamingBehavioral {
   def streamingSequenceMatch(events: Dataset[SeqEvent], pattern: String,
       watermark: String = "1 hour",
       horizonMicros: Long = 30L * 86400 * 1000000): Dataset[SeqMatchUpdate] = {
-    val steps = graft.behavioral.pattern.PatternParser.parse(pattern) match {
-      case Right(s) => s
-      case Left(e) => throw new IllegalArgumentException(
-        s"sequence_match pattern error: $e")
-    }
-    require(horizonMicros > 0, s"horizonMicros must be positive, got $horizonMicros")
+    val steps = parsePattern("sequence_match", pattern)
+    requirePositiveHorizon(horizonMicros)
     import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SeqMatchState, SeqMatchUpdate](
-        OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, batch: Iterator[SeqEvent], state: GroupState[SeqMatchState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var maxTsUs = Long.MinValue
-            var matched = false
-            val buf = EventBuf.empty()
-            state.getOption.foreach { s =>
-              matched = s.matched
-              maxTsUs = s.maxTsUs
-              if (!matched) {
-                var i = 0
-                while (i < s.ts.length) { buf.append(s.ts(i), s.conds(i)); i += 1 }
-              }
-            }
-            batch.foreach { e =>
-              if (e.ts != null) {
-                val us = e.ts.getTime * 1000 + (e.ts.getNanos / 1000) % 1000
-                if (us > maxTsUs) maxTsUs = us
-                if (!matched && e.conds != 0) buf.append(us, e.conds)
-              }
-            }
-            if (!matched) {
-              // prune events the horizon has passed: they may no longer
-              // combine with future events (the forgetting contract)
-              val horizonUs = state.getCurrentWatermarkMs() * 1000 - horizonMicros
-              val pruned = EventBuf.empty()
-              buf.sortByTs()
-              var i = 0
-              while (i < buf.n) {
-                if (buf.ts(i) >= horizonUs) pruned.append(buf.ts(i), buf.conds(i))
-                i += 1
-              }
-              val kept = if (pruned.n < buf.n) pruned else buf
-              matched = graft.behavioral.pattern.PatternExecutor
-                .execute(steps, kept, countAll = false) > 0
-              if (matched) {
-                // latch: drop the buffer, O(1) state from here on
-                state.update(SeqMatchState(Array.emptyLongArray,
-                  Array.emptyIntArray, maxTsUs, matched = true))
-              } else {
-                state.update(SeqMatchState(
-                  java.util.Arrays.copyOf(kept.ts, kept.n),
-                  java.util.Arrays.copyOf(kept.conds, kept.n),
-                  maxTsUs, matched = false))
-              }
-            } else {
-              state.update(SeqMatchState(Array.emptyLongArray,
-                Array.emptyIntArray, maxTsUs, matched = true))
-            }
-            armExpiry(state, (maxTsUs + horizonMicros) / 1000 + 1)
-            val nBuf = state.get.ts.length
-            Iterator.single(SeqMatchUpdate(userId, matched, nBuf))
-          }
+    perUser[SeqEvent, SeqMatchState, SeqMatchUpdate](events, watermark, horizonMicros)(
+        _.user_id, _.ts, _.maxTsUs) { (userId, prior) =>
+      new UserStep[SeqEvent, SeqMatchState, SeqMatchUpdate] {
+        private val latched = prior.exists(_.matched)
+        private val buf = restore(prior.map(s => (s.ts, s.conds)))
+        def add(e: SeqEvent, us: Long): Unit =
+          if (!latched && e.conds != 0) buf.append(us, e.conds)
+        def finish(maxTsUs: Long, watermarkUs: Long) = {
+          val kept = if (latched) buf else pruneBelow(buf, watermarkUs - horizonMicros)
+          if (latched || PatternExecutor.execute(steps, kept, countAll = false) > 0)
+            // latch: drop the buffer, O(1) state from here on
+            (SeqMatchState(Array.emptyLongArray, Array.emptyIntArray, maxTsUs, matched = true),
+              SeqMatchUpdate(userId, matched = true, 0))
+          else
+            (SeqMatchState(Arrays.copyOf(kept.ts, kept.n), Arrays.copyOf(kept.conds, kept.n),
+              maxTsUs, matched = false), SeqMatchUpdate(userId, matched = false, kept.n))
+        }
       }
+    }
   }
 
   /** Streaming sequence_count output: cumulative non-overlapping match
@@ -464,17 +451,13 @@ object StreamingBehavioral {
     * counted match's end can ever participate again. The consumed boundary
     * is reported by the counting pass itself
     * (`PatternExecutor.executeWithConsumed`), so count and boundary agree
-    * by construction — in particular under the `MaxNfaStates` abort guard,
-    * where a start position's outcome depends on how much buffer follows
-    * it and the count is therefore NOT monotone in prefix length (the
-    * prefix-rerun binary search this replaces could disagree with the
-    * counting pass near the guard and silently re-expose or over-drop
-    * events; StreamingSeqCountSpec pins a guard-straddling pattern).
+    * by construction — also under the `MaxNfaStates` abort guard, where a
+    * start position's outcome depends on how much buffer follows it
+    * (StreamingSeqCountSpec pins a guard-straddling pattern).
     *
-    * Same horizon contract as `streamingSequenceMatch`: unconsumed events
-    * older than watermark − horizon are pruned (a match spanning wider than
-    * the horizon may be missed), idle users expire, late events drop. The
-    * emitted count is cumulative and monotone within a state lifetime.
+    * Under the horizon contract a match spanning wider than the horizon
+    * may be missed. The emitted count is cumulative and monotone within a
+    * state lifetime.
     *
     * Counted matches are FINAL: an event that arrives later (above the
     * watermark, so not "late" by the lateness contract) but whose
@@ -486,67 +469,25 @@ object StreamingBehavioral {
   def streamingSequenceCount(events: Dataset[SeqEvent], pattern: String,
       watermark: String = "1 hour",
       horizonMicros: Long = 30L * 86400 * 1000000): Dataset[SeqCountUpdate] = {
-    val steps = graft.behavioral.pattern.PatternParser.parse(pattern) match {
-      case Right(s) => s
-      case Left(e) => throw new IllegalArgumentException(
-        s"sequence_count pattern error: $e")
-    }
-    require(horizonMicros > 0, s"horizonMicros must be positive, got $horizonMicros")
+    val steps = parsePattern("sequence_count", pattern)
+    requirePositiveHorizon(horizonMicros)
     import events.sparkSession.implicits._
-
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SeqCountState, SeqCountUpdate](
-        OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, batch: Iterator[SeqEvent], state: GroupState[SeqCountState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var count = 0L
-            var maxTsUs = Long.MinValue
-            val buf = EventBuf.empty()
-            state.getOption.foreach { s =>
-              count = s.count
-              maxTsUs = s.maxTsUs
-              var i = 0
-              while (i < s.ts.length) { buf.append(s.ts(i), s.conds(i)); i += 1 }
-            }
-            batch.foreach { e =>
-              if (e.ts != null) {
-                val us = e.ts.getTime * 1000 + (e.ts.getNanos / 1000) % 1000
-                if (us > maxTsUs) maxTsUs = us
-                if (e.conds != 0) buf.append(us, e.conds)
-              }
-            }
-            // prune unconsumed events the horizon has passed (forgetting
-            // contract — consumed events are already gone)
-            val horizonUs = state.getCurrentWatermarkMs() * 1000 - horizonMicros
-            buf.sortByTs()
-            val pruned = EventBuf.empty()
-            var i = 0
-            while (i < buf.n) {
-              if (buf.ts(i) >= horizonUs) pruned.append(buf.ts(i), buf.conds(i))
-              i += 1
-            }
-            val kept = if (pruned.n < buf.n) pruned else buf
-            val (newMatches, from) = graft.behavioral.pattern.PatternExecutor
-              .executeWithConsumed(steps, kept)
-            count += newMatches
-            val restN = kept.n - from
-            val restTs = new Array[Long](restN)
-            val restConds = new Array[Int](restN)
-            i = 0
-            while (i < restN) {
-              restTs(i) = kept.ts(from + i); restConds(i) = kept.conds(from + i)
-              i += 1
-            }
-            state.update(SeqCountState(count, restTs, restConds, maxTsUs))
-            armExpiry(state, (maxTsUs + horizonMicros) / 1000 + 1)
-            Iterator.single(SeqCountUpdate(userId, count, restN))
-          }
+    perUser[SeqEvent, SeqCountState, SeqCountUpdate](events, watermark, horizonMicros)(
+        _.user_id, _.ts, _.maxTsUs) { (userId, prior) =>
+      new UserStep[SeqEvent, SeqCountState, SeqCountUpdate] {
+        private val buf = restore(prior.map(s => (s.ts, s.conds)))
+        def add(e: SeqEvent, us: Long): Unit = if (e.conds != 0) buf.append(us, e.conds)
+        def finish(maxTsUs: Long, watermarkUs: Long) = {
+          val kept = pruneBelow(buf, watermarkUs - horizonMicros)
+          val (newMatches, consumed) = PatternExecutor.executeWithConsumed(steps, kept)
+          val count = prior.fold(0L)(_.count) + newMatches
+          val restTs = Arrays.copyOfRange(kept.ts, consumed, kept.n)
+          val restConds = Arrays.copyOfRange(kept.conds, consumed, kept.n)
+          (SeqCountState(count, restTs, restConds, maxTsUs),
+            SeqCountUpdate(userId, count, restTs.length))
+        }
       }
+    }
   }
 
   /** Streaming sequence_match_events output: `matched_ts` holds the epoch-µs
@@ -570,81 +511,35 @@ object StreamingBehavioral {
     * semantics; the streamed result never retracts (the same finality
     * contract as `streamingSequenceCount`'s counted matches). With events
     * in timestamp order the latched match IS the batch first match over
-    * the history seen so far.
-    *
-    * Same horizon/lateness contracts as `streamingSequenceMatch`. */
+    * the history seen so far. */
   def streamingSequenceMatchEvents(events: Dataset[SeqEvent], pattern: String,
       watermark: String = "1 hour",
       horizonMicros: Long = 30L * 86400 * 1000000): Dataset[SeqMatchEventsUpdate] = {
-    val steps = graft.behavioral.pattern.PatternParser.parse(pattern) match {
-      case Right(s) => s
-      case Left(e) => throw new IllegalArgumentException(
-        s"sequence_match_events pattern error: $e")
-    }
-    require(horizonMicros > 0, s"horizonMicros must be positive, got $horizonMicros")
+    val steps = parsePattern("sequence_match_events", pattern)
+    requirePositiveHorizon(horizonMicros)
     import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SeqMatchEventsState, SeqMatchEventsUpdate](
-        OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, batch: Iterator[SeqEvent], state: GroupState[SeqMatchEventsState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var maxTsUs = Long.MinValue
-            var matched = false
-            var matchedTs: Array[Long] = Array.emptyLongArray
-            val buf = EventBuf.empty()
-            state.getOption.foreach { s =>
-              matched = s.matched
-              matchedTs = s.matchedTs
-              maxTsUs = s.maxTsUs
-              if (!matched) {
-                var i = 0
-                while (i < s.ts.length) { buf.append(s.ts(i), s.conds(i)); i += 1 }
-              }
-            }
-            batch.foreach { e =>
-              if (e.ts != null) {
-                val us = e.ts.getTime * 1000 + (e.ts.getNanos / 1000) % 1000
-                if (us > maxTsUs) maxTsUs = us
-                if (!matched && e.conds != 0) buf.append(us, e.conds)
-              }
-            }
-            if (!matched) {
-              val horizonUs = state.getCurrentWatermarkMs() * 1000 - horizonMicros
-              val pruned = EventBuf.empty()
-              buf.sortByTs()
-              var i = 0
-              while (i < buf.n) {
-                if (buf.ts(i) >= horizonUs) pruned.append(buf.ts(i), buf.conds(i))
-                i += 1
-              }
-              val kept = if (pruned.n < buf.n) pruned else buf
-              val got = graft.behavioral.pattern.PatternExecutor
-                .executeCollect(steps, kept)
-              if (got != null) {
-                matched = true
-                matchedTs = got
-                state.update(SeqMatchEventsState(Array.emptyLongArray,
-                  Array.emptyIntArray, maxTsUs, matched = true, got))
-              } else {
-                state.update(SeqMatchEventsState(
-                  java.util.Arrays.copyOf(kept.ts, kept.n),
-                  java.util.Arrays.copyOf(kept.conds, kept.n),
-                  maxTsUs, matched = false, Array.emptyLongArray))
-              }
-            } else {
-              state.update(SeqMatchEventsState(Array.emptyLongArray,
-                Array.emptyIntArray, maxTsUs, matched = true, matchedTs))
-            }
-            armExpiry(state, (maxTsUs + horizonMicros) / 1000 + 1)
-            val nBuf = state.get.ts.length
-            Iterator.single(SeqMatchEventsUpdate(userId, matched, matchedTs, nBuf))
+    perUser[SeqEvent, SeqMatchEventsState, SeqMatchEventsUpdate](events, watermark,
+        horizonMicros)(_.user_id, _.ts, _.maxTsUs) { (userId, prior) =>
+      new UserStep[SeqEvent, SeqMatchEventsState, SeqMatchEventsUpdate] {
+        private val latchedTs = prior.filter(_.matched).map(_.matchedTs)
+        private val buf = restore(prior.map(s => (s.ts, s.conds)))
+        def add(e: SeqEvent, us: Long): Unit =
+          if (latchedTs.isEmpty && e.conds != 0) buf.append(us, e.conds)
+        def finish(maxTsUs: Long, watermarkUs: Long) = {
+          val kept = if (latchedTs.isDefined) buf else pruneBelow(buf, watermarkUs - horizonMicros)
+          latchedTs.getOrElse(PatternExecutor.executeCollect(steps, kept)) match {
+            case null =>
+              (SeqMatchEventsState(Arrays.copyOf(kept.ts, kept.n),
+                Arrays.copyOf(kept.conds, kept.n), maxTsUs, matched = false,
+                Array.emptyLongArray),
+                SeqMatchEventsUpdate(userId, matched = false, Array.emptyLongArray, kept.n))
+            case got =>
+              (SeqMatchEventsState(Array.emptyLongArray, Array.emptyIntArray, maxTsUs,
+                matched = true, got), SeqMatchEventsUpdate(userId, matched = true, got, 0))
           }
+        }
       }
+    }
   }
 
   /** One input row for streaming sequence_next_node: `conds` packs the step
@@ -680,10 +575,7 @@ object StreamingBehavioral {
     * same O(group-size) state the batch aggregate buffers (all rows, no
     * condition pre-filter); the horizon is the bound, so size it to the
     * chain span the product cares about. Within the horizon the emitted
-    * answer ALWAYS equals the batch aggregate over the same rows — there
-    * is no divergence contract to document beyond lateness (events behind
-    * the watermark drop) and forgetting (rows older than watermark −
-    * horizon prune, exactly like the other streaming operators). */
+    * answer ALWAYS equals the batch aggregate over the same rows. */
   def streamingSequenceNextNode(events: Dataset[NNEvent], direction: String,
       base: String, numSteps: Int, watermark: String = "1 hour",
       horizonMicros: Long = 30L * 86400 * 1000000): Dataset[NextNodeUpdate] = {
@@ -703,71 +595,34 @@ object StreamingBehavioral {
       case other => throw new IllegalArgumentException(
         s"sequence_next_node base must be head|tail|first_match|last_match, got '$other'")
     }
-    require(horizonMicros > 0, s"horizonMicros must be positive, got $horizonMicros")
+    requirePositiveHorizon(horizonMicros)
     import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[NextNodeState, NextNodeUpdate](
-        OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, batch: Iterator[NNEvent], state: GroupState[NextNodeState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            import graft.behavioral.{NNBuf, NextNodeScan}
-            import org.apache.spark.unsafe.types.UTF8String
-            var maxTsUs = Long.MinValue
-            val buf = new NNBuf(16)
-            state.getOption.foreach { s =>
-              maxTsUs = s.maxTsUs
-              var i = 0
-              while (i < s.ts.length) {
-                val v = if (s.values(i) == null) null
-                  else UTF8String.fromString(s.values(i))
-                buf.append(s.ts(i), s.flags(i), buf.intern(v))
-                i += 1
-              }
-            }
-            batch.foreach { e =>
-              if (e.ts != null) {
-                val us = e.ts.getTime * 1000 + (e.ts.getNanos / 1000) % 1000
-                if (us > maxTsUs) maxTsUs = us
-                var f = e.conds.toLong & 0xFFFFFFFFL
-                if (e.base_cond) f |= 1L << 32
-                val v = if (e.value == null) null else UTF8String.fromString(e.value)
-                buf.append(us, f, buf.intern(v))
-              }
-            }
-            val horizonUs = state.getCurrentWatermarkMs() * 1000 - horizonMicros
-            buf.sortByTs()
-            val kept = new NNBuf(math.max(buf.n, 16))
-            var i = 0
-            while (i < buf.n) {
-              if (buf.ts(i) >= horizonUs)
-                kept.append(buf.ts(i), buf.flags(i), kept.intern(buf.valueAt(i)))
-              i += 1
-            }
-            val answer = NextNodeScan.scan(kept, forward, baseId, numSteps) match {
-              case null => null
-              case v => v.toString
-            }
-            val ts2 = new Array[Long](kept.n)
-            val fl2 = new Array[Long](kept.n)
-            val vs2 = new Array[String](kept.n)
-            i = 0
-            while (i < kept.n) {
-              ts2(i) = kept.ts(i); fl2(i) = kept.flags(i)
-              val v = kept.valueAt(i)
-              vs2(i) = if (v == null) null else v.toString
-              i += 1
-            }
-            state.update(NextNodeState(ts2, fl2, vs2, maxTsUs))
-            armExpiry(state, (maxTsUs + horizonMicros) / 1000 + 1)
-            Iterator.single(NextNodeUpdate(userId, answer, kept.n))
-          }
+    perUser[NNEvent, NextNodeState, NextNodeUpdate](events, watermark, horizonMicros)(
+        _.user_id, _.ts, _.maxTsUs) { (userId, prior) =>
+      new UserStep[NNEvent, NextNodeState, NextNodeUpdate] {
+        private val buf = new NNBuf(16)
+        prior.foreach { s =>
+          for (i <- s.ts.indices)
+            buf.append(s.ts(i), s.flags(i), buf.intern(utf8(s.values(i))))
+        }
+        def add(e: NNEvent, us: Long): Unit = {
+          var f = e.conds.toLong & 0xFFFFFFFFL
+          if (e.base_cond) f |= 1L << 32
+          buf.append(us, f, buf.intern(utf8(e.value)))
+        }
+        def finish(maxTsUs: Long, watermarkUs: Long) = {
+          val kept = pruneBelow(buf, watermarkUs - horizonMicros)
+          val answer = Option(NextNodeScan.scan(kept, forward, baseId, numSteps))
+            .map(_.toString).orNull
+          val values = Array.tabulate(kept.n)(i => Option(kept.valueAt(i)).map(_.toString).orNull)
+          (NextNodeState(Arrays.copyOf(kept.ts, kept.n), Arrays.copyOf(kept.flags, kept.n),
+            values, maxTsUs), NextNodeUpdate(userId, answer, kept.n))
+        }
       }
+    }
   }
+
+  private def utf8(v: String): UTF8String = if (v == null) null else UTF8String.fromString(v)
 
   /** Continuous near-dup screening of a DOCUMENT STREAM against a stored
     * `Dedup.minhashIndex` — the streaming face of the incremental-ingest

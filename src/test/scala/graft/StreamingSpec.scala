@@ -70,6 +70,20 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("streaming funnel rejects numConds outside 1..32 (step 33 would read the entry bit)") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[FunnelEvent]
+    // the FunnelEvent mask has 32 bits: condition 33 would test bit 32,
+    // which the JVM shift masks to bit 0, so a conds = -1 event would
+    // "reach" step 33
+    for (bad <- Seq(0, 33))
+      intercept[IllegalArgumentException] {
+        StreamingBehavioral.streamingFunnel(input.toDS(), windowMicros = 3600L * 1000000,
+          numConds = bad)
+      }
+  }
+
   test("funnel prune keeps an event exactly at watermark - window (boundary chain still completes)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

@@ -9,8 +9,12 @@ flips, off-by-ones, guard deletions, arithmetic/op swaps, order swaps)
 chosen at the semantics-bearing sites the reference's own mutation run
 targets (reference README reports 88.4% kill rate).
 
-Usage: python3 tools/mutation.py   (from the repo root; restores files)
-Writes MUTATION.md with the per-mutant verdicts.
+Usage (from the root of a scratch copy of the repo; restores each file):
+  python3 tools/mutation.py BATCH [ID...]  run a batch, or only the named
+      mutants, and update their rows and the batch's kill rate in
+      MUTATION.md (other sections are left as they are)
+  python3 tools/mutation.py check          list every mutant whose text
+      does not occur exactly once in its file (runs no sbt; exit 1 if any)
 """
 import json
 import subprocess
@@ -105,8 +109,16 @@ MUTANTS = [
      "out(i) = anchor && ((bits >>> i) & 1L) != 0",
      "out(i) = ((bits >>> i) & 1L) != 0"),
     ("RE2", RET, "update overwrites instead of ORing the mask",
-     "buf(0) |= mask | SeenBit",
-     "buf(0) = mask | SeenBit"),
+     "  // codegen'd input projection \u2014 see WindowFunnelAgg.inputProj\n"
+     "  @transient private lazy val inputProj =\n"
+     "    org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(children.toIndexedSeq)\n\n"
+     "  override def update(buf: Array[Long], input: InternalRow): Array[Long] = {\n"
+     "    buf(0) |= RetentionBits.maskOf(inputProj(input), children.size)",
+     "  // codegen'd input projection \u2014 see WindowFunnelAgg.inputProj\n"
+     "  @transient private lazy val inputProj =\n"
+     "    org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(children.toIndexedSeq)\n\n"
+     "  override def update(buf: Array[Long], input: InternalRow): Array[Long] = {\n"
+     "    buf(0) = RetentionBits.maskOf(inputProj(input), children.size)"),
     ("RE3", RET, "anchor reads bit 1 instead of bit 0",
      "val anchor = (bits & 1L) != 0",
      "val anchor = (bits & 2L) != 0"),
@@ -267,12 +279,12 @@ MUTANTS5 = [
     ("SM3", STREAM, "simhash state GC drops the at-watermark fingerprint",
      "val keep = tss.indices.filter(i => tss(i) >= horizonUs)",
      "val keep = tss.indices.filter(i => tss(i) > horizonUs)"),
-    ("SM4", STREAM, "funnel prune drops the at-horizon event (>= -> >)",
-     "if (buf.ts(i) >= horizonUs) pruned.append(buf.ts(i), buf.conds(i))",
-     "if (buf.ts(i) > horizonUs) pruned.append(buf.ts(i), buf.conds(i))"),
+    ("SM4", STREAM, "horizon prune drops the at-horizon event (< -> <=; every buffered operator)",
+     "    while (i < n && ts(i) < horizonUs) i += 1",
+     "    while (i < n && ts(i) <= horizonUs) i += 1"),
     ("SM5", STREAM, "funnel monotone-best dropped (pruning can regress steps)",
-     "val steps = math.max(best,\n              FunnelScan.maxStep(kept, windowMicros, mode, numConds))",
-     "val steps =\n              FunnelScan.maxStep(kept, windowMicros, mode, numConds)"),
+     "val steps = math.max(prior.fold(0)(_.best),\n            FunnelScan.maxStep(kept, windowMicros, mode, numConds))",
+     "val steps =\n            FunnelScan.maxStep(kept, windowMicros, mode, numConds)"),
 ]
 
 
@@ -371,8 +383,8 @@ MUTANTS7 = [
 ]
 
 
-# batch 8: streaming sequence_match (latch buffer drop, horizon prune
-# boundary, condition-bearing filter) + the argmin_cell kernel (tie rule in
+# batch 8: streaming sequence_match (latch buffer drop, condition-bearing
+# filter; its horizon prune is batch 5's SM4) + the argmin_cell kernel (tie rule in
 # BOTH the eval and codegen paths, distance arithmetic). The boundary and
 # per-path tie killer tests were written before this run. Run with
 # `python3 tools/mutation.py 8`.
@@ -383,29 +395,13 @@ SUITES8 = [
 
 MUTANTS8 = [
     ("SQ81", STREAM, "match latch keeps the event buffer (state no longer O(1))",
-     '''              if (matched) {
-                // latch: drop the buffer, O(1) state from here on
-                state.update(SeqMatchState(Array.emptyLongArray,
-                  Array.emptyIntArray, maxTsUs, matched = true))
-              } else {''',
-     '''              if (matched) {
-                state.update(SeqMatchState(
-                  java.util.Arrays.copyOf(kept.ts, kept.n),
-                  java.util.Arrays.copyOf(kept.conds, kept.n),
-                  maxTsUs, matched = true))
-              } else {'''),
-    ("SQ82", STREAM, "horizon prune boundary >= -> > (drops the at-horizon event)",
-     '''              buf.sortByTs()
-              var i = 0
-              while (i < buf.n) {
-                if (buf.ts(i) >= horizonUs) pruned.append(buf.ts(i), buf.conds(i))''',
-     '''              buf.sortByTs()
-              var i = 0
-              while (i < buf.n) {
-                if (buf.ts(i) > horizonUs) pruned.append(buf.ts(i), buf.conds(i))'''),
+     '''            (SeqMatchState(Array.emptyLongArray, Array.emptyIntArray, maxTsUs, matched = true),
+              SeqMatchUpdate(userId, matched = true, 0))''',
+     '''            (SeqMatchState(Arrays.copyOf(kept.ts, kept.n), Arrays.copyOf(kept.conds, kept.n),
+              maxTsUs, matched = true), SeqMatchUpdate(userId, matched = true, kept.n))'''),
     ("SQ83", STREAM, "zero-mask events enter the buffer (breaks adjacency semantics)",
-     "if (!matched && e.conds != 0) buf.append(us, e.conds)",
-     "if (!matched) buf.append(us, e.conds)"),
+     "if (!latched && e.conds != 0) buf.append(us, e.conds)",
+     "if (!latched) buf.append(us, e.conds)"),
     ("AC81", VEC, "argmin_cell codegen tie < -> <= (ties to the largest cell)",
      "|  if ($d < $best) { $best = $d; $bestC = $c; }",
      "|  if ($d <= $best) { $best = $d; $bestC = $c; }"),
@@ -418,21 +414,26 @@ MUTANTS8 = [
 ]
 
 
-# batch 9: streaming sequence_count's consumed-prefix logic — the
-# binary-search boundary, the prefix drop itself, and count accumulation.
+# batch 9: streaming sequence_count's consumed-prefix logic — the prefix
+# drop after executeWithConsumed (one short, never dropped) and count
+# accumulation.
 # Run with `python3 tools/mutation.py 9`.
 SUITES9 = ["graft.StreamingSeqCountSpec", "graft.StreamingSeqMatchSpec"]
 
 MUTANTS9 = [
-    ("SC91", STREAM, "consumed-boundary search >= total -> > total (consumes skipped suffix)",
-     "          .execute(steps, prefix, countAll = true) >= total) hi = mid",
-     "          .execute(steps, prefix, countAll = true) > total) hi = mid"),
+    ("SC91", STREAM, "consumed-prefix drop keeps the last consumed event (re-counted next batch)",
+     "val restTs = Arrays.copyOfRange(kept.ts, consumed, kept.n)\n"
+     "          val restConds = Arrays.copyOfRange(kept.conds, consumed, kept.n)",
+     "val restTs = Arrays.copyOfRange(kept.ts, math.max(consumed - 1, 0), kept.n)\n"
+     "          val restConds = Arrays.copyOfRange(kept.conds, math.max(consumed - 1, 0), kept.n)"),
     ("SC92", STREAM, "consumed prefix never dropped (double counting across batches)",
-     "val from = if (newMatches > 0) consumedEnd(kept, newMatches) else 0",
-     "val from = 0"),
+     "val restTs = Arrays.copyOfRange(kept.ts, consumed, kept.n)\n"
+     "          val restConds = Arrays.copyOfRange(kept.conds, consumed, kept.n)",
+     "val restTs = Arrays.copyOfRange(kept.ts, 0, kept.n)\n"
+     "          val restConds = Arrays.copyOfRange(kept.conds, 0, kept.n)"),
     ("SC93", STREAM, "count overwrites instead of accumulating",
-     "count += newMatches",
-     "count = newMatches"),
+     "val count = prior.fold(0L)(_.count) + newMatches",
+     "val count = newMatches"),
 ]
 
 
@@ -459,9 +460,9 @@ MUTANTS10 = [
     ("QZ101", SIM, "int8 quantize round -> floor (x.5 codes drop one level)",
      ".otherwise(transform(v, x => round(x / scale).cast(\"byte\")))",
      ".otherwise(transform(v, x => floor(x / scale).cast(\"byte\")))"),
-    ("LS101", SIM, "lshSelfJoin per-table seed offset dropped (24 identical tables)",
-     "lshBucket(col(\"v\"), dim, nPlanes, seed = 1000L + t)): _*)))",
-     "lshBucket(col(\"v\"), dim, nPlanes, seed = 1000L)): _*)))"),
+    ("LS101", SIM, "lshSelfJoin per-table seed offset dropped (identical tables)",
+     "lshBucket(col(\"v\"), dim, nPlanes, seed = 1000L + t))",
+     "lshBucket(col(\"v\"), dim, nPlanes, seed = 1000L))"),
     ("EW101", EXEC, "wildcard consumed boundary i+1 -> i (completing event re-exposed)",
      "          total += 1\n          lastEnd = i + 1",
      "          total += 1\n          lastEnd = i"),
@@ -472,11 +473,11 @@ MUTANTS10 = [
      "        searchStart = math.max(matchEnd + 1, searchStart + 1)\n        lastEnd = searchStart",
      "        searchStart = math.max(matchEnd + 1, searchStart + 1)\n        lastEnd = searchStart - 1"),
     ("SN101", STREAM, "streaming next-node pre-filters zero-condition rows",
-     "                buf.append(us, f, buf.intern(v))",
-     "                if (f != 0L) buf.append(us, f, buf.intern(v))"),
+     "buf.append(us, f, buf.intern(utf8(e.value)))",
+     "if (f != 0L) buf.append(us, f, buf.intern(utf8(e.value)))"),
     ("SM101", STREAM, "match-events latch state drops the captured timestamps",
-     "                  Array.emptyIntArray, maxTsUs, matched = true, got))",
-     "                  Array.emptyIntArray, maxTsUs, matched = true, Array.emptyLongArray))"),
+     "matched = true, got), SeqMatchEventsUpdate(userId, matched = true, got, 0))",
+     "matched = true, Array.emptyLongArray), SeqMatchEventsUpdate(userId, matched = true, got, 0))"),
 ]
 
 
@@ -503,10 +504,13 @@ MUTANTS32 = [
      """      if (false) {
         onStep("committed"); return 0L
       }"""),
-    ("RS322", ROLLUP, "per-grain replay guard dropped (grained replay re-appends)",
-     """          if (!ingestId.exists(
-              GenerationalBatches.seenIngestIds(fs, committed).contains))""",
-     """          if (true)"""),
+    ("RS322", ROLLUP, "per-grain replay guard dropped (a replayed grained ingest re-commits every grain)",
+     '''      val pending = recovered.collect { case (g, _, live)
+          if !ingestId.exists(
+            GenerationalBatches.seenIngestIds(fs, live).contains) =>
+        (g, live) }''',
+     '''      val pending = recovered.collect { case (g, _, live) =>
+        (g, live) }'''),
     ("GB321", GENB, "commit never records ingest ids (guard forgets everything)",
      "    if (ids.nonEmpty) {",
      "    if (false) {"),
@@ -516,17 +520,17 @@ MUTANTS32 = [
      """  def seenIngestIds(fs: FileSystem, live: Seq[(Long, Path)]): Set[String] =
     live.iterator.take(0).flatMap { case (_, p) => ingestIds(fs, p) }.toSet"""),
     ("RS323", ROLLUP, "range compaction ignores its grain predicate (folds every grain)",
-     """      val targets = listGrainDirs(fs, base)
-        .filter { case (v, _) => grains(v) }.sortBy(_._1)
-      onStep("selected")""",
-     """      val targets = listGrainDirs(fs, base)
-        .sortBy(_._1)
-      onStep("selected")"""),
+     '''    val targets = listGrainDirs(fs, base)
+      .filter { case (v, _) => grains(v) }.sortBy(_._1)
+    onStep("selected")''',
+     '''    val targets = listGrainDirs(fs, base)
+      .sortBy(_._1)
+    onStep("selected")'''),
     ("RS324", ROLLUP, "readGrains ignores its grain predicate (no listing-time pruning)",
-     """    val dirs = listGrainDirs(fs, base)
-      .filter { case (v, _) => grains(v) }.sortBy(_._1)""",
-     """    val dirs = listGrainDirs(fs, base)
-      .sortBy(_._1)"""),
+     '''    val selected = listGrainDirs(fs, base)
+      .filter { case (v, _) => grains(v) }.sortBy(_._1)''',
+     '''    val selected = listGrainDirs(fs, base)
+      .sortBy(_._1)'''),
     ("DG321", ROLLUP, "dropGrains boundary < -> <= (retires the cutoff grain too)",
      "    dropGrainsWhere(spark, baseDir, _ < olderThan, leaseStaleMs)",
      "    dropGrainsWhere(spark, baseDir, _ <= olderThan, leaseStaleMs)"),
@@ -534,11 +538,6 @@ MUTANTS32 = [
      """    val groupCols = keyCols.map(kc =>
       if (kc == grainCol) newGrain.as(newGrainCol) else col(kc))""",
      """    val groupCols = keyCols.map(kc => col(kc))"""),
-    ("GB323", ROLLUP, "cross-grain schema gate dropped (a grained store mixes families)",
-     """        latestBatchAcrossGrains(fs, base).foreach(p =>
-          schemaGate(spark, new Path(p, "states"), states))""",
-     """        latestBatchAcrossGrains(fs, base).filter(_ => false).foreach(p =>
-          schemaGate(spark, new Path(p, "states"), states))"""),
     ("WL321", SINKS, "stale claim deletes without verifying content (destroys a fresh lease)",
      """      if (readLeaseFile(fs, grave).contains(observed)) fs.delete(grave, false)
       else if (!fs.rename(grave, lease)) fs.delete(grave, false)""",
@@ -553,55 +552,45 @@ SUITES35 = ["graft.GrainedRollupStoreSpec"]
 
 MUTANTS35 = [
     ("RC351", ROLLUP, "grained compaction commits with an empty folded list (old batches stay live — double-serve)",
-     """          GenerationalBatches.commit(fs, batchPath,
-            committed.map(_._2.getName),
-            GenerationalBatches.seenIngestIds(fs, committed))""",
-     """          GenerationalBatches.commit(fs, batchPath,
-            Seq.empty,
-            GenerationalBatches.seenIngestIds(fs, committed))"""),
+     '''        GenerationalBatches.publish(fs, gdir, live, live,
+          GenerationalBatches.seenIngestIds(fs, live), cleanupDelayMs,
+          onStep, GenerationalBatches.writeManifest(fs, gdir))(
+          renameIn(fs, staged(g)))''',
+     '''        GenerationalBatches.publish(fs, gdir, live, Nil,
+          GenerationalBatches.seenIngestIds(fs, live), cleanupDelayMs,
+          onStep, GenerationalBatches.writeManifest(fs, gdir))(
+          renameIn(fs, staged(g)))'''),
     ("RC352", ROLLUP, "grained compaction drops the folded batches' ingest ids (replay guard forgets after a fold)",
-     """          GenerationalBatches.commit(fs, batchPath,
-            committed.map(_._2.getName),
-            GenerationalBatches.seenIngestIds(fs, committed))""",
-     """          GenerationalBatches.commit(fs, batchPath,
-            committed.map(_._2.getName),
-            Set.empty)"""),
+     '''        GenerationalBatches.publish(fs, gdir, live, live,
+          GenerationalBatches.seenIngestIds(fs, live), cleanupDelayMs,
+          onStep, GenerationalBatches.writeManifest(fs, gdir))(
+          renameIn(fs, staged(g)))''',
+     '''        GenerationalBatches.publish(fs, gdir, live, live,
+          Set.empty, cleanupDelayMs,
+          onStep, GenerationalBatches.writeManifest(fs, gdir))(
+          renameIn(fs, staged(g)))'''),
     ("RC353", ROLLUP, "grained fold reads only each grain's first batch (later ingests vanish from the fold)",
      """      val allPaths = perGrain.flatMap { case (_, _, committed) =>
         committed.map { case (_, p) => new Path(p, "states").toString } }""",
      """      val allPaths = perGrain.flatMap { case (_, _, committed) =>
         committed.take(1).map { case (_, p) => new Path(p, "states").toString } }"""),
-    ("RC354", ROLLUP, "grained compaction reuses the last batch number instead of the next",
-     """        for ((g, gdir, committed) <- perGrain) {
-          val k = committed.last._1 + 1""",
-     """        for ((g, gdir, committed) <- perGrain) {
-          val k = committed.last._1"""),
+    ("RC354", GENB, "batch numbering reuses the last live number instead of the next (every generational op)",
+     "    val k = live.map(_._1).maxOption.fold(0L)(_ + 1)",
+     "    val k = live.map(_._1).maxOption.getOrElse(0L)"),
 ]
 
 MUTANTS34 = [
-    ("RS341", ROLLUP, "pre-write replay filter dropped (a replayed grained ingest re-stages and re-commits every grain)",
-     """        val pending = grains.filter { g =>
-          val gdir = new Path(base, grainDirName(grainCol, g))
-          !ingestId.exists(GenerationalBatches
-            .seenIngestIds(fs, GenerationalBatches.recover(fs, gdir))
-            .contains)
-        }""",
-     """        val pending = grains"""),
     ("RS342", ROLLUP, "stale stage-dir sweep dropped (crashed ingests accrete hidden dirs forever)",
-     """        .filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix))
-        .foreach(st => fs.delete(st.getPath, true))""",
-     """        .filter(st => false)
-        .foreach(st => fs.delete(st.getPath, true))"""),
-    ("RS343", ROLLUP, "staged partition lookup skips the hex encoding (writer and reader disagree on dir names)",
-     """          val part = new Path(stage, s"$StageHexCol=${hexOf(g)}")""",
-     """          val part = new Path(stage, s"$StageHexCol=$g")"""),
+     '''      .filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix)
+        && !exclude.contains(st.getPath.getName))''',
+     '''      .filter(st => false
+        && !exclude.contains(st.getPath.getName))'''),
+    ("RS343", ROLLUP, "staged inventory skips the hex decoding (grains land under their hex names)",
+     '''      .map(st => unhexOf(st.getPath.getName.drop(StageHexCol.length + 1))''',
+     '''      .map(st => st.getPath.getName.drop(StageHexCol.length + 1)'''),
     ("RS344", ROLLUP, "NULL-grain gate dropped (placeholder rows land in a null partition)",
-     """        require(nullGrains == 0,
-          s"$nullGrains NULL $grainCol rows; a NULL grain names no " +
-            "partition — filter placeholder rows before ingest")""",
-     """        require(nullGrains >= 0,
-          s"$nullGrains NULL $grainCol rows; a NULL grain names no " +
-            "partition — filter placeholder rows before ingest")"""),
+     '''    refuse(nullGrains == 0,''',
+     '''    refuse(nullGrains >= 0,'''),
 ]
 
 MUTANTS33 = [
@@ -610,19 +599,15 @@ MUTANTS33 = [
       if (kc == grainCol) newGrain.as(newGrainCol) else col(kc))""",
      """    val foldKeys = keyCols.map(kc => col(kc))"""),
     ("RI332", ROLLUP, "regrainInto drops its ingest id (a crashed rewrite double-appends on resume)",
-     """    appendStatesByGrain(folded, dstDir,
-      keyCols.map(kc => if (kc == grainCol) newGrainCol else kc),
-      newGrainCol, stateCol, ingestId, onStep, leaseStaleMs)""",
-     """    appendStatesByGrain(folded, dstDir,
-      keyCols.map(kc => if (kc == grainCol) newGrainCol else kc),
-      newGrainCol, stateCol, None, onStep, leaseStaleMs)"""),
+     '''      newGrainCol, stateCol, Some(id), onStep, leaseStaleMs,''',
+     '''      newGrainCol, stateCol, None, onStep, leaseStaleMs,'''),
     ("RI333", ROLLUP, "regrainInto keeps one partial per coarse key instead of combining",
-     """    val folded = readGrains(spark, srcDir)
+     '''    val folded = src
       .groupBy(foldKeys: _*)
-      .agg(combine(col(stateCol)).as(stateCol))""",
-     """    val folded = readGrains(spark, srcDir)
+      .agg(combine(col(stateCol)).as(stateCol))''',
+     '''    val folded = src
       .groupBy(foldKeys: _*)
-      .agg(first(col(stateCol)).as(stateCol))"""),
+      .agg(first(col(stateCol)).as(stateCol))'''),
 ]
 
 # batch 46: the one publish path of the generational stores
@@ -667,40 +652,114 @@ MUTANTS46 = [
 ]
 
 
+# Mutants whose seam no longer exists: (batch, id, file, mutant, reason).
+# They stay in MUTATION.md with the reason instead of a verdict.
+RETIRED = [
+    ("8", "SQ82", STREAM, "horizon prune boundary >= -> > (drops the at-horizon event)",
+     "merged into SM4: one horizon prune serves every buffered streaming operator"),
+    ("32", "GB323", ROLLUP, "cross-grain schema gate dropped (a grained store mixes families)",
+     "the grained store gates families by its _STORE_GENESIS fingerprint (batch 37)"),
+    ("34", "RS341", ROLLUP, "pre-write replay filter dropped (a replayed grained ingest re-stages and re-commits every grain)",
+     "the pre-write filter and the per-grain replay guard are one filter now (RS322)"),
+]
+
+# batch -> (mutants, focused suites, MUTATION.md section heading; None =
+# the report's head table)
+BATCHES = {
+    "1": (MUTANTS, SUITES, None),
+    "3": (MUTANTS3, SUITES3, "Batch 3 \u2014 dedup / similarity / text kernels"),
+    "4": (MUTANTS4, SUITES4, "Batch 4 \u2014 per-row sketch kernels + round-5 curation ops"),
+    "5": (MUTANTS5, SUITES5, "Batch 5 \u2014 streaming operators"),
+    "6": (MUTANTS6, SUITES6, "Batch 6 \u2014 jaccard candidate-stage bounds + ScoreTopK round-trip"),
+    "7": (MUTANTS7, SUITES7, "Batch 7 \u2014 round-6 operators"),
+    "8": (MUTANTS8, SUITES8, "Batch 8 \u2014 streaming sequence_match + argmin_cell"),
+    "9": (MUTANTS9, SUITES9, "Batch 9 \u2014 streaming sequence_count consumed-prefix logic"),
+    "10": (MUTANTS10, SUITES10, "Batch 10 \u2014 round-8 seams"),
+    "32": (MUTANTS32, SUITES32, "Batch 32 \u2014 round-16 store seams"),
+    "33": (MUTANTS33, SUITES33, "Batch 33 \u2014 grained-store re-grain seams"),
+    "34": (MUTANTS34, SUITES34, "Batch 34 \u2014 one-job grained ingest seams"),
+    "35": (MUTANTS35, SUITES35, "Batch 35 \u2014 one-job range-compaction seams"),
+    "46": (MUTANTS46, SUITES46, "Batch 46 \u2014 one publish path for the generational stores"),
+}
+
+
 def run(cmd, timeout=1800):
     return subprocess.run(cmd, shell=True, capture_output=True, text=True,
                           timeout=timeout)
 
 
+def check():
+    """Lists every mutant whose `old` text does not occur exactly once in
+    its file; exit 1 if there is any. Runs no sbt."""
+    bad = []
+    for name in sorted(n for n in globals() if n.startswith("MUTANTS")):
+        for mid, fname, _desc, old, _new in globals()[name]:
+            hits = Path(fname).read_text().count(old)
+            if hits != 1:
+                bad.append(f"{name} {mid} {fname}: {hits} hits")
+    print("\n".join(bad) if bad else "every mutant's text occurs exactly once")
+    return 1 if bad else 0
+
+
+def row(mid, fname, desc, verdict):
+    return f"| {mid} | {Path(fname).name} | {desc} | {verdict} |"
+
+
+def report(batch, results):
+    """Writes `results` into the batch's table in MUTATION.md, in place:
+    re-run rows are replaced, new ones appended, retired ones get their
+    reason, and the section's kill-rate line is recounted from its table.
+    The other sections and the prose stay as they are."""
+    title = BATCHES[batch][2]
+    text = Path("MUTATION.md").read_text()
+    if title is None:
+        start = 0
+    elif f"\n## {title}\n" in text:
+        start = text.index(f"\n## {title}\n") + 1
+    else:
+        text = text.rstrip() + f"\n\n## {title}\n\n**Batch-{batch} kill rate: **\n\n" \
+            "| id | file | mutant | verdict |\n|---|---|---|---|\n"
+        start = text.index(f"\n## {title}\n") + 1
+    end = text.find("\n## ", start + 1)
+    end = len(text) if end < 0 else end + 1
+    lines = text[start:end].split("\n")
+    table = [i for i, l in enumerate(lines) if l.startswith("| ")]
+    rows = {lines[i].split(" | ")[0][2:]: lines[i] for i in table[1:]}
+    order = [lines[i].split(" | ")[0][2:] for i in table[1:]]
+    for mid, fname, desc, verdict in results:
+        rows[mid] = row(mid, fname, desc, verdict)
+        if mid not in order:
+            order.append(mid)
+    for b, mid, fname, desc, reason in RETIRED:
+        if b == batch:
+            rows[mid] = row(mid, fname, desc, f"retired: {reason}")
+    verdicts = [rows[m].rstrip(" |").rsplit(" | ", 1)[1] for m in order]
+    killed = verdicts.count("killed")
+    valid = killed + verdicts.count("SURVIVED")
+    rate = 100.0 * killed / valid if valid else 0.0
+    lines[table[1]:table[-1] + 1] = [rows[m] for m in order]
+    prefix = f"**Batch-{batch} kill rate: "
+    for i, l in enumerate(lines):
+        if l.startswith(prefix):
+            lines[i] = f"{prefix}{killed}/{valid} = {rate:.1f}%**"
+    Path("MUTATION.md").write_text(text[:start] + "\n".join(lines) + text[end:])
+    print(f"\nbatch-{batch} kill rate {killed}/{valid} -> MUTATION.md")
+
+
 def main():
-    batch = sys.argv[1] if len(sys.argv) > 1 else "1"
-    batch3 = batch == "3"
-    batch4 = batch == "4"
-    batch5 = batch == "5"
-    batch6 = batch == "6"
-    batch7 = batch == "7"
-    batch8 = batch == "8"
-    batch9 = batch == "9"
-    batch10 = batch == "10"
-    batch32 = batch == "32"
-    batch33 = batch == "33"
-    batch34 = batch == "34"
-    batch35 = batch == "35"
-    batch46 = batch == "46"
-    mutants = (MUTANTS46 if batch46 else MUTANTS35 if batch35 else (MUTANTS34 if batch34 else (MUTANTS33 if batch33 else (MUTANTS32 if batch32 else
-               (MUTANTS10 if batch10 else (MUTANTS9 if batch9 else (MUTANTS8 if batch8 else
-               (MUTANTS7 if batch7 else (MUTANTS6 if batch6 else
-               (MUTANTS5 if batch5 else (MUTANTS4 if batch4 else
-               (MUTANTS3 if batch3 else MUTANTS))))))))))))
-    suites = (SUITES46 if batch46 else SUITES35 if batch35 else (SUITES34 if batch34 else (SUITES33 if batch33 else (SUITES32 if batch32 else
-              (SUITES10 if batch10 else (SUITES9 if batch9 else (SUITES8 if batch8 else
-              (SUITES7 if batch7 else (SUITES6 if batch6 else
-              (SUITES5 if batch5 else (SUITES4 if batch4 else
-              (SUITES3 if batch3 else SUITES))))))))))))
-    root = Path(".")
+    """`mutation.py check` checks every table's texts; `mutation.py
+    BATCH [ID...]` runs the batch's mutants (or only the named ones) and
+    updates their rows in MUTATION.md."""
+    args = sys.argv[1:]
+    if args[:1] == ["check"]:
+        return check()
+    batch = args[0] if args else "1"
+    mutants, suites, _ = BATCHES[batch]
+    if args[1:]:
+        mutants = [m for m in mutants if m[0] in args[1:]]
     results = []
     for mid, fname, desc, old, new in mutants:
-        path = root / fname
+        path = Path(fname)
         src = path.read_text()
         if src.count(old) != 1:
             print(f"[{mid}] SKIP: pattern not unique ({src.count(old)} hits)")
@@ -720,371 +779,7 @@ def main():
             path.write_text(src)
         print(f"[{mid}] {verdict}: {desc}")
         results.append((mid, fname, desc, verdict))
-
-    valid = [x for x in results if x[3] in ("killed", "SURVIVED")]
-    killed = [x for x in valid if x[3] == "killed"]
-    rate = 100.0 * len(killed) / len(valid) if valid else 0.0
-    if batch46:
-        marker = "\n## Batch 46 \u2014 one publish path for the generational stores\n"
-        existing = Path("MUTATION.md").read_text()
-        head = existing.split(marker)[0].rstrip() + "\n"
-        lines = [
-            head,
-            marker.strip(),
-            "",
-            "Every generational op (flat and grained rollup ingest and",
-            "compaction, session append and compaction) now publishes its",
-            "batch through `GenerationalBatches.publish`. Mutants reorder",
-            "its crash order: the marker before the footer-count check,",
-            "and the folded dirs deleted before the marker.",
-            "",
-            f"**Batch-46 kill rate: {len(killed)}/{len(valid)} = {rate:.1f}%**",
-            "",
-            "| id | file | mutant | verdict |",
-            "|---|---|---|---|",
-        ]
-        for mid, fname, desc, verdict in results:
-            lines.append(f"| {mid} | {Path(fname).name} | {desc} | {verdict} |")
-        lines.append("")
-        Path("MUTATION.md").write_text("\n".join(lines))
-        print(f"\nbatch-46 kill rate {rate:.1f}% -> MUTATION.md")
-        return
-    if batch35:
-        marker = "\n## Batch 35 \u2014 one-job range-compaction seams\n"
-        existing = Path("MUTATION.md").read_text()
-        head = existing.split(marker)[0].rstrip() + "\n"
-        lines = [
-            head,
-            marker.strip(),
-            "",
-            "compactGrains was rewritten (after batch 34) from one fold",
-            "job per grain to ONE multi-path fold staged with a",
-            "partitioned write + per-grain rename/verify/commit. Mutants",
-            "over the moved seams: the per-grain folded-dir list in the",
-            "commit marker, the ingest-id union across the fold, the",
-            "multi-path scan's batch coverage, and the per-grain batch",
-            "numbering.",
-            "",
-            f"**Batch-35 kill rate: {len(killed)}/{len(valid)} = {rate:.1f}%**",
-            "",
-            "| id | file | mutant | verdict |",
-            "|---|---|---|---|",
-        ]
-        for mid, fname, desc, verdict in results:
-            lines.append(f"| {mid} | {Path(fname).name} | {desc} | {verdict} |")
-        lines.append("")
-        Path("MUTATION.md").write_text("\n".join(lines))
-        print(f"\nbatch-35 kill rate {rate:.1f}% -> MUTATION.md")
-        return
-    if batch34:
-        marker = "\n## Batch 34 \u2014 one-job grained ingest seams\n"
-        existing = Path("MUTATION.md").read_text()
-        head = existing.split(marker)[0].rstrip() + "\n"
-        lines = [
-            head,
-            marker.strip(),
-            "",
-            "The grained ingest was rewritten late in round 16 from one",
-            "filtered write per grain to ONE partitioned write staged into",
-            "a hidden dir + per-grain rename/verify/commit. These mutants",
-            "re-cover the seams at their new locations (batch 32's RS322",
-            "text no longer exists): the pre-write per-grain replay",
-            "filter, the stale-stage sweep, the hex partition-name",
-            "agreement between writer and lookup, and the NULL-grain gate.",
-            "",
-            f"**Batch-34 kill rate: {len(killed)}/{len(valid)} = {rate:.1f}%**",
-            "",
-            "| id | file | mutant | verdict |",
-            "|---|---|---|---|",
-        ]
-        for mid, fname, desc, verdict in results:
-            lines.append(f"| {mid} | {Path(fname).name} | {desc} | {verdict} |")
-        lines.append("")
-        Path("MUTATION.md").write_text("\n".join(lines))
-        print(f"\nbatch-34 kill rate {rate:.1f}% -> MUTATION.md")
-        return
-    if batch33:
-        marker = "\n## Batch 33 — grained-store re-grain seams\n"
-        existing = Path("MUTATION.md").read_text()
-        head = existing.split(marker)[0].rstrip() + "\n"
-        lines = [
-            head,
-            marker.strip(),
-            "",
-            "Semantic mutants over `RollupStore.regrainInto` (the",
-            "grained-store re-grain landed after batch 32): the new-grain",
-            "key rewrite, the ingest id that makes a crashed rewrite",
-            "resume exactly-once per grain, and the combine fold itself",
-            "(first() instead of the combine twin keeps one arbitrary",
-            "partial per coarse key).",
-            "",
-            f"**Batch-33 kill rate: {len(killed)}/{len(valid)} = {rate:.1f}%**",
-            "",
-            "| id | file | mutant | verdict |",
-            "|---|---|---|---|",
-        ]
-        for mid, fname, desc, verdict in results:
-            lines.append(f"| {mid} | {Path(fname).name} | {desc} | {verdict} |")
-        lines.append("")
-        Path("MUTATION.md").write_text("\n".join(lines))
-        print(f"\nbatch-33 kill rate {rate:.1f}% -> MUTATION.md")
-        return
-    if batch32:
-        marker = "\n## Batch 32 — round-16 store seams\n"
-        existing = Path("MUTATION.md").read_text()
-        head = existing.split(marker)[0].rstrip() + "\n"
-        lines = [
-            head,
-            marker.strip(),
-            "",
-            "Semantic mutants at the round-16 seams: the ingest-id replay",
-            "guard on both the flat and the per-grain append path, the id",
-            "record in the commit protocol and its read side, the grained",
-            "store's range-compaction / pruned-read / dropGrains",
-            "predicates (the drop cutoff is a boundary mutant), the",
-            "regrain key rewrite, the cross-grain schema gate, and the",
-            "stale-lease claim's content verification.",
-            "",
-            f"**Batch-32 kill rate: {len(killed)}/{len(valid)} = {rate:.1f}%**",
-            "",
-            "| id | file | mutant | verdict |",
-            "|---|---|---|---|",
-        ]
-        for mid, fname, desc, verdict in results:
-            lines.append(f"| {mid} | {Path(fname).name} | {desc} | {verdict} |")
-        lines.append("")
-        Path("MUTATION.md").write_text("\n".join(lines))
-        print(f"\nbatch-32 kill rate {rate:.1f}% -> MUTATION.md")
-        return
-    if batch10:
-        marker = "\n## Batch 10 — round-8 seams\n"
-        existing = Path("MUTATION.md").read_text()
-        head = existing.split(marker)[0].rstrip() + "\n"
-        lines = [
-            head,
-            marker.strip(),
-            "",
-            "Semantic mutants at the round-8 seams: bucketed token-budget",
-            "prefix arithmetic and the strict budget boundary (killer test",
-            "written before the run — the boundary is invisible without a",
-            "cum==budget fixture), int8 quantize rounding, lshSelfJoin's",
-            "per-table seed offset, executeWithConsumed's boundary tracking",
-            "in all three executor tiers, streaming next-node's",
-            "no-pre-filter contract, and the match-events latch state.",
-            "",
-            f"**Batch-10 kill rate: {len(killed)}/{len(valid)} = {rate:.1f}%**",
-            "",
-            "| id | file | mutant | verdict |",
-            "|---|---|---|---|",
-        ]
-        for mid, fname, desc, verdict in results:
-            lines.append(f"| {mid} | {Path(fname).name} | {desc} | {verdict} |")
-        lines.append("")
-        Path("MUTATION.md").write_text("\n".join(lines))
-        print(f"\nbatch-10 kill rate {rate:.1f}% -> MUTATION.md")
-        return
-    if batch9:
-        marker = "\n## Batch 9 — streaming sequence_count consumed-prefix logic\n"
-        existing = Path("MUTATION.md").read_text()
-        head = existing.split(marker)[0].rstrip() + "\n"
-        lines = [
-            head,
-            marker.strip(),
-            "",
-            "Semantic mutants at the consumed-prefix machinery that keeps",
-            "streaming sequence_count state bounded and counts final: the",
-            "binary-search boundary (>= total), the prefix drop itself,",
-            "and count accumulation. Suites: both streaming sequence",
-            "specs.",
-            "",
-            f"**Batch-9 kill rate: {len(killed)}/{len(valid)} = {rate:.1f}%**",
-            "",
-            "| id | file | mutant | verdict |",
-            "|---|---|---|---|",
-        ]
-        for mid, fname, desc, verdict in results:
-            lines.append(f"| {mid} | {Path(fname).name} | {desc} | {verdict} |")
-        lines.append("")
-        Path("MUTATION.md").write_text("\n".join(lines))
-        print(f"\nbatch-9 kill rate {rate:.1f}% -> MUTATION.md")
-        return
-    if batch8:
-        marker = "\n## Batch 8 — streaming sequence_match + argmin_cell\n"
-        existing = Path("MUTATION.md").read_text()
-        head = existing.split(marker)[0].rstrip() + "\n"
-        lines = [
-            head,
-            marker.strip(),
-            "",
-            "Semantic mutants in streaming sequence_match (latch buffer",
-            "drop, horizon-prune boundary, condition-bearing filter) and",
-            "the argmin_cell kernel — tie rule mutated SEPARATELY in the",
-            "eval and codegen paths so neither can drift alone, plus the",
-            "distance arithmetic. The boundary and per-path tie killer",
-            "tests were written before the run.",
-            "",
-            f"**Batch-8 kill rate: {len(killed)}/{len(valid)} = {rate:.1f}%**",
-            "",
-            "| id | file | mutant | verdict |",
-            "|---|---|---|---|",
-        ]
-        for mid, fname, desc, verdict in results:
-            lines.append(f"| {mid} | {Path(fname).name} | {desc} | {verdict} |")
-        lines.append("")
-        Path("MUTATION.md").write_text("\n".join(lines))
-        print(f"\nbatch-8 kill rate {rate:.1f}% -> MUTATION.md")
-        return
-    if batch7:
-        marker = "\n## Batch 7 — round-6 operators\n"
-        existing = Path("MUTATION.md").read_text()
-        head = existing.split(marker)[0].rstrip() + "\n"
-        lines = [
-            head,
-            marker.strip(),
-            "",
-            "Semantic mutants in the round-6 operators: semantic dedup",
-            "(cell key, pair orientation, min-neighbor), int8 quantization",
-            "(rounding, scale denominator), boilerplate stats (df boundary,",
-            "short-doc left join), the multimodal stubs (frame stride",
-            "origin, resize pixel mapping), and streaming retention (anchor",
-            "gate, mask OR). The SD73/MM72 killer tests were written BEFORE",
-            "the run: a cell-key drop is invisible on cluster-separated",
-            "fixtures and ResizeSpec only pinned shape/determinism.",
-            "",
-            f"**Batch-7 kill rate: {len(killed)}/{len(valid)} = {rate:.1f}%**",
-            "",
-            "| id | file | mutant | verdict |",
-            "|---|---|---|---|",
-        ]
-        for mid, fname, desc, verdict in results:
-            lines.append(f"| {mid} | {Path(fname).name} | {desc} | {verdict} |")
-        lines.append("")
-        Path("MUTATION.md").write_text("\n".join(lines))
-        print(f"\nbatch-7 kill rate {rate:.1f}% -> MUTATION.md")
-        return
-    if batch6:
-        marker = "\n## Batch 6 — jaccard candidate-stage bounds + ScoreTopK round-trip\n"
-        existing = Path("MUTATION.md").read_text()
-        head = existing.split(marker)[0].rstrip() + "\n"
-        lines = [
-            head,
-            marker.strip(),
-            "",
-            "Semantic mutants at the AllPairs index-prefix bound — its",
-            "classic weakening (2t/(1+t) -> t/(1+t)) is EXACTNESS-PRESERVING,",
-            "so only the exposed candidate stage can kill it — the canonical",
-            "tie-break, and ScoreTopK's serialize/deserialize path (entry",
-            "loss, k collapse, NaN guard, merge k-adoption). Suites: the",
-            "candidate-stage + round-trip specs, batch top-k, prefix heap,",
-            "Round-5 boundary, and ops exactness.",
-            "",
-            f"**Batch-6 kill rate: {len(killed)}/{len(valid)} = {rate:.1f}%**",
-            "",
-            "| id | file | mutant | verdict |",
-            "|---|---|---|---|",
-        ]
-        for mid, fname, desc, verdict in results:
-            lines.append(f"| {mid} | {Path(fname).name} | {desc} | {verdict} |")
-        lines.append("")
-        Path("MUTATION.md").write_text("\n".join(lines))
-        print(f"\nbatch-6 kill rate {rate:.1f}% -> MUTATION.md")
-        return
-    if batch5:
-        marker = "\n## Batch 5 — streaming operators\n"
-        existing = Path("MUTATION.md").read_text()
-        head = existing.split(marker)[0].rstrip() + "\n"
-        lines = [
-            head,
-            marker.strip(),
-            "",
-            "Semantic mutants in the stateful streaming operators: the",
-            "simhash-dedup hamming boundary, within-batch suppression order,",
-            "state-GC horizon boundaries (simhash fingerprints + funnel",
-            "events), and the funnel's monotone-best guard. Suites: all",
-            "streaming specs incl. both streaming-vs-batch differentials.",
-            "",
-            f"**Batch-5 kill rate: {len(killed)}/{len(valid)} = {rate:.1f}%**",
-            "",
-            "| id | file | mutant | verdict |",
-            "|---|---|---|---|",
-        ]
-        for mid, fname, desc, verdict in results:
-            lines.append(f"| {mid} | {Path(fname).name} | {desc} | {verdict} |")
-        lines.append("")
-        Path("MUTATION.md").write_text("\n".join(lines))
-        print(f"\nbatch-5 kill rate {rate:.1f}% -> MUTATION.md")
-        return
-    if batch4:
-        marker = "\n## Batch 4 — per-row sketch kernels + round-5 curation ops\n"
-        existing = Path("MUTATION.md").read_text()
-        head = existing.split(marker)[0].rstrip() + "\n"
-        lines = [
-            head,
-            marker.strip(),
-            "",
-            "Semantic mutants in the per-row MinHash/SimHash kernels (min",
-            "direction, seed family, vote tie, distinctness, nibble order),",
-            "the decontamination join/count, token-window chunking bounds,",
-            "and the AllPairs index-prefix length. Suites: the sketch",
-            "differential spec + decontam/chunk specs + dedup exactness.",
-            "",
-            f"**Batch-4 kill rate: {len(killed)}/{len(valid)} = {rate:.1f}%**",
-            "",
-            "| id | file | mutant | verdict |",
-            "|---|---|---|---|",
-        ]
-        for mid, fname, desc, verdict in results:
-            lines.append(f"| {mid} | {Path(fname).name} | {desc} | {verdict} |")
-        lines.append("")
-        Path("MUTATION.md").write_text("\n".join(lines))
-        print(f"\nbatch-4 kill rate {rate:.1f}% -> MUTATION.md")
-        return
-    if batch3:
-        # merge: keep the batch-1/2 report, replace any prior batch-3 section
-        marker = "\n## Batch 3 — dedup / similarity / text kernels\n"
-        existing = Path("MUTATION.md").read_text()
-        head = existing.split(marker)[0].rstrip() + "\n"
-        lines = [
-            head,
-            marker.strip(),
-            "",
-            "Semantic mutants at the exact-filter boundaries of the jaccard",
-            "join (prefix length, length filter, positional filter alpha,",
-            "verification threshold), the simhash hamming cut, the leakage",
-            "split bucket, and the native text kernels. Suites:",
-            "dedup/boundary/exactness + the Round-5 specs.",
-            "",
-            f"**Batch-3 kill rate: {len(killed)}/{len(valid)} = {rate:.1f}%**",
-            "",
-            "| id | file | mutant | verdict |",
-            "|---|---|---|---|",
-        ]
-        for mid, fname, desc, verdict in results:
-            lines.append(f"| {mid} | {Path(fname).name} | {desc} | {verdict} |")
-        lines.append("")
-        Path("MUTATION.md").write_text("\n".join(lines))
-        print(f"\nbatch-3 kill rate {rate:.1f}% -> MUTATION.md")
-        return
-    lines = [
-        "# MUTATION — hand-rolled mutation run over the behavioral core",
-        "",
-        "Stryker4s cannot resolve in this offline environment, so this is a",
-        "manual mutation run: `tools/mutation.py` applies each mutant below,",
-        "runs the focused behavioral suites (pattern parser/executor, golden,",
-        "property, differential, boundary, reference-surface), and restores.",
-        "A mutant SURVIVING means no test distinguishes it — a coverage gap.",
-        "",
-        f"**Kill rate: {len(killed)}/{len(valid)} = {rate:.1f}%**",
-        "(reference reports 88.4% with cargo-mutants on its Rust core)",
-        "",
-        "| id | file | mutant | verdict |",
-        "|---|---|---|---|",
-    ]
-    for mid, fname, desc, verdict in results:
-        lines.append(f"| {mid} | {Path(fname).name} | {desc} | {verdict} |")
-    lines.append("")
-    Path("MUTATION.md").write_text("\n".join(lines))
-    print(f"\nkill rate {rate:.1f}% -> MUTATION.md")
+    report(batch, results)
 
 
 if __name__ == "__main__":
