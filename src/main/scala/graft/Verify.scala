@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -25,14 +26,7 @@ object Verify {
     val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY").map(_.split(",").toSeq)
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.exists(name.contains)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      graft.ops.OpCaches.unpersistAll()
-    }
+      .foreach { case (name, fn) => dumpRow(spark, sfDir, outDir, name, fn) }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -49,5 +43,20 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+  }
+
+  /** Writes row `name`'s result over `sfDir` to `<outDir>/<name>/` as one
+    * parquet file. The row's directory is deleted first, so a row that
+    * throws — before or during its write — leaves no output for the
+    * oracle compare to pass on, even in a reused `outDir`. */
+  def dumpRow(spark: SparkSession, sfDir: String, outDir: String, name: String,
+      fn: (SparkSession, String) => DataFrame): Unit = {
+    val dir = new Path(outDir, name)
+    dir.getFileSystem(spark.sessionState.newHadoopConf()).delete(dir, true)
+    try fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(dir.toString)
+    catch { case e: Throwable =>
+      System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    }
+    graft.ops.OpCaches.unpersistAll()
   }
 }

@@ -53,6 +53,19 @@ class ContractSmokeSpec extends AnyFunSuite {
     assert(SparkEntry.oracleSql.keySet === SparkEntry.queries.keySet)
   }
 
+  test("the contract rows are numbered q01 to q128, each number once") {
+    val numbers = SparkEntry.queries.keys.toSeq.map(_.takeWhile(_ != '_')).sorted
+    assert(numbers === (1 to 128).map(i => f"q$i%02d").sorted)
+  }
+
+  test("deriving the contract maps from a repeated name throws") {
+    val row = contracts.Contract("q01_twice", (s, _) => s.range(1).toDF(), "SELECT 1")
+    val e = intercept[IllegalArgumentException] {
+      contracts.Contract.byName(Seq(row, row))(_.run)
+    }
+    assert(e.getMessage.contains("q01_twice"))
+  }
+
   test("flagship entry() runs and returns rows") {
     assert(SparkEntry.entry(spark).collect().nonEmpty)
   }

@@ -176,7 +176,7 @@ class StreamingContractSpec extends AnyFunSuite {
     import spark.implicits._
     val emissions = Seq((1L, false), (1L, true), (2L, false))
       .toDF("user_id", "matched")
-    val got = SparkEntry.finalMatchedFlag(emissions)
+    val got = contracts.StreamingContracts.finalMatchedFlag(emissions)
       .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
     assert(got === Map(1L -> true, 2L -> false))
   }
@@ -191,7 +191,7 @@ class StreamingContractSpec extends AnyFunSuite {
       (1L, null.asInstanceOf[String], 1),
       (1L, "click", 3),
       (2L, "view", 2)).toDF("user_id", "next_node", "n_buffered")
-    val got = SparkEntry.lastNextNodeEmission(emissions)
+    val got = contracts.StreamingContracts.lastNextNodeEmission(emissions)
       .collect().map(r => r.getLong(0) -> Option(r.getString(1))).toMap
     assert(got === Map(1L -> Some("click"), 2L -> Some("view")))
   }
@@ -205,7 +205,7 @@ class StreamingContractSpec extends AnyFunSuite {
       (1L, Seq(true, false, false)),
       (1L, Seq(true, true, false)),
       (2L, Seq(false, false, false))).toDF("user_id", "flags")
-    val got = SparkEntry.finalRetentionFlags(emissions)
+    val got = contracts.StreamingContracts.finalRetentionFlags(emissions)
       .collect().map(r => r.getLong(0) -> ((r.getBoolean(1), r.getBoolean(2), r.getBoolean(3)))).toMap
     assert(got === Map(1L -> ((true, true, false)), 2L -> ((false, false, false))))
   }
@@ -213,7 +213,7 @@ class StreamingContractSpec extends AnyFunSuite {
   test("q79 selector picks the deepest step, not an early emission (synthetic straddle)") {
     import spark.implicits._
     val emissions = Seq((1L, 1), (1L, 3), (2L, 0)).toDF("user_id", "steps")
-    val got = SparkEntry.finalFunnelSteps(emissions)
+    val got = contracts.StreamingContracts.finalFunnelSteps(emissions)
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(got === Map(1L -> 3, 2L -> 0))
   }

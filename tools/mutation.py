@@ -489,6 +489,7 @@ MUTANTS10 = [
 ROLLUP = "src/main/scala/graft/ops/RollupStore.scala"
 GENB = "src/main/scala/graft/ops/GenerationalBatches.scala"
 SINKS = "src/main/scala/graft/sources/Sinks.scala"
+BENCH = "src/main/scala/graft/Bench.scala"
 SUITES32 = [
     "graft.RollupStoreSpec", "graft.GrainedRollupStoreSpec",
     "graft.RegrainSpec", "graft.StreamingRollupIngestSpec",
@@ -610,6 +611,352 @@ MUTANTS33 = [
       .agg(first(col(stateCol)).as(stateCol))'''),
 ]
 
+# batch 36 — round-17 seams (lease striping, manifests, grace window). Run with
+# `python3 tools/mutation.py 36`.
+SUITES36 = [
+    "graft.ConcurrentGrainMaintenanceSpec", "graft.StoreManifestSpec",
+    "graft.GrainedRollupStoreSpec",
+]
+
+MUTANTS36 = [
+    ("ST361", SINKS, "withLeases: failed acquisition keeps earlier stripes (rollback dropped)",
+     "      held.reverseIterator.foreach { case (p, t) =>\n"
+     "        try releaseLease(fs, p, t)",
+     "      if (held.size == leases.size) held.reverseIterator.foreach { case (p, t) =>\n"
+     "        try releaseLease(fs, p, t)"),
+    ("ST362", SINKS, "withLeases releases dropped entirely (held cleared before the release loop)",
+     "      held.reverseIterator.foreach { case (p, t) =>\n"
+     "        try releaseLease(fs, p, t)\n"
+     "        catch",
+     "      held.clear(); held.reverseIterator.foreach { case (p, t) =>\n"
+     "        try releaseLease(fs, p, t)\n"
+     "        catch"),
+    ("ST363", ROLLUP, "grainLeasePath ignores the grain value (all grains share one stripe)",
+     "    new Path(base, s\"$StripePrefix${hexOf(grain)}\")",
+     "    new Path(base, s\"$StripePrefix\" + \"X\")"),
+    ("SW361", ROLLUP, "stage sweep ignores foreign stripes (deletes a concurrent op's live stage)",
+     "      .filter(st => !foreignStripe ||\n"
+     "        now - st.getModificationTime > staleMs)",
+     "      .filter(st => true ||\n"
+     "        now - st.getModificationTime > staleMs)"),
+    ("MF361", ROLLUP, "readGrains distrusts the manifest (always falls back to listing)",
+     "      GenerationalBatches.readManifest(fs, gdir) match {\n"
+     "        case Some((_, _, relFiles)) if relFiles.nonEmpty =>\n"
+     "          Left(relFiles.map(rel => new Path(gdir, rel)))",
+     "      GenerationalBatches.readManifest(fs, gdir) match {\n"
+     "        case Some((_, _, relFiles)) if false && relFiles.nonEmpty =>\n"
+     "          Left(relFiles.map(rel => new Path(gdir, rel)))"),
+    ("MF362", GENB, "writeManifest records COMMITTED batches (folded dirs leak into the manifest)",
+     "  def writeManifest(fs: FileSystem, base: Path): Unit = {\n"
+     "    val live = liveBatches(fs, base).sortBy(_._1)",
+     "  def writeManifest(fs: FileSystem, base: Path): Unit = {\n"
+     "    val live = committedBatches(fs, base).sortBy(_._1)"),
+    ("GR361", GENB, "cleanup horizon flipped (folded dirs deleted INSIDE the grace window)",
+     "      if (now - deadAt(p.getName) >= cleanupDelayMs) fs.delete(p, true) }",
+     "      if (now - deadAt(p.getName) < cleanupDelayMs) fs.delete(p, true) }"),
+    ("RI361", ROLLUP, "regrainInto default id no longer derived from the source (constant again)",
+     "    val id = ingestId.getOrElse(\n"
+     "      s\"regrain-into:${fsOf(spark, srcDir).makeQualified(new Path(srcDir))}\")",
+     "    val id = ingestId.getOrElse(\"regrain-into\")"),
+    ("EG361", ROLLUP, "escapeGrain advances one CHAR per code point (surrogate pairs mangled)",
+     "      else v.substring(i, i + n).getBytes(\"UTF-8\")\n"
+     "        .foreach(b => sb.append(f\"%%${b & 0xff}%02X\"))\n"
+     "      i += n",
+     "      else v.substring(i, i + n).getBytes(\"UTF-8\")\n"
+     "        .foreach(b => sb.append(f\"%%${b & 0xff}%02X\"))\n"
+     "      i += 1"),
+]
+
+# batch 37 — round-18 seams (genesis, flat manifests, heal timing, clock skew). Run with
+# `python3 tools/mutation.py 37`.
+SUITES37 = [
+    "graft.StoreGenesisSpec", "graft.StoreManifestSpec",
+    "graft.CountingFsSpec", "graft.StoreSnapshotInterleaveSpec",
+    "graft.LeaseReleaseFailureSpec", "graft.GrainedRollupStoreSpec",
+]
+
+MUTANTS37 = [
+    ("GN371", ROLLUP, "genesis verify dropped (any family passes against any genesis)",
+     "      require(genesis == incoming,",
+     "      require(true || genesis == incoming,"),
+    ("GN372", ROLLUP, "lazy upgrade stamps the INCOMING family instead of the store's",
+     "                  writeGenesis(fs, base, derived)\n"
+     "                  verify(derived)",
+     "                  writeGenesis(fs, base, incoming)\n"
+     "                  verify(incoming)"),
+    ("HM371", ROLLUP, "healManifestIfStale never rewrites (stale manifests heal only after the op's job)",
+     "      case Some((bNames, _, _))\n"
+     "          if bNames.toSet != live.map(_._2.getName).toSet =>",
+     "      case Some((bNames, _, _))\n"
+     "          if false && bNames.toSet != live.map(_._2.getName).toSet =>"),
+    ("FM371", ROLLUP, "flat read distrusts the manifest (always falls back to listing)",
+     "    GenerationalBatches.readManifest(fs, base) match {\n"
+     "      case Some((_, _, relFiles)) if relFiles.nonEmpty =>",
+     "    GenerationalBatches.readManifest(fs, base) match {\n"
+     "      case Some((_, _, relFiles)) if false && relFiles.nonEmpty =>"),
+    ("FM372", ROLLUP, "flat append skips the manifest rewrite (manifest goes stale on every ingest)",
+     "      GenerationalBatches.publish(fs, base, committed, Nil, ingestId.toSet,\n"
+     "        0L, onStep, GenerationalBatches.writeManifest(fs, base)) { batchPath =>",
+     "      GenerationalBatches.publish(fs, base, committed, Nil, ingestId.toSet,\n"
+     "        0L, onStep, ()) { batchPath =>"),
+    ("TS371", GENB, "commit writes no #ts writer-clock line (horizon trusts the FS clock alone)",
+     "      else folded.mkString(\"\\n\") + s\"\\n#ts=${System.currentTimeMillis()}\")",
+     "      else folded.mkString(\"\\n\"))"),
+    ("TS372", GENB, "grace horizon ignores the embedded writer clock (modtime only)",
+     "        val t = math.max(fs.getFileStatus(marker).getModificationTime,\n"
+     "          writerTs.getOrElse(Long.MinValue))",
+     "        val t = fs.getFileStatus(marker).getModificationTime"),
+    ("RL371", SINKS, "withLeases release reverts to fail-stop (one failed release abandons the rest)",
+     "        try releaseLease(fs, p, t)\n"
+     "        catch { case e: Throwable =>",
+     "        try releaseLease(fs, p, t)\n"
+     "        catch { case e: Throwable if false =>"),
+    ("RQ371", ROLLUP, "regrainInto default id uses the raw source spelling again",
+     "    val id = ingestId.getOrElse(\n"
+     "      s\"regrain-into:${fsOf(spark, srcDir).makeQualified(new Path(srcDir))}\")",
+     "    val id = ingestId.getOrElse(s\"regrain-into:${new Path(srcDir)}\")"),
+]
+
+# batch 38 — the sweepExpired janitor. Run with
+# `python3 tools/mutation.py 38`.
+SUITES38 = [
+    "graft.StoreManifestSpec",
+]
+
+MUTANTS38 = [
+    ("SE381", ROLLUP, "sweepExpired skips the manifest heal (readers strand on files the sweep deleted)",
+     "      val live = GenerationalBatches.recover(fs, dir, cleanupDelayMs)\n"
+     "      healManifestIfStale(fs, dir, live)",
+     "      val live = GenerationalBatches.recover(fs, dir, cleanupDelayMs)"),
+    ("SE382", ROLLUP, "sweepExpired ignores the horizon (deletes folded dirs inside the grace window)",
+     "      val before = GenerationalBatches.batchDirs(fs, dir).size\n"
+     "      val live = GenerationalBatches.recover(fs, dir, cleanupDelayMs)",
+     "      val before = GenerationalBatches.batchDirs(fs, dir).size\n"
+     "      val live = GenerationalBatches.recover(fs, dir, 0L)"),
+]
+
+# batch 39 — round-18 self-review fixes. Run with
+# `python3 tools/mutation.py 39`.
+SUITES39 = [
+    "graft.StoreManifestSpec", "graft.CountingFsSpec",
+    "graft.ConcurrentGrainMaintenanceSpec",
+    "graft.LeaseReleaseFailureSpec",
+]
+
+MUTANTS39 = [
+    ("MT391", GENB, "readManifest trusts a terminator-less (torn) manifest",
+     "      if (!complete) None",
+     "      if (false) None"),
+    ("MT392", GENB, "writeManifest writes no completeness terminator (every manifest reads as torn)",
+     "    sb.append(\"e \").append(n).append('\\n')",
+     "    ()"),
+    ("SJ391", ROLLUP, "sweepExpired aborts on a held stripe instead of skipping the grain",
+     "          case e: IllegalStateException\n"
+     "              if Option(e.getMessage).exists(_.contains(\"lease\")) => 0",
+     "          case e: IllegalStateException\n"
+     "              if Option(e.getMessage).exists(_.contains(\"lease\")) => throw e"),
+    ("SS391", ROLLUP, "sweepStageDirs counts a STALE foreign stripe as live (garbage deferred forever)",
+     "      !held.contains(st.getPath.getName) &&\n"
+     "      now - st.getModificationTime <= staleMs)",
+     "      !held.contains(st.getPath.getName))"),
+    ("NL391", SINKS, "withLeases suppresses release errors onto a non-local return's ControlThrowable (no-op: error vanishes)",
+     "      val suppressible = primary != null &&\n"
+     "        !primary.isInstanceOf[scala.util.control.ControlThrowable]",
+     "      val suppressible = primary != null"),
+]
+
+# batch 40 — auto-sized folds and parallel manifest resolution. Run with
+# `python3 tools/mutation.py 40`.
+SUITES40 = [
+    "graft.FoldSizingSpec", "graft.GrainedRollupStoreSpec",
+]
+
+MUTANTS40 = [
+    ("AP401", SINKS, "autoFoldPartitions ignores input bytes (always one partition)",
+     "    val want = (totalBytes + bytesPerPartition - 1) / bytesPerPartition",
+     "    val want = BigInt(1)"),
+    ("AP402", SINKS, "upper clamp dropped (a PB fold asks for millions of partitions)",
+     "    want.max(1).min(4096).toInt",
+     "    want.max(1).toInt"),
+    ("AP403", ROLLUP, "auto dispatch reverts to the fixed default (0 behaves like 32)",
+     "    else graft.sources.Sinks.autoFoldPartitions(\n"
+     "      scan.queryExecution.optimizedPlan.stats.sizeInBytes,\n"
+     "      spark.sessionState.conf.filesMaxPartitionBytes)",
+     "    else 32"),
+    ("FP401", ROLLUP, "auto sizing hardcodes 128 MiB instead of the session's maxPartitionBytes knob",
+     "      spark.sessionState.conf.filesMaxPartitionBytes)",
+     "      134217728L)"),
+    ("PR401", SINKS, "parallel resolver submits only the first grain (wide reads lose grains)",
+     "      val futures = xs.map { x =>",
+     "      val futures = xs.take(1).map { x =>"),
+]
+
+# batch 41 — round-18 review fixes (second pass). Run with
+# `python3 tools/mutation.py 41`.
+SUITES41 = [
+    "graft.StoreHygieneSpec",
+]
+
+MUTANTS41 = [
+    ("GN411", ROLLUP, "readGenesis trusts a terminator-less (torn) genesis — a tear bricks ingest",
+     "      if (lines.size < 2 || lines.last != s\"e ${lines.size - 1}\") None",
+     "      if (false) None"),
+    ("GN412", ROLLUP, "writeGenesis writes no completeness terminator",
+     "    graft.sources.Sinks.publishFile(fs, new Path(base, GenesisFile),\n"
+     "      terminatedGenesis(fp))",
+     "    graft.sources.Sinks.publishFile(fs, new Path(base, GenesisFile),\n"
+     "      fp)"),
+    ("HM411", ROLLUP, "heal skips ABSENT manifests again (only committing ops restore them)",
+     "      case None if live.nonEmpty =>\n"
+     "        GenerationalBatches.writeManifest(fs, dir)",
+     "      case None if false =>\n"
+     "        GenerationalBatches.writeManifest(fs, dir)"),
+    ("RG411", ROLLUP, "sweepExpired skips the root-garbage sweep (stage dirs / tombstones / orphan stripes leak)",
+     "    StageDirPrefixes.foreach(p =>\n"
+     "      sweepStageDirs(fs, base, p, Set.empty, leaseStaleMs))\n"
+     "    collectOrphanStripes(fs, base, leaseStaleMs)",
+     "    ()"),
+    ("OS411", ROLLUP, "orphan-stripe collector deletes unconditionally (a live first ingest's fresh stripe vanishes)",
+     "        try {\n"
+     "          val t = graft.sources.Sinks.acquireLease(fs, st.getPath, staleMs)\n"
+     "          graft.sources.Sinks.releaseLease(fs, st.getPath, t)\n"
+     "        } catch { case _: IllegalStateException => () }",
+     "        fs.delete(st.getPath, false)"),
+]
+
+# batch 42 — RollupStore.stats observability view. Run with
+# `python3 tools/mutation.py 42`.
+SUITES42 = [
+    "graft.StoreHygieneSpec",
+]
+
+MUTANTS42 = [
+    ("ST421", ROLLUP, "stats never sees folded dirs (dead_dirs/dead_bytes always 0)",
+     "      val deadNames = GenerationalBatches.foldedDirs(fs, committed)\n"
+     "      val (dead, live) = committed.partition { case (_, p) =>\n"
+     "        deadNames.contains(p.getName) }",
+     "      val deadNames = Set.empty[String]\n"
+     "      val (dead, live) = committed.partition { case (_, p) =>\n"
+     "        deadNames.contains(p.getName) }"),
+    ("ST422", ROLLUP, "stats reports every manifest as ok (stale/absent invisible)",
+     "      val manifest = GenerationalBatches.readManifest(fs, dir) match {\n"
+     "        case None => if (committed.isEmpty) \"none\" else \"absent\"\n"
+     "        case Some((b, _, _)) =>\n"
+     "          if (b.toSet == live.map(_._2.getName).toSet) \"ok\" else \"stale\"\n"
+     "      }",
+     "      val manifest = \"ok\""),
+]
+
+# batch 43 — round-19 hygiene seams. Run with
+# `python3 tools/mutation.py 43`.
+SUITES43 = [
+    "graft.StoreGenesisSpec", "graft.StoreHygieneSpec",
+]
+
+MUTANTS43 = [
+    ("GE431", ROLLUP, "empty-store torn-genesis guard removed: a foreign family silently re-stamps the store",
+     "                  readRawGenesis(fs, base).foreach { raw =>\n"
+     "                    require(terminatedGenesis(incoming).startsWith(raw),",
+     "                  readRawGenesis(fs, base).foreach { raw =>\n"
+     "                    require(true || terminatedGenesis(incoming).startsWith(raw),"),
+    ("GE432", ROLLUP, "prefix check reversed (raw.startsWith(terminated)): a crash-retried SAME-family first ingest bricks",
+     "                    require(terminatedGenesis(incoming).startsWith(raw),",
+     "                    require(raw.startsWith(terminatedGenesis(incoming)),"),
+    ("RT431", ROLLUP, "stats root row counts no bytes: crashed stage dirs invisible to the cadence decision",
+     "      val bytes = stage.map { st =>\n"
+     "        try fs.getContentSummary(st.getPath).getLength\n"
+     "        catch { case _: java.io.IOException => 0L }\n"
+     "      }.sum",
+     "      val bytes = 0L"),
+    ("RT432", ROLLUP, "stats omits the `<root>` row entirely",
+     "     else graft.sources.Sinks.inParallel(grains) { case (g, gdir) =>\n"
+     "       one(g, gdir) }) :+\n"
+     "      rootRow",
+     "     else graft.sources.Sinks.inParallel(grains) { case (g, gdir) =>\n"
+     "       one(g, gdir) })"),
+    ("SW431", ROLLUP, "sweepIfWorthIt ignores the threshold (always sweeps — the skip path is the whole point)",
+     "    if (reclaimable < minDeadBytes) 0\n"
+     "    else sweepExpired(spark, baseDir, cleanupDelayMs, grains, leaseStaleMs)",
+     "    if (reclaimable < 0) 0\n"
+     "    else sweepExpired(spark, baseDir, cleanupDelayMs, grains, leaseStaleMs)"),
+    ("SW432", ROLLUP, "sweepIfWorthIt never sweeps (threshold comparison inverted)",
+     "    if (reclaimable < minDeadBytes) 0\n"
+     "    else sweepExpired(spark, baseDir, cleanupDelayMs, grains, leaseStaleMs)",
+     "    if (reclaimable >= minDeadBytes) 0\n"
+     "    else sweepExpired(spark, baseDir, cleanupDelayMs, grains, leaseStaleMs)"),
+]
+
+# batch 44 — bench artifact-pipeline logic. Run with
+# `python3 tools/mutation.py 44`.
+SUITES44 = [
+    "graft.BenchRecordSpec",
+]
+
+MUTANTS44 = [
+    ("BP441", BENCH, "parseQueriesAndFloor reads the FIRST queries block (a clipped tail's half-eaten detail line wins)",
+     "        .findAllMatchIn(blocks.last.group(1))",
+     "        .findAllMatchIn(blocks.head.group(1))"),
+    ("BP442", BENCH, "short() stops truncating — detail (full-name) and tail (short-name) records stop interoperating",
+     "  private[graft] def short(n: String): String = n.takeWhile(_ != '_')",
+     "  private[graft] def short(n: String): String = n"),
+    ("BP443", BENCH, "sfMatches name check always true — a different-scale record becomes the baseline",
+     "    val byName =\n"
+     "      new java.io.File(recorded).getName == mine || (\"sf\" + recorded) == mine",
+     "    val byName =\n"
+     "      new java.io.File(recorded).getName == mine || (\"sf\" + recorded) == mine || true"),
+    ("BP444", BENCH, "floorRelOf never cancels the host term (always the absolute ratio)",
+     "    if (!floorNow.isNaN && floorNow > 0 && !prevFloor.isNaN && prevFloor > 0)\n"
+     "      (sec / floorNow) / (prev / prevFloor)\n"
+     "    else sec / prev",
+     "    sec / prev"),
+    ("BP445", BENCH, "floorRelOf noise-floor guard dropped — a 0.05s prev adjudicates",
+     "    if (prev.isNaN || prev <= 0.05 || sec <= 0) return Double.NaN",
+     "    if (prev.isNaN || prev <= 0 || sec <= 0) return Double.NaN"),
+]
+
+# batch 45 — round-20 measurement hardening. Run with
+# `python3 tools/mutation.py 45`.
+SUITES45 = [
+    "graft.BenchRecordSpec", "graft.StoreHygieneSpec",
+]
+
+MUTANTS45 = [
+    ("CB451", BENCH, "compositeBaseline keeps the WORST anchor-ratio — the contended capture becomes the baseline",
+     "        if (anchored.nonEmpty) anchored.minBy(ratio)",
+     "        if (anchored.nonEmpty) anchored.maxBy(ratio)"),
+    ("CB452", BENCH, "anchor-less fallback keeps max seconds instead of min",
+     "        else if (cands.nonEmpty) cands.minBy(_._1)",
+     "        else if (cands.nonEmpty) cands.maxBy(_._1)"),
+    ("CB453", BENCH, "poisoned (-1 error marker) entries admitted as baseline candidates",
+     "      val cands = es.map(_._2).filter(_._1 > 0)",
+     "      val cands = es.map(_._2)"),
+    ("AN451", BENCH, "anchorOf ignores the family set — every query tracks floor2",
+     "    if (Floor2Queries(short(name)) && !floor2.isNaN && floor2 > 0) floor2",
+     "    if (!floor2.isNaN && floor2 > 0) floor2"),
+    ("AN452", BENCH, "anchorOf stops degrading — a pre-round-20 record (no floor2) poisons the family's anchor with NaN",
+     "    if (Floor2Queries(short(name)) && !floor2.isNaN && floor2 > 0) floor2",
+     "    if (Floor2Queries(short(name))) floor2"),
+    ("PF451", BENCH, "floor2_sec never parsed — every baseline record loses its parallel anchor",
+     "    BenchRec(qs, lastNum(\"floor_sec\"), lastNum(\"floor2_sec\"), fsMode)",
+     "    BenchRec(qs, lastNum(\"floor_sec\"), Double.NaN, fsMode)"),
+    ("FC451", BENCH, "fitCompact stops degrading — always the first (possibly oversized) rung",
+     "    steps.view.map(_.apply()).find(_.length <= budget).getOrElse {",
+     "    steps.view.map(_.apply()).headOption.getOrElse {"),
+    ("SM451", BENCH, "sfMatches full-path guard dropped — a same-basename fixture from another directory becomes the baseline",
+     "    if (byName && recorded.contains('/') && sfDir.contains('/')) {",
+     "    if (false) {"),
+    ("CA451", BENCH, "coherentAnchors mixes kinds — this run's floor2 ratios against a pre-round-20 baseline's floor1",
+     "    if (Floor2Queries(short(name)) && ok(nowF2) && ok(prevF2))\n"
+     "      (nowF2, prevF2)\n"
+     "    else (nowF, prevF)",
+     "    if (Floor2Queries(short(name)) && ok(nowF2))\n"
+     "      (nowF2, if (ok(prevF2)) prevF2 else prevF)\n"
+     "    else (nowF, prevF)"),
+    ("SR451", ROLLUP, "janitor's root inventory counts a live op's young stage — every busy pass escalates to a futile sweep",
+     "        (minStageAgeMs <= 0 || now - st.getModificationTime > minStageAgeMs))",
+     "        true)"),
+]
+
 # batch 46: the one publish path of the generational stores
 # (GenerationalBatches.publish) — its crash order. Run with
 # `python3 tools/mutation.py 46`.
@@ -679,6 +1026,16 @@ BATCHES = {
     "33": (MUTANTS33, SUITES33, "Batch 33 \u2014 grained-store re-grain seams"),
     "34": (MUTANTS34, SUITES34, "Batch 34 \u2014 one-job grained ingest seams"),
     "35": (MUTANTS35, SUITES35, "Batch 35 \u2014 one-job range-compaction seams"),
+    "36": (MUTANTS36, SUITES36, "Batch 36 \u2014 round-17 seams (lease striping, manifests, grace window)"),
+    "37": (MUTANTS37, SUITES37, "Batch 37 \u2014 round-18 seams (genesis, flat manifests, heal timing, clock skew)"),
+    "38": (MUTANTS38, SUITES38, "Batch 38 \u2014 the sweepExpired janitor"),
+    "39": (MUTANTS39, SUITES39, "Batch 39 \u2014 round-18 self-review fixes"),
+    "40": (MUTANTS40, SUITES40, "Batch 40 \u2014 auto-sized folds and parallel manifest resolution"),
+    "41": (MUTANTS41, SUITES41, "Batch 41 \u2014 round-18 review fixes (second pass)"),
+    "42": (MUTANTS42, SUITES42, "Batch 42 \u2014 RollupStore.stats observability view"),
+    "43": (MUTANTS43, SUITES43, "Batch 43 \u2014 round-19 hygiene seams"),
+    "44": (MUTANTS44, SUITES44, "Batch 44 \u2014 bench artifact-pipeline logic"),
+    "45": (MUTANTS45, SUITES45, "Batch 45 \u2014 round-20 measurement hardening"),
     "46": (MUTANTS46, SUITES46, "Batch 46 \u2014 one publish path for the generational stores"),
 }
 
