@@ -12,12 +12,9 @@ import graft.sources.{Sinks, Tables}
   * repeat. Family objects read this object; it reads none of them. */
 object Harness {
 
-  def prep(s: SparkSession): Unit =
-    BehavioralFunctions.register(s)
-
   /** Fixture table `name` under `dir`, with graft's functions registered. */
   def table(s: SparkSession, dir: String, name: String): DataFrame = {
-    prep(s)
+    BehavioralFunctions.register(s)
     Tables.load(s, dir, name)
   }
 

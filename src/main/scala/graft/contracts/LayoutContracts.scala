@@ -55,7 +55,7 @@ object LayoutContracts {
   // one shuffle-equivalent up front and amortizes over every downstream
   // join — the standard warehouse trade.
   val q91 = Contract("q91_bucketed_join", run = { (s, dir) =>
-      prep(s)
+      BehavioralFunctions.register(s)
       val tmp = sources.Sinks.scratchDir("q91_bucketed")
       val tOrders = sources.Sinks.sessionTable(s, "graft_b_orders")
       val tLineitem = sources.Sinks.sessionTable(s, "graft_b_lineitem")

@@ -27,7 +27,7 @@ object MultimodalContracts {
 
   /** The 300-row demo media table, written to `path` and read back typed. */
   private def demoMedia(s: SparkSession, path: String): Dataset[ops.Multimodal.MediaRow] = {
-    prep(s)
+    behavioral.BehavioralFunctions.register(s)
     ops.Multimodal.demoTable(s, 300).write.mode("overwrite").parquet(path)
     import s.implicits._
     s.read.parquet(path).as[ops.Multimodal.MediaRow]
