@@ -1,6 +1,7 @@
 package graft.behavioral
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
 import org.apache.spark.sql.graftbridge.{ColumnBridge => ExpressionUtils}
@@ -136,43 +137,31 @@ object BehavioralFunctions {
 
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("sessionize",
-      exprs => SessionizeWindow(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("retention",
-      exprs => RetentionAgg(exprs), "scala_udf")
-    reg.createOrReplaceTempFunction("retention_state",
-      exprs => RetentionStateAgg(exprs), "scala_udf")
-    reg.createOrReplaceTempFunction("retention_merge",
-      exprs => RetentionMergeAgg(exprs), "scala_udf")
-    reg.createOrReplaceTempFunction("window_funnel",
-      exprs => WindowFunnelAgg(exprs), "scala_udf")
-    reg.createOrReplaceTempFunction("funnel_state",
-      exprs => FunnelStateAgg(exprs), "scala_udf")
-    reg.createOrReplaceTempFunction("funnel_merge",
-      exprs => FunnelMergeAgg(exprs), "scala_udf")
-    reg.createOrReplaceTempFunction("sequence_match_merge",
-      exprs => SequenceMatchMergeAgg(exprs), "scala_udf")
-    reg.createOrReplaceTempFunction("sequence_count_merge",
-      exprs => SequenceCountMergeAgg(exprs), "scala_udf")
-    reg.createOrReplaceTempFunction("sequence_match_events_merge",
-      exprs => SequenceMatchEventsMergeAgg(exprs), "scala_udf")
-    reg.createOrReplaceTempFunction("sequence_match",
-      exprs => SequenceMatchAgg(exprs), "scala_udf")
-    reg.createOrReplaceTempFunction("sequence_count",
-      exprs => SequenceCountAgg(exprs), "scala_udf")
-    reg.createOrReplaceTempFunction("sequence_match_events",
-      exprs => SequenceMatchEventsAgg(exprs), "scala_udf")
-    reg.createOrReplaceTempFunction("sequence_next_node",
-      exprs => SequenceNextNodeAgg(exprs), "scala_udf")
-    reg.createOrReplaceTempFunction("next_node_state",
-      exprs => NextNodeStateAgg(exprs), "scala_udf")
-    reg.createOrReplaceTempFunction("next_node_merge",
-      exprs => NextNodeMergeAgg(exprs), "scala_udf")
-    reg.createOrReplaceTempFunction("funnel_state_combine",
-      exprs => FunnelStateCombineAgg(exprs), "scala_udf")
-    reg.createOrReplaceTempFunction("next_node_state_combine",
-      exprs => NextNodeStateCombineAgg(exprs), "scala_udf")
-    reg.createOrReplaceTempFunction("retention_state_combine",
-      exprs => RetentionStateCombineAgg(exprs), "scala_udf")
+    // bind only the names the session lacks: every contract fixture load
+    // calls this, and a rebind replaces the builder and logs a WARN each
+    Seq[(String, Seq[Expression] => Expression)](
+      "sessionize" -> (exprs => SessionizeWindow(exprs(0), exprs(1))),
+      "retention" -> (exprs => RetentionAgg(exprs)),
+      "retention_state" -> (exprs => RetentionStateAgg(exprs)),
+      "retention_merge" -> (exprs => RetentionMergeAgg(exprs)),
+      "window_funnel" -> (exprs => WindowFunnelAgg(exprs)),
+      "funnel_state" -> (exprs => FunnelStateAgg(exprs)),
+      "funnel_merge" -> (exprs => FunnelMergeAgg(exprs)),
+      "sequence_match_merge" -> (exprs => SequenceMatchMergeAgg(exprs)),
+      "sequence_count_merge" -> (exprs => SequenceCountMergeAgg(exprs)),
+      "sequence_match_events_merge" -> (exprs => SequenceMatchEventsMergeAgg(exprs)),
+      "sequence_match" -> (exprs => SequenceMatchAgg(exprs)),
+      "sequence_count" -> (exprs => SequenceCountAgg(exprs)),
+      "sequence_match_events" -> (exprs => SequenceMatchEventsAgg(exprs)),
+      "sequence_next_node" -> (exprs => SequenceNextNodeAgg(exprs)),
+      "next_node_state" -> (exprs => NextNodeStateAgg(exprs)),
+      "next_node_merge" -> (exprs => NextNodeMergeAgg(exprs)),
+      "funnel_state_combine" -> (exprs => FunnelStateCombineAgg(exprs)),
+      "next_node_state_combine" -> (exprs => NextNodeStateCombineAgg(exprs)),
+      "retention_state_combine" -> (exprs => RetentionStateCombineAgg(exprs))
+    ).foreach { case (name, builder) =>
+      if (!reg.functionExists(FunctionIdentifier(name)))
+        reg.createOrReplaceTempFunction(name, builder, "scala_udf")
+    }
   }
 }

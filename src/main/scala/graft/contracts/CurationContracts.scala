@@ -611,10 +611,10 @@ object CurationContracts {
   // index built by INCREMENTAL APPENDS instead of one shot — four
   // id-ordered batches through appendExactDigestIndex (first-writer-
   // wins, which under id-ordered ingest equals the one-shot min(doc_id)
-  // build) — then compactParquet'd from the accreted small files into
-  // exactly 4, then probed by the q76 batch. Same oracle as q76:
-  // neither the append path nor the compaction may change the answer,
-  // and the in-query file-count check pins that the compaction
+  // build) — then compactDigestIndex'd from the accreted batches into one
+  // batch of exactly 4 files, then probed by the q76 batch. Same oracle
+  // as q76: neither the append path nor the compaction may change the
+  // answer, and the in-query file-count check pins that the compaction
   // demonstrably ran (q92/q96/q97's standard, applied to maintenance).
   val q101 = Contract("q101_compacted_index", run = { (s, dir) =>
       val d = table(s, dir, "documents")
@@ -629,18 +629,19 @@ object CurationContracts {
         lo = hi
       }
       val target = 4
-      sources.Sinks.compactParquet(s, idxDir, target)
+      ops.Dedup.compactDigestIndex(s, idxDir, target)
       // Hadoop FS listing, not java.io: the pin must hold on hdfs://
       // and s3a:// index locations too (same standard as the sink's
       // one-file-per-bucket check)
       val hp = new org.apache.hadoop.fs.Path(idxDir)
-      val nFiles = hp.getFileSystem(s.sessionState.newHadoopConf())
-        .listStatus(hp)
-        .count(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      require(nFiles == target,
-        s"compaction left $nFiles parquet files, expected $target")
+      val fs = hp.getFileSystem(s.sessionState.newHadoopConf())
+      val nFiles = ops.GenerationalBatches.liveBatches(fs, hp)
+        .map { case (_, p) => ops.GenerationalBatches.dataFiles(fs, p).size }
+      require(nFiles == Seq(target),
+        s"compaction left live batches of $nFiles parquet files, expected " +
+          s"one batch of $target")
       ops.Dedup.exactDupAgainst(
-        d.filter(col("doc_id") % 10 === 0), s.read.parquet(idxDir))
+        d.filter(col("doc_id") % 10 === 0), ops.Dedup.readDigestIndex(s, idxDir))
         .select(col("new_id"), col("is_dup"), col("keep_id"))
     },
     // q101: same oracle as q76 — the index grown by id-ordered incremental

@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
+import graft.sources.Sinks
 
 /** Deduplication operators for training-data pipelines: exact, n-gram
   * Jaccard, MinHash+LSH, and SimHash.
@@ -193,85 +194,97 @@ object Dedup {
   /** Append a NEW batch to a STORED `exactDigestIndex` at `path`: digests
     * already present keep their stored representative (first-writer-wins —
     * the incremental-ingest contract: the earliest-ingested document owns
-    * its text); only previously-unseen digests land, as one appended file
-    * batch. When batches arrive in id order (the normal ingest stream),
+    * its text); only previously-unseen digests land, as one new batch.
+    * When batches arrive in id order (the normal ingest stream),
     * first-writer-wins coincides with the global `min(doc_id)` the
     * one-shot `exactDigestIndex` build produces, so an index grown by this
     * function answers probes identically (q101 pins that under the q76
-    * oracle, through a `compactParquet` of the accreted files).
+    * oracle, through a [[compactDigestIndex]] of the accreted batches).
     *
-    * Scale shape: digest the batch, LEFT ANTI join against the stored
-    * digests (32-byte keys, corpus bodies never read), append O(new)
-    * rows. The append STAGES to a sibling directory and publishes by
-    * file rename (round 21, guide §1.2): the anti-join reads the same
-    * directory the append lands in, so appending in place needed a full
-    * persist + count materialization first — one extra job and a cache
-    * fill per batch just to fence the write off its own scan. Writing
-    * the anti-join result to `<path>.append_tmp` decouples scan from
-    * publish, so the staged write is the batch's ONLY job; the renames
-    * are driver metadata ops. Same sibling-staging pattern (and the
-    * same rename caveats on object stores) as `Sinks.compactParquet`;
-    * a crash mid-publish leaves at most a partial set of visible new
-    * files — the same exposure as a crashed in-place append job commit
-    * — and the stale tmp dir is reaped by the next append. */
+    * Storage: `path` is a generational store (`GenerationalBatches`):
+    * each append lands straight into the next `batch_<k>` dir in ONE
+    * observed write and commits by its marker, so a crashed append is
+    * invisible and reaped by the next writer. The anti-join and the
+    * publish run under the store's single-writer lease — two appends
+    * carrying the same new text would otherwise both pass the anti-join
+    * and both publish it, and the probe would fan out; a second writer
+    * fails fast on the lease. An empty delta commits as a no-op.
+    *
+    * Scale shape: digest the batch, LEFT ANTI join against the live
+    * batches' digests (32-byte keys, corpus bodies never read), write
+    * O(new) rows. */
   def appendExactDigestIndex(newDocs: DataFrame, path: String,
       idCol: String = "doc_id", textCol: String = "text"): Unit = {
     val spark = newDocs.sparkSession
-    val batchIdx = exactDigestIndex(newDocs, idCol, textCol)
-    val dst = new org.apache.hadoop.fs.Path(path.stripSuffix("/"))
-    val fs = dst.getFileSystem(spark.sessionState.newHadoopConf())
-    // the anti-join gate checks for at least one DATA file, not bare dir
-    // existence (round-22 ADVICE): a crash between mkdirs(dst) and the
-    // first publish rename leaves an empty dst, and reading that as "an
-    // index exists" makes spark.read.parquet throw schema-inference
-    // errors forever after — an empty dir means "no index yet"
-    def hasData =
-      fs.exists(dst) && fs.listStatus(dst).exists(st =>
-        st.isFile && st.getPath.getName.endsWith(".parquet"))
-    val toAppend =
-      if (hasData)
-        batchIdx.join(spark.read.parquet(path).select("text_hash"),
-          Seq("text_hash"), "left_anti")
-      else batchIdx
-    // per-attempt-unique stage dir (round-22 ADVICE): a FIXED sibling
-    // made two concurrent appends delete each other's staged files
-    // mid-write; with a UUID suffix attempts never share a stage. A
-    // crashed attempt's leftover stage is reaped only once it is STALE:
-    // the NEWEST mtime anywhere in its tree is older than the lease-stale
-    // horizon. The stage dir's own mtime is not enough — a live writer's
-    // task files land under `_temporary/...`, which leaves the top dir's
-    // mtime at write start however long the write runs.
-    val stagePrefix = dst.getName + ".append_tmp-"
-    val parent = dst.getParent
-    if (parent != null && fs.exists(parent)) {
-      val staleBefore =
-        System.currentTimeMillis() - graft.sources.Sinks.DefaultLeaseStaleMs
-      // a subtree that vanishes mid-walk belongs to a live writer (its
-      // job commit moves task files): count it as fresh
-      def newestMtime(st: org.apache.hadoop.fs.FileStatus): Long =
-        if (!st.isDirectory) st.getModificationTime
-        else try fs.listStatus(st.getPath).map(newestMtime)
-          .foldLeft(st.getModificationTime)(math.max)
-        catch { case _: java.io.FileNotFoundException => Long.MaxValue }
-      fs.listStatus(parent)
-        .filter(st => st.isDirectory &&
-          st.getPath.getName.startsWith(stagePrefix) &&
-          newestMtime(st) < staleBefore)
-        .foreach(st => fs.delete(st.getPath, true))
+    val base = new org.apache.hadoop.fs.Path(path)
+    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
+    Sinks.withSingleWriterLease(fs, GenerationalBatches.leasePath(base)) {
+      val live = GenerationalBatches.recover(fs, base)
+      val batchIdx = exactDigestIndex(newDocs, idCol, textCol)
+      val toAppend =
+        if (live.isEmpty) batchIdx
+        else batchIdx.join(spark.read.parquet(live.map(_._2.toString): _*)
+          .select("text_hash"), Seq("text_hash"), "left_anti")
+      GenerationalBatches.publish(fs, base, live, Nil, Set.empty, 0L,
+          _ => ()) { batchPath =>
+        Some(landIndex(toAppend, batchPath)).filter(_.expected > 0)
+      }
     }
-    val stage = new org.apache.hadoop.fs.Path(path.stripSuffix("/") +
-      ".append_tmp-" + java.util.UUID.randomUUID().toString)
-    toAppend.write.mode("overwrite").parquet(stage.toString)
-    fs.mkdirs(dst)
-    for (st <- fs.listStatus(stage)
-         if st.isFile && st.getPath.getName.endsWith(".parquet")) {
-      val to = new org.apache.hadoop.fs.Path(dst, st.getPath.getName)
-      if (!fs.rename(st.getPath, to))
-        throw new java.io.IOException(
-          s"could not publish staged append file ${st.getPath} to $to")
+  }
+
+  /** Write `rows` into a digest-index batch dir in ONE observed job: the
+    * count the write saw and the count its parquet footers hold. */
+  private def landIndex(rows: DataFrame,
+      batchPath: org.apache.hadoop.fs.Path): GenerationalBatches.Landed = {
+    val hconf = rows.sparkSession.sessionState.newHadoopConf()
+    GenerationalBatches.Landed(
+      Sinks.observedLong(Sinks.writeParquetObserved(rows, batchPath.toString,
+        Seq(count(lit(1)).as("n"))), "n"),
+      Sinks.parquetRowCount(batchPath.getFileSystem(hconf), batchPath, hconf))
+  }
+
+  /** The stored exact-digest index at `path`: its live batches' parquet
+    * (committed, not folded by a committed compaction) — the frame every
+    * probe (`exactDupAgainst`) reads. */
+  def readDigestIndex(spark: SparkSession, path: String): DataFrame = {
+    val base = new org.apache.hadoop.fs.Path(path)
+    val live = GenerationalBatches.liveBatches(
+      base.getFileSystem(spark.sessionState.newHadoopConf()), base)
+    require(live.nonEmpty, s"no committed digest index batches under $path")
+    spark.read.parquet(live.map(_._2.toString): _*)
+  }
+
+  def compactDigestIndex(spark: SparkSession, path: String,
+      targetPartitions: Int): Long =
+    compactDigestIndex(spark, path, targetPartitions, _ => ())
+
+  /** Fold every live batch of the digest index at `path` into ONE batch of
+    * exactly `targetPartitions` files: incremental ingest accretes one
+    * small batch per append, and at 100 TB the listing + per-file open cost
+    * of thousands of KB-sized files eventually dominates the probe itself.
+    * Pure layout (the same rows), published by `GenerationalBatches.publish`
+    * under the store's writer lease — the crash order is publish's
+    * (`onStep` is CompactionSpec's seam: "written", "committed",
+    * "cleaned"), and an append racing it refuses on the lease instead of
+    * landing rows the fold does not carry. Returns the row count (0 for a
+    * store with no batch). */
+  private[graft] def compactDigestIndex(spark: SparkSession, path: String,
+      targetPartitions: Int, onStep: String => Unit): Long = {
+    require(targetPartitions > 0,
+      s"targetPartitions must be positive, got $targetPartitions")
+    val base = new org.apache.hadoop.fs.Path(path)
+    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
+    Sinks.withSingleWriterLease(fs, GenerationalBatches.leasePath(base)) {
+      val live = GenerationalBatches.recover(fs, base)
+      if (live.isEmpty) 0L
+      else GenerationalBatches.publish(fs, base, live, live, Set.empty, 0L,
+          onStep) { batchPath =>
+        // repartition, not coalesce: the fold must land exactly
+        // `targetPartitions` files whatever the input's file count
+        Some(landIndex(spark.read.parquet(live.map(_._2.toString): _*)
+            .repartition(targetPartitions), batchPath))
+      }
     }
-    fs.delete(stage, true)
-    ()
   }
 
   /** Per-document cross-corpus repeated-passage statistics at word-n-gram

@@ -74,8 +74,8 @@ object Sinks {
 
   /** Best-effort recursive delete: per-file IOExceptions are swallowed —
     * right for shutdown-hook cleanup and stale-residue reaping, where a
-    * locked file must not abort the JVM exit or the caller. Paths whose
-    * continued existence the caller depends on (the compaction swap) use
+    * locked file must not abort the JVM exit or the caller. A caller that
+    * must know the path is gone ([[clearDir]]) uses
     * [[deleteRecursiveStrict]] instead. */
   private def deleteRecursive(p: java.nio.file.Path): Unit =
     if (java.nio.file.Files.exists(p)) {
@@ -187,26 +187,21 @@ object Sinks {
   // and the per-query sort returns. So ingest works the way every
   // LSM/snapshot store's does:
   //   1. deltas LAND cheaply via [[stageSortedDelta]] — plain parquet
-  //      append into a staging directory; no shuffle, no sort, arrival
-  //      cost O(delta);
-  //   2. readers between compactions use [[readSortedWithStaging]] —
-  //      the ANSWER stays exact, the PLAN degrades gracefully (the
-  //      union drops the scan's partitioning/ordering claims, so the
-  //      per-query exchange+sort return until the next compaction);
-  //   3. [[compactSortedBucketed]] folds staging into a new GENERATION
-  //      directory (`gen_<k+1>` under the base dir) and re-points the
-  //      table — one shuffle+sort, amortized over every query until the
-  //      next delta. Generations make the rewrite crash-safe without
-  //      ever overwriting the directory a reader may be scanning: a
-  //      generation is visible only once its `_GEN_COMMITTED` marker
-  //      exists, and the marker records which staged files it folded so
-  //      a crash between "new gen committed" and "staging cleared"
-  //      cannot double-fold a delta on the next run. Single compactor
-  //      at a time (the usual table-maintenance contract) — ENFORCED by
-  //      the create-exclusive `_COMPACT_LEASE` marker (see
-  //      withSingleWriterLease: fail-fast on contention, stale takeover
-  //      on a crashed holder); readers are safe concurrently with it on
-  //      stores with atomic marker creation.
+  //      append into a staging directory; no shuffle, no sort, no lease,
+  //      arrival cost O(delta), so deltas keep landing during a fold;
+  //   2. [[compactSortedBucketed]] folds the live generation plus the
+  //      staged files it listed into a new GENERATION — a `batch_<k>` of
+  //      the generational protocol under the base dir, published by
+  //      `GenerationalBatches.publish` under the store's writer lease.
+  //      Its marker, written last, names the generation and the staged
+  //      files it folded; only then is the table re-pointed at it;
+  //   3. readers between compactions use [[readSortedWithStaging]] — the
+  //      latest live generation plus the staged files no committed marker
+  //      folded. The ANSWER is exactly the committed rows at every step
+  //      of a fold, and after a crash at any of them; the PLAN degrades
+  //      gracefully (the union drops the scan's partitioning/ordering
+  //      claims, so the per-query exchange+sort return until the next
+  //      compaction).
   // --------------------------------------------------------------------
 
   /** Land a delta batch in the staging directory. O(delta): no shuffle,
@@ -230,17 +225,31 @@ object Sinks {
     delta.coalesce(parts).write.mode("append").parquet(stagingDir)
   }
 
-  /** Merge-on-read view: the sorted main table plus any not-yet-folded
-    * staging rows. Exact answers at any point in the ingest cycle; the
+  /** Merge-on-read view: the latest live generation plus every staged
+    * file no committed marker has folded — exactly the committed rows at
+    * any point of the ingest cycle. The generation is read through
+    * `table` (the bucketed scan) when the table points at it, and by path
+    * when a fold committed but has not re-pointed the table yet. The
     * zero-exchange/zero-sort plan claim only holds again after the next
     * compaction (the union erases the scan's layout guarantees). */
   def readSortedWithStaging(spark: SparkSession, table: String,
       stagingDir: String): DataFrame = {
     val main = readBucketedSorted(spark, table)
-    if (stagingParquetFiles(spark, stagingDir).nonEmpty)
-      main.unionByName(
-        spark.read.schema(main.schema).parquet(stagingDir))
-    else main
+    val at = new org.apache.hadoop.fs.Path(spark.sessionState.catalog
+      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
+      .location)
+    val fs = at.getFileSystem(spark.sessionState.newHadoopConf())
+    val live = graft.ops.GenerationalBatches.liveBatches(fs, at.getParent)
+    require(live.nonEmpty, s"no committed generation beside $at")
+    val gen = live.maxBy(_._1)._2
+    val current =
+      if (fs.makeQualified(at) == gen) main
+      else spark.read.schema(main.schema).parquet(gen.toString)
+    val folded = graft.ops.GenerationalBatches.foldedDirs(fs, live)
+    val staged = stagingParquetFiles(spark, stagingDir).filterNot(folded)
+    if (staged.isEmpty) current
+    else current.unionByName(spark.read.schema(main.schema).parquet(
+      staged.map(n => new org.apache.hadoop.fs.Path(stagingDir, n).toString): _*))
   }
 
   def compactSortedBucketed(spark: SparkSession, table: String,
@@ -249,27 +258,27 @@ object Sinks {
     compactSortedBucketed(spark, table, baseDir, stagingDir, nBuckets,
       bucketKey, sortKeys, _ => ())
 
-  /** Fold staging into a fresh generation of the sorted-bucketed layout
-    * and re-point `table` at it. Returns the new generation's row count.
+  /** Fold the staged deltas into a fresh generation of the
+    * sorted-bucketed layout and re-point `table` at it. Returns the new
+    * generation's row count.
     *
-    * Crash-ordering (each step leaves a recoverable state; `onStep` is
-    * the fault-injection seam SortedIngestSpec drives):
-    *   recover  — reap uncommitted generation dirs (partial writes) and
-    *              older committed generations (crash before cleanup);
-    *              delete staged files the latest committed generation's
-    *              marker says it already folded (crash before staging
-    *              clear) — this is what makes re-running idempotent;
-    *   written  — gen_<k+1> data + table registration complete, counts
-    *              verified against main+staging; marker NOT yet written,
-    *              so a crash here makes the next run reap it and redo;
-    *   committed— `_GEN_COMMITTED` written with the folded staging file
-    *              names; the generation is now the truth;
-    *   cleaned  — folded staging files and the previous generation
-    *              removed.
-    * The filesystem (not the catalog) is the source of truth: a crash
-    * between `writeBucketedSortedSingleFile`'s DROP TABLE and its
-    * saveAsTable leaves the table unregistered, but the committed
-    * generation survives and the next compaction re-registers it. */
+    * Crash-ordering (`onStep` is the fault-injection seam SortedIngestSpec
+    * drives; the steps after "recovered" are `GenerationalBatches.publish`'s):
+    *   recovered — `GenerationalBatches.recover` reaped marker-less
+    *               generations and folded ones, and the staged files a
+    *               live marker names are deleted — what makes re-running
+    *               idempotent;
+    *   written   — `batch_<k>` holds the live generation plus the listed
+    *               staged files, footer count verified against the fold's
+    *               observed count; no marker, so a crash here is
+    *               invisible and the next run reaps it;
+    *   committed — the marker names the folded generation and staged
+    *               files: the new generation is the truth for every
+    *               reader; the table is re-pointed after this step;
+    *   cleaned   — folded generation and staged files deleted.
+    * The filesystem (not the catalog) is the source of truth: every
+    * compaction, a no-op included, re-points the table at the latest live
+    * generation, which heals a crash between a commit and its re-point. */
   private[graft] def compactSortedBucketed(spark: SparkSession,
       table: String, baseDir: String, stagingDir: String, nBuckets: Int,
       bucketKey: String, sortKeys: Seq[String],
@@ -277,93 +286,67 @@ object Sinks {
     val hconf = spark.sessionState.newHadoopConf()
     val base = new org.apache.hadoop.fs.Path(baseDir)
     val fs = base.getFileSystem(hconf)
-    // the whole recover->fold->commit->clean cycle runs under the
-    // single-writer lease: two concurrent compactors would both pass
-    // recovery and race the generation number
-    withSingleWriterLease(fs,
-      new org.apache.hadoop.fs.Path(base, "_COMPACT_LEASE")) {
-    // -- recover -------------------------------------------------------
-    val gens =
-      if (fs.exists(base))
-        fs.listStatus(base).toSeq
-          .filter(st => st.isDirectory && st.getPath.getName.startsWith("gen_"))
-          .flatMap(st => st.getPath.getName.stripPrefix("gen_").toLongOption
-            .map(_ -> st.getPath))
-      else Seq.empty
-    val committed = gens.filter { case (_, p) =>
-      fs.exists(new org.apache.hadoop.fs.Path(p, "_GEN_COMMITTED")) }
-    // partial writes (no marker) are garbage from a crashed run
-    gens.filterNot(committed.contains).foreach { case (_, p) =>
-      fs.delete(p, true) }
-    val latest = committed.sortBy(_._1).lastOption
-    // older committed gens survive only a crash before step "cleaned"
-    committed.filter(g => latest.exists(_._1 > g._1)).foreach { case (_, p) =>
-      fs.delete(p, true) }
-    latest.foreach { case (_, p) =>
-      foldedFiles(fs, p).foreach { name =>
-        fs.delete(new org.apache.hadoop.fs.Path(stagingDir, name), false) } }
-    onStep("recovered")
-    // -- fold ----------------------------------------------------------
-    val stagedNow = stagingParquetFiles(spark, stagingDir)
-    val main = latest.map { case (_, p) => spark.read.parquet(p.toString) }
-    if (stagedNow.isEmpty && main.isDefined &&
-        spark.catalog.tableExists(table))
-      // nothing to fold; table already current — report the count from
-      // the committed generation's parquet footers (driver metadata),
-      // not a full re-scan job (round 22, guide §1.2)
-      return latest.map { case (_, p) => parquetRowCount(fs, p, hconf) }
-        .getOrElse(0L)
-    require(stagedNow.nonEmpty || main.isDefined,
-      s"nothing to compact: no staging data at $stagingDir and no " +
-        s"committed generation under $baseDir")
-    val staged = if (stagedNow.isEmpty) None else Some {
-      val schema = main.map(_.schema)
-      schema.fold(spark.read)(s => spark.read.schema(s))
-        .parquet(stagingDir)
+    def repoint(): Unit = {
+      val gen = graft.ops.GenerationalBatches.liveBatches(fs, base)
+        .maxBy(_._1)._2
+      val keys = (bucketKey +: sortKeys).map(k => s"`$k`").mkString(", ")
+      val cols = spark.read.parquet(gen.toString).schema.toDDL
+      spark.sql(s"DROP TABLE IF EXISTS `$table`")
+      spark.sql(s"CREATE TABLE `$table` ($cols) USING parquet " +
+        s"CLUSTERED BY (`$bucketKey`) SORTED BY ($keys) " +
+        s"INTO $nBuckets BUCKETS LOCATION '$gen'")
     }
-    val all = (main, staged) match {
-      case (Some(m), Some(s)) => m.unionByName(s)
-      case (Some(m), None)    => m
-      case (None, Some(s))    => s
-      case (None, None)       => sys.error("unreachable")
-    }
-    // ONE pass (round 22, guide §1.2; the same observed-write-vs-footer
-    // verification as RollupStore/compactParquet since round 21): the
-    // fold previously paid a count() scan of main, a count() scan of
-    // staging, the rewrite, and a FOURTH full scan of the new generation
-    // just to compare the numbers. Now the rewrite itself observes the
-    // union's row count as it flows (what SHOULD be on disk), and the
-    // new generation's parquet footers report what IS on disk — write
-    // loss still fails the require, with three full scans removed per
-    // compaction.
-    val nextGen = latest.map(_._1 + 1).getOrElse(0L)
-    val genPath = new org.apache.hadoop.fs.Path(base, s"gen_$nextGen")
-    val obs = org.apache.spark.sql.Observation()
-    writeBucketedSortedSingleFile(
-      all.observe(obs, org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("n")),
-      table, genPath.toString, nBuckets, bucketKey, sortKeys: _*)
-    val expected = observedLong(obs.get, "n")
-    val written = parquetRowCount(fs, genPath, hconf)
-    require(written == expected,
-      s"generation rewrite changed the row count ($expected -> $written);" +
-        s" gen_$nextGen left uncommitted, previous state intact")
-    onStep("written")
-    // -- commit --------------------------------------------------------
-    publishFile(fs, new org.apache.hadoop.fs.Path(genPath, "_GEN_COMMITTED"),
-      stagedNow.mkString("\n"))
-    onStep("committed")
-    // -- clean ---------------------------------------------------------
-    stagedNow.foreach { name =>
-      fs.delete(new org.apache.hadoop.fs.Path(stagingDir, name), false) }
-    latest.foreach { case (_, p) => fs.delete(p, true) }
-    onStep("cleaned")
-    expected
+    withSingleWriterLease(fs, graft.ops.GenerationalBatches.leasePath(base)) {
+      val live = graft.ops.GenerationalBatches.recover(fs, base)
+      val folded = graft.ops.GenerationalBatches.foldedDirs(fs, live)
+      stagingParquetFiles(spark, stagingDir).filter(folded).foreach { n =>
+        fs.delete(new org.apache.hadoop.fs.Path(stagingDir, n), false) }
+      onStep("recovered")
+      // the fold reads exactly the files it lists — and its marker names
+      // exactly those: a delta landing mid-fold waits for the next one
+      val staged = stagingParquetFiles(spark, stagingDir)
+        .map(n => new org.apache.hadoop.fs.Path(stagingDir, n))
+      require(staged.nonEmpty || live.nonEmpty,
+        s"nothing to compact: no staging data at $stagingDir and no " +
+          s"committed generation under $baseDir")
+      if (staged.isEmpty) {
+        // nothing to fold: report the count from the generation's parquet
+        // footers (driver metadata), not a full re-scan job
+        repoint()
+        live.map { case (_, p) => parquetRowCount(fs, p, hconf) }.sum
+      } else {
+        // one multi-path scan of the generation and the staged files
+        // (parquet resolves columns by name, so file column order is moot)
+        val all = spark.read.parquet(
+          (live.map(_._2) ++ staged).map(_.toString): _*)
+        // ONE pass: the rewrite observes the fold's row count as it flows
+        // (what SHOULD be on disk) and the generation's footers report
+        // what IS — write loss fails publish's check, no re-scan
+        val obs = org.apache.spark.sql.Observation()
+        // a staged file folds like a batch dir (publish names it in the
+        // marker and deletes it at clean); it has no batch number
+        graft.ops.GenerationalBatches.publish(fs, base, live,
+            live ++ staged.map(-1L -> _), Set.empty, 0L, onStep,
+            afterCommit = repoint()) { batchPath =>
+          // bucketed files can only be written through the catalog: a
+          // landing name carries the write and is dropped (an external
+          // table — its files stay), so `table` is never re-pointed at a
+          // generation that is not committed yet
+          val landing = s"${table}_landing"
+          writeBucketedSortedSingleFile(
+            all.observe(obs, org.apache.spark.sql.functions.count(
+              org.apache.spark.sql.functions.lit(1)).as("n")),
+            landing, batchPath.toString, nBuckets, bucketKey, sortKeys: _*)
+          spark.sql(s"DROP TABLE IF EXISTS `$landing`")
+          Some(graft.ops.GenerationalBatches.Landed(observedLong(obs.get, "n"),
+            parquetRowCount(fs, batchPath, hconf)))
+        }
+      }
     }
   }
 
-  /** Staged parquet file NAMES (not paths) — the unit the commit marker
-    * records and the clean step deletes. */
+  /** Staged parquet file NAMES (not paths) — the unit a generation's
+    * marker records and its clean step deletes. */
   private def stagingParquetFiles(spark: SparkSession,
       stagingDir: String): Seq[String] = {
     val p = new org.apache.hadoop.fs.Path(stagingDir)
@@ -372,18 +355,6 @@ object Sinks {
     else fs.listStatus(p).toSeq
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
       .map(_.getPath.getName).sorted
-  }
-
-  private def foldedFiles(fs: org.apache.hadoop.fs.FileSystem,
-      genPath: org.apache.hadoop.fs.Path): Seq[String] = {
-    val marker = new org.apache.hadoop.fs.Path(genPath, "_GEN_COMMITTED")
-    if (!fs.exists(marker)) Seq.empty
-    else {
-      val in = fs.open(marker)
-      try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().filter(_.nonEmpty).toList
-      finally in.close()
-    }
   }
 
   /** Write `df` date-partitioned on `to_date(tsCol)` — the standard
@@ -422,84 +393,6 @@ object Sinks {
       .bucketBy(nBuckets, key)
       .sortBy(key)
       .saveAsTable(table)
-  }
-
-  /** Compact a fragmented parquet directory in place: incremental ingest
-    * (digest/MinHash/SimHash/IVF appends) accretes one small file batch at
-    * a time, and at 100 TB the listing + per-file open cost of thousands
-    * of KB-sized files eventually dominates the probe itself. Rewrites
-    * the data into `targetPartitions` files in a sibling temp directory,
-    * VERIFIES the row count survived, then swaps via MOVE-ASIDE:
-    * `path -> path.compact_old`, `tmp -> path`, delete `.compact_old`.
-    * A crash between ANY two steps leaves a complete copy of the data at
-    * `path` or at `path.compact_old` (CompactionSpec injects a failure at
-    * every step boundary and asserts exactly that) — delete-then-move
-    * would instead leave a window where `path` is simply absent. A
-    * verification failure leaves the original untouched. Returns the row
-    * count.
-    *
-    * The swap goes through the Hadoop FileSystem API (like
-    * [[writeBucketedSortedSingleFile]]'s file-count check), so the same
-    * code runs on `file://`, `hdfs://`, and `s3a://` locations. On HDFS a
-    * directory rename is atomic and the crash invariant holds exactly as
-    * on a local disk; on S3A rename is copy+delete (not atomic), so for
-    * object stores a table format's commit (Iceberg/Delta rewrite-files)
-    * remains the production answer — the verify-then-swap contract is the
-    * part that carries over. */
-  def compactParquet(spark: SparkSession, path: String,
-      targetPartitions: Int,
-      leaseStaleMs: Long = DefaultLeaseStaleMs): Long =
-    compactParquet(spark, path, targetPartitions, _ => (), leaseStaleMs)
-
-  /** `onStep` is a fault-injection seam for CompactionSpec: called with a
-    * step name at each swap-step boundary ("verified", "moved-aside",
-    * "swapped") so a test can simulate a crash at every point and check
-    * the recovery invariant. Production callers use the 3-arg overload. */
-  private[graft] def compactParquet(spark: SparkSession, path: String,
-      targetPartitions: Int, onStep: String => Unit,
-      leaseStaleMs: Long): Long = {
-    require(targetPartitions > 0,
-      s"targetPartitions must be positive, got $targetPartitions")
-    val dst = new org.apache.hadoop.fs.Path(path.stripSuffix("/"))
-    val tmp = new org.apache.hadoop.fs.Path(path.stripSuffix("/") + ".compact_tmp")
-    val old = new org.apache.hadoop.fs.Path(path.stripSuffix("/") + ".compact_old")
-    val fs = dst.getFileSystem(spark.sessionState.newHadoopConf())
-    // single-writer lease as a SIBLING (not inside `dst` — the swap
-    // renames that directory away mid-cycle and would carry the lease
-    // with it): two concurrent compactions would race the three-way swap
-    withSingleWriterLease(fs,
-      new org.apache.hadoop.fs.Path(path.stripSuffix("/") + ".compact_lease"),
-      leaseStaleMs) {
-    // a leftover .compact_old means a previous compaction crashed mid-swap;
-    // if `path` also exists the swap completed (or never started) and the
-    // leftover is pure residue — reap it. If `path` does NOT exist the
-    // previous crash landed between move-aside and swap: recover by
-    // restoring the old copy before reading anything.
-    if (fs.exists(old)) {
-      if (fs.exists(dst)) hadoopDeleteStrict(fs, old)
-      else hadoopRename(fs, old, dst)
-    }
-    val before = spark.read.parquet(dst.toString)
-    hadoopDeleteStrict(fs, tmp)
-    // ONE job: the rewrite itself observes its input row count — the old
-    // separate count() was a second full scan of the directory being
-    // compacted (guide §1.2: no extra passes)
-    val n = observedLong(writeParquetObserved(
-      before.repartition(targetPartitions), tmp.toString,
-      Seq(org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("n"))), "n")
-    // footer-metadata verify of the rewrite, no re-scan (parquetRowCount)
-    val nAfter = parquetRowCount(fs, tmp, spark.sessionState.newHadoopConf())
-    require(nAfter == n,
-      s"compaction row count changed ($n -> $nAfter); original left untouched at $path")
-    onStep("verified")
-    hadoopRename(fs, dst, old)
-    onStep("moved-aside")
-    hadoopRename(fs, tmp, dst)
-    onStep("swapped")
-    hadoopDeleteStrict(fs, old)
-    n
-    }
   }
 
   /** Row count of a written parquet directory from FILE FOOTERS — the
@@ -869,20 +762,12 @@ object Sinks {
 
   /** Rename that SURFACES failure: Hadoop's `FileSystem.rename` reports
     * most failure modes (missing source, existing destination on some
-    * stores) by returning false, and a swap step that silently didn't
+    * stores) by returning false, and a publish step that silently didn't
     * happen would break the crash invariant the caller documents. */
   private[graft] def hadoopRename(fs: org.apache.hadoop.fs.FileSystem,
       src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Unit =
     if (!fs.rename(src, dst))
       throw new java.io.IOException(s"rename $src -> $dst failed")
-
-  /** Recursive delete that SURFACES failure, Hadoop-FS edition of
-    * [[deleteRecursiveStrict]]: a caller about to move something into
-    * `p`'s place must know `p` is really gone. */
-  private def hadoopDeleteStrict(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Unit =
-    if (fs.exists(p) && (!fs.delete(p, true) || fs.exists(p)))
-      throw new java.io.IOException(s"could not fully delete $p")
 
   /** Reset a scratch dataset directory (recursive delete, SURFACING
     * failure): the rebuild companion for incrementally-appended indexes —

@@ -381,9 +381,10 @@ object Drive {
       for (half <- Seq(0, 1))
         graft.ops.Dedup.appendExactDigestIndex(
           docs.filter(col("doc_id") % 10 =!= 0 && col("doc_id") % 2 === half), ciTmp)
-      val compacted = graft.sources.Sinks.compactParquet(spark, ciTmp, 2)
+      val compacted = graft.ops.Dedup.compactDigestIndex(spark, ciTmp, 2)
       val dup = graft.ops.Dedup.exactDupAgainst(
-        docs.filter(col("doc_id") % 10 === 0), spark.read.parquet(ciTmp))
+        docs.filter(col("doc_id") % 10 === 0),
+        graft.ops.Dedup.readDigestIndex(spark, ciTmp))
       println(s"   $compacted index rows compacted to 2 files; probe: " +
         s"${dup.filter(col("is_dup")).count()} dups / ${dup.count()} new docs")
 

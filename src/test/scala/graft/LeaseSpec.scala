@@ -68,18 +68,19 @@ class LeaseSpec extends AnyFunSuite {
   }
 
   test("a live same-host holder blocks every maintenance path with a clear error") {
-    // compactParquet (sibling lease)
+    // the digest index's compaction (the store's _WRITER_LEASE)
     val idx = fresh("held_parquet") + "/idx"
-    (0 until 20).map(i => (i.toLong, s"d$i")).toDF("doc_id", "digest")
-      .write.mode("append").parquet(idx)
-    writeLease(new Path(idx + ".compact_lease"),
+    graft.ops.Dedup.appendExactDigestIndex(
+      (0 until 20).map(i => (i.toLong, s"d$i")).toDF("doc_id", "text"), idx)
+    val idxLease = graft.ops.GenerationalBatches.leasePath(new Path(idx))
+    writeLease(idxLease,
       ProcessHandle.current().pid(), localHost, System.currentTimeMillis())
     val e1 = intercept[IllegalStateException] {
-      Sinks.compactParquet(spark, idx, 1)
+      graft.ops.Dedup.compactDigestIndex(spark, idx, 1)
     }
     assert(e1.getMessage.contains("lease"))
-    fs.delete(new Path(idx + ".compact_lease"), false)
-    assert(Sinks.compactParquet(spark, idx, 1) === 20L) // released -> runs
+    fs.delete(idxLease, false)
+    assert(graft.ops.Dedup.compactDigestIndex(spark, idx, 1) === 20L) // released -> runs
 
     // IncrementalSession writers (shared _WRITER_LEASE in the base dir)
     val sess = fresh("held_sess")

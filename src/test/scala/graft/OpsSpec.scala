@@ -285,6 +285,24 @@ class DupComponentsSpec extends org.scalatest.funsuite.AnyFunSuite {
 }
 
 class ExtensionsSpec extends org.scalatest.funsuite.AnyFunSuite {
+  test("register binds each name once: a second call keeps every binding") {
+    // a rebind replaces the builder (and logs a WARN per name); every
+    // contract fixture load calls register, so it must be idempotent
+    val spark = GraftSpark.spark.newSession()
+    val reg = spark.sessionState.functionRegistry
+    val before = reg.listFunction().toSet
+    graft.behavioral.BehavioralFunctions.register(spark)
+    val names = reg.listFunction().filterNot(before).sortBy(_.funcName)
+    assert(names.size === 19, names)
+    def bound = names.map(n =>
+      (reg.lookupFunction(n).get, reg.lookupFunctionBuilder(n).get))
+    val first = bound
+    graft.behavioral.BehavioralFunctions.register(spark)
+    names.zip(first).zip(bound).foreach { case ((n, (i1, b1)), (i2, b2)) =>
+      assert((i1 eq i2) && (b1 eq b2), s"$n was bound again")
+    }
+  }
+
   test("GraftExtensions injects all seven functions into a session registry") {
     // spark.sql.extensions is a STATIC conf (applies only when the
     // SparkContext is created), so exercise the same code path directly:

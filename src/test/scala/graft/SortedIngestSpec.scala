@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** A local filesystem whose stream for a `_GEN_COMMITTED` file, once
+/** A local filesystem whose stream for a `_BATCH_COMMITTED` file, once
   * armed, keeps only the bytes up to the first newline and throws on
   * close — a writer dying mid-write of the generation's commit marker. */
 class TornMarkerFs extends org.apache.hadoop.fs.RawLocalFileSystem {
@@ -24,7 +24,7 @@ class TornMarkerFs extends org.apache.hadoop.fs.RawLocalFileSystem {
     tear(f, super.create(f, permission, overwrite, bufferSize, replication,
       blockSize, progress))
   private def tear(f: Path, out: FSDataOutputStream): FSDataOutputStream =
-    if (!(f.getName.contains("_GEN_COMMITTED") &&
+    if (!(f.getName.contains("_BATCH_COMMITTED") &&
         TornMarkerFs.armed.getAndSet(false))) out
     else new FSDataOutputStream(new java.io.OutputStream {
       private var torn = false
@@ -82,7 +82,7 @@ class SortedIngestSpec extends AnyFunSuite {
     val f = new java.io.File(base)
     if (!f.isDirectory) Seq.empty
     else f.listFiles().filter(d => d.isDirectory &&
-      d.getName.startsWith("gen_")).map(_.getName).sorted.toSeq
+      d.getName.startsWith("batch_")).map(_.getName).sorted.toSeq
   }
 
   test("three staged deltas fold into one generation holding every row") {
@@ -119,6 +119,14 @@ class SortedIngestSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"ingested layout still shuffles:\n$plan")
     assert(!plan.contains("Sort"), s"ingested layout still sorts:\n$plan")
+    // with staging drained, the merge-on-read view is the same bucketed scan
+    val mor = Sinks.readSortedWithStaging(spark, t, staging)
+      .select(col("user_id"), col("ts"),
+        graft.behavioral.BehavioralFunctions.sessionize(col("ts"),
+          expr("INTERVAL '30' MINUTE")).over(w).as("session_id"))
+      .queryExecution.executedPlan.toString
+    assert(!mor.contains("Exchange") && !mor.contains("Sort"),
+      s"drained merge-on-read view lost the layout:\n$mor")
   }
 
   test("two deltas staged back-to-back fold together in one compaction") {
@@ -180,7 +188,35 @@ class SortedIngestSpec extends AnyFunSuite {
     }
   }
 
-  test("a crash while writing _GEN_COMMITTED never commits a torn folded list") {
+  test("a read after a crash at any fold step serves each staged row once") {
+    // the merge-on-read view BEFORE the next compaction: whichever step
+    // the fold died at, it must serve delta0 + delta1 exactly once — a
+    // table re-pointed at the new generation before its commit, or a
+    // staged file still unioned after a committed marker folded it,
+    // serves delta1 twice
+    val ds = deltas()
+    val expected = (collected(ds(0)) ++ collected(ds(1))).sorted
+    for (crashAt <- Seq("written", "committed", "cleaned")) {
+      val (base, staging, t) = fresh(s"read_crash_$crashAt")
+      Sinks.stageSortedDelta(ds(0), staging)
+      Sinks.compactSortedBucketed(spark, t, base, staging,
+        nBuckets = 4, "user_id", "ts")
+      Sinks.stageSortedDelta(ds(1), staging)
+      intercept[RuntimeException] {
+        Sinks.compactSortedBucketed(spark, t, base, staging, 4,
+          "user_id", Seq("ts"),
+          onStep = s => if (s == crashAt) throw new RuntimeException(s"boom at $s"))
+      }
+      assert(collected(Sinks.readSortedWithStaging(spark, t, staging)) ===
+        expected, s"crash at '$crashAt': merge-on-read is not the committed rows")
+      if (crashAt == "written")
+        assert(collected(Sinks.readBucketedSorted(spark, t)) ===
+          collected(ds(0)).sorted,
+          "the table serves a generation that never committed")
+    }
+  }
+
+  test("a crash while writing the generation marker never commits a torn list") {
     spark.sparkContext.hadoopConfiguration.set("fs.tornfs.impl",
       classOf[TornMarkerFs].getName)
     val (localBase, localStaging, t) = fresh("torn_marker")

@@ -17,6 +17,7 @@ Usage (from the root of a scratch copy of the repo; restores each file):
       does not occur exactly once in its file (runs no sbt; exit 1 if any)
 """
 import json
+import signal
 import subprocess
 import sys
 from pathlib import Path
@@ -998,6 +999,43 @@ MUTANTS46 = [
         }"""),
 ]
 
+# batch 47: one commit protocol for every store — the sorted-ingest
+# generations and the exact-digest index on GenerationalBatches. Run with
+# `python3 tools/mutation.py 47`.
+SUITES47 = ["graft.SortedIngestSpec", "graft.CompactionSpec"]
+
+MUTANTS47 = [
+    ("SI471", SINKS, "table re-pointed at the new generation inside the land step, before its commit",
+     """          val landing = s"${table}_landing"
+          writeBucketedSortedSingleFile(
+            all.observe(obs, org.apache.spark.sql.functions.count(
+              org.apache.spark.sql.functions.lit(1)).as("n")),
+            landing, batchPath.toString, nBuckets, bucketKey, sortKeys: _*)
+          spark.sql(s"DROP TABLE IF EXISTS `$landing`")""",
+     """          val landing = table
+          writeBucketedSortedSingleFile(
+            all.observe(obs, org.apache.spark.sql.functions.count(
+              org.apache.spark.sql.functions.lit(1)).as("n")),
+            landing, batchPath.toString, nBuckets, bucketKey, sortKeys: _*)"""),
+    ("SI472", SINKS, "readSortedWithStaging ignores the staged names a committed marker folded",
+     "    val staged = stagingParquetFiles(spark, stagingDir).filterNot(folded)",
+     "    val staged = stagingParquetFiles(spark, stagingDir)"),
+    ("SI473", SINKS, "recovery keeps the staged files a live marker folded (the next fold folds them again)",
+     """      stagingParquetFiles(spark, stagingDir).filter(folded).foreach { n =>
+        fs.delete(new org.apache.hadoop.fs.Path(stagingDir, n), false) }""",
+     ""),
+    ("DX471", DEDUP, "digest append runs outside the store's writer lease",
+     """    Sinks.withSingleWriterLease(fs, GenerationalBatches.leasePath(base)) {
+      val live = GenerationalBatches.recover(fs, base)
+      val batchIdx = exactDigestIndex(newDocs, idCol, textCol)""",
+     """    locally {
+      val live = GenerationalBatches.recover(fs, base)
+      val batchIdx = exactDigestIndex(newDocs, idCol, textCol)"""),
+    ("DX472", DEDUP, "compactDigestIndex coalesces instead of repartitioning (fewer files than the target)",
+     "            .repartition(targetPartitions),",
+     "            .coalesce(targetPartitions),"),
+]
+
 
 # Mutants whose seam no longer exists: (batch, id, file, mutant, reason).
 # They stay in MUTATION.md with the reason instead of a verdict.
@@ -1037,6 +1075,7 @@ BATCHES = {
     "44": (MUTANTS44, SUITES44, "Batch 44 \u2014 bench artifact-pipeline logic"),
     "45": (MUTANTS45, SUITES45, "Batch 45 \u2014 round-20 measurement hardening"),
     "46": (MUTANTS46, SUITES46, "Batch 46 \u2014 one publish path for the generational stores"),
+    "47": (MUTANTS47, SUITES47, "Batch 47 \u2014 one commit protocol for every store"),
 }
 
 
@@ -1094,7 +1133,11 @@ def report(batch, results):
     killed = verdicts.count("killed")
     valid = killed + verdicts.count("SURVIVED")
     rate = 100.0 * killed / valid if valid else 0.0
-    lines[table[1]:table[-1] + 1] = [rows[m] for m in order]
+    # a new section's table has no row yet: its rows go below the header
+    # and its |---| line
+    body = slice(table[1], table[-1] + 1) if len(table) > 1 \
+        else slice(table[0] + 2, table[0] + 2)
+    lines[body] = [rows[m] for m in order]
     prefix = f"**Batch-{batch} kill rate: "
     for i, l in enumerate(lines):
         if l.startswith(prefix):
@@ -1110,6 +1153,9 @@ def main():
     args = sys.argv[1:]
     if args[:1] == ["check"]:
         return check()
+    # SIGTERM (an outer `timeout`, a `kill`) exits through SystemExit, so
+    # the `finally` below restores the mutated file before the run ends
+    signal.signal(signal.SIGTERM, lambda signum, _frame: sys.exit(128 + signum))
     batch = args[0] if args else "1"
     mutants, suites, _ = BATCHES[batch]
     if args[1:]:
