@@ -315,18 +315,12 @@ object Bench {
     // shutdown hook, not finally: the error path exits via sys.exit(1)
     ckptBase.foreach(d => Runtime.getRuntime.addShutdownHook(
       new Thread(() => deleteRec(d))))
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
     // fork-free, sidecar-free local filesystem (round 21, guide §7.3):
     // without libhadoop.so every local file create forks a shell chmod
     // and writes a .crc sibling — per lease, marker, manifest, parquet
     // part, and streaming WAL/state delta. Production filesystems
     // (HDFS/S3A) have neither cost; see FastLocalFileSystem. Verify and
-    // QueryJobProfile resolve the SAME mode through HarnessFs, so the
+    // Profile build the SAME session through HarnessFs.session, so the
     // oracle gate covers exactly this configuration in either mode.
     // SPARK_GRAFT_LOCAL_FS=stock opts back into Hadoop's default local
     // filesystem — the same-host A/B switch behind the round-21 numbers.
@@ -334,10 +328,8 @@ object Bench {
     // so cross-record comparisons never silently mix regimes (VERDICT
     // r21 #5).
     val fsMode = graft.sources.HarnessFs.mode
-    val builderFs = graft.sources.HarnessFs.configure(builder0)
-    val spark = ckptBase.fold(builderFs)(d => builderFs
-      .config("spark.sql.streaming.checkpointLocation", d.getAbsolutePath))
-      .getOrCreate()
+    val spark = graft.sources.HarnessFs.session(cpus, ckptBase.toSeq.map(d =>
+      "spark.sql.streaming.checkpointLocation" -> d.getAbsolutePath): _*)
     spark.sparkContext.setLogLevel("WARN")
     // warmup: spin up executors/codegen, and cache the shared input tables —
     // Spark's cache manager matches by logical plan, so the Tables.load

@@ -8,17 +8,11 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // same local-filesystem MODE as Bench (HarnessFs resolves the
-    // SPARK_GRAFT_LOCAL_FS switch for all three harness mains): the
-    // oracle gate must cover the exact configuration the bench times —
-    // in the stock A/B mode too (round-22 ADVICE)
-    val spark = graft.sources.HarnessFs.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000"))
-      .getOrCreate()
+    // the same session as Bench (HarnessFs resolves the
+    // SPARK_GRAFT_LOCAL_FS switch for every harness main): the oracle
+    // gate must cover the exact configuration the bench times — in the
+    // stock A/B mode too (round-22 ADVICE)
+    val spark = graft.sources.HarnessFs.session(cpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // optional comma-separated substring filter for targeted local runs,

@@ -498,12 +498,11 @@ object CurationContracts {
       // the probe scans the index three times (banding + two verify
       // stages); a STORED index re-scans cheap column-pruned parquet, so a
       // live-built one must be persisted to stand in for it (14 s -> ~2 s)
-      val idx = ops.OpCaches.track(
-        ops.Dedup.minhashIndex(d.filter(col("doc_id") % 10 =!= 0)).persist())
       // eager materialization, same rationale as q84: the probe's three
       // parallel index subtrees must read a POPULATED cache, not race to
       // fill it with three redundant sketch computations (round 22)
-      idx.count()
+      val idx = ops.OpCaches.materialize(
+        ops.Dedup.minhashIndex(d.filter(col("doc_id") % 10 =!= 0)))
       ops.Dedup.minhashLshJoinAgainst(
         d.filter(col("doc_id") % 10 === 0), idx, threshold = 0.8)
         .select(col("new_id"), col("idx_id"), round(col("jaccard"), 6).as("jaccard"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import graft.sources.Sinks
+import OpCaches.{materialize, materializeN}
 
 /** Deduplication operators for training-data pipelines: exact, n-gram
   * Jaccard, MinHash+LSH, and SimHash.
@@ -35,22 +36,6 @@ object Dedup {
     * row — comfortably in-memory; beyond it, one mega-document must not
     * be able to OOM an executor. */
   private val MaxBufferedPrefixShingles = 1 << 16
-
-  /** Persist + eagerly materialize: within a single action, parallel
-    * (broadcast) subtrees race the lazy cache population and each recompute
-    * the lineage; materializing first guarantees every branch reads the
-    * cache. The frames this wraps are small sketches (ids, shingles,
-    * signatures), never full documents. */
-  private def materialize(df: DataFrame): DataFrame = materializeN(df)._1
-
-  /** Same as `materialize`, returning the row count the eager action
-    * already computed — callers that branch on cardinality (e.g. the
-    * driver union-find cutoff) reuse it instead of paying a second job. */
-  private def materializeN(df: DataFrame): (DataFrame, Long) = {
-    val p = OpCaches.track(df.persist())
-    val n = p.count()
-    (p, n)
-  }
 
   /** Word k-shingles (distinct, sorted), the unit of n-gram similarity.
     *

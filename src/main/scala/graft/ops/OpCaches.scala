@@ -14,6 +14,22 @@ object OpCaches {
 
   private[graft] def track(df: DataFrame): DataFrame = { tracked.add(df); df }
 
+  /** Persist + eagerly materialize + track: within a single action,
+    * parallel (broadcast) subtrees race the lazy cache population and each
+    * recompute the lineage; materializing first guarantees every branch
+    * reads the cache. The frames the dedup and similarity operators wrap
+    * are small sketches (ids, shingles, signatures, vectors), never full
+    * documents. Released by `unpersistAll()`. */
+  private[graft] def materialize(df: DataFrame): DataFrame = materializeN(df)._1
+
+  /** Same as `materialize`, returning the row count the eager action
+    * already computed — callers that branch on cardinality (e.g. the
+    * driver union-find cutoff) reuse it instead of paying a second job. */
+  private[graft] def materializeN(df: DataFrame): (DataFrame, Long) = {
+    val p = track(df.persist())
+    (p, p.count())
+  }
+
   /** Unpersist ONE tracked frame now and drop it from the registry — for
     * callers with a bounded lifetime (e.g. one streaming micro-batch) that
     * must release their cache immediately instead of waiting for a session-
@@ -37,7 +53,7 @@ object OpCaches {
     * single-consumer query pays exactly one computation and no extra
     * action. Callers that reference the memoized frame from PARALLEL
     * subtrees of one action must consume it once first (cf.
-    * Dedup.materialize's race note) — dupComponents does this by
+    * `materialize`'s race note) — dupComponents does this by
     * explode-ing both edge directions out of a single pass instead of
     * self-unioning. */
   private[graft] def memo(key: String)(build: => DataFrame): DataFrame =

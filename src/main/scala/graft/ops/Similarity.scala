@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import OpCaches.materialize
 
 /** Similarity search over embedding columns (`array<float>` /
   * `array<double>`).
@@ -20,14 +21,6 @@ import org.apache.spark.sql.functions._
   * Catalyst expressions, distributed, no UDF.
   */
 object Similarity {
-
-  /** Persist + eagerly materialize (see Dedup.materialize: parallel
-    * broadcast subtrees race a lazy cache). */
-  private def materialize(df: DataFrame): DataFrame = {
-    val p = OpCaches.track(df.persist())
-    p.count()
-    p
-  }
 
   /** Cosine similarity between two array<double> columns. */
   def cosine(a: Column, b: Column): Column =

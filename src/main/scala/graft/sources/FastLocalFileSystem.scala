@@ -66,8 +66,8 @@ class NioRawLocalFileSystem extends RawLocalFileSystem {
   * `libhadoop.so`.
   *
   * Wired in via `spark.hadoop.fs.file.impl` by the measurement/contract
-  * harnesses ONLY (Bench, Verify, QueryJobProfile — Verify keeps the
-  * oracle gate covering exactly what the bench runs). The unit-test
+  * harnesses ONLY (every main, through `HarnessFs.session` — Verify keeps
+  * the oracle gate covering exactly what the bench runs). The unit-test
   * session keeps Hadoop's stock local filesystem, so the store protocol's
   * tests keep exercising stock semantics; FastLocalFileSystemSpec pins
   * this class's own contract (bit-identical permissions, no sidecars,
@@ -82,14 +82,14 @@ class FastLocalFileSystem extends LocalFileSystem(new NioRawLocalFileSystem) {
   }
 }
 
-/** The ONE place the harness mains (Bench, Verify, QueryJobProfile)
-  * resolve which local filesystem their session runs — round-22 ADVICE:
-  * Bench honored `SPARK_GRAFT_LOCAL_FS=stock` as the A/B switch while
-  * Verify and QueryJobProfile hardcoded the fast pair, so benching the
-  * stock config ran its oracle gate and profiler under a DIFFERENT
-  * filesystem than the one being timed. All three now call this helper,
-  * so the gate and the profiler always cover exactly the configuration
-  * the bench times, in either mode. */
+/** The ONE place the harness mains (Bench, Verify, Profile, Drive, Stress,
+  * LayoutStress) resolve which local filesystem their session runs —
+  * round-22 ADVICE: Bench honored `SPARK_GRAFT_LOCAL_FS=stock` as the A/B
+  * switch while Verify and the profiler hardcoded the fast pair, so
+  * benching the stock config ran its oracle gate and profiler under a
+  * DIFFERENT filesystem than the one being timed. Every main now builds
+  * its session through [[session]], so the gate and the profiler always
+  * cover exactly the configuration the bench times, in either mode. */
 object HarnessFs {
   /** "fast" (default) or "stock" — the value every emitted bench record
     * stamps as `fs_mode`, so cross-record comparisons can refuse to mix
@@ -107,6 +107,24 @@ object HarnessFs {
         "graft.sources.FastLocalFileSystem")
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
         "graft.sources.FastLocalFs")
+
+  /** The session every harness main runs: `local[cpus]` with as many
+    * shuffle partitions, UTC, no UI, the object-hash aggregate kept
+    * hash-based (the default sort-based fallback at 128 groups per
+    * partition would dominate any real group cardinality), and this
+    * mode's filesystem pair. `conf` adds a caller's own settings. */
+  def session(cpus: String, conf: (String, String)*)
+      : org.apache.spark.sql.SparkSession = {
+    val b = org.apache.spark.sql.SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
+        "1000000")
+    configure(conf.foldLeft(b) { case (acc, (k, v)) => acc.config(k, v) })
+      .getOrCreate()
+  }
 }
 
 /** `AbstractFileSystem` face of the same thing, for the `FileContext` API

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Manual end-to-end drive of the behavioral library over the real testdata
   * parquet — the library's public surface (register + SQL / Column API), not
   * unit tests. Used by the project verify recipe:
@@ -10,13 +8,7 @@ import org.apache.spark.sql.SparkSession
 object Drive {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-drive")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.sources.HarnessFs.session("4")
     spark.sparkContext.setLogLevel("ERROR")
     graft.behavioral.BehavioralFunctions.register(spark)
     graft.sources.Tables.events(spark, sfDir).createOrReplaceTempView("events")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Layout stress-run: measures what the q92 bucketed-events lever actually
@@ -14,27 +13,12 @@ import org.apache.spark.sql.functions._
 object LayoutStress {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(10000000L)
-    val users = 100000L
     val nBuckets = 32
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      .getOrCreate()
+    val spark = graft.sources.HarnessFs.session(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel("ERROR")
     graft.behavioral.BehavioralFunctions.register(spark)
-
-    // the Stress.scala event synth: ~100 events/user, 4 types
-    val events = spark.range(n).select(
-      (col("id") % users).as("user_id"),
-      timestamp_micros(lit(1704067200000000L)
-        + expr(s"id div $users") * 300000000L
-        + pmod(xxhash64(col("id")), lit(299000000L))).as("ts"),
-      element_at(array(lit("view"), lit("click"), lit("purchase"), lit("error")),
-        (pmod(xxhash64(col("id") + 7), lit(4)) + 1).cast("int")).as("event_type"))
+    val events = Stress.events(spark, 0, n)
 
     val tmp = graft.sources.Sinks.scratchDir("layout_stress")
     events.write.mode("overwrite").parquet(s"$tmp/plain")
@@ -131,13 +115,7 @@ object LayoutStress {
     val buildSec = wall("ing_build") {
       graft.sources.Sinks.compactSortedBucketed(spark, ingTable, ingBase,
         ingStaging, nBuckets, "user_id", "ts") }
-    val delta = spark.range(n, n + n / 100).select(
-      (col("id") % users).as("user_id"),
-      timestamp_micros(lit(1704067200000000L)
-        + expr(s"id div $users") * 300000000L
-        + pmod(xxhash64(col("id")), lit(299000000L))).as("ts"),
-      element_at(array(lit("view"), lit("click"), lit("purchase"), lit("error")),
-        (pmod(xxhash64(col("id") + 7), lit(4)) + 1).cast("int")).as("event_type"))
+    val delta = Stress.events(spark, n, n + n / 100)
     val stageSec = wall("ing_stage") {
       graft.sources.Sinks.stageSortedDelta(delta, ingStaging) }
     val morSec = time("sess_mor", sess(
@@ -154,7 +132,7 @@ object LayoutStress {
 
     def jf(v: Double) = String.format(java.util.Locale.ROOT, "%.2f",
       java.lang.Double.valueOf(v))
-    println(s"""{"metric":"layout_funnel","rows":$n,"users":$users,"plain_sec":${jf(plainSec)},"bucketed_sec":${jf(bucketedSec)},"sess_plain_sec":${jf(plainSessSec)},"sess_sorted_sec":${jf(sortedSessSec)},"ingest_build_sec":${jf(buildSec)},"ingest_stage_sec":${jf(stageSec)},"ingest_mor_sec":${jf(morSec)},"ingest_fold_sec":${jf(foldSec)},"ingest_post_sec":${jf(postSec)}}""")
+    println(s"""{"metric":"layout_funnel","rows":$n,"users":${Stress.Users},"plain_sec":${jf(plainSec)},"bucketed_sec":${jf(bucketedSec)},"sess_plain_sec":${jf(plainSessSec)},"sess_sorted_sec":${jf(sortedSessSec)},"ingest_build_sec":${jf(buildSec)},"ingest_stage_sec":${jf(stageSec)},"ingest_mor_sec":${jf(morSec)},"ingest_fold_sec":${jf(foldSec)},"ingest_post_sec":${jf(postSec)}}""")
     spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scale stress-run: synthesizes an N-row event stream (default 10M — 100×
@@ -13,33 +13,27 @@ import org.apache.spark.sql.functions._
   * final merge + scan) holds its throughput when groups are 100× larger.
   */
 object Stress {
+  val Users = 100000L
+
+  /** The deterministic synthetic event stream over ids `[from, until)`:
+    * ~100 events/user at a ~5-minute cadence with hash jitter, 4 event
+    * types. LayoutStress builds its table and its delta from it too. */
+  def events(spark: SparkSession, from: Long, until: Long): DataFrame =
+    spark.range(from, until).select(
+      (col("id") % Users).as("user_id"),
+      timestamp_micros(lit(1704067200000000L) // 2024-01-01
+        + expr(s"id div $Users") * 300000000L
+        + pmod(xxhash64(col("id")), lit(299000000L))).as("ts"),
+      element_at(array(lit("view"), lit("click"), lit("purchase"), lit("error")),
+        (pmod(xxhash64(col("id"), lit(7)), lit(4)) + 1).cast("int")).as("event_type"))
+
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(10000000L)
-    val users = 100000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // default 128 in-memory groups per partition forces a sort-based
-      // fallback for any real group cardinality — raise it so the
-      // object-hash aggregate stays hash-based
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      .getOrCreate()
+    val spark = graft.sources.HarnessFs.session(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel("ERROR")
     graft.behavioral.BehavioralFunctions.register(spark)
-
-    // deterministic synthetic stream: ~100 events/user, ~5-minute cadence
-    // with hash jitter, 4 event types
-    spark.range(n).select(
-        (col("id") % users).as("user_id"),
-        timestamp_micros(lit(1704067200000000L) // 2024-01-01
-          + expr(s"id div $users") * 300000000L
-          + pmod(xxhash64(col("id")), lit(299000000L))).as("ts"),
-        element_at(array(lit("view"), lit("click"), lit("purchase"), lit("error")),
-          (pmod(xxhash64(col("id"), lit(7)), lit(4)) + 1).cast("int")).as("event_type"))
-      .createOrReplaceTempView("stress_events")
+    events(spark, 0, n).createOrReplaceTempView("stress_events")
     spark.table("stress_events").cache().count() // materialize input off the clock
 
     def time(name: String, sql: String): (String, Double) = {

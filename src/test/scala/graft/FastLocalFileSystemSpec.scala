@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.{FastLocalFileSystem, NioRawLocalFileSystem}
 
-/** The harness-session local filesystem (Bench/Verify/QueryJobProfile):
+/** The harness-session local filesystem (Bench/Verify/Profile):
   * fork-free `setPermission` must apply BIT-IDENTICAL modes to the stock
   * shell-chmod path, checksum sidecars must be off, and a Spark write
   * through it must read back identical rows with no `.crc` siblings. */
