@@ -13,18 +13,23 @@ import org.apache.spark.sql.functions._
   * extend or follow the LAST session of its user, never relabel an old
   * one. So the whole history collapses into an O(users) stitch state:
   * (last event ts, sessions so far). Each new batch costs one window over
-  * the BATCH plus a join against that tiny state — O(day), not O(log).
-  * The same decomposition the q104 layout applies to storage, applied to
-  * the computation.
+  * the BATCH plus one SEAM ROW per known user — O(day + users), not
+  * O(log). The same decomposition the q104 layout applies to storage,
+  * applied to the computation.
   *
-  * Exactness argument (q106 pins it under the oracle hash): within a
-  * batch, local ids come from the same strictly-greater-gap rule as
-  * `sessionize` (`src/sessionize.rs:310-312`); across the boundary, the
-  * user's first batch event either continues the previous session
-  * (boundary gap <= threshold → all local ids shift by sessions-1) or
-  * opens a new one (shift by sessions). Events never arrive out of order
-  * across batches — enforced per user, not assumed — so no other seam
-  * exists.
+  * Exactness argument (q106 pins it under the oracle hash): each state
+  * row joins the batch as its user's seam row — the last seen event, at
+  * `ts = last_ts`, weighing `sessions`. One window per user, ordered by
+  * ts with the seam first among equal ts, runs `sessionize`'s own
+  * strictly-greater-gap rule (`src/sessionize.rs:310-312`): a batch event
+  * weighs 1 (a new session) when its predecessor is absent or more than
+  * the gap earlier, else 0, and the running sum of the weights is the
+  * global session id — the full scan's, since the seam IS the predecessor
+  * the full scan sees and stands in for the `sessions` before it. Events
+  * never arrive out of order across batches — an event before its user's
+  * seam is rejected, not assumed away — so no other seam exists. Each
+  * user's last row (the seam itself if the batch missed them) is their
+  * new state row.
   *
   * Storage contract (same generational style as Sinks.compactSortedBucketed):
   * each batch k writes `batch_k/out` (the sessionized events), `batch_k/state`
@@ -48,6 +53,10 @@ object IncrementalSession {
 
   private val LastTsCol = "__graft_last_ts"
   private val SessionsCol = "__graft_sessions"
+  private val PrevCol = "__graft_prev"
+  private val LastRowCol = "__graft_last_row"
+  private val SidCol = "__graft_sid"
+  private val ViolatesCol = "__graft_violates"
 
   /** Append one time-ordered batch; returns the batch's row count.
     * `gap` follows `sessionize`'s rule: a strictly-greater inter-event gap
@@ -80,83 +89,64 @@ object IncrementalSession {
     // committed compaction folded but crashed before deleting ------------
     val committed = GenerationalBatches.recover(fs, base)
     onStep("recovered")
-    val prev = committed.sortBy(_._1).lastOption
-    val state = prev.map { case (_, p) =>
-      spark.read.parquet(new org.apache.hadoop.fs.Path(p, "state").toString) }
+    val prevState = committed.sortBy(_._1).lastOption.map { case (_, p) =>
+      new org.apache.hadoop.fs.Path(p, "state") }
 
-    // -- local session ids within the batch (the only window; over the
-    // batch alone, never history) ----------------------------------------
-    val u = col(userCol)
-    val ts = unix_micros(col(tsCol))
-    val w = Window.partitionBy(u).orderBy(col(tsCol))
-    val local = batch
-      .withColumn("__graft_prev", lag(col(tsCol), 1).over(w))
-      .withColumn("__graft_local",
-        sum(when(col("__graft_prev").isNull
-            || ts - unix_micros(col("__graft_prev")) > gapMicros, 1L)
-          .otherwise(0L))
-          .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .drop("__graft_prev")
-    local.persist()
-    try {
-    // -- stitch: per-user batch summary joined against the O(users) state
-    // (the empty-delta and interleave gates ride the OUT WRITE below —
-    // no separate checks pass over the batch)
-    val summary = local.groupBy(u.as("__u"))
-      .agg(min(ts).as("__first"), max(col(tsCol)).as("__last"),
-        max(col("__graft_local")).as("__n"))
-    val joined = state match {
-      case Some(st) => summary.join(st, summary("__u") === st(userCol), "left")
-      case None => summary.withColumn(LastTsCol, lit(null).cast("long"))
-        .withColumn(SessionsCol, lit(null).cast("long"))
+    // -- the one window: the batch plus each known user's seam row (a
+    // non-null SessionsCol marks it), labeled in one pass ---------------
+    val rows = prevState match {
+      case Some(st) => batch.unionByName(
+        graft.sources.Sinks.readParquet(spark, st.toString).select(
+          col(userCol), timestamp_micros(col(LastTsCol)).as(tsCol),
+          col(SessionsCol)),
+        allowMissingColumns = true)
+      case None => batch.withColumn(SessionsCol, lit(null).cast("long"))
     }
-    val adjusted0 = joined.select(col("__u"), col("__last"),
-      coalesce(col(SessionsCol), lit(0L)).as("__base"),
-      when(col(LastTsCol).isNotNull &&
-        col("__first") - col(LastTsCol) <= gapMicros, 1L).otherwise(0L)
-        .as("__merged"),
-      col("__n"),
-      // a batch event BEFORE the user's last seen ts would have needed to
-      // relabel history — reject the batch instead of mislabeling it
-      (col(LastTsCol).isNotNull && col("__first") < col(LastTsCol))
-        .as("__violates"))
-    val adjusted = adjusted0.persist()
-    try {
-    // -- write out WHILE checking; GenerationalBatches.publish verifies
-    // and commits ---------------------------------------------------------
-    // The empty-delta and interleave gates ride the out write itself via
-    // observe() (the same one-pass shape as RollupStore's observed
-    // ingest, guide §1.2): every out row carries its user's __violates
-    // flag through the stitch join, so ONE job computes the session ids,
-    // writes them, and aggregates the gates. The batch dir is
-    // marker-less until commit, so a violating delta just deletes the
-    // unpublished dir — readers never saw it.
+    val seam = col(SessionsCol).isNotNull
+    val w = Window.partitionBy(col(userCol))
+      .orderBy(col(tsCol), col(SessionsCol).asc_nulls_last)
+    val labeled = rows
+      .withColumn(PrevCol, lag(col(tsCol), 1).over(w))
+      // a batch event BEFORE its user's last seen ts would have needed to
+      // relabel history: the out write's gate rejects the batch instead
+      .withColumn(ViolatesCol, col(tsCol) < max(when(seam, col(tsCol)))
+        .over(w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+      .withColumn(LastRowCol, lead(lit(1), 1).over(w).isNull)
+      .withColumn(SidCol, sum(when(seam, col(SessionsCol))
+          .when(col(PrevCol).isNull || unix_micros(col(tsCol)) -
+            unix_micros(col(PrevCol)) > gapMicros, 1L)
+          .otherwise(0L))
+        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    // `labeled` is not persisted: each of the two writes below re-runs the
+    // batch's exchange and window. On perfbench store_ingest (4 cores, 4
+    // alternating pairs) persisting it raised the live-heap median 1.6 %
+    // (94.0 -> 95.5 MB) and lowered p50 latency in only 1 of 4 pairs.
+
+    // -- write out WHILE checking (the empty-delta and interleave gates
+    // ride the out write via observe(), guide §1.2); publish verifies and
+    // commits. The batch dir is marker-less until commit, so a violating
+    // delta just deletes the unpublished dir — readers never saw it.
     GenerationalBatches.publish(fs, base, committed, Nil, Set.empty, 0L,
         onStep) { batchPath =>
-      // Output file sizing (guide §6): the windowed batch is PERSISTED, so
-      // its partitioning is pinned at the session shuffle count and AQE
-      // cannot coalesce the write; coalesce it to one partition per
+      // Output file sizing (guide §6): one partition per
       // `spark.sql.files.maxPartitionBytes` of the batch's estimated
       // bytes. The estimate precedes materialization, so it can run high
       // (a filter over a cached log estimates at the log's size) —
       // coalesce is capped by the actual partition count, so an
       // overestimate never writes more files than the shuffle count.
-      val outParts = graft.sources.Sinks.autoFoldPartitions(
-        local.queryExecution.optimizedPlan.stats.sizeInBytes,
-        spark.sessionState.conf.filesMaxPartitionBytes)
+      val batchBytes = batch.queryExecution.optimizedPlan.stats.sizeInBytes
+      val maxBytes = spark.sessionState.conf.filesMaxPartitionBytes
+      val internal = Seq(SessionsCol, PrevCol, LastRowCol, SidCol)
       val outPath = new org.apache.hadoop.fs.Path(batchPath, "out")
       val m = graft.sources.Sinks.writeParquetObserved(
-        local.join(adjusted.select(col("__u"), col("__base"), col("__merged"),
-            col("__violates")),
-            u === col("__u"))
-          .withColumn("session_id",
-            col("__graft_local") + col("__base") - col("__merged"))
-          .drop("__u", "__base", "__merged", "__graft_local")
-          .coalesce(outParts),
+        labeled.filter(!seam)
+          .withColumn("session_id", col(SidCol))
+          .drop(internal: _*)
+          .coalesce(graft.sources.Sinks.autoFoldPartitions(batchBytes, maxBytes)),
         outPath.toString,
         Seq(count(lit(1)).as("n"),
-          max(when(col("__violates"), u)).as("bad")),
-        dropCols = Seq("__violates"))
+          max(when(col(ViolatesCol), col(userCol))).as("bad")),
+        dropCols = Seq(ViolatesCol))
       val nBatch = graft.sources.Sinks.observedLong(m, "n")
       // an empty delta is a NORMAL day, not an error: it commits as a
       // no-op (state untouched), so a quiet-day nightly run succeeds and
@@ -168,26 +158,17 @@ object IncrementalSession {
         require(bad.isEmpty,
           s"batch interleaves in time with history for user $bad; " +
             "incremental sessionize requires per-user time-ordered batches")
-        val updated = adjusted.select(col("__u").as(userCol),
-          unix_micros(col("__last")).as(LastTsCol),
-          (col("__base") - col("__merged") + col("__n")).as(SessionsCol))
-        val newState = state match {
-          case Some(st) => updated.unionByName(
-            st.join(updated.select(col(userCol).as("__u")),
-              st(userCol) === col("__u"), "left_anti"))
-          case None => updated
-        }
         // the state carries EVERY user ever seen, not just this batch's —
         // a quiet day's tiny batch must not coalesce a year of accumulated
         // state into one file, so its sizing adds the previous state's
         // own on-disk bytes (one driver metadata call)
         val stateParts = graft.sources.Sinks.autoFoldPartitions(
-          BigInt(prev.map { case (_, p) =>
-            fs.getContentSummary(new org.apache.hadoop.fs.Path(p, "state"))
-              .getLength }.getOrElse(0L)) +
-            local.queryExecution.optimizedPlan.stats.sizeInBytes,
-          spark.sessionState.conf.filesMaxPartitionBytes)
-        newState.coalesce(stateParts).write.mode("overwrite")
+          BigInt(prevState.map(fs.getContentSummary(_).getLength)
+            .getOrElse(0L)) + batchBytes, maxBytes)
+        labeled.filter(col(LastRowCol))
+          .select(col(userCol), unix_micros(col(tsCol)).as(LastTsCol),
+            col(SidCol).as(SessionsCol))
+          .coalesce(stateParts).write.mode("overwrite")
           .parquet(new org.apache.hadoop.fs.Path(batchPath, "state").toString)
         // the observed count and the out files' FOOTERS come from
         // independent machinery, so write loss shows as their
@@ -197,8 +178,6 @@ object IncrementalSession {
             spark.sessionState.newHadoopConf())))
       }
     }
-    } finally adjusted.unpersist()
-    } finally local.unpersist()
     }
   }
 

@@ -421,6 +421,40 @@ object Sinks {
     }.sum
   }
 
+  /** `spark.read.parquet(path)` without its schema-inference job. The
+    * schema comes from one driver-side footer read, through the
+    * conversion Spark's inference applies under the session conf: the
+    * Spark schema the writer stored, else the parquet types under the
+    * session's binaryAsString / int96 / NTZ / nanosAsLong settings. */
+  private[graft] def readParquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(org.apache.spark.sql.execution.datasources.parquet
+      .ParquetFileFormat.readSchemaFromFooter(firstFooter(spark, path),
+        new org.apache.spark.sql.execution.datasources.parquet
+          .ParquetToSparkSchemaConverter(spark.sessionState.conf)))
+      .parquet(path)
+
+  /** The footer of the first parquet data file under `path` (itself when
+    * it is one), skipping `_`/`.`-prefixed files as Spark's listing does.
+    * Like inference without `mergeSchema`, callers take every file to
+    * share its schema. */
+  private[graft] def firstFooter(spark: SparkSession,
+      path: String): org.apache.parquet.hadoop.Footer = {
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new org.apache.hadoop.fs.Path(path)
+    val it = p.getFileSystem(conf).listFiles(p, true)
+    while (it.hasNext) {
+      val f = it.next().getPath
+      val n = f.getName
+      if (n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")) {
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
+        try return new org.apache.parquet.hadoop.Footer(f, reader.getFooter)
+        finally reader.close()
+      }
+    }
+    throw new IllegalArgumentException(s"no parquet data file under $path")
+  }
+
   /** Driver-side parallelism for metadata reads (footers, manifests,
     * listings). Sized for object-store RPC latency hiding, small enough
     * not to trip request-rate throttles (S3 allows thousands of GETs/s

@@ -27,10 +27,12 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   */
 object Tables {
 
-  /** Load one testdata table by name with schema normalization. */
+  /** Load one testdata table by name with schema normalization. The
+    * schema comes from one footer read ([[Sinks.readParquet]]), so a load
+    * starts no Spark job. */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     if (name == "events") events(spark, sfDir)
-    else spark.read.parquet(s"$sfDir/$name.parquet")
+    else Sinks.readParquet(spark, s"$sfDir/$name.parquet")
   }
 
   def events(spark: SparkSession, sfDir: String): DataFrame = {
@@ -38,7 +40,7 @@ object Tables {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     try {
       val path = s"$sfDir/events.parquet"
-      val raw = spark.read.parquet(path)
+      val raw = Sinks.readParquet(spark, path)
       raw.schema("ts").dataType match {
         case LongType if tsIsNanosAnnotated(spark, path) =>
           raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -69,29 +71,14 @@ object Tables {
     */
   private def tsIsNanosAnnotated(spark: SparkSession, path: String): Boolean = {
     import org.apache.parquet.schema.LogicalTypeAnnotation
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    val it = fs.listFiles(p, true)
-    var first: org.apache.hadoop.fs.Path = null
-    while (first == null && it.hasNext) {
-      val f = it.next()
-      val n = f.getPath.getName
-      if (f.isFile && n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith("."))
-        first = f.getPath
-    }
-    if (first == null) return false
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(first, conf))
-    try {
-      val schema = reader.getFooter.getFileMetaData.getSchema
-      if (!schema.containsField("ts")) return false
-      schema.getType(schema.getFieldIndex("ts")).getLogicalTypeAnnotation match {
+    val schema = Sinks.firstFooter(spark, path).getParquetMetadata
+      .getFileMetaData.getSchema
+    schema.containsField("ts") &&
+      (schema.getType(schema.getFieldIndex("ts")).getLogicalTypeAnnotation match {
         case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
           t.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS
         case _ => false
-      }
-    } finally reader.close()
+      })
   }
 
   val names: Seq[String] = Seq("region", "nation", "customer", "supplier",

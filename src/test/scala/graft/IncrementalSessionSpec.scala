@@ -25,22 +25,42 @@ class IncrementalSessionSpec extends AnyFunSuite {
   }
 
   /** The full-scan answer: classic lag+sum sessionize over everything. */
-  private def fullScan(all: DataFrame): Map[(Long, Long), Long] = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"))
-    all.withColumn("prev", lag(col("ts"), 1).over(w))
-      .withColumn("sid", sum(when(col("prev").isNull ||
-          unix_micros(col("ts")) - unix_micros(col("prev")) > GapUs, 1L)
-        .otherwise(0L))
-        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .select(col("user_id"), unix_micros(col("ts")).as("us"), col("sid"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-  }
+  private def fullScan(all: DataFrame): Map[(Long, Long), Long] =
+    fullScanRows(all).map { case (u, us, sid) => (u, us) -> sid }.toMap
 
   private def incremental(base: String): Map[(Long, Long), Long] =
-    IncrementalSession.read(spark, base)
-      .select(col("user_id"), unix_micros(col("ts")).as("us"),
+    incrementalRows(base).map { case (u, us, sid) => (u, us) -> sid }.toMap
+
+  /** Every (user, us, session id) row, sorted: a multiset compare for
+    * batches with duplicate timestamps, which the id maps collapse. */
+  private def fullScanRows(all: DataFrame): Seq[(Long, Long, Long)] = {
+    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"))
+    rowsOf(all.withColumn("prev", lag(col("ts"), 1).over(w))
+      .withColumn("session_id", sum(when(col("prev").isNull ||
+          unix_micros(col("ts")) - unix_micros(col("prev")) > GapUs, 1L)
+        .otherwise(0L))
+        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))))
+  }
+
+  private def incrementalRows(base: String): Seq[(Long, Long, Long)] =
+    rowsOf(IncrementalSession.read(spark, base))
+
+  private def rowsOf(sessions: DataFrame): Seq[(Long, Long, Long)] =
+    sessions.select(col("user_id"), unix_micros(col("ts")),
         col("session_id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      .toSeq.sorted
+
+  private def append(rows: Seq[(Long, Long)], base: String): Long =
+    IncrementalSession.appendBatch(df(rows), base, "user_id", "ts", GapUs)
+
+  /** The stitch state a committed batch left: user -> (last us, sessions). */
+  private def stateOf(base: String, batch: Int): Map[Long, (Long, Long)] = {
+    val st = spark.read.parquet(s"$base/batch_$batch/state")
+    assert(st.columns.toSeq ===
+      Seq("user_id", "__graft_last_ts", "__graft_sessions"))
+    st.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+  }
 
   private def fresh(name: String): String = {
     val p = graft.sources.Sinks.scratchDir("inc_session_spec") + s"/$name"
@@ -154,6 +174,80 @@ class IncrementalSessionSpec extends AnyFunSuite {
     IncrementalSession.appendBatch(df(Seq((1L, 10 * M + 1))), base,
       "user_id", "ts", GapUs)
     assert(incremental(base).values.toSet === Set(1L))
+  }
+
+  test("a batch event at exactly the user's last seen ts is accepted and continues the session") {
+    val base = fresh("tie_equal")
+    val b0 = Seq((1L, 10 * M), (2L, 0 * M))
+    val b1 = Seq((1L, 10 * M), (1L, 20 * M), (2L, 0 * M))
+    append(b0, base)
+    append(b1, base)
+    assert(incrementalRows(base) === fullScanRows(df(b0 ++ b1)))
+    assert(incrementalRows(base).map(_._3).toSet === Set(1L))
+    assert(stateOf(base, 1) === Map(1L -> (20 * M, 1L), 2L -> (0 * M, 1L)))
+  }
+
+  test("duplicate timestamps inside a batch, straddling a session boundary, match the full scan") {
+    val base = fresh("dups")
+    // user 1: duplicates continuing history, then duplicates opening a
+    // new session 31 min later; batch 2 repeats the last seen ts twice.
+    // user 2 first appears with a duplicated first event.
+    val b0 = Seq((1L, 0 * M))
+    val b1 = Seq((1L, 10 * M), (1L, 10 * M), (1L, 41 * M), (1L, 41 * M),
+      (1L, 41 * M), (2L, 5 * M), (2L, 5 * M))
+    val b2 = Seq((1L, 41 * M), (1L, 41 * M), (1L, 100 * M), (2L, 5 * M))
+    for (b <- Seq(b0, b1, b2)) append(b, base)
+    val got = incrementalRows(base)
+    assert(got.size === (b0 ++ b1 ++ b2).size)
+    assert(got === fullScanRows(df(b0 ++ b1 ++ b2)))
+    assert(got.filter(_._1 == 1L).map(r => r._2 -> r._3).distinct ===
+      Seq(0 * M -> 1L, 10 * M -> 1L, 41 * M -> 2L, 100 * M -> 3L))
+  }
+
+  test("extra batch columns stay in out, in order, before session_id; state keeps its three") {
+    val base = fresh("extra_cols")
+    import spark.implicits._
+    def batch(rows: Seq[(String, Long, Long)]): DataFrame =
+      rows.toDF("event_type", "user_id", "us").select(col("event_type"),
+        col("user_id"), timestamp_micros(col("us")).as("ts"))
+    IncrementalSession.appendBatch(batch(Seq(("view", 1L, 0 * M))), base,
+      "user_id", "ts", GapUs)
+    IncrementalSession.appendBatch(
+      batch(Seq(("click", 1L, 5 * M), ("buy", 1L, 60 * M))), base,
+      "user_id", "ts", GapUs)
+    val out = IncrementalSession.read(spark, base)
+    assert(out.columns.toSeq === Seq("event_type", "user_id", "ts", "session_id"))
+    assert(out.select(col("event_type"), unix_micros(col("ts")),
+        col("session_id")).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet ===
+      Set(("view", 0 * M, 1L), ("click", 5 * M, 1L), ("buy", 60 * M, 2L)))
+    assert(stateOf(base, 1) === Map(1L -> (60 * M, 2L)))
+  }
+
+  test("a user seen only in history keeps their state across later appends and stitches after") {
+    val base = fresh("history_only")
+    val b0 = Seq((1L, 0 * M), (1L, 100 * M), (2L, 0 * M))
+    val b1 = Seq((2L, 10 * M))
+    val b2 = Seq((2L, 100 * M))
+    val b3 = Seq((1L, 110 * M), (1L, 200 * M))
+    for (b <- Seq(b0, b1, b2)) append(b, base)
+    assert(stateOf(base, 1)(1L) === (100 * M, 2L))
+    assert(stateOf(base, 2) === Map(1L -> (100 * M, 2L), 2L -> (100 * M, 2L)))
+    append(b3, base)
+    assert(incrementalRows(base) === fullScanRows(df(b0 ++ b1 ++ b2 ++ b3)))
+    assert(incremental(base)((1L, 110 * M)) === 2L) // continues session 2
+    assert(incremental(base)((1L, 200 * M)) === 3L)
+  }
+
+  test("an append onto a store with one committed batch starts at most 4 Spark jobs") {
+    val base = fresh("job_count")
+    append(Seq((1L, 0 * M), (2L, 0 * M), (3L, 0 * M)), base)
+    val b1 = df(Seq((1L, 10 * M), (2L, 60 * M), (4L, 0 * M)))
+    val (n, jobs) = JobCount(spark) {
+      IncrementalSession.appendBatch(b1, base, "user_id", "ts", GapUs)
+    }
+    assert(n === 3L)
+    assert(jobs <= 4, s"appendBatch started $jobs Spark jobs")
   }
 
   test("empty batch is a committed no-op; missing base dir reads fail loudly") {

@@ -1037,6 +1037,29 @@ MUTANTS47 = [
 ]
 
 
+# batch 48: the one-window session append — each known user's seam row
+# joins the batch's window. Run with `python3 tools/mutation.py 48`.
+INCSESS = "src/main/scala/graft/ops/IncrementalSession.scala"
+SUITES48 = ["graft.IncrementalSessionSpec"]
+
+MUTANTS48 = [
+    ("IS481", INCSESS, "the seam row sorts after tied batch rows (a tie opens a new session)",
+     "      .orderBy(col(tsCol), col(SessionsCol).asc_nulls_last)",
+     "      .orderBy(col(tsCol), col(SessionsCol).asc_nulls_first)"),
+    ("IS482", INCSESS, "the seen-ts gate is dropped (an interleaving batch commits)",
+     "      .withColumn(ViolatesCol, col(tsCol) < max(when(seam, col(tsCol)))",
+     "      .withColumn(ViolatesCol, col(tsCol) < min(when(lit(false), col(tsCol)))"),
+    ("IS483", INCSESS, "the state row is the user's first row instead of the last",
+     "      .withColumn(LastRowCol, lead(lit(1), 1).over(w).isNull)",
+     "      .withColumn(LastRowCol, lag(lit(1), 1).over(w).isNull)"),
+    ("IS484", INCSESS, "the seam weight is ignored (the sessions base is dropped)",
+     "      .withColumn(SidCol, sum(when(seam, col(SessionsCol))",
+     "      .withColumn(SidCol, sum(when(seam, lit(0L))"),
+    ("IS485", INCSESS, "gap rule > -> >= (a gap of exactly the threshold opens a session)",
+     "            unix_micros(col(PrevCol)) > gapMicros, 1L)",
+     "            unix_micros(col(PrevCol)) >= gapMicros, 1L)"),
+]
+
 # Mutants whose seam no longer exists: (batch, id, file, mutant, reason).
 # They stay in MUTATION.md with the reason instead of a verdict.
 RETIRED = [
@@ -1076,6 +1099,7 @@ BATCHES = {
     "45": (MUTANTS45, SUITES45, "Batch 45 \u2014 round-20 measurement hardening"),
     "46": (MUTANTS46, SUITES46, "Batch 46 \u2014 one publish path for the generational stores"),
     "47": (MUTANTS47, SUITES47, "Batch 47 \u2014 one commit protocol for every store"),
+    "48": (MUTANTS48, SUITES48, "Batch 48 \u2014 one window per session append"),
 }
 
 
