@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BinaryType, LongType}
+import org.apache.spark.sql.types.{BinaryType, LongType, StructType}
 
 /** An INCREMENTALLY-INGESTED STATE TABLE: the rollup pattern
   * (q105/q108–q116 — fold the raw log once into mergeable partials,
@@ -40,71 +40,71 @@ import org.apache.spark.sql.types.{BinaryType, LongType}
   * survives any number of folds (StreamingRollupIngestSpec pins the
   * same-id re-invoke, including after a mid-stream compaction).
   *
-  * Grain partitioning: a store whose key includes a time grain can be
-  * laid out with one sub-store per grain value (`day=2024-01-05/…`, see
-  * [[appendStatesByGrain]]). Maintenance then touches only the grains
-  * it names — [[compactGrains]] folds a RANGE (compact = O(touched
-  * grains), not O(store)), [[dropGrains]] retires old grains atomically,
-  * and [[readGrains]] prunes unqueried grains' files at listing time —
-  * the difference between a store that survives years of daily ingest
-  * at 100 TB and one whose every maintenance run re-folds all history.
+  * Layout: one sub-store per grain value (`day=2024-01-05/…`, see
+  * [[appendStatesByGrain]]), each a self-contained
+  * [[GenerationalBatches]] store. Maintenance touches only the grains it
+  * names — [[compactGrains]] folds a RANGE (compact = O(touched grains),
+  * not O(store)), [[dropGrains]] retires old grains atomically, and
+  * [[readGrains]] prunes unqueried grains' files at listing time — the
+  * difference between a store that survives years of daily ingest at
+  * 100 TB and one whose every maintenance run re-folds all history. A
+  * FLAT store ([[appendStates]], [[compact]], [[read]], [[regrain]]) is
+  * the same layout with one fixed grain: the flat ops add the constant
+  * column `graft_flat = 'all'` on the way in, drop it on the way out, and
+  * so run on the one sub-store `graft_flat=all`. A store whose root holds
+  * `batch_*` dirs (the retired flat layout) is not migrated; every op
+  * refuses it by name.
   *
   * Storage protocol: [[GenerationalBatches]] — the same marker-last
   * commit, folded-dir tombstones, crashed-dir recovery, and single-writer
   * lease the incremental session store uses, crash-matrixed by both
-  * specs. A FLAT store takes one lease at the store root for any
-  * maintenance op. A GRAINED store takes one lease STRIPE per grain it
-  * touches (`_WRITER_LEASE.g-<hex>` at the store root, acquired in
-  * sorted grain order): maintenance over DISJOINT grain ranges runs
-  * concurrently — a month-long backfill compaction does not stop the
-  * streaming ingest's next append — while overlapping ranges collide
-  * fail-fast on their first shared stripe (the lease never blocks, so
-  * there is nothing to deadlock; the sorted order just makes the
-  * collision point deterministic). A grained store's state family is
-  * pinned by a one-time STORE-GENESIS marker (see [[ensureGenesis]]):
-  * written under its own root stripe before any grain stripe is taken,
-  * verified by every subsequent ingest as a string compare — which
-  * closed round 17's two accepted caveats (the per-ingest newest-batch
-  * schema probe with its vanished-batch retry is gone, and two
-  * simultaneous FIRST ingests with different families can no longer
-  * both pass an empty-store gate and create a mixed store: one writes
-  * the genesis, the other fails loudly against it). Readers take no
-  * lease; a read that must not straddle a compaction's cleanup window
-  * should snapshot (see [[read]]) — and `cleanupDelayMs` on the
-  * maintenance ops turns that cleanup cliff into a bounded grace window
-  * (folded files linger, dead but readable, until the fold's commit is
-  * older than the window).
+  * specs. Every op takes one lease STRIPE per grain it touches
+  * (`_WRITER_LEASE.g-<hex>` at the store root, acquired in sorted grain
+  * order): maintenance over DISJOINT grain ranges runs concurrently — a
+  * month-long backfill compaction does not stop the streaming ingest's
+  * next append — while overlapping ranges collide fail-fast on their
+  * first shared stripe (the lease never blocks, so there is nothing to
+  * deadlock; the sorted order just makes the collision point
+  * deterministic). The store's state family is pinned by a one-time
+  * STORE-GENESIS marker (see [[ensureGenesis]]): written under its own
+  * root stripe before any grain stripe is taken and verified by every
+  * ingest as a string compare, so two simultaneous FIRST ingests with
+  * different families cannot both create a mixed store (one writes the
+  * genesis, the other fails loudly against it). Readers take no lease; a
+  * read that must not straddle a compaction's cleanup window should
+  * snapshot (see [[read]]) — and `cleanupDelayMs` on the maintenance ops
+  * turns that cleanup cliff into a bounded grace window (folded files
+  * linger, dead but readable, until the fold's commit is older than the
+  * window).
   *
-  * Read metadata is BOUNDED by a manifest per sub-store — per grain on a
-  * grained store, at the root on a flat one
+  * Read metadata is BOUNDED by a manifest per sub-store
   * ([[GenerationalBatches.Manifest]]): every maintenance op rewrites,
   * after its last commit, one `_MANIFEST` file per touched sub-store
   * listing its live batches, ingest ids, and data files. [[readGrains]]
-  * and the flat [[read]] resolve through the manifest with ONE file read
-  * — no per-batch listStatus/marker/ingest-id reads — and pin exactly
-  * the manifest's files (a built-in snapshot); a missing manifest falls
-  * back to listing. Writers never consult manifests (recovery and the
-  * replay guard re-list — the marker protocol stays the truth), so a
-  * crash between a commit and the manifest rewrite costs readers only
+  * and [[read]] resolve through the manifest with ONE file read — no
+  * per-batch listStatus/marker/ingest-id reads — and pin exactly the
+  * manifest's files (a built-in snapshot); a missing manifest falls back
+  * to listing. Writers never consult manifests (recovery and the replay
+  * guard re-list — the marker protocol stays the truth), so a crash
+  * between a commit and the manifest rewrite costs readers only
   * staleness: they serve the previous committed snapshot until the next
   * maintenance op heals it — and the heal runs FIRST thing after that
   * op's recover() (see [[healManifestIfStale]]), so a stale manifest
   * whose files recovery deletes is rewritten before the op's Spark job,
   * not after it.
   *
-  * Object stores: the grained ingest/compaction publishes each grain by
-  * RENAMING a staged partition dir into its batch dir — see
+  * Object stores: ingest and compaction publish each grain by RENAMING a
+  * staged partition dir into its batch dir — see
   * [[GenerationalBatches.publish]] for what that means on S3A.
   *
   * At 100 TB: the store is O(keys × grain) — dashboard-sized by
   * construction — while the log it summarizes is O(events); ingest costs
-  * one scan of the DELTA, compaction one scan of the touched grains
-  * (or of the whole — still small — store when flat), and queries never
-  * touch the log.
+  * one scan of the DELTA, compaction one scan of the touched grains, and
+  * queries never touch the log.
   */
 /** One row of [[RollupStore.stats]]: the metadata a maintenance
   * scheduler or capacity dashboard reads per sub-store. `grain` is the
-  * grain value, or the empty string for a flat store's root. */
+  * grain value; a flat store has one row, for its fixed grain `all`. */
 case class StoreGrainStats(
     grain: String,
     live_batches: Int,
@@ -120,7 +120,8 @@ object RollupStore {
   import org.apache.hadoop.fs.{FileSystem, Path}
 
   /** Append one batch of state rows (`keyCols` + a BINARY `stateCol`;
-    * exactly those columns, so every batch unions cleanly). Returns the
+    * exactly those columns, so every batch unions cleanly) to a flat
+    * store: [[appendStatesByGrain]] on its one fixed grain. Returns the
     * row count. NULL states are refused at the door: inside the store a
     * NULL state is indistinguishable from "key absent in this batch",
     * and the producer aggregates never emit one anyway.
@@ -144,59 +145,25 @@ object RollupStore {
       onStep: String => Unit,
       leaseStaleMs: Long, cleanupDelayMs: Long): Long = {
     requireStateBatch(states, keyCols, stateCol)
-    requireValidIngestId(ingestId)
-    val spark = states.sparkSession
-    val fs = fsOf(spark, baseDir)
-    val base = new Path(baseDir)
-    graft.sources.Sinks.withSingleWriterLease(fs,
-      GenerationalBatches.leasePath(base), leaseStaleMs) {
-      val committed = GenerationalBatches.recover(fs, base, cleanupDelayMs)
-      healManifestIfStale(fs, base, committed)
-      onStep("recovered")
-      // REPLAY GUARD: an already-committed ingest id means this delivery's
-      // rows are already in the store — a committed no-op, like the empty
-      // delta, before any Spark job runs
-      if (ingestId.exists(
-          GenerationalBatches.seenIngestIds(fs, committed).contains)) {
-        onStep("committed"); return 0L
-      }
-      // the door check above validates the batch in ISOLATION; against an
-      // existing store also require the same schema, or a funnel store
-      // would accept a retention batch (both pass the type gate) and only
-      // explode at compact/read time, far from the offending ingest.
-      // DELIBERATELY a newest-batch probe rather than a genesis file
-      // (unlike the grained path): flat [[regrain]] legitimately REWRITES
-      // the store's schema in place, which a pinned genesis would fight;
-      // the probe runs under the root lease (no first-write race), and
-      // its one footer read per ingest is trivial next to the append's
-      // own Spark job
-      committed.sortBy(_._1).lastOption.foreach { case (_, p) =>
-        schemaGate(spark, new Path(p, "states"), states)
-      }
-      GenerationalBatches.publish(fs, base, committed, Nil, ingestId.toSet,
-        0L, onStep, GenerationalBatches.writeManifest(fs, base)) { batchPath =>
-        val dataPath = new Path(batchPath, "states")
-        // ONE pass over the delta: the write itself observes the row
-        // count and the NULL-state count. The batch dir is marker-less
-        // until commit, so a NULL-carrying delta just deletes the
-        // unpublished dir
-        val m = graft.sources.Sinks.writeParquetObserved(states,
-          dataPath.toString, Seq(count(lit(1)).as("n"),
-            sum(when(col(stateCol).isNull, 1L).otherwise(0L)).as("nulls")))
-        val n = graft.sources.Sinks.observedLong(m, "n")
-        val nulls = graft.sources.Sinks.observedLong(m, "nulls")
-        if (nulls > 0) fs.delete(batchPath, true)
-        require(nulls == 0,
-          s"$nulls NULL $stateCol rows; the *_state producers never emit " +
-            "NULL — filter placeholder rows before ingest")
-        // a quiet day commits as a no-op, like the session store's empty
-        // delta
-        if (n == 0) None
-        else Some(GenerationalBatches.Landed(n,
-          graft.sources.Sinks.parquetRowCount(fs, dataPath,
-            spark.sessionState.newHadoopConf())))
-      }
-    }
+    appendStatesByGrain(states.withColumn(FlatGrainCol, lit(FlatGrain)),
+      baseDir, flatKeys(keyCols, stateCol), FlatGrainCol, stateCol,
+      ingestId, onStep, leaseStaleMs, cleanupDelayMs)
+  }
+
+  /** The fixed grain of a FLAT store: the flat ops add this constant
+    * column on the way in and drop it on the way out, so a flat store is
+    * the one sub-store `graft_flat=all` of the grained layout. */
+  private[graft] val FlatGrainCol = "graft_flat"
+  private[graft] val FlatGrain = "all"
+
+  private[graft] def flatDir(base: Path): Path =
+    new Path(base, grainDirName(FlatGrainCol, FlatGrain))
+
+  /** A flat store's key columns plus its fixed grain column. */
+  private def flatKeys(keyCols: Seq[String], stateCol: String): Seq[String] = {
+    require(!(keyCols :+ stateCol).contains(FlatGrainCol),
+      s"$FlatGrainCol is the flat store's reserved grain column")
+    keyCols :+ FlatGrainCol
   }
 
   /** [[appendStates]] for a GRAIN-PARTITIONED store: the delta is split
@@ -244,41 +211,30 @@ object RollupStore {
     val spark = states.sparkSession
     val fs = fsOf(spark, baseDir)
     val base = new Path(baseDir)
-    // ONE pass over the delta (guide §1.2: no extra passes, no cached
-    // copy): the hidden staged partitioned write IS the delta's only
-    // computation, observing the NULL gates in the same job; the grain
-    // inventory and the per-grain row counts the footer verification
-    // checks against then come from the staged files' own footers —
-    // driver metadata reads, not jobs.
+    // ONE pass over the delta: the hidden staged partitioned write IS
+    // the delta's only computation, observing the NULL gates in the same
+    // job; the grain inventory and per-grain row counts then come from
+    // the staged files' own footers — driver metadata reads, not jobs.
     // Staging before the stripes is safe: the stage dir is hidden and
-    // UUID-named (readers list only visible `<col>=` dirs; no two ops
-    // share a stage), and a crashed stage is swept by a later op.
-    // Replays stage and then discard instead of skipping the write — the
-    // replay path pays the staged bytes, the common path saves a whole
-    // pass; at-least-once channels replay rarely.
+    // UUID-named, and a crashed stage is swept by a later op. Replays
+    // stage and then discard instead of skipping the write: at-least-once
+    // channels replay rarely.
     fs.mkdirs(base)
     // STORE-GENESIS gate FIRST — before the staged write, before any
-    // stripe (see [[ensureGenesis]]): the fingerprint verify needs only
-    // the batch's schema, so a mismatched family fails here without
+    // stripe (see [[ensureGenesis]]): a mismatched family fails without
     // paying a staged write of its delta. A refused ingest can leave a
     // fresh store with a stamped genesis and no batches — the same state
-    // as a first ingest that crashed right after its genesis, which the
-    // protocol already handles (same-family retry proceeds, other
-    // families fail loudly, deliberate re-stamp = delete the file).
+    // as a first ingest that crashed right after its genesis.
     ensureGenesis(spark, fs, base, states.schema, grainCol, leaseStaleMs)
     onStep("genesis")
     val stageId = java.util.UUID.randomUUID().toString
     val stage = new Path(base, s".ingest-$stageId")
     // STAGE GUARD: a stripe-prefixed lease held for the whole op, taken
-    // BEFORE the staged write. Staging now precedes the grain stripes
-    // (the grain set is only known from the staged footers), so without
-    // this a CONCURRENT op's stage sweep — seeing no fresh foreign
-    // stripe — would treat our live stage as garbage and delete it
-    // mid-write. The guard is what the grain stripes used to provide
-    // implicitly: "a fresh foreign stripe means a live op's working set
-    // may be here, sweep only stale entries". Unique path per op (no
-    // contention); released on every exit; a crashed op's guard goes
-    // stale and is collected like any orphan stripe.
+    // BEFORE the staged write, which precedes the grain stripes (the
+    // grain set is only known from the staged footers): a concurrent
+    // op's stage sweep sees a fresh foreign stripe and leaves our live
+    // stage alone. Unique path per op; released on every exit; a crashed
+    // op's guard goes stale and is collected like any orphan stripe.
     val stageGuard = new Path(base, StripePrefix + hexOf(s"stage:$stageId"))
     val guardToken = graft.sources.Sinks.acquireLease(fs, stageGuard,
       leaseStaleMs)
@@ -314,6 +270,10 @@ object RollupStore {
     // parallel, overlapping ones fail fast on the first shared stripe
     graft.sources.Sinks.withLeases(fs,
       grains.map(g => grainLeasePath(base, g)), leaseStaleMs) {
+      // the genesis again, now under the stripes: an in-place [[regrain]]
+      // re-stamps it while holding its stripe, so the family verified
+      // before the staged write may no longer be the store's
+      ensureGenesis(spark, fs, base, states.schema, grainCol, leaseStaleMs)
       sweepStageDirs(fs, base, ".ingest-", grains.toSet, leaseStaleMs,
         exclude = Set(stage.getName),
         heldStripes = Set(stageGuard.getName))
@@ -375,11 +335,6 @@ object RollupStore {
       case Some((bNames, _, _))
           if bNames.toSet != live.map(_._2.getName).toSet =>
         GenerationalBatches.writeManifest(fs, dir)
-      // ABSENT or TORN (missing terminator, crashed delete-before-rename
-      // window) also heals — otherwise a sub-store that thereafter sees
-      // only no-commit ops (replayed ingests, janitor passes) would
-      // never regain its manifest and every read would pay the
-      // per-batch listing fallback forever
       case None if live.nonEmpty =>
         GenerationalBatches.writeManifest(fs, dir)
       case _ => ()
@@ -502,26 +457,25 @@ object RollupStore {
       }
   }
 
-  /** STORE-GENESIS marker for grained stores: `_STORE_GENESIS` at the
-    * root records the state family + layout fingerprint (grain column +
-    * every column's name:type), written ONCE under its own root stripe
+  /** STORE-GENESIS marker: `_STORE_GENESIS` at the root records the
+    * state family + layout fingerprint (grain column + every column's
+    * name:type), written ONCE under its own root stripe
     * (`_WRITER_LEASE.genesis` — the name cannot collide with a grain
     * stripe, whose prefix is `_WRITER_LEASE.g-`) BEFORE any grain stripe
-    * is taken, then verified by every subsequent ingest as a pure string
-    * compare — no parquet schema probe, no vanished-batch retry. Closes
-    * the double-first-ingest race striping accepted in round 17: two
-    * SIMULTANEOUS first ingests with different families could each pass
-    * an empty-store probe and create a mixed store that stayed broken
-    * until manual repair; with the genesis, exactly one racer writes the
-    * marker (create-exclusive root stripe) and the other verifies
-    * against it and fails LOUDLY — or, when truly simultaneous inside
-    * the marker-write window, fails fast on the genesis stripe itself
-    * and succeeds on retry. Pre-genesis stores upgrade lazily: the first
-    * op that finds batches but no genesis derives the fingerprint from
-    * the newest committed batch (under the stripe, with the vanished-
+    * is taken, then verified by every ingest as a pure string compare,
+    * before its staged write and again under its grain stripes. Of two
+    * SIMULTANEOUS first ingests with different families exactly one
+    * writes the marker (create-exclusive root stripe) and the other
+    * verifies against it and fails LOUDLY — or, when truly simultaneous
+    * inside the marker-write window, fails fast on the genesis stripe
+    * itself and succeeds on retry. A store without a genesis (from
+    * before it existed, or mid-[[regrain]]) re-derives it lazily: the
+    * first ingest that finds batches but no genesis takes the fingerprint
+    * of the newest committed batch (under the stripe, with the vanished-
     * batch retry) and writes it before verifying. The genesis outlives
     * [[dropGrainsWhere]] retiring every grain — the store's family is
-    * part of its identity, not of its contents. */
+    * part of its identity, not of its contents; [[regrain]] is the one
+    * op that re-stamps it. */
   private[graft] val GenesisFile = "_STORE_GENESIS"
   private val GenesisLease = "_WRITER_LEASE.genesis"
 
@@ -529,7 +483,7 @@ object RollupStore {
     * embedded newlines ESCAPED, or a crafted column name (e.g.
     * `"day:date\ncol=u"`) would make two different layouts render the
     * same fingerprint text and pass the genesis verify. */
-  private[graft] def fingerprintOf(schema: org.apache.spark.sql.types.StructType,
+  private[graft] def fingerprintOf(schema: StructType,
       grainCol: String): String = {
     def esc(s: String) = s.replace("\\", "\\\\")
       .replace("\n", "\\n").replace("\r", "\\r")
@@ -549,10 +503,8 @@ object RollupStore {
     * path re-derives the fingerprint under the genesis lease — from the
     * store's own batches when any exist, so the store's family wins,
     * never a torn read or a mismatched ingest — and rewrites the file
-    * complete. On an EMPTY store the remnant must be a prefix of the
-    * incoming terminated text (the tear model) or the op fails loudly —
-    * a torn genesis never silently re-stamps the store's identity.
-    * Without the terminator a torn genesis would brick every
+    * complete (an EMPTY store checks the remnant against the incoming
+    * family instead). Without the terminator a torn genesis would brick every
     * subsequent ingest on a fingerprint compare that can never match. */
   private def readGenesis(fs: FileSystem, base: Path): Option[String] =
     try {
@@ -593,7 +545,7 @@ object RollupStore {
   }
 
   private def ensureGenesis(spark: SparkSession, fs: FileSystem,
-      base: Path, schema: org.apache.spark.sql.types.StructType,
+      base: Path, schema: StructType,
       grainCol: String, staleMs: Long): Unit = {
     val incoming = fingerprintOf(schema, grainCol)
     def verify(genesis: String): Unit =
@@ -605,6 +557,7 @@ object RollupStore {
     readGenesis(fs, base) match {
       case Some(g) => verify(g)
       case None =>
+        listGrainDirs(fs, base) // refuses the retired layout before any write
         graft.sources.Sinks.withSingleWriterLease(fs,
           new Path(base, GenesisLease), staleMs) {
           readGenesis(fs, base) match {
@@ -619,20 +572,14 @@ object RollupStore {
                   writeGenesis(fs, base, derived)
                   verify(derived)
                 case None =>
-                  // EMPTY store (no committed batch anywhere — e.g.
-                  // every grain dropped): the only family evidence left
-                  // is the genesis file itself. A torn or pre-terminator
-                  // file read as absent above, but it must still BIND
-                  // the store's identity ("genesis outlives dropping
-                  // every grain"): adopt the incoming family only when
-                  // the remnant is consistent with it — under the tear
-                  // model (a partially-copied rename) the remnant is a
-                  // byte prefix of the complete terminated text, so a
-                  // crash-retried first ingest of the SAME family heals
-                  // and proceeds, while a remnant of a DIFFERENT family
-                  // fails loudly instead of silently re-stamping
-                  // (ADVICE r18). Deliberate re-stamping = delete the
-                  // torn file first.
+                  // EMPTY store (e.g. every grain dropped): a torn or
+                  // pre-terminator genesis read as absent above must
+                  // still BIND the store's identity. Under the tear
+                  // model the remnant is a byte prefix of the complete
+                  // text, so a crash-retried first ingest of the SAME
+                  // family heals and proceeds, while a remnant of a
+                  // DIFFERENT family fails loudly. Deliberate
+                  // re-stamping = delete the torn file first.
                   readRawGenesis(fs, base).foreach { raw =>
                     require(terminatedGenesis(incoming).startsWith(raw),
                       s"the store at $base holds a torn or pre-terminator " +
@@ -683,28 +630,18 @@ object RollupStore {
         m.contains("Path does not exist") || m.contains("FileNotFound"))
     }
 
-  /** Fold every committed batch into ONE batch with ONE row per key: the
+  /** Fold every committed batch of a flat store into ONE batch with ONE
+    * row per key — [[compactGrains]] on its one fixed grain: the
     * partials of each key combined state-to-state via `combine` (the
-    * family's combine twin, e.g.
-    * `BehavioralFunctions.funnel_state_combine`). Pure maintenance — any
-    * downstream merge reads the same event multiset before and after
-    * (the combine twins' associativity). Verified before commit: the
-    * written files' footer row count must equal the fold's own row count
-    * (one row per key, by construction of the groupBy). Ingest ids of
-    * the folded batches are carried into the compacted batch, so the
-    * replay guard survives the fold. Crash-ordering and `onStep` seam as
-    * in `IncrementalSession.compactBatches` (recovered / written /
-    * committed / cleaned). A positive `cleanupDelayMs` is the
-    * SNAPSHOT-READER GRACE WINDOW: the folded dirs stay dead from the
-    * commit on (the marker decides what is served) but their FILES are
-    * deleted only by a later maintenance run once the fold's commit is
-    * `cleanupDelayMs` old — a snapshot read planned before the fold
-    * keeps a bounded window to finish instead of dying the instant
-    * cleanup runs. Pass the same window to every maintenance op on one
-    * store (the smallest value passed defines the real horizon). A store
-    * (or grain) whose maintenance cadence ENDS would keep its dead
-    * folded bytes forever — [[sweepExpired]] is the janitor for that
-    * tail. Returns the compacted row count. */
+    * family's combine twin, e.g. `BehavioralFunctions.funnel_state_combine`).
+    * Pure maintenance — any downstream merge reads the same event
+    * multiset before and after (the combine twins' associativity).
+    * Ingest ids of the folded batches are carried into the compacted
+    * batch, so the replay guard survives the fold. A positive
+    * `cleanupDelayMs` is the SNAPSHOT-READER GRACE WINDOW of
+    * [[GenerationalBatches.recover]]: folded files outlive the fold's
+    * commit by that long, and [[sweepExpired]] reclaims them once a
+    * grain's maintenance ends. Returns the compacted row count. */
   def compact(spark: SparkSession, baseDir: String, keyCols: Seq[String],
       combine: Column => Column, stateCol: String = "state",
       targetPartitions: Int = 32,
@@ -716,18 +653,10 @@ object RollupStore {
   private[graft] def compact(spark: SparkSession, baseDir: String,
       keyCols: Seq[String], combine: Column => Column, stateCol: String,
       targetPartitions: Int, onStep: String => Unit,
-      leaseStaleMs: Long, cleanupDelayMs: Long): Long = {
-    require(targetPartitions >= 0,
-      s"targetPartitions must be positive (or 0 for auto-sizing from " +
-        s"input bytes), got $targetPartitions")
-    val fs = fsOf(spark, baseDir)
-    val base = new Path(baseDir)
-    graft.sources.Sinks.withSingleWriterLease(fs,
-      GenerationalBatches.leasePath(base), leaseStaleMs) {
-      foldDir(spark, fs, base, keyCols.map(col), combine, stateCol,
-        targetPartitions, onStep, cleanupDelayMs)
-    }
-  }
+      leaseStaleMs: Long, cleanupDelayMs: Long): Long =
+    compactGrains(spark, baseDir, flatKeys(keyCols, stateCol), combine,
+      stateCol, _ => true, targetPartitions, onStep, leaseStaleMs,
+      cleanupDelayMs)
 
   /** RANGE compaction for a grain-partitioned store: fold only the grain
     * values `grains` selects (default: all), under one lease stripe PER
@@ -763,9 +692,7 @@ object RollupStore {
       grains: String => Boolean, targetPartitions: Int,
       onStep: String => Unit, leaseStaleMs: Long,
       cleanupDelayMs: Long): Long = {
-    require(targetPartitions >= 0,
-      s"targetPartitions must be positive (or 0 for auto-sizing from " +
-        s"input bytes), got $targetPartitions")
+    requireTargetPartitions(targetPartitions)
     val fs = fsOf(spark, baseDir)
     val base = new Path(baseDir)
     val targets = listGrainDirs(fs, base)
@@ -775,83 +702,102 @@ object RollupStore {
     graft.sources.Sinks.withLeases(fs,
       targets.map { case (g, _) => grainLeasePath(base, g) },
       leaseStaleMs) {
-      sweepStageDirs(fs, base, ".compact-", targets.map(_._1).toSet,
-        leaseStaleMs)
-      // mutating recovery per selected grain (crashed-dir cleanup and the
-      // expired-horizon sweep), and the live batches each grain's fold
-      // replaces; re-check existence under the stripes — a concurrent
-      // drop can retire a grain between our listing and the lock
-      val recoveredAll = targets
-        .filter { case (_, gdir) => fs.exists(gdir) }
-        .map { case (g, gdir) =>
-          (g, gdir,
-            GenerationalBatches.recover(fs, gdir, cleanupDelayMs)
-              .sortBy(_._1)) }
-      // heal stale manifests IMMEDIATELY after recover, BEFORE the fold
-      // job (ADVICE r17): recover may just have deleted folded dirs a
-      // crash-stale manifest still listed
-      recoveredAll.foreach { case (_, gdir, committed) =>
-        healManifestIfStale(fs, gdir, committed) }
-      val perGrain = recoveredAll
-        .filter { case (_, _, committed) => committed.nonEmpty }
-      onStep("recovered")
-      if (perGrain.isEmpty) return 0L
-      val grainCol = perGrain.head._2.getName.split("=", 2)(0)
-      // ONE multi-path scan and ONE shuffle fold every selected grain —
-      // the grain key is one of the group keys, so groups cannot mix
-      // grains; the repartition bounds files per grain at
-      // targetPartitions while keeping the write parallel
-      val allPaths = perGrain.flatMap { case (_, _, committed) =>
-        committed.map { case (_, p) => new Path(p, "states").toString } }
-      val scan = spark.read.parquet(allPaths: _*)
-      val folded = scan
-        .groupBy(keyCols.map(col): _*)
-        .agg(combine(col(stateCol)).as(stateCol))
-        .repartition(foldPartitions(spark, scan, targetPartitions),
-          keyCols.map(col): _*)
-      val stage = new Path(base,
-        s".compact-${java.util.UUID.randomUUID()}")
-      // ONE job: the staged partitioned write observes the fold's total
-      // row count, and the staged files' own footers give the per-grain
-      // counts
-      val observedTotal = graft.sources.Sinks.observedLong(
-        graft.sources.Sinks.writeParquetObserved(
-          folded.withColumn(StageHexCol, hex(col(grainCol).cast("string"))),
-          stage.toString, Seq(count(lit(1)).as("n")), Seq(StageHexCol)),
-        "n")
-      onStep("staged")
-      val staged = stagedGrains(spark, fs, stage, observedTotal)
-      perGrain.foreach { case (g, _, _) =>
-        require(staged.contains(g),
-          s"staged fold missing for grain '$g' under $stage; nothing " +
-            "committed, batches intact")
-      }
-      val total = perGrain.map { case (g, gdir, live) =>
-        GenerationalBatches.publish(fs, gdir, live, live,
-          GenerationalBatches.seenIngestIds(fs, live), cleanupDelayMs,
-          onStep, GenerationalBatches.writeManifest(fs, gdir))(
-          renameIn(fs, staged(g)))
-      }.sum
-      fs.delete(stage, true)
-      total
+      foldGrains(spark, fs, base, targets, keyCols.map(col), combine,
+        stateCol, targetPartitions, onStep, leaseStaleMs, cleanupDelayMs)
+        .fold(0L)(_._1)
     }
   }
 
-  /** REWRITE the store at a coarser grain, in place: every committed
+  /** The fold of [[compactGrains]] and [[regrain]], run under the
+    * targets' stripes: each target grain's live batches fold into one
+    * batch grouped by `groupCols` (which must keep the grain column).
+    * Returns the folded row count and schema, None when no target holds
+    * a live batch. */
+  private def foldGrains(spark: SparkSession, fs: FileSystem, base: Path,
+      targets: Seq[(String, Path)], groupCols: Seq[Column],
+      combine: Column => Column, stateCol: String, targetPartitions: Int,
+      onStep: String => Unit, leaseStaleMs: Long,
+      cleanupDelayMs: Long): Option[(Long, StructType)] = {
+    sweepStageDirs(fs, base, ".compact-", targets.map(_._1).toSet,
+      leaseStaleMs)
+    // mutating recovery per selected grain (crashed-dir cleanup and the
+    // expired-horizon sweep), and the live batches each grain's fold
+    // replaces; re-check existence under the stripes — a concurrent
+    // drop can retire a grain between our listing and the lock
+    val recoveredAll = targets
+      .filter { case (_, gdir) => fs.exists(gdir) }
+      .map { case (g, gdir) =>
+        (g, gdir,
+          GenerationalBatches.recover(fs, gdir, cleanupDelayMs)
+            .sortBy(_._1)) }
+    // heal stale manifests IMMEDIATELY after recover, BEFORE the fold
+    // job (ADVICE r17): recover may just have deleted folded dirs a
+    // crash-stale manifest still listed
+    recoveredAll.foreach { case (_, gdir, committed) =>
+      healManifestIfStale(fs, gdir, committed) }
+    val perGrain = recoveredAll
+      .filter { case (_, _, committed) => committed.nonEmpty }
+    onStep("recovered")
+    if (perGrain.isEmpty) return None
+    val grainCol = perGrain.head._2.getName.split("=", 2)(0)
+    // ONE multi-path scan and ONE shuffle fold every selected grain —
+    // the grain key is one of the group keys, so groups cannot mix
+    // grains; the repartition bounds files per grain at
+    // targetPartitions while keeping the write parallel
+    val allPaths = perGrain.flatMap { case (_, _, committed) =>
+      committed.map { case (_, p) => new Path(p, "states").toString } }
+    val scan = spark.read.parquet(allPaths: _*)
+    val folded = scan
+      .groupBy(groupCols: _*)
+      .agg(combine(col(stateCol)).as(stateCol))
+    val stage = new Path(base,
+      s".compact-${java.util.UUID.randomUUID()}")
+    // ONE job: the staged partitioned write observes the fold's total
+    // row count, and the staged files' own footers give the per-grain
+    // counts
+    val observedTotal = graft.sources.Sinks.observedLong(
+      graft.sources.Sinks.writeParquetObserved(
+        folded.repartition(foldPartitions(spark, scan, targetPartitions),
+          folded.columns.filter(_ != stateCol).map(col): _*)
+          .withColumn(StageHexCol, hex(col(grainCol).cast("string"))),
+        stage.toString, Seq(count(lit(1)).as("n")), Seq(StageHexCol)),
+      "n")
+    onStep("staged")
+    val staged = stagedGrains(spark, fs, stage, observedTotal)
+    perGrain.foreach { case (g, _, _) =>
+      require(staged.contains(g),
+        s"staged fold missing for grain '$g' under $stage; nothing " +
+          "committed, batches intact")
+    }
+    val total = perGrain.map { case (g, gdir, live) =>
+      GenerationalBatches.publish(fs, gdir, live, live,
+        GenerationalBatches.seenIngestIds(fs, live), cleanupDelayMs,
+        onStep, GenerationalBatches.writeManifest(fs, gdir))(
+        renameIn(fs, staged(g)))
+    }.sum
+    fs.delete(stage, true)
+    Some((total, folded.schema))
+  }
+
+  /** REWRITE a flat store at a coarser grain, in place: every committed
     * batch folds into one batch keyed by `keyCols` with `grainCol`
     * replaced by `newGrain` (named `newGrainCol`) — e.g.
     * `regrain(…, "day", date_trunc("week", col("day")), "week",
     * funnel_state_combine)` turns a per-(user, day) store into a
-    * per-(user, week) one. Same marker/lease cycle and footer
-    * verification as [[compact]]; exactness is the same associativity
-    * argument (a re-grain is a fold whose groups are coarser — the
-    * merged event multiset per user is unchanged, which RegrainSpec pins
-    * per family and q122 pins against the raw-scan oracle). Subsequent
-    * ingest must use the NEW key set — the schema gate enforces it.
-    * Flat stores only: a grain-partitioned store's grain lives in its
-    * directory layout, so rewriting it in place would need a multi-dir
-    * atomic swap the commit protocol doesn't have — use [[regrainInto]],
-    * which folds into a FRESH grained store instead. */
+    * per-(user, week) one. It is [[compact]]'s fold with coarser groups,
+    * so exactness is the same associativity argument (the merged event
+    * multiset per user is unchanged, which RegrainSpec pins per family
+    * and q122 pins against the raw-scan oracle).
+    *
+    * The fold changes the key schema the store's genesis pins, so it
+    * runs under the genesis lease for the whole op: the genesis is
+    * deleted before the fold (`genesis-deleted`) and the new family is
+    * stamped after the marker (`restamp`). A crash at any step leaves
+    * the genesis absent, and the next ingest re-derives it from the
+    * newest committed batch — the old family before the commit, the new
+    * one after it. Subsequent ingest must use the NEW key set. A
+    * grain-partitioned store's grain lives in its directory layout, so it
+    * re-grains with [[regrainInto]], which folds into a FRESH store. */
   def regrain(spark: SparkSession, baseDir: String, keyCols: Seq[String],
       grainCol: String, newGrain: Column, newGrainCol: String,
       combine: Column => Column, stateCol: String = "state",
@@ -870,31 +816,42 @@ object RollupStore {
     require(keyCols.contains(grainCol),
       s"grain column $grainCol must be one of the key columns $keyCols")
     require(!keyCols.filterNot(_ == grainCol).contains(newGrainCol) &&
-        newGrainCol != stateCol,
+        newGrainCol != stateCol && newGrainCol != FlatGrainCol,
       s"new grain column $newGrainCol collides with an existing column")
-    require(targetPartitions >= 0,
-      s"targetPartitions must be positive (or 0 for auto-sizing from " +
-        s"input bytes), got $targetPartitions")
+    requireTargetPartitions(targetPartitions)
     val fs = fsOf(spark, baseDir)
     val base = new Path(baseDir)
-    val groupCols = keyCols.map(kc =>
+    val groupCols = flatKeys(keyCols, stateCol).map(kc =>
       if (kc == grainCol) newGrain.as(newGrainCol) else col(kc))
+    val targets = listGrainDirs(fs, base)
+      .filter { case (_, gdir) => gdir.getName == flatDir(base).getName }
+    if (targets.isEmpty) return 0L
     graft.sources.Sinks.withSingleWriterLease(fs,
-      GenerationalBatches.leasePath(base), leaseStaleMs) {
-      foldDir(spark, fs, base, groupCols, combine, stateCol,
-        targetPartitions, onStep, cleanupDelayMs)
+      new Path(base, GenesisLease), leaseStaleMs) {
+      graft.sources.Sinks.withLeases(fs,
+        Seq(grainLeasePath(base, FlatGrain)), leaseStaleMs) {
+        fs.delete(new Path(base, GenesisFile), false)
+        onStep("genesis-deleted")
+        foldGrains(spark, fs, base, targets, groupCols, combine, stateCol,
+          targetPartitions, onStep, leaseStaleMs, cleanupDelayMs) match {
+          case None => 0L
+          case Some((n, schema)) =>
+            onStep("restamp")
+            writeGenesis(fs, base, fingerprintOf(schema, FlatGrainCol))
+            n
+        }
+      }
     }
   }
 
   /** Re-grain a GRAIN-PARTITIONED store by folding it into a FRESH
     * grained store at the coarser grain: `day=…` sub-stores become
     * `week=…` sub-stores under `dstDir`, each key's partials combined
-    * with the family's combine twin — the in-place [[regrain]] for
-    * stores whose grain lives in the directory layout (where an in-place
-    * rewrite would need a multi-dir atomic swap the per-sub-store commit
-    * protocol can't give; a fresh store needs no swap at all). The
-    * source is only READ — retire it with its own [[dropGrainsWhere]]
-    * (or delete the dir) once the destination is verified.
+    * with the family's combine twin (a grain that lives in the directory
+    * layout cannot be rewritten in place without a multi-dir atomic swap;
+    * a fresh store needs no swap at all). The source is only READ —
+    * retire it with its own [[dropGrainsWhere]] (or delete the dir) once
+    * the destination is verified.
     *
     * Crash safety is [[appendStatesByGrain]]'s per-grain replay guard:
     * the whole rewrite lands under ONE `ingestId`, so a rerun after a
@@ -911,10 +868,7 @@ object RollupStore {
     * path (`fs.makeQualified`), so resuming a crashed rewrite with an
     * equivalent but differently-spelled source (bare vs scheme-qualified,
     * relative vs absolute) derives the SAME id and resumes instead of
-    * double-landing. (One-time change in round 18: a rewrite started
-    * under the older raw-spelling default resumes under the new id only
-    * when the spellings agree — pass the old spelling explicitly via
-    * `ingestId` to resume such an in-flight rewrite.) The source is read through a SNAPSHOT
+    * double-landing. The source is read through a SNAPSHOT
     * (files pinned at plan time), so a concurrent source compaction's
     * commit cannot change what the fold reads; its cleanup deleting
     * pinned files still fails the rewrite loudly — quiesce source
@@ -948,9 +902,7 @@ object RollupStore {
     require(!keyCols.filterNot(_ == grainCol).contains(newGrainCol) &&
         newGrainCol != stateCol,
       s"new grain column $newGrainCol collides with an existing column")
-    require(targetPartitions >= 0,
-      s"targetPartitions must be positive (or 0 for auto-sizing from " +
-        s"input bytes), got $targetPartitions")
+    requireTargetPartitions(targetPartitions)
     val id = ingestId.getOrElse(
       s"regrain-into:${fsOf(spark, srcDir).makeQualified(new Path(srcDir))}")
     val foldKeys = keyCols.map(kc =>
@@ -968,14 +920,13 @@ object RollupStore {
 
   /** Delete folded dirs whose grace window has EXPIRED — without
     * folding, ingesting, or changing any answer. Under `cleanupDelayMs`
-    * deferred cleanup happens in a LATER op's recover(), so a grain (or
-    * flat store) that stops receiving maintenance keeps its dead folded
-    * bytes forever; this is the retention knob for that tail (the
-    * round-17 watch item): a cheap metadata-only pass — recover + heal
-    * per sub-store under the usual stripes/lease, no Spark job — that a
-    * janitor can run on any cadence. Pass the SAME `cleanupDelayMs` the
-    * store's maintenance uses (a smaller value here shortens the real
-    * horizon, as everywhere). Also sweeps crashed marker-less dirs and
+    * deferred cleanup happens in a LATER op's recover(), so a grain
+    * that stops receiving maintenance keeps its dead folded bytes
+    * forever; this is the retention knob for that tail: a cheap
+    * metadata-only pass — recover + heal per grain under its stripe, no
+    * Spark job — that a janitor can run on any cadence. Pass the SAME
+    * `cleanupDelayMs` the store's maintenance uses (a smaller value here
+    * shortens the real horizon, as everywhere). Also sweeps crashed marker-less dirs and
     * heals stale, torn, or MISSING manifests, like any op's recovery —
     * plus the ROOT garbage no grain-scoped op reliably reaches: crashed
     * `.ingest-*`/`.compact-*` stage dirs (a crashed fold's stage can
@@ -983,11 +934,7 @@ object RollupStore {
     * and stale stripes of since-DROPPED grains (usurp-and-release;
     * fresh foreign stripes are always skipped — root hygiene is
     * store-wide, the `grains` filter scopes only the per-grain pass).
-    * Grained stores sweep
-    * only the grains `grains` selects (one stripe each, so the janitor
-    * never blocks disjoint maintenance and collides fail-fast with
-    * overlapping work); flat stores sweep under the root lease. Returns
-    * the number of batch dirs deleted.
+    * Returns the number of batch dirs deleted.
     *
     * Collision behavior differs from the fail-fast maintenance ops ON
     * PURPOSE: the janitor takes its grains ONE STRIPE AT A TIME and
@@ -1002,12 +949,8 @@ object RollupStore {
       leaseStaleMs: Long = graft.sources.Sinks.DefaultLeaseStaleMs): Int = {
     val fs = fsOf(spark, baseDir)
     val base = new Path(baseDir)
-    def sweepOne(dir: Path): Int = {
-      val before = GenerationalBatches.batchDirs(fs, dir).size
-      val live = GenerationalBatches.recover(fs, dir, cleanupDelayMs)
-      healManifestIfStale(fs, dir, live)
-      before - GenerationalBatches.batchDirs(fs, dir).size
-    }
+    val targets = listGrainDirs(fs, base)
+      .filter { case (v, _) => grains(v) }.sortBy(_._1)
     // ROOT hygiene first, before any stripe is held: crashed stage dirs
     // (.ingest-*/.compact-* — a crashed fold's stage can hold a full
     // copy of the folded bytes, the largest dead-byte class), crashed
@@ -1021,29 +964,25 @@ object RollupStore {
     StageDirPrefixes.foreach(p =>
       sweepStageDirs(fs, base, p, Set.empty, leaseStaleMs))
     collectOrphanStripes(fs, base, leaseStaleMs)
-    val targets = listGrainDirs(fs, base)
-      .filter { case (v, _) => grains(v) }.sortBy(_._1)
-    if (targets.isEmpty)
-      // flat store (or empty grained store: recover on the bare root is
-      // a harmless no-op)
-      graft.sources.Sinks.withSingleWriterLease(fs,
-        GenerationalBatches.leasePath(base), leaseStaleMs) {
-        sweepOne(base)
-      }
-    else
-      targets.map { case (g, gdir) =>
-        try graft.sources.Sinks.withLeases(fs,
-          Seq(grainLeasePath(base, g)), leaseStaleMs) {
-          if (fs.exists(gdir)) sweepOne(gdir) else 0
-        } catch {
-          // a held stripe = a live op owns this grain; skip, next cadence
-          case e: IllegalStateException
-              if Option(e.getMessage).exists(_.contains("lease")) => 0
+    targets.map { case (g, gdir) =>
+      try graft.sources.Sinks.withLeases(fs,
+        Seq(grainLeasePath(base, g)), leaseStaleMs) {
+        if (!fs.exists(gdir)) 0
+        else {
+          val before = GenerationalBatches.batchDirs(fs, gdir).size
+          val live = GenerationalBatches.recover(fs, gdir, cleanupDelayMs)
+          healManifestIfStale(fs, gdir, live)
+          before - GenerationalBatches.batchDirs(fs, gdir).size
         }
-      }.sum
+      } catch {
+        // a held stripe = a live op owns this grain; skip, next cadence
+        case e: IllegalStateException
+            if Option(e.getMessage).exists(_.contains("lease")) => 0
+      }
+    }.sum
   }
 
-  /** The janitor's CADENCE POLICY in code (VERDICT r18 #4): run
+  /** The janitor's CADENCE POLICY in code: run
     * [[sweepExpired]] only when the store's reclaimable inventory says
     * it is worth a pass. Reads [[statsRows]] — no Spark job, no lease —
     * and sums the dead bytes of the selected grains (grace-window
@@ -1051,14 +990,12 @@ object RollupStore {
     * tombstones, the largest dead-byte class — counting only entries
     * older than `leaseStaleMs`, since a LIVE op's young stage is not
     * reclaimable and must not trigger futile sweeps); sweeps only when
-    * the sum meets `minDeadBytes`. A deployment schedules this as often as it
-    * likes — hourly is fine — because the skip path costs one metadata
-    * listing pass; the sweep's rename/delete traffic happens only when
-    * enough garbage accumulated to pay for it. The inventory is
-    * EVENTUALLY reclaimable, not instantly: folded dirs younger than
-    * the grace horizon and stage dirs guarded by a fresh stripe survive
-    * the sweep (by design) and count toward the next cadence's
-    * threshold instead. Returns the batch dirs deleted, 0 when skipped.
+    * the sum meets `minDeadBytes`. The skip path costs one metadata
+    * listing pass, so a deployment may schedule this hourly. Folded dirs
+    * younger than the grace horizon and stage dirs guarded by a fresh
+    * stripe survive the sweep (by design) and count toward the next
+    * cadence's threshold instead. Returns the batch dirs deleted, 0 when
+    * skipped.
     *
     * Sizing `minDeadBytes`: the sweep costs O(grains) listings plus one
     * delete per dead dir, so set the threshold to a few multiples of a
@@ -1069,15 +1006,8 @@ object RollupStore {
       cleanupDelayMs: Long, minDeadBytes: Long,
       grains: String => Boolean = _ => true,
       leaseStaleMs: Long = graft.sources.Sinks.DefaultLeaseStaleMs): Int = {
-    // The root inventory here is the JANITOR'S, not the dashboard's
-    // (ADVICE r19): stage dirs younger than leaseStaleMs are a LIVE
-    // op's working set — sweepExpired will not delete them either (a
-    // fresh foreign stripe defers young entries), so counting them
-    // would make every scheduled pass escalate to a full sweep that
-    // reclaims nothing, exactly while the store is busiest with a
-    // long-running large ingest/fold. The janitor, unlike the
-    // dashboard, can legitimately judge staleness from mtimes — its
-    // decision and the sweep's use the same age horizon.
+    // the JANITOR'S root inventory: a live op's young stage is not
+    // reclaimable, and the sweep uses the same age horizon
     val rows = statsRows(spark, baseDir, minStageAgeMs = leaseStaleMs)
     val reclaimable = rows.collect {
       case r if r.grain == StatsRootGrain || grains(r.grain) => r.dead_bytes
@@ -1133,52 +1063,39 @@ object RollupStore {
       leaseStaleMs: Long = graft.sources.Sinks.DefaultLeaseStaleMs): Int =
     dropGrainsWhere(spark, baseDir, _ < olderThan, leaseStaleMs)
 
-  /** All committed state rows — between compactions a key can appear in
-    * several rows (one per ingest); every `*_merge` consumer folds them
-    * anyway, so queries are exact at ANY point in the cycle.
-    *
-    * Metadata cost is bounded like the grained read's: a flat store with
-    * a `_MANIFEST` (every maintenance op since round 18 writes one)
-    * resolves in ONE file read and pins exactly the manifest's files — a
-    * built-in snapshot. A store without one (older store, or its last
-    * writer crashed before the rewrite) falls back to listing, which is
-    * lazy over the resolved dir list: a plan held across a concurrent
-    * compaction's CLEANUP can hit deleted files (availability, not wrong
-    * data — the marker protocol keeps served data exact). Act on it
-    * promptly, or pass `snapshot = true` to materialize per-file
-    * statuses eagerly on the fallback path. */
+  /** [[readGrains]] of a flat store: resolves its one fixed-grain
+    * sub-store directly (no root listing), with the same manifest,
+    * laziness and `snapshot` contract, and drops the fixed grain
+    * column. */
   def read(spark: SparkSession, baseDir: String,
       snapshot: Boolean = false): DataFrame = {
     val fs = fsOf(spark, baseDir)
     val base = new Path(baseDir)
-    GenerationalBatches.readManifest(fs, base) match {
-      case Some((_, _, relFiles)) if relFiles.nonEmpty =>
-        spark.read.parquet(
-          relFiles.map(rel => new Path(base, rel).toString): _*)
-      case _ =>
-        val dirs = GenerationalBatches.liveBatches(fs, base)
-          .sortBy(_._1)
-          .map { case (_, p) => new Path(p, "states") }
-        require(dirs.nonEmpty, s"no committed state batches under $baseDir")
-        readStateDirs(spark, fs, dirs, snapshot)
-    }
+    val grain = resolveGrain(fs, flatDir(base))
+    // an empty sub-store is also what a store in the retired layout
+    // shows here: list the root, which refuses that one by name
+    if (grain.merge.isEmpty) listGrainDirs(fs, base)
+    readResolved(spark, fs, baseDir, Seq(grain), snapshot)
+      .drop(FlatGrainCol)
   }
 
-  /** [[read]] for a grain-partitioned store, PRUNED at listing time:
-    * only grain values `grains` selects contribute files to the scan
-    * (default: all) — a dashboard query over one week never lists, opens,
-    * or schedules the other grains' files (PlanSpec pins the scan's
-    * input-file set).
+  /** All committed state rows of the grains `grains` selects (default:
+    * all), PRUNED at listing time — a dashboard query over one week never
+    * lists, opens, or schedules the other grains' files (PlanSpec pins
+    * the scan's input-file set). Between compactions a key can appear in
+    * several rows; every `*_merge` consumer folds them anyway.
     *
     * Metadata cost is bounded by the per-grain MANIFEST: a grain with a
     * `_MANIFEST` resolves in ONE file read — no per-batch
     * listStatus/marker/ingest-id round-trips — and the scan pins exactly
     * the manifest's files (a built-in snapshot: a compaction committing
     * after this point cannot change what the plan reads, though its
-    * cleanup can still delete the files once the grace window passes —
-    * see [[read]]). A grain without a manifest (older store, or its last
-    * writer crashed before the rewrite) falls back to listing with the
-    * [[read]] laziness/`snapshot` contract. */
+    * cleanup can still delete the files once the grace window passes). A
+    * grain without a manifest (its last writer crashed before the
+    * rewrite) falls back to listing, lazy over the resolved dirs: a plan
+    * held across a compaction's CLEANUP can hit deleted files
+    * (availability, not wrong data). Act on it promptly, or pass
+    * `snapshot = true` to pin the files eagerly. */
   def readGrains(spark: SparkSession, baseDir: String,
       grains: String => Boolean = _ => true,
       snapshot: Boolean = false): DataFrame = {
@@ -1186,8 +1103,6 @@ object RollupStore {
     val base = new Path(baseDir)
     val selected = listGrainDirs(fs, base)
       .filter { case (v, _) => grains(v) }.sortBy(_._1)
-    // manifest grains resolve to explicit files; the rest (missing, torn,
-    // or empty manifest — same guard as the flat read) to batch dirs.
     // Grains resolve CONCURRENTLY: each is an independent metadata read
     // (one manifest open, or the listing fallback), and on an object
     // store each read is an ~ms RPC — serial resolution makes a wide
@@ -1195,29 +1110,45 @@ object RollupStore {
     // plans (a year of daily grains ≈ 365 ms; 100k grains ≈ 100 s).
     // Order is preserved (futures joined in `selected` order), so the
     // resolved file list is identical to the serial one.
-    val resolved = graft.sources.Sinks.inParallel(selected) { case (_, gdir) =>
-      GenerationalBatches.readManifest(fs, gdir) match {
-        case Some((_, _, relFiles)) if relFiles.nonEmpty =>
-          Left(relFiles.map(rel => new Path(gdir, rel)))
-        case _ =>
-          Right(GenerationalBatches.liveBatches(fs, gdir).sortBy(_._1)
-            .map { case (_, p) => new Path(p, "states") })
-      }
+    readResolved(spark, fs, baseDir,
+      graft.sources.Sinks.inParallel(selected) { case (_, gdir) =>
+        resolveGrain(fs, gdir) },
+      snapshot)
+  }
+
+  /** One grain's read set: its manifest's data files (Left), or — when
+    * the manifest is missing, torn or empty — its live batch dirs
+    * (Right). */
+  private def resolveGrain(fs: FileSystem,
+      gdir: Path): Either[Seq[Path], Seq[Path]] =
+    GenerationalBatches.readManifest(fs, gdir) match {
+      case Some((_, _, relFiles)) if relFiles.nonEmpty =>
+        Left(relFiles.map(rel => new Path(gdir, rel)))
+      case _ =>
+        Right(GenerationalBatches.liveBatches(fs, gdir).sortBy(_._1)
+          .map { case (_, p) => new Path(p, "states") })
     }
+
+  /** Scan resolved grains. Listed batch dirs stay lazy unless `snapshot`
+    * pins their files now: explicit file paths bypass Spark's default
+    * path filter, so [[GenerationalBatches.dataFiles]] applies the
+    * data-file rules (no '_' markers/_SUCCESS, no '.'-prefixed
+    * hidden/checksum/temp). A compaction's cleanup can still delete
+    * pinned files mid-action — at that point re-read; for true snapshot
+    * isolation over object stores use a table format. */
+  private def readResolved(spark: SparkSession, fs: FileSystem,
+      baseDir: String, resolved: Seq[Either[Seq[Path], Seq[Path]]],
+      snapshot: Boolean): DataFrame = {
     val files = resolved.collect { case Left(fsq) => fsq }.flatten
     val dirs = resolved.collect { case Right(d) => d }.flatten
     require(files.nonEmpty || dirs.nonEmpty,
       s"no committed state batches under $baseDir for the selected grains")
-    if (dirs.isEmpty) spark.read.parquet(files.map(_.toString): _*)
-    else if (files.isEmpty) readStateDirs(spark, fs, dirs, snapshot)
-    else {
-      val dirFiles =
-        if (!snapshot) dirs.map(_.toString)
-        else dirs.flatMap(d =>
-          GenerationalBatches.dataFiles(fs, d)
-            .map(f => new Path(d, f).toString))
-      spark.read.parquet(files.map(_.toString) ++ dirFiles: _*)
-    }
+    val dirFiles =
+      if (!snapshot) dirs.map(_.toString)
+      else dirs.flatMap(d =>
+        GenerationalBatches.dataFiles(fs, d)
+          .map(f => new Path(d, f).toString))
+    spark.read.parquet(files.map(_.toString) ++ dirFiles: _*)
   }
 
   /** The grain values currently present in a grain-partitioned store,
@@ -1227,21 +1158,17 @@ object RollupStore {
     listGrainDirs(fs, new Path(baseDir)).map(_._1).sorted
   }
 
-  /** Committed, not-yet-folded batch dirs — q118 pins that compaction
-    * actually shrinks it. For a grain-partitioned store: summed over all
-    * grains. */
+  /** Committed, not-yet-folded batch dirs, summed over all grains —
+    * q118 pins that compaction actually shrinks it. */
   def liveBatchCount(spark: SparkSession, baseDir: String): Int = {
     val fs = fsOf(spark, baseDir)
-    val base = new Path(baseDir)
-    val grains = listGrainDirs(fs, base)
-    if (grains.isEmpty) GenerationalBatches.liveBatches(fs, base).size
-    else grains.map { case (_, g) =>
+    listGrainDirs(fs, new Path(baseDir)).map { case (_, g) =>
       GenerationalBatches.liveBatches(fs, g).size }.sum
   }
 
   /** Per-sub-store METADATA inventory — the observability view a
     * maintenance scheduler or capacity dashboard reads: one row per
-    * grain (flat store: one row with `grain = ""`) with the live batch
+    * grain (a flat store's one row is its fixed grain) with the live batch
     * count, the folded-but-not-yet-swept dir count and their DEAD BYTES
     * (the grace-window bytes [[sweepExpired]] reclaims once the horizon
     * passes), the data files and bytes currently served, the distinct
@@ -1319,10 +1246,8 @@ object RollupStore {
       StoreGrainStats(StatsRootGrain, 0, stage.size, 0, 0L, bytes, 0,
         "root")
     }
-    (if (grains.isEmpty) Seq(one("", base))
-     else graft.sources.Sinks.inParallel(grains) { case (g, gdir) =>
-       one(g, gdir) }) :+
-      rootRow
+    graft.sources.Sinks.inParallel(grains) { case (g, gdir) =>
+      one(g, gdir) } :+ rootRow
   }
 
   /** The `grain` label of [[stats]]'s store-level row. */
@@ -1356,72 +1281,14 @@ object RollupStore {
         states.schema(stateCol).dataType)
   }
 
+  private def requireTargetPartitions(targetPartitions: Int): Unit =
+    require(targetPartitions >= 0,
+      s"targetPartitions must be positive (or 0 for auto-sizing from " +
+        s"input bytes), got $targetPartitions")
+
   private def requireValidIngestId(ingestId: Option[String]): Unit =
     ingestId.foreach(id => require(id.nonEmpty && !id.contains('\n'),
       s"ingest id must be non-empty and newline-free: '$id'"))
-
-  /** Incoming batch schema must match the store's (name -> type). */
-  private def schemaGate(spark: SparkSession, existingStates: Path,
-      states: DataFrame): Unit = {
-    val existing = spark.read.parquet(existingStates.toString)
-      .schema.map(f => f.name -> f.dataType).toMap
-    val incoming = states.schema.map(f => f.name -> f.dataType).toMap
-    require(incoming == existing,
-      s"state batch schema $incoming does not match the store's " +
-        s"$existing; one store holds one state family at one grain")
-  }
-
-  /** Fold all committed batches under `base` into one (lease already
-    * held): the compaction/regrain engine. `groupCols` are the output
-    * keys; ingest ids are unioned forward. */
-  private def foldDir(spark: SparkSession, fs: FileSystem, base: Path,
-      groupCols: Seq[Column], combine: Column => Column, stateCol: String,
-      targetPartitions: Int, onStep: String => Unit,
-      cleanupDelayMs: Long = 0L): Long = {
-    val committed = GenerationalBatches.recover(fs, base, cleanupDelayMs)
-      .sortBy(_._1)
-    healManifestIfStale(fs, base, committed)
-    onStep("recovered")
-    if (committed.isEmpty) return 0L
-    // one multi-path scan of the whole sub-store (not a union chain), and
-    // ONE scan only — a separate distinct-key pre-scan would double
-    // compaction I/O to re-verify what groupBy structurally guarantees
-    // (one row per key)
-    val all = spark.read.parquet(committed.map { case (_, p) =>
-      new Path(p, "states").toString }: _*)
-    val folded = all.groupBy(groupCols: _*)
-      .agg(combine(col(stateCol)).as(stateCol))
-      .repartition(foldPartitions(spark, all, targetPartitions))
-    GenerationalBatches.publish(fs, base, committed, committed,
-      GenerationalBatches.seenIngestIds(fs, committed), cleanupDelayMs,
-      onStep, GenerationalBatches.writeManifest(fs, base)) { batchPath =>
-      val dataPath = new Path(batchPath, "states")
-      // ONE job: the fold's write observes its own row count
-      val expected = graft.sources.Sinks.observedLong(
-        graft.sources.Sinks.writeParquetObserved(folded, dataPath.toString,
-          Seq(count(lit(1)).as("n"))), "n")
-      Some(GenerationalBatches.Landed(expected,
-        graft.sources.Sinks.parquetRowCount(fs, dataPath,
-          spark.sessionState.newHadoopConf())))
-    }
-  }
-
-  private def readStateDirs(spark: SparkSession, fs: FileSystem,
-      dirs: Seq[Path], snapshot: Boolean): DataFrame =
-    if (!snapshot) spark.read.parquet(dirs.map(_.toString): _*)
-    else {
-      // pin the exact FILES, not the dirs: a compaction committing after
-      // this point cannot change what the plan reads (its cleanup could
-      // still delete them mid-action — at that point re-read; for true
-      // snapshot isolation over object stores use a table format)
-      // explicit file paths bypass Spark's default path filter —
-      // GenerationalBatches.dataFiles applies the data-file rules (no
-      // '_' markers/_SUCCESS, no '.'-prefixed hidden/checksum/temp)
-      val files = dirs.flatMap(d =>
-        GenerationalBatches.dataFiles(fs, d)
-          .map(f => new Path(d, f).toString))
-      spark.read.parquet(files: _*)
-    }
 
   // ---- grain directory layout ----------------------------------------
 
@@ -1467,18 +1334,29 @@ object RollupStore {
     new String(bytes.toArray, "UTF-8")
   }
 
-  /** (unescaped grain value, grain dir) for every grain partition. */
+  /** (unescaped grain value, grain dir) for every grain partition. The
+    * root listing every op starts from also refuses a store in the
+    * retired flat layout (`batch_*` dirs at the root): it is not
+    * migrated, and no op may serve or write it. */
   private def listGrainDirs(fs: FileSystem, base: Path): Seq[(String, Path)] =
     if (!fs.exists(base)) Seq.empty
-    else fs.listStatus(base).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.contains("=")
-        && !st.getPath.getName.startsWith("."))
-      .map { st =>
-        unescapeGrain(st.getPath.getName.split("=", 2)(1)) -> st.getPath
-      }
+    else {
+      val entries = fs.listStatus(base).toSeq
+      require(!entries.exists(st => st.isDirectory &&
+          st.getPath.getName.startsWith("batch_")),
+        s"$base holds batch_* dirs at its root: that flat-store layout is " +
+          "retired and not migrated; rebuild the store (a flat store now " +
+          s"lives in its sub-store ${flatDir(base).getName})")
+      entries
+        .filter(st => st.isDirectory && st.getPath.getName.contains("=")
+          && !st.getPath.getName.startsWith("."))
+        .map { st =>
+          unescapeGrain(st.getPath.getName.split("=", 2)(1)) -> st.getPath
+        }
+    }
 
-  /** The newest committed batch across every grain of a grained store
-    * (None on first ingest) — the cross-grain schema gate's reference. */
+  /** The newest committed batch across every grain (None on first
+    * ingest) — the lazy genesis derivation's reference. */
   private def latestBatchAcrossGrains(fs: FileSystem,
       base: Path): Option[Path] =
     listGrainDirs(fs, base).sortBy(_._1).reverse.iterator

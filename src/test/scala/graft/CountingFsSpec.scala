@@ -155,11 +155,12 @@ class CountingFsSpec extends AnyFunSuite {
         s"${CountingLocalFileSystem.listed}")
     assert(listedDirs.isEmpty,
       s"flat manifest read LISTED directories: $listedDirs")
-    // WITHOUT it (deleted): the fallback lists the root and the batch
-    // dirs — the per-batch cost the manifest removes
+    // WITHOUT it (deleted): the fallback lists the sub-store and its
+    // batch dirs — the per-batch cost the manifest removes
     val fs = new Path(base).getFileSystem(
       spark.sessionState.newHadoopConf())
-    fs.delete(new Path(new Path(base), GenerationalBatches.Manifest), false)
+    fs.delete(new Path(RollupStore.flatDir(new Path(base)),
+      GenerationalBatches.Manifest), false)
     c.set(0); CountingLocalFileSystem.listed.clear()
     val viaListing = RollupStore.read(spark, base)
     assert(viaListing.inputFiles.toSet === viaManifest.inputFiles.toSet)

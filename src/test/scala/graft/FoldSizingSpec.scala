@@ -63,7 +63,8 @@ class FoldSizingSpec extends AnyFunSuite {
   private def foldedDataFileCount(base: String): Int = {
     val fs = new Path(base).getFileSystem(
       spark.sessionState.newHadoopConf())
-    val live = GenerationalBatches.liveBatches(fs, new Path(base))
+    val live = GenerationalBatches.liveBatches(fs,
+      RollupStore.flatDir(new Path(base)))
     assert(live.size == 1, s"expected one live batch, got ${live.size}")
     GenerationalBatches.dataFiles(fs, new Path(live.head._2, "states")).size
   }

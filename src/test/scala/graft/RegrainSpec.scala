@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.behavioral.BehavioralFunctions
 import graft.ops.RollupStore
@@ -12,8 +12,9 @@ import graft.ops.RollupStore
   * with a combine twin (funnel / next-node / retention) the re-grained
   * store answers exactly what the day-grain store did — and what the
   * raw scan does; the store's schema flips to the new key set and the
-  * gate then refuses old-grain ingest; the crash matrix holds at every
-  * step boundary; ingest ids survive the rewrite. q122 runs the rewrite
+  * re-stamped genesis then refuses old-grain ingest; the crash matrix
+  * holds at every step boundary, each crash leaving the genesis absent
+  * and re-derivable; ingest ids survive the rewrite. q122 runs the rewrite
   * under q03's DuckDB oracle.
   */
 class RegrainSpec extends AnyFunSuite {
@@ -85,7 +86,7 @@ class RegrainSpec extends AnyFunSuite {
     assert(answer(variants.head) === raw)
 
     // the store's key set flipped: day-grain ingest is now refused by the
-    // schema gate, week-grain ingest lands
+    // re-stamped genesis, week-grain ingest lands
     val e = intercept[IllegalArgumentException] {
       RollupStore.appendStates(
         all.limit(10).groupBy(col("u"), to_date(col("ts")).as("day"))
@@ -239,5 +240,115 @@ class RegrainSpec extends AnyFunSuite {
       BehavioralFunctions.funnel_state_combine, targetPartitions = 2)
     assert(RollupStore.read(spark, base).columns.sorted ===
       Array("day", "state", "u"))
+  }
+
+  private def funnelStates(df: DataFrame, grain: Column, name: String) =
+    df.groupBy(col("u"), grain.as(name))
+      .agg(BehavioralFunctions.funnel_state(col("ts"), conds(df): _*).as("state"))
+
+  private def dayOf(df: DataFrame) = funnelStates(df, to_date(col("ts")), "day")
+
+  private def weekOf(df: DataFrame) =
+    funnelStates(df, weekofyear(to_date(col("ts"))), "week")
+
+  private def rawFunnel(df: DataFrame) =
+    df.groupBy("u")
+      .agg(BehavioralFunctions.window_funnel(expr("INTERVAL '1' HOUR"),
+        col("ts"), conds(df): _*).as("steps"))
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+
+  private def storeFunnel(base: String) =
+    RollupStore.read(spark, base).groupBy("u")
+      .agg(BehavioralFunctions.funnel_merge(expr("INTERVAL '1' HOUR"),
+        col("state")).as("steps"))
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+
+  private def weekly(base: String, onStep: String => Unit): Long =
+    RollupStore.regrain(spark, base, Seq("u", "day"), "day",
+      weekofyear(col("day")), "week",
+      BehavioralFunctions.funnel_state_combine, "state", 2, onStep,
+      graft.sources.Sinks.DefaultLeaseStaleMs, 0L)
+
+  private def genesisOf(base: String) = new org.apache.hadoop.fs.Path(
+    new org.apache.hadoop.fs.Path(base), RollupStore.GenesisFile)
+
+  private lazy val fs = new org.apache.hadoop.fs.Path("/tmp")
+    .getFileSystem(spark.sessionState.newHadoopConf())
+
+  test("a crash at every genesis seam leaves the genesis absent: the next ingest re-derives the family of the newest commit") {
+    val extra = ev((99L, 0L, "a"), (99L, 10 * M, "b"))
+    val expected = rawFunnel(all.union(extra))
+    // before the commit the store is still the day store; from the
+    // commit on it is the week store
+    for ((failAt, committed) <- Seq("genesis-deleted" -> false,
+        "written" -> false, "committed" -> true, "restamp" -> true)) {
+      val base = fresh(s"genesis_$failAt")
+      buildDayStore(base, dayOf)
+      assert(fs.exists(genesisOf(base)))
+      intercept[RuntimeException] {
+        weekly(base, step => if (step == failAt) sys.error("injected crash"))
+      }
+      assert(!fs.exists(genesisOf(base)),
+        s"a crash at '$failAt' left a genesis behind")
+      assert(storeFunnel(base) === rawFunnel(all),
+        s"a crash at '$failAt' changed answers")
+      val (matching, other) =
+        if (committed) (weekOf _, dayOf _) else (dayOf _, weekOf _)
+      val e = intercept[IllegalArgumentException] {
+        RollupStore.appendStates(other(extra), base,
+          other(extra).columns.filter(_ != "state").toSeq)
+      }
+      assert(e.getMessage.contains("genesis"),
+        s"the other family after a crash at '$failAt' failed with: $e")
+      assert(RollupStore.appendStates(matching(extra), base,
+        matching(extra).columns.filter(_ != "state").toSeq) > 0L,
+        s"the matching family did not land after a crash at '$failAt'")
+      assert(fs.exists(genesisOf(base)))
+      assert(storeFunnel(base) === expected,
+        s"the store diverged from the raw scan after a crash at '$failAt'")
+    }
+  }
+
+  test("an append meeting a regrain's absent genesis fails fast on the genesis lease and does not re-stamp it") {
+    val extra = ev((99L, 0L, "a"))
+    for (seam <- Seq("genesis-deleted", "written")) {
+      val base = fresh(s"genesis_lease_$seam")
+      buildDayStore(base, dayOf)
+      var collided: Option[Throwable] = None
+      weekly(base, step => if (step == seam) {
+        assert(!fs.exists(genesisOf(base)))
+        collided = scala.util.Try(RollupStore.appendStates(
+          dayOf(extra), base, Seq("u", "day"))).failed.toOption
+        assert(!fs.exists(genesisOf(base)),
+          "a concurrent append re-stamped the genesis mid-regrain")
+      })
+      assert(collided.exists(e => e.isInstanceOf[IllegalStateException] &&
+        e.getMessage.contains("lease")),
+        s"a concurrent append at '$seam' did not fail fast: $collided")
+      // the regrain finished and stamped the week family
+      assert(fs.exists(genesisOf(base)), "the regrain did not re-stamp the genesis")
+      assert(storeFunnel(base) === rawFunnel(all))
+      intercept[IllegalArgumentException] {
+        RollupStore.appendStates(dayOf(extra), base, Seq("u", "day"))
+      }
+      assert(RollupStore.appendStates(weekOf(extra), base,
+        Seq("u", "week")) > 0L)
+    }
+  }
+
+  test("an append that verified the old family before a regrain committed is refused under its stripe") {
+    val base = fresh("genesis_recheck")
+    buildDayStore(base, dayOf)
+    val extra = ev((99L, 0L, "a"))
+    val e = intercept[IllegalArgumentException] {
+      RollupStore.appendStates(dayOf(extra), base, Seq("u", "day"), "state",
+        None, (step: String) => if (step == "genesis")
+          weekly(base, _ => ()),
+        graft.sources.Sinks.DefaultLeaseStaleMs, 0L)
+    }
+    assert(e.getMessage.contains("genesis"))
+    assert(RollupStore.liveBatchCount(spark, base) === 1)
+    assert(RollupStore.read(spark, base).columns.contains("week"))
+    assert(storeFunnel(base) === rawFunnel(all))
   }
 }

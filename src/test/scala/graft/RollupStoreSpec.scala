@@ -372,4 +372,63 @@ class RollupStoreSpec extends AnyFunSuite {
     assert(storeAnswer(base) === rawAnswer(
       ev((1L, 0L, "a"), (1L, 10 * M, "b"), (2L, 0L, "c"), (2L, D, "a"))))
   }
+
+  test("an append onto a flat store with one committed batch starts at most 1 Spark job") {
+    val base = fresh("job_count")
+    RollupStore.appendStates(dayStates(ev((1L, 0L, "a"))), base, Seq("u", "day"))
+    // a local batch, so the count is the append's own jobs and not the
+    // producer's shuffle
+    val st = dayStates(ev((1L, 10 * M, "b"), (2L, 0L, "a")))
+    import scala.jdk.CollectionConverters._
+    val local = spark.createDataFrame(st.collect().toSeq.asJava, st.schema)
+    val (n, jobs) = JobCount(spark) {
+      RollupStore.appendStates(local, base, Seq("u", "day"))
+    }
+    assert(n === 2L)
+    assert(jobs <= 1, s"appendStates started $jobs Spark jobs")
+  }
+
+  test("a store in the retired flat layout (batches at its root) is refused by name and left untouched") {
+    import org.apache.hadoop.fs.Path
+    import graft.ops.GenerationalBatches
+    val base = fresh("legacy")
+    val root = new Path(base)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val st = dayStates(ev((1L, 0L, "a"), (2L, 10 * M, "b")))
+    GenerationalBatches.publish(fs, root, Nil, Nil, Set.empty, 0L, _ => ()) {
+      batchPath =>
+        st.write.parquet(new Path(batchPath, "states").toString)
+        val n = st.count()
+        Some(GenerationalBatches.Landed(n, n))
+    }
+    assert(fs.exists(new Path(root, s"batch_0/${GenerationalBatches.Marker}")))
+    def tree: Seq[(String, Long, Long)] = {
+      val out = Seq.newBuilder[(String, Long, Long)]
+      def walk(p: Path): Unit = fs.listStatus(p).foreach { st =>
+        out += ((st.getPath.toString, st.getLen, st.getModificationTime))
+        if (st.isDirectory) walk(st.getPath)
+      }
+      walk(root)
+      out.result().sorted
+    }
+    val before = tree
+    val ops: Seq[(String, () => Any)] = Seq(
+      "appendStates" -> (() => RollupStore.appendStates(st, base,
+        Seq("u", "day"))),
+      "compact" -> (() => RollupStore.compact(spark, base, Seq("u", "day"),
+        BehavioralFunctions.funnel_state_combine)),
+      "read" -> (() => RollupStore.read(spark, base)),
+      "regrain" -> (() => RollupStore.regrain(spark, base, Seq("u", "day"),
+        "day", weekofyear(col("day")), "week",
+        BehavioralFunctions.funnel_state_combine)),
+      "stats" -> (() => RollupStore.stats(spark, base)),
+      "sweepExpired" -> (() => RollupStore.sweepExpired(spark, base, 0L)))
+    for ((name, op) <- ops) {
+      val e = intercept[IllegalArgumentException](op())
+      assert(e.getMessage.contains(root.toString) &&
+        e.getMessage.contains("batch_"),
+        s"$name failed with an unrelated error: $e")
+      assert(tree === before, s"$name wrote into the retired-layout store")
+    }
+  }
 }

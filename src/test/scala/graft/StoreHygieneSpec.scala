@@ -156,15 +156,15 @@ class StoreHygieneSpec extends AnyFunSuite {
       s1(weeks.head).getAs[Long]("dead_bytes") == 0L &&
       s1(weeks.head).getAs[String]("manifest") == "ok",
       s"post-sweep stats wrong: ${s1(weeks.head)}")
-    // flat store: one grain row (empty value) + the store-level root row
+    // flat store: one row for its fixed grain + the store-level root row
     val flat = fresh("stats_flat")
     RollupStore.appendStates(dayStates(slice(0)), flat, Seq("u", "day"))
     val rows = RollupStore.stats(spark, flat).collect()
       .map(r => r.getAs[String]("grain") -> r).toMap
-    assert(rows.size == 2 && rows.contains("") &&
+    assert(rows.size == 2 && rows.contains(RollupStore.FlatGrain) &&
       rows.contains(RollupStore.StatsRootGrain))
-    assert(rows("").getAs[Int]("live_batches") == 1 &&
-      rows("").getAs[String]("manifest") == "ok")
+    assert(rows(RollupStore.FlatGrain).getAs[Int]("live_batches") == 1 &&
+      rows(RollupStore.FlatGrain).getAs[String]("manifest") == "ok")
   }
 
   test("stats' root row inventories crashed stage bytes; sweepIfWorthIt gates the janitor on them") {

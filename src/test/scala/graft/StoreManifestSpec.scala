@@ -355,7 +355,7 @@ class StoreManifestSpec extends AnyFunSuite {
     val expected = merged(RollupStore.read(spark, base))
     RollupStore.compact(spark, base, Seq("u", "day"),
       BehavioralFunctions.funnel_state_combine, cleanupDelayMs = 60000L)
-    val basePath = new Path(base)
+    val basePath = RollupStore.flatDir(new Path(base))
     val folded = Seq("batch_0", "batch_1")
     assert(folded.forall(d => fs.exists(new Path(basePath, d))))
     val marker = new Path(basePath, s"batch_2/${GenerationalBatches.Marker}")
@@ -428,7 +428,7 @@ class StoreManifestSpec extends AnyFunSuite {
       // idempotent
       assert(RollupStore.sweepExpired(spark, base, 2000L) === 0)
 
-      // FLAT store: same janitor under the root lease — and the fold's
+      // FLAT store: same janitor on its one fixed grain — and the fold's
       // writer CRASHED before its manifest rewrite, so the manifest
       // still lists the folded dirs the sweep is about to delete. The
       // sweep must heal it (its recover-time heal), or readers resolving
@@ -454,9 +454,10 @@ class StoreManifestSpec extends AnyFunSuite {
       // heal the manifest that still lists them — in that order safety
       // comes from the heal being part of the same recover pass
       assert(RollupStore.sweepExpired(spark, fbase, 2000L) === 2)
-      assert(!fs.exists(new Path(fbase, "batch_0")) &&
-        !fs.exists(new Path(fbase, "batch_1")))
-      assert(GenerationalBatches.readManifest(fs, new Path(fbase)).get._1
+      val fdir = RollupStore.flatDir(new Path(fbase))
+      assert(!fs.exists(new Path(fdir, "batch_0")) &&
+        !fs.exists(new Path(fdir, "batch_1")))
+      assert(GenerationalBatches.readManifest(fs, fdir).get._1
         === Seq("batch_2"),
         "the sweep deleted dirs the stale manifest lists without healing it")
       assert(merged(RollupStore.read(spark, fbase)) === fExpected)
@@ -467,10 +468,12 @@ class StoreManifestSpec extends AnyFunSuite {
     val b0 = ev((1L, 0L, "a"), (1L, 10 * M, "b"), (2L, 0L, "a"))
     val b1 = ev((1L, 20 * M, "c"), (2L, 5 * M, "b"), (3L, 0L, "a"))
     val base = fresh("grace")
-    RollupStore.appendStates(dayStates(b0), base, Seq("u", "day"))
+    val dir = RollupStore.flatDir(new Path(base))
+    RollupStore.appendStates(dayStates(b0), base, Seq("u", "day"),
+      ingestId = Some("grace/0"))
     RollupStore.appendStates(dayStates(b1), base, Seq("u", "day"))
     val expected = merged(RollupStore.read(spark, base))
-    val preFoldDirs = GenerationalBatches.liveBatches(fs, new Path(base))
+    val preFoldDirs = GenerationalBatches.liveBatches(fs, dir)
       .map(_._2.getName).toSet
     assert(preFoldDirs.size === 2)
 
@@ -481,35 +484,38 @@ class StoreManifestSpec extends AnyFunSuite {
     // the folded dirs are DEAD (fresh reads serve only the fold) but
     // their files remain — the pinned snapshot still answers exactly
     assert(merged(RollupStore.read(spark, base)) === expected)
-    assert(GenerationalBatches.liveBatches(fs, new Path(base))
+    assert(GenerationalBatches.liveBatches(fs, dir)
       .map(_._2.getName).toSet.intersect(preFoldDirs).isEmpty)
-    assert(preFoldDirs.forall(d => fs.exists(new Path(base, d))),
+    assert(preFoldDirs.forall(d => fs.exists(new Path(dir, d))),
       "cleanup ignored the grace window and deleted the folded dirs")
     assert(merged(snap) === expected,
       "a snapshot read died inside the grace window")
 
-    // a maintenance op INSIDE the horizon must not sweep them either
-    RollupStore.appendStates(dayStates(b0.filter(col("u") === 99)), base,
-      Seq("u", "day"), cleanupDelayMs = 60000L)
-    assert(preFoldDirs.forall(d => fs.exists(new Path(base, d))),
+    // a maintenance op INSIDE the horizon must not sweep them either (a
+    // replayed ingest: recovers its grain, lands nothing)
+    assert(RollupStore.appendStates(dayStates(b0), base, Seq("u", "day"),
+      ingestId = Some("grace/0"), cleanupDelayMs = 60000L) === 0L)
+    assert(preFoldDirs.forall(d => fs.exists(new Path(dir, d))),
       "an op inside the horizon swept the folded dirs")
     assert(merged(snap) === expected)
 
     // PAST the horizon the first op sweeps; the snapshot then fails
     // LOUDLY (the documented availability cliff, now bounded)
     val base2 = fresh("grace2")
-    RollupStore.appendStates(dayStates(b0), base2, Seq("u", "day"))
+    val dir2 = RollupStore.flatDir(new Path(base2))
+    RollupStore.appendStates(dayStates(b0), base2, Seq("u", "day"),
+      ingestId = Some("grace/0"))
     RollupStore.appendStates(dayStates(b1), base2, Seq("u", "day"))
     val snap2 = RollupStore.read(spark, base2, snapshot = true)
-    val pre2 = GenerationalBatches.liveBatches(fs, new Path(base2))
+    val pre2 = GenerationalBatches.liveBatches(fs, dir2)
       .map(_._2.getName).toSet
     RollupStore.compact(spark, base2, Seq("u", "day"),
       BehavioralFunctions.funnel_state_combine, cleanupDelayMs = 300L)
     assert(merged(snap2) === expected)
     Thread.sleep(500)
-    RollupStore.appendStates(dayStates(b0.filter(col("u") === 99)), base2,
-      Seq("u", "day"), cleanupDelayMs = 300L)
-    assert(pre2.forall(d => !fs.exists(new Path(base2, d))),
+    assert(RollupStore.appendStates(dayStates(b0), base2, Seq("u", "day"),
+      ingestId = Some("grace/0"), cleanupDelayMs = 300L) === 0L)
+    assert(pre2.forall(d => !fs.exists(new Path(dir2, d))),
       "the folded dirs survived past the horizon")
     intercept[Throwable] { merged(snap2) }
     assert(merged(RollupStore.read(spark, base2)) === expected)

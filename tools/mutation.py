@@ -498,14 +498,6 @@ SUITES32 = [
 ]
 
 MUTANTS32 = [
-    ("RS321", ROLLUP, "flat replay guard dropped (replayed id re-appends)",
-     """      if (ingestId.exists(
-          GenerationalBatches.seenIngestIds(fs, committed).contains)) {
-        onStep("committed"); return 0L
-      }""",
-     """      if (false) {
-        onStep("committed"); return 0L
-      }"""),
     ("RS322", ROLLUP, "per-grain replay guard dropped (a replayed grained ingest re-commits every grain)",
      '''      val pending = recovered.collect { case (g, _, live)
           if !ingestId.exists(
@@ -537,9 +529,9 @@ MUTANTS32 = [
      "    dropGrainsWhere(spark, baseDir, _ < olderThan, leaseStaleMs)",
      "    dropGrainsWhere(spark, baseDir, _ <= olderThan, leaseStaleMs)"),
     ("RG321", ROLLUP, "regrain keeps the old grain key (never applies the new grain expression)",
-     """    val groupCols = keyCols.map(kc =>
+     """    val groupCols = flatKeys(keyCols, stateCol).map(kc =>
       if (kc == grainCol) newGrain.as(newGrainCol) else col(kc))""",
-     """    val groupCols = keyCols.map(kc => col(kc))"""),
+     """    val groupCols = flatKeys(keyCols, stateCol).map(kc => col(kc))"""),
     ("WL321", SINKS, "stale claim deletes without verifying content (destroys a fresh lease)",
      """      if (readLeaseFile(fs, grave).contains(observed)) fs.delete(grave, false)
       else if (!fs.rename(grave, lease)) fs.delete(grave, false)""",
@@ -554,28 +546,28 @@ SUITES35 = ["graft.GrainedRollupStoreSpec"]
 
 MUTANTS35 = [
     ("RC351", ROLLUP, "grained compaction commits with an empty folded list (old batches stay live — double-serve)",
-     '''        GenerationalBatches.publish(fs, gdir, live, live,
-          GenerationalBatches.seenIngestIds(fs, live), cleanupDelayMs,
-          onStep, GenerationalBatches.writeManifest(fs, gdir))(
-          renameIn(fs, staged(g)))''',
-     '''        GenerationalBatches.publish(fs, gdir, live, Nil,
-          GenerationalBatches.seenIngestIds(fs, live), cleanupDelayMs,
-          onStep, GenerationalBatches.writeManifest(fs, gdir))(
-          renameIn(fs, staged(g)))'''),
+     '''      GenerationalBatches.publish(fs, gdir, live, live,
+        GenerationalBatches.seenIngestIds(fs, live), cleanupDelayMs,
+        onStep, GenerationalBatches.writeManifest(fs, gdir))(
+        renameIn(fs, staged(g)))''',
+     '''      GenerationalBatches.publish(fs, gdir, live, Nil,
+        GenerationalBatches.seenIngestIds(fs, live), cleanupDelayMs,
+        onStep, GenerationalBatches.writeManifest(fs, gdir))(
+        renameIn(fs, staged(g)))'''),
     ("RC352", ROLLUP, "grained compaction drops the folded batches' ingest ids (replay guard forgets after a fold)",
-     '''        GenerationalBatches.publish(fs, gdir, live, live,
-          GenerationalBatches.seenIngestIds(fs, live), cleanupDelayMs,
-          onStep, GenerationalBatches.writeManifest(fs, gdir))(
-          renameIn(fs, staged(g)))''',
-     '''        GenerationalBatches.publish(fs, gdir, live, live,
-          Set.empty, cleanupDelayMs,
-          onStep, GenerationalBatches.writeManifest(fs, gdir))(
-          renameIn(fs, staged(g)))'''),
+     '''      GenerationalBatches.publish(fs, gdir, live, live,
+        GenerationalBatches.seenIngestIds(fs, live), cleanupDelayMs,
+        onStep, GenerationalBatches.writeManifest(fs, gdir))(
+        renameIn(fs, staged(g)))''',
+     '''      GenerationalBatches.publish(fs, gdir, live, live,
+        Set.empty, cleanupDelayMs,
+        onStep, GenerationalBatches.writeManifest(fs, gdir))(
+        renameIn(fs, staged(g)))'''),
     ("RC353", ROLLUP, "grained fold reads only each grain's first batch (later ingests vanish from the fold)",
-     """      val allPaths = perGrain.flatMap { case (_, _, committed) =>
-        committed.map { case (_, p) => new Path(p, "states").toString } }""",
-     """      val allPaths = perGrain.flatMap { case (_, _, committed) =>
-        committed.take(1).map { case (_, p) => new Path(p, "states").toString } }"""),
+     """    val allPaths = perGrain.flatMap { case (_, _, committed) =>
+      committed.map { case (_, p) => new Path(p, "states").toString } }""",
+     """    val allPaths = perGrain.flatMap { case (_, _, committed) =>
+      committed.take(1).map { case (_, p) => new Path(p, "states").toString } }"""),
     ("RC354", GENB, "batch numbering reuses the last live number instead of the next (every generational op)",
      "    val k = live.map(_._1).maxOption.fold(0L)(_ + 1)",
      "    val k = live.map(_._1).maxOption.getOrElse(0L)"),
@@ -641,12 +633,12 @@ MUTANTS36 = [
      "      .filter(st => true ||\n"
      "        now - st.getModificationTime > staleMs)"),
     ("MF361", ROLLUP, "readGrains distrusts the manifest (always falls back to listing)",
-     "      GenerationalBatches.readManifest(fs, gdir) match {\n"
-     "        case Some((_, _, relFiles)) if relFiles.nonEmpty =>\n"
-     "          Left(relFiles.map(rel => new Path(gdir, rel)))",
-     "      GenerationalBatches.readManifest(fs, gdir) match {\n"
-     "        case Some((_, _, relFiles)) if false && relFiles.nonEmpty =>\n"
-     "          Left(relFiles.map(rel => new Path(gdir, rel)))"),
+     "    GenerationalBatches.readManifest(fs, gdir) match {\n"
+     "      case Some((_, _, relFiles)) if relFiles.nonEmpty =>\n"
+     "        Left(relFiles.map(rel => new Path(gdir, rel)))",
+     "    GenerationalBatches.readManifest(fs, gdir) match {\n"
+     "      case Some((_, _, relFiles)) if false && relFiles.nonEmpty =>\n"
+     "        Left(relFiles.map(rel => new Path(gdir, rel)))"),
     ("MF362", GENB, "writeManifest records COMMITTED batches (folded dirs leak into the manifest)",
      "  def writeManifest(fs: FileSystem, base: Path): Unit = {\n"
      "    val live = liveBatches(fs, base).sortBy(_._1)",
@@ -690,16 +682,11 @@ MUTANTS37 = [
      "          if bNames.toSet != live.map(_._2.getName).toSet =>",
      "      case Some((bNames, _, _))\n"
      "          if false && bNames.toSet != live.map(_._2.getName).toSet =>"),
-    ("FM371", ROLLUP, "flat read distrusts the manifest (always falls back to listing)",
-     "    GenerationalBatches.readManifest(fs, base) match {\n"
-     "      case Some((_, _, relFiles)) if relFiles.nonEmpty =>",
-     "    GenerationalBatches.readManifest(fs, base) match {\n"
-     "      case Some((_, _, relFiles)) if false && relFiles.nonEmpty =>"),
     ("FM372", ROLLUP, "flat append skips the manifest rewrite (manifest goes stale on every ingest)",
-     "      GenerationalBatches.publish(fs, base, committed, Nil, ingestId.toSet,\n"
-     "        0L, onStep, GenerationalBatches.writeManifest(fs, base)) { batchPath =>",
-     "      GenerationalBatches.publish(fs, base, committed, Nil, ingestId.toSet,\n"
-     "        0L, onStep, ()) { batchPath =>"),
+     "        GenerationalBatches.publish(fs, gdir, live, Nil, ingestId.toSet, 0L,\n"
+     "          onStep, GenerationalBatches.writeManifest(fs, gdir))(",
+     "        GenerationalBatches.publish(fs, gdir, live, Nil, ingestId.toSet, 0L,\n"
+     "          onStep, ())("),
     ("TS371", GENB, "commit writes no #ts writer-clock line (horizon trusts the FS clock alone)",
      "      else folded.mkString(\"\\n\") + s\"\\n#ts=${System.currentTimeMillis()}\")",
      "      else folded.mkString(\"\\n\"))"),
@@ -726,14 +713,14 @@ SUITES38 = [
 
 MUTANTS38 = [
     ("SE381", ROLLUP, "sweepExpired skips the manifest heal (readers strand on files the sweep deleted)",
-     "      val live = GenerationalBatches.recover(fs, dir, cleanupDelayMs)\n"
-     "      healManifestIfStale(fs, dir, live)",
-     "      val live = GenerationalBatches.recover(fs, dir, cleanupDelayMs)"),
+     "          val live = GenerationalBatches.recover(fs, gdir, cleanupDelayMs)\n"
+     "          healManifestIfStale(fs, gdir, live)",
+     "          val live = GenerationalBatches.recover(fs, gdir, cleanupDelayMs)"),
     ("SE382", ROLLUP, "sweepExpired ignores the horizon (deletes folded dirs inside the grace window)",
-     "      val before = GenerationalBatches.batchDirs(fs, dir).size\n"
-     "      val live = GenerationalBatches.recover(fs, dir, cleanupDelayMs)",
-     "      val before = GenerationalBatches.batchDirs(fs, dir).size\n"
-     "      val live = GenerationalBatches.recover(fs, dir, 0L)"),
+     "          val before = GenerationalBatches.batchDirs(fs, gdir).size\n"
+     "          val live = GenerationalBatches.recover(fs, gdir, cleanupDelayMs)",
+     "          val before = GenerationalBatches.batchDirs(fs, gdir).size\n"
+     "          val live = GenerationalBatches.recover(fs, gdir, 0L)"),
 ]
 
 # batch 39 — round-18 self-review fixes. Run with
@@ -752,10 +739,10 @@ MUTANTS39 = [
      "    sb.append(\"e \").append(n).append('\\n')",
      "    ()"),
     ("SJ391", ROLLUP, "sweepExpired aborts on a held stripe instead of skipping the grain",
-     "          case e: IllegalStateException\n"
-     "              if Option(e.getMessage).exists(_.contains(\"lease\")) => 0",
-     "          case e: IllegalStateException\n"
-     "              if Option(e.getMessage).exists(_.contains(\"lease\")) => throw e"),
+     "        case e: IllegalStateException\n"
+     "            if Option(e.getMessage).exists(_.contains(\"lease\")) => 0",
+     "        case e: IllegalStateException\n"
+     "            if Option(e.getMessage).exists(_.contains(\"lease\")) => throw e"),
     ("SS391", ROLLUP, "sweepStageDirs counts a STALE foreign stripe as live (garbage deferred forever)",
      "      !held.contains(st.getPath.getName) &&\n"
      "      now - st.getModificationTime <= staleMs)",
@@ -870,11 +857,10 @@ MUTANTS43 = [
      "      }.sum",
      "      val bytes = 0L"),
     ("RT432", ROLLUP, "stats omits the `<root>` row entirely",
-     "     else graft.sources.Sinks.inParallel(grains) { case (g, gdir) =>\n"
-     "       one(g, gdir) }) :+\n"
-     "      rootRow",
-     "     else graft.sources.Sinks.inParallel(grains) { case (g, gdir) =>\n"
-     "       one(g, gdir) })"),
+     "    graft.sources.Sinks.inParallel(grains) { case (g, gdir) =>\n"
+     "      one(g, gdir) } :+ rootRow",
+     "    graft.sources.Sinks.inParallel(grains) { case (g, gdir) =>\n"
+     "      one(g, gdir) }"),
     ("SW431", ROLLUP, "sweepIfWorthIt ignores the threshold (always sweeps — the skip path is the whole point)",
      "    if (reclaimable < minDeadBytes) 0\n"
      "    else sweepExpired(spark, baseDir, cleanupDelayMs, grains, leaseStaleMs)",
@@ -1060,6 +1046,32 @@ MUTANTS48 = [
      "            unix_micros(col(PrevCol)) >= gapMicros, 1L)"),
 ]
 
+# batch 49: one rollup-store layout — a flat store is the grained store's
+# fixed sub-store, the in-place regrain re-stamps the genesis, and a store
+# in the retired root-batch layout is refused. Run with
+# `python3 tools/mutation.py 49`.
+SUITES49 = ["graft.RollupStoreSpec", "graft.RegrainSpec",
+            "graft.CountingFsSpec"]
+
+MUTANTS49 = [
+    ("OL491", ROLLUP, "regrain keeps the old genesis (a crash before the commit leaves a genesis behind)",
+     "        fs.delete(new Path(base, GenesisFile), false)\n",
+     ""),
+    ("OL492", ROLLUP, "regrain never re-stamps the genesis after its marker",
+     "            writeGenesis(fs, base, fingerprintOf(schema, FlatGrainCol))\n",
+     ""),
+    ("OL493", ROLLUP, "an append re-verifies no genesis under its stripes (a family checked before a regrain lands after it)",
+     "      ensureGenesis(spark, fs, base, states.schema, grainCol, leaseStaleMs)\n"
+     "      sweepStageDirs(",
+     "      sweepStageDirs("),
+    ("OL494", ROLLUP, "the retired root-batch layout is no longer refused",
+     "      require(!entries.exists(st => st.isDirectory &&",
+     "      require(true || !entries.exists(st => st.isDirectory &&"),
+    ("OL495", ROLLUP, "the flat read resolves a different sub-store than the flat append lands in",
+     "    new Path(base, grainDirName(FlatGrainCol, FlatGrain))",
+     "    new Path(base, grainDirName(FlatGrainCol, FlatGrain + \"_\"))"),
+]
+
 # Mutants whose seam no longer exists: (batch, id, file, mutant, reason).
 # They stay in MUTATION.md with the reason instead of a verdict.
 RETIRED = [
@@ -1067,6 +1079,10 @@ RETIRED = [
      "merged into SM4: one horizon prune serves every buffered streaming operator"),
     ("32", "GB323", ROLLUP, "cross-grain schema gate dropped (a grained store mixes families)",
      "the grained store gates families by its _STORE_GENESIS fingerprint (batch 37)"),
+    ("32", "RS321", ROLLUP, "flat replay guard dropped (replayed id re-appends)",
+     "a flat append is the grained append on one fixed grain; its replay guard is RS322"),
+    ("37", "FM371", ROLLUP, "flat read distrusts the manifest (always falls back to listing)",
+     "a flat read resolves its fixed grain through readGrains' resolver, which MF361 mutates"),
     ("34", "RS341", ROLLUP, "pre-write replay filter dropped (a replayed grained ingest re-stages and re-commits every grain)",
      "the pre-write filter and the per-grain replay guard are one filter now (RS322)"),
 ]
@@ -1100,6 +1116,7 @@ BATCHES = {
     "46": (MUTANTS46, SUITES46, "Batch 46 \u2014 one publish path for the generational stores"),
     "47": (MUTANTS47, SUITES47, "Batch 47 \u2014 one commit protocol for every store"),
     "48": (MUTANTS48, SUITES48, "Batch 48 \u2014 one window per session append"),
+    "49": (MUTANTS49, SUITES49, "Batch 49 \u2014 one rollup-store layout"),
 }
 
 
